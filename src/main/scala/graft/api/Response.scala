@@ -113,11 +113,19 @@ object Response {
     "reasoning" -> jval(r.reason),
     "transformations" -> r.transformations.map(jval).mkString("[", ", ", "]")))
 
-  /** Render an engine result in the reference response shape. */
+  /** Render an engine result in the reference response shape. At most
+    * `maxRows` rows are returned; one extra row is collected so a cut
+    * answer says so (`meta.truncated`, with the cap in `meta.row_cap`)
+    * instead of passing the cap off as the row count.
+    */
   def render(r: QueryEngine#AqeResult, maxRows: Int = 1000): String = {
-    val rows = r.df.limit(maxRows).collect().toSeq
+    val fetched = r.df.limit(maxRows + 1).collect().toSeq
+    val truncated = fetched.sizeIs > maxRows
+    val rows = if (truncated) fetched.take(maxRows) else fetched
     val meta = obj(Seq(
       "rows" -> rows.size.toString,
+      "truncated" -> truncated.toString,
+      "row_cap" -> maxRows.toString,
       "plan_type" -> jval(r.planType),
       "execution_time_ms" -> r.executionTimeMs.map(_.toString).getOrElse("null"),
       "actual_speedup" -> r.actualSpeedup.map(jval).getOrElse("null")))
@@ -135,7 +143,12 @@ object Response {
   def renderExplain(r: QueryEngine#AqeResult): String = obj(Seq(
     "status" -> jval("success"),
     "plan" -> planJson(r),
-    "ml_optimization" -> mlJson(r)))
+    "ml_optimization" -> mlJson(r),
+    "serve_trace" -> r.trace.map(t => obj(Seq(
+      "family" -> jval(t.family),
+      "outcome" -> jval(t.outcome),
+      "reason" -> jval(t.reason),
+      "ms" -> jval(t.nanos / 1e6)))).mkString("[", ", ", "]")))
 
   /** POST /samples/stratified response (/root/reference/app.py:205-210):
     * sample table + per-stratum allocation + allocation type.

@@ -387,7 +387,7 @@ final class Server(val engine: QueryEngine, port: Int = 0) {
           // beyond the reference: the log-linear (HDR) quantile sketch
           // — RELATIVE-error percentiles for heavy-tailed columns where
           // the equi-width grid's absolute bound degenerates
-          // (QueryEngine.storedHdrAnswer; error = 1/m)
+          // (QueryEngine.storedPercentileAnswer(HdrSketch); error = 1/m)
           case "hdr" =>
             column match {
               case None => (400, err("column required for hdr"))

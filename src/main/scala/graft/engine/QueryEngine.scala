@@ -115,7 +115,10 @@ final class QueryEngine(
       // Which no-scan serve family answered (ReadCatalogServe.kind);
       // None off the serve paths. Surfaces in explain-mode JSON so the
       // response names the serve the engine actually ran.
-      serveKind: Option[String] = None)
+      serveKind: Option[String] = None,
+      // Every catalog serve family tried, in order, with its outcome —
+      // explain-mode JSON's serve_trace.
+      trace: Seq[ServeStep] = Nil)
 
   /** Parse + feature extraction cached per SQL text: a serving workload
     * repeats query shapes, and the unresolved plan is immutable (every
@@ -138,6 +141,47 @@ final class QueryEngine(
     parseCache.synchronized(Option(parseCache.get(sql)))
 
   def query(sql: String, opts: Options = Options()): AqeResult = {
+    val trace = Vector.newBuilder[ServeStep]
+    val r = dispatch(sql, opts, trace)
+    val steps = trace.result()
+    if (steps.isEmpty) r else r.copy(trace = steps)
+  }
+
+  /** THE catalog-serve dispatch: try `families` in order and serve the
+    * first answer whose bound fits the caller's error budget — the one
+    * place a catalog serve becomes the query's result, wrapped in the
+    * planner's candidate enumeration (serveResult) and recorded
+    * (finish). An IllegalArgumentException is a declared REFUSAL:
+    * malformed catalog metadata (an unparseable blob key, a corrupt
+    * parameter, grids that cannot merge) throws IAE subtypes by
+    * contract (typedKeyValue rewraps the timestamp parser's
+    * DateTimeException), so the family falls through to the next one
+    * and the scan instead of failing the query. Any other exception
+    * fails the query loudly. Every attempt lands in `trace`.
+    */
+  private[engine] def serveFirst(families: Seq[Family], sql: String,
+      features: QueryFeatures, opts: Options,
+      trace: scala.collection.mutable.Growable[ServeStep]): Option[AqeResult] =
+    families.iterator.map { f =>
+      val t0 = System.nanoTime()
+      val (outcome, reason, hit) =
+        try f.serve() match {
+          case None => ("no match", "", None)
+          case Some(s) if !(s.err <= opts.maxRelError) =>
+            ("over budget",
+              s"bound ${s.err} exceeds max_rel_error ${opts.maxRelError}", None)
+          case hit => ("served", "", hit)
+        } catch {
+          case e: IllegalArgumentException =>
+            ("refused", String.valueOf(e.getMessage), None)
+        }
+      trace += ServeStep(f.kind, outcome, reason, System.nanoTime() - t0)
+      hit.map(s => finish(serveResult(s.df, features, s.table, f.kind, s.err,
+        s.detail, s.transforms, opts), sql, features, opts))
+    }.collectFirst { case Some(r) => r }
+
+  private def dispatch(sql: String, opts: Options,
+      trace: scala.collection.mutable.Growable[ServeStep]): AqeResult = {
     val (parsed, features) = parsedCached(sql).getOrElse {
       val p = spark.sessionState.sqlParser.parsePlan(sql)
       val v = (p, QueryFeatures.extract(p, sql))
@@ -156,77 +200,87 @@ final class QueryEngine(
           AqeResult(spark.sql(sql), "exact", "exact", reason, confidence,
             1.0, 0.0, None, None, Nil)
       }
+    def serve(families: Family*): Option[AqeResult] =
+      serveFirst(families, sql, features, opts, trace)
+    // ORDER BY / LIMIT / HAVING peel (round 10): the dashboard form of
+    // a grouped aggregate wraps it in Sort/Limit/Having nodes that
+    // don't change what the aggregate computes — only which of its
+    // bounded, blob-resident rows are kept and in what order. The
+    // serves match the peeled INNER aggregate and the clauses replay
+    // driver-side over the served rows (HAVING → ORDER BY → LIMIT,
+    // SQL's order), so `GROUP BY g ORDER BY cnt DESC LIMIT k` — the
+    // top-k heavy-hitters shape — serves with zero scan. Group-key sort
+    // keys are replayed when the source column (of any of `tables`) is
+    // string-typed OR integral: the serves emit TYPED key columns
+    // (string renderings verbatim; integral keys parsed back through
+    // the bijective cast), so the DataFrame sort is the source type's
+    // own order. Other key types refuse (the serves refuse them too).
+    // Refused peels leave `parsed` untouched.
+    def peel(tables: Seq[String]) = graft.plan.PostAggregate.peel(parsed,
+      keySortable = c => tables.exists(t =>
+        scala.util.Try(spark.table(t).schema.fields.exists { f =>
+          import org.apache.spark.sql.types._
+          f.name.equalsIgnoreCase(c) && (f.dataType match {
+            case StringType | ByteType | ShortType | IntegerType |
+                LongType | DateType | TimestampType => true
+            case _ => false
+          })
+        }).getOrElse(false)))
 
     if (opts.preferExact)
       return finish(exact("exact execution (user preference)"), sql, features, opts)
     if (!features.isSingleTable || features.tableName.isEmpty) {
-      // Set-operation cardinality from stored KMV sketches: INTERSECT /
-      // UNION / EXCEPT distinct counts answer from two bottom-k hash
-      // sketches with zero scan — the one multi-table shape the catalog
-      // can absorb outright (everything else goes through join AQP).
-      storedSetOpAnswer(parsed) match {
-        case Some((df, err, op, hint, lwNote)) if err <= opts.maxRelError =>
-          return finish(serveResult(df, features, hint, "kmv_setop", err,
-            s"$op cardinality answered from the stored KMV (bottom-k) sketch pair (no scan)" +
-              lwNote,
-            Seq(s"COUNT(*) over $op answered from the two sides' stored " +
-              "KMV sketches (no scan; exact when the sketches are " +
-              "exhaustive, else the k-th-hash estimator with the " +
-              "matched-proportion bound)"), opts),
-            sql, features, opts)
-        case _ =>
-      }
-      // Star-aggregate serve: GROUP BY dim attributes over fact ⋈ dim
-      // answered from the fact's grouped stats blob keyed on the join
-      // key — the fact (the expensive side) is never scanned; only the
-      // dim is read, restricted to the blob's bounded key set. Exact
-      // (merge arithmetic + per-function exactness proof), so it
-      // preempts join AQP. ORDER BY / LIMIT / HAVING peel off first
-      // (the dashboard form — `GROUP BY nation ORDER BY rev DESC LIMIT
-      // 5`) and replay driver-side over the served rows, which is
-      // exact because the serve's row set is COMPLETE (every joined
-      // group present); key sorts replay when the named column is a
-      // string/integral column of either joined table.
-      val (starPlan, starPost) = graft.plan.PostAggregate.peel(parsed,
-        keySortable = c => features.tables.exists(t =>
-          scala.util.Try(spark.table(t).schema.fields.exists { f =>
-            import org.apache.spark.sql.types._
-            f.name.equalsIgnoreCase(c) && (f.dataType match {
-              case StringType | ByteType | ShortType | IntegerType |
-                  LongType | DateType | TimestampType => true
-              case _ => false
-            })
-          }).getOrElse(false)))
-      storedStarAggAnswer(starPlan, features.tables) match {
-        case Some((df, factT, detail, err)) if err <= opts.maxRelError =>
-          val served = starPost.fold(df)(_.apply(df))
-          return finish(serveResult(served, features, factT, "star_group", err,
-            detail,
-            Seq("GROUP BY dim attributes over fact ⋈ dim merged from the " +
-              "fact's per-join-key stored records (stats exact; distinct " +
-              "counts by register-max HLL union; fact never scanned, dim " +
-              "read only for the blob's bounded key set)"), opts),
-            sql, features, opts)
-        case _ =>
-      }
-      // Star-RANGE serve: the same star shape with a fact-side value
-      // band (`WHERE fact.v >= lo AND fact.v < hi`) — the drill-down
-      // dashboard. Counts/sums/percentiles interpolate per GROUP BY
-      // cell from the fact's fk-keyed histogram (+ sum rider) blobs;
-      // the fact is never scanned. Approximate (boundary-mass bound),
-      // so it serves only under the caller's error budget.
-      storedStarRangeAnswer(starPlan, features.tables) match {
-        case Some((df, factT, detail, err)) if err <= opts.maxRelError =>
-          val served = starPost.fold(df)(_.apply(df))
-          return finish(serveResult(served, features, factT, "star_range",
-            err, detail,
-            Seq("fact-side range band over fact ⋈ dim interpolated from " +
-              "the fact's per-join-key histogram and sum-rider blobs " +
-              "(bucket counts and decimal sums merged per dim cell; " +
-              "fact never scanned, dim read only for the blob's " +
-              "bounded key set)"), opts),
-            sql, features, opts)
-        case _ =>
+      // Star serves answer GROUP BY dim attributes over fact ⋈ dim from
+      // the fact's per-join-key blobs; they replay a peeled ORDER BY /
+      // LIMIT / HAVING exactly because their row set is COMPLETE
+      lazy val (starPlan, starPost) = peel(features.tables)
+      def starServed(df: DataFrame, factT: String, detail: String,
+          err: Double, transform: String): Served =
+        new Served(starPost.fold(df)(_.apply(df)), err, factT, detail,
+          Seq(transform))
+      serve(
+        // Set-operation cardinality from stored KMV sketches: INTERSECT /
+        // UNION / EXCEPT distinct counts answer from two bottom-k hash
+        // sketches with zero scan — the one multi-table shape the catalog
+        // can absorb outright (everything else goes through join AQP).
+        Family("kmv_setop", () => storedSetOpAnswer(parsed).map {
+          case (df, err, op, hint, lwNote) =>
+            new Served(df, err, hint,
+              s"$op cardinality answered from the stored KMV (bottom-k) sketch pair (no scan)" +
+                lwNote,
+              Seq(s"COUNT(*) over $op answered from the two sides' stored " +
+                "KMV sketches (no scan; exact when the sketches are " +
+                "exhaustive, else the k-th-hash estimator with the " +
+                "matched-proportion bound)"))
+        }),
+        // Star-aggregate serve: the fact (the expensive side) is never
+        // scanned; only the dim is read, restricted to the blob's
+        // bounded key set. Exact (merge arithmetic + per-function
+        // exactness proof), so it preempts join AQP.
+        Family("star_group", () =>
+          storedStarAggAnswer(starPlan, features.tables).map {
+            case (df, factT, detail, err) => starServed(df, factT, detail, err,
+              "GROUP BY dim attributes over fact ⋈ dim merged from the " +
+                "fact's per-join-key stored records (stats exact; distinct " +
+                "counts by register-max HLL union; fact never scanned, dim " +
+                "read only for the blob's bounded key set)")
+          }),
+        // Star-RANGE serve: the same star shape with a fact-side value
+        // band (`WHERE fact.v >= lo AND fact.v < hi`) — the drill-down
+        // dashboard. Counts/sums/percentiles interpolate per GROUP BY
+        // cell from the fact's fk-keyed histogram (+ sum rider) blobs.
+        Family("star_range", () =>
+          storedStarRangeAnswer(starPlan, features.tables).map {
+            case (df, factT, detail, err) => starServed(df, factT, detail, err,
+              "fact-side range band over fact ⋈ dim interpolated from " +
+                "the fact's per-join-key histogram and sum-rider blobs " +
+                "(bucket counts and decimal sums merged per dim cell; " +
+                "fact never scanned, dim read only for the blob's " +
+                "bounded key set)")
+          })
+      ) match {
+        case Some(r) => return r
+        case None    =>
       }
       // Join AQP is attempted when the user opted in (approximateJoins,
       // q77's path — unconditional error model on the fact size), OR
@@ -256,275 +310,178 @@ final class QueryEngine(
         return finish(r.copy(sampleFraction = Some(f)), sql, features, opts)
       case None =>
     }
-    // ORDER BY / LIMIT / HAVING peel (round 10): the dashboard form of
-    // a grouped aggregate wraps it in Sort/Limit/Having nodes that
-    // don't change what the aggregate computes — only which of its
-    // bounded, blob-resident rows are kept and in what order. The
-    // serve paths below match the peeled INNER aggregate and the
-    // clauses replay driver-side over the served rows (HAVING → ORDER
-    // BY → LIMIT, SQL's order), so `GROUP BY g ORDER BY cnt DESC LIMIT
-    // k` — the top-k heavy-hitters shape — serves with zero scan.
-    // Group-key sort keys are replayed when the source column is
-    // string-typed OR integral: the serves emit TYPED key columns
-    // (string renderings verbatim; integral keys parsed back through
-    // the bijective cast), so the DataFrame sort is the source type's
-    // own order. Other key types refuse (the serves refuse them too).
-    // Refused peels leave `parsed` untouched.
-    val (servePlan, postOps) = graft.plan.PostAggregate.peel(parsed,
-      keySortable = c => {
-        import org.apache.spark.sql.types._
-        spark.table(table).schema.fields.exists(f =>
-          f.name.equalsIgnoreCase(c) && (f.dataType match {
-            case StringType | ByteType | ShortType | IntegerType |
-                LongType | DateType | TimestampType => true
-            case _ => false
-          }))
-      })
+    val (servePlan, postOps) = peel(Seq(table))
     def posted(df: DataFrame): DataFrame = postOps.fold(df)(_.apply(df))
-    // Statistics strategy: a bare MIN/MAX/COUNT/SUM/AVG query over
-    // columns whose stored histograms recorded exact build statistics
-    // answers from the catalog with NO scan and NO error — the
-    // metadata-only-query optimization as an engine strategy. Exact, so
-    // it preempts every approximate path; the freshness guard retires
-    // stats once the base table changes size. A lone COUNT(*) does NOT
-    // serve (it must ride a column-anchored stat): bare table counts
-    // keep their sampling semantics.
-    storedStatsAnswer(servePlan, table) match {
-      case Some(df) =>
-        return finish(serveResult(posted(df), features, table, "stats", 0.0,
-          "aggregate answered from stored histogram build statistics (no scan, exact)",
-          Seq("MIN/MAX/COUNT/SUM/AVG answered from stored histogram build " +
-            "statistics (no scan; exact as of sketch build)"), opts),
-          sql, features, opts)
-      case None =>
-    }
-    // Filtered-group strategy: `SELECT <aggs> FROM t WHERE g = lit`
-    // dispatches the equality predicate to the GROUP it names inside
-    // the stored grouped sketches — partition pruning at the catalog
-    // level. Statistics serve exactly; percentiles within one bucket
-    // width of the named group's own grid. Zero scan either way.
-    refusing(storedFilteredGroupAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "filtered_group", err,
-          "filtered aggregate answered from grouped sketches (group-pruned, no scan)",
-          Seq("WHERE col = value dispatched to that group's stored sketch " +
-            "record (group-pruned: no scan; stats exact, percentiles to one " +
-            "bucket width)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Histogram strategy: a pure percentile/median query over a table
-    // whose columns carry stored equi-width histograms answers from the
-    // catalog with NO scan (accuracy = one bucket width) — a strategy
-    // the reference's {exact, sample, sketch} set lacks entirely.
-    // Honor the caller's error budget like the sample path does: the
-    // histogram's bound is one bucket width (1/buckets of the grid), so
-    // a tighter requested tolerance falls through to the scan path.
-    storedHistogramAnswer(servePlan, table) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "histogram", err,
-          "percentile answered from the stored histogram sketch (no scan)" +
-            liveWindowNote(table, Seq("histogram"), "hist_windowed"),
-          Seq("PERCENTILE/MEDIAN answered from the stored equi-width " +
-            "histogram (no scan; accurate to one bucket width)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Log-linear ("HDR") variant: the same percentile shape from the
-    // relative-error sketch when no equi-width histogram serves — the
-    // heavy-tailed-column dashboard, err = 1/m RELATIVE.
-    refusing(storedHdrAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "hdr", err,
-          "percentile answered from the stored log-linear (HDR) sketch (no scan)" +
-            liveWindowNote(table, Seq("hdr"), "hdr_windowed"),
-          Seq("PERCENTILE/MEDIAN answered from the stored log-linear " +
-            "sketch (no scan; within 1/m RELATIVE error of the true " +
-            "order statistic — the heavy-tail-safe bound)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Grouped variant: SELECT g, percentile(x, p) ... GROUP BY g over a
-    // stored per-group histogram blob — each group answered on its own
-    // [min, max] grid, still with no scan.
-    refusing(storedGroupedHistogramAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "grouped_histogram", err,
-          "per-group percentile answered from the stored grouped histogram (no scan)",
-          Seq("PERCENTILE/MEDIAN answered per group from the stored grouped " +
-            "histogram (no scan; accurate to one bucket width per group)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Grouped log-linear variant: the same per-group percentile shape
-    // from "hdr_grouped" when no grouped histogram serves. The log
-    // grid is global, so marginal collapse (GROUP BY a over an "a,b"
-    // blob) and residual filters merge EXACTLY — the shapes per-group
-    // equi-width grids refuse.
-    refusing(storedGroupedHdrAnswer(servePlan, table,
-        pctCi = opts.ciColumns)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "grouped_hdr", err,
-          "per-group percentile answered from the stored grouped log-linear (HDR) sketch (no scan)" +
-            liveWindowNote(table, Seq("hdr_grouped"), "hdrg_windowed"),
-          Seq("PERCENTILE/MEDIAN answered per group from the stored grouped " +
-            "log-linear sketch (no scan; within 1/m RELATIVE error per " +
-            "group — the heavy-tail-safe bound; groups merge exactly)") ++
-            (if (opts.ciColumns)
-              Seq("per-group rank-based CI companions from each group's " +
-                "exact recorded mass (quantiles re-evaluated at " +
-                "p ∓ 1.96·√(p(1−p)/n_g))")
-            else Nil), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Grouped statistics strategy: SELECT g, MIN/MAX/COUNT/SUM/AVG(x)
-    // ... GROUP BY g over the per-group stats blob the grouped
-    // histogram build records — exact, zero scan, the grouped twin of
-    // the statistics strategy above (same lone-COUNT(*) refusal).
-    refusing(storedGroupedStatsAnswer(servePlan, table)) match {
-      case Some(df) =>
-        return finish(serveResult(posted(df), features, table, "grouped_stats", 0.0,
-          "per-group aggregate answered from stored grouped build statistics (no scan, exact)" +
-            liveWindowNote(table, Seq("stats_grouped"), "statsg_windowed"),
-          Seq("per-group MIN/MAX/COUNT/SUM/AVG answered from stored grouped " +
-            "build statistics (no scan; exact as of sketch build)"), opts),
-          sql, features, opts)
-      case None =>
-    }
-    // Distinct-count strategy: a bare COUNT(DISTINCT g...) over the
-    // group columns of a fresh grouped blob is EXACT from the recorded
-    // group list (complete by the MaxHllGroups build refusal) —
-    // preempting the HLL estimate for exactly these columns.
-    refusing(storedDistinctCountAnswer(servePlan, table)) match {
-      case Some(df) =>
-        return finish(serveResult(posted(df), features, table, "distinct_count", 0.0,
-          "count(DISTINCT) answered exactly from a stored grouped sketch's group list (no scan)",
-          Seq("COUNT(DISTINCT group columns) answered from the stored " +
-            "grouped sketch's recorded group set (no scan; complete and " +
-            "exact as of sketch build)"), opts),
-          sql, features, opts)
-      case None =>
-    }
-    // Distinct-keys strategy: SELECT DISTINCT g / SELECT g ... GROUP
-    // BY g with no aggregates — the key list IS the recorded group
-    // set of any fresh grouped blob (complete by the MaxHllGroups
-    // build refusal), so the filter-dropdown query every dashboard
-    // fires answers with zero scan and zero error.
-    refusing(storedDistinctAnswer(servePlan, table)) match {
-      case Some(df) =>
-        return finish(serveResult(posted(df), features, table, "distinct_keys", 0.0,
-          "distinct keys answered from a stored grouped sketch's group list (no scan, exact)",
-          Seq("DISTINCT / keys-only GROUP BY answered from the stored " +
-            "grouped sketch's recorded group set (no scan; complete and " +
-            "exact as of sketch build)"), opts),
-          sql, features, opts)
-      case None =>
-    }
-    // Count-Min strategy: a bare COUNT(*) point-frequency query
-    // (`WHERE col = 'v'`) over a column with a fresh stored CMS answers
-    // from the catalog with NO scan — overestimate-only semantics
-    // (estimate >= truth always; within eps*N additive with prob
-    // 1-delta). eps is an additive bound relative to the TABLE size,
-    // so it is served under the same budget comparison the histogram
-    // path uses. Closes the reference's write-only-sketch gap for its
-    // third sketch type (its get_sketch has zero callers, SURVEY §4.4).
-    storedCmsAnswer(servePlan, table) match {
-      case Some((df, eps)) if eps <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "cms", eps,
-          "point-frequency answered from the stored Count-Min sketch (no scan)" +
-            liveWindowNote(table, Seq("countmin"), "cms_windowed"),
-          Seq("COUNT(*) with a column=value filter answered from the stored " +
-            "Count-Min sketch (no scan; overestimate-only, eps*N additive bound)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Histogram-range strategy: COUNT(*) under a range predicate
-    // (BETWEEN / one-sided bounds) answered by interpolating the
-    // stored histogram's bucket counts — the classic optimizer-
-    // statistics estimate surfaced as a serve, with the boundary
-    // buckets' mass as the honest error bound.
-    refusing(storedHistogramRangeAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "histogram_range", err,
-          "range-predicate count answered from the stored histogram (no scan)" +
-            liveWindowNote(table, Seq("histogram"), "hist_windowed"),
-          Seq("COUNT(*) with a range predicate interpolated from the stored " +
-            "equi-width histogram (no scan; bounded by the boundary buckets' mass)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Log-linear twin: the same range-count shape from the hdr sketch
-    // when no equi-width histogram serves — clipped edge buckets carry
-    // 1/m-relative mass on heavy-tailed columns instead of one huge
-    // equi-width bucket's.
-    refusing(storedHdrRangeAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "hdr_range", err,
-          "range-predicate count answered from the stored log-linear (HDR) sketch (no scan)" +
-            liveWindowNote(table, Seq("hdr"), "hdr_windowed"),
-          Seq("COUNT(*) with a range predicate interpolated from the stored " +
-            "log-linear sketch (no scan; bounded by the clipped edge " +
-            "buckets' mass — 1/m-relative on any magnitude)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Grouped twin: GROUP BY g under a range predicate — each recorded
-    // group's estimate from its own histogram in the grouped blob.
-    refusing(storedGroupedRangeAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "grouped_histogram_range", err,
-          "per-group range-predicate count answered from the stored grouped histogram (no scan)",
-          Seq("GROUP BY under a range predicate interpolated per group from " +
-            "the stored grouped histogram (no scan; worst group's boundary mass)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Log-linear grouped twin: the same per-group range shape from
-    // "hdr_grouped" when no grouped equi-width histogram serves —
-    // counts AND range percentiles at 1/m relative error; residuals
-    // and marginals merge exactly on the global log grid.
-    refusing(storedGroupedHdrRangeAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "grouped_hdr_range", err,
-          "per-group range-predicate count answered from the stored grouped log-linear (HDR) sketch (no scan)" +
-            liveWindowNote(table, Seq("hdr_grouped"), "hdrg_windowed"),
-          Seq("GROUP BY under a range predicate interpolated per group from " +
-            "the stored grouped log-linear sketch (no scan; 1/m-relative " +
-            "clipped-edge bound per group; groups merge exactly)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Filtered-range twin: a group-equality (or IN) filter AND a range
-    // on the value column — the named group(s)' histograms (+ sum
-    // riders) answer the band's count/sum/avg/percentile with no scan.
-    refusing(storedFilteredRangeAnswer(servePlan, table)) match {
-      case Some((df, err)) if err <= opts.maxRelError =>
-        return finish(serveResult(posted(df), features, table, "filtered_range", err,
-          "group-filtered range aggregate answered from the named groups' stored histograms (no scan)",
-          Seq("equality/IN group filter + range predicate interpolated from " +
-            "the named groups' grouped histograms and sum riders (no scan; " +
-            "merged boundary-mass bound)"), opts),
-          sql, features, opts)
-      case _ =>
-    }
-    // Heavy-hitters strategy: `SELECT keys, count(*) GROUP BY keys
-    // ORDER BY count DESC LIMIT k` / `HAVING count >= x` over a
-    // HIGH-cardinality key answers EXACTLY from the stored "topk"
-    // blob (complete above its build threshold) — zero scan, zero
-    // error; the iceberg/top-k dashboard shape the MaxHllGroups-
-    // bounded grouped blobs refuse. Matches the RAW parsed plan (the
-    // clauses themselves decide servability), so it runs after the
-    // peel-based serves and never disturbs their plans.
-    refusing(storedTopKAnswer(parsed, table)) match {
-      case Some((df, detail)) =>
-        return finish(serveResult(df, features, table, "topk", 0.0,
-          detail + liveWindowNote(table, Seq("topk"), "topk_windowed"),
-          Seq("top-k / iceberg GROUP BY answered from the stored " +
-            "heavy-hitters summary (no scan; exact above the stored " +
-            "threshold)"), opts),
-          sql, features, opts)
-      case None =>
+    // a single-table serve family: its answer over `table`, with the
+    // peeled clauses replayed over the served rows
+    def family(kind: String, answer: => Option[(DataFrame, Double)],
+        detail: => String, transforms: String*): Family =
+      Family(kind, () => answer.map { case (df, err) =>
+        new Served(posted(df), err, table, detail, transforms) })
+    import graft.sketch.{HdrSketch, Histogram}
+    serve(
+      // Statistics strategy: a bare MIN/MAX/COUNT/SUM/AVG query over
+      // columns whose stored histograms recorded exact build statistics
+      // answers from the catalog with NO scan and NO error — the
+      // metadata-only-query optimization as an engine strategy. Exact,
+      // so it preempts every approximate path; the freshness guard
+      // retires stats once the base table changes size. A lone
+      // COUNT(*) does NOT serve (it must ride a column-anchored stat):
+      // bare table counts keep their sampling semantics.
+      family("stats", storedStatsAnswer(servePlan, table).map((_, 0.0)),
+        "aggregate answered from stored histogram build statistics (no scan, exact)",
+        "MIN/MAX/COUNT/SUM/AVG answered from stored histogram build " +
+          "statistics (no scan; exact as of sketch build)"),
+      // Filtered-group strategy: `SELECT <aggs> FROM t WHERE g = lit`
+      // dispatches the equality predicate to the GROUP it names inside
+      // the stored grouped sketches — partition pruning at the catalog
+      // level. Statistics serve exactly; percentiles within one bucket
+      // width of the named group's own grid. Zero scan either way.
+      family("filtered_group", storedFilteredGroupAnswer(servePlan, table),
+        "filtered aggregate answered from grouped sketches (group-pruned, no scan)",
+        "WHERE col = value dispatched to that group's stored sketch " +
+          "record (group-pruned: no scan; stats exact, percentiles to one " +
+          "bucket width)"),
+      // Percentile strategy: a pure percentile/median query over a
+      // table whose columns carry stored equi-width histograms answers
+      // from the catalog with NO scan (accuracy = one bucket width) — a
+      // strategy the reference's {exact, sample, sketch} set lacks
+      // entirely. The log-linear ("HDR") grid serves the same shape
+      // when no equi-width histogram does — the heavy-tailed-column
+      // dashboard, err = 1/m RELATIVE.
+      family("histogram", storedPercentileAnswer(Histogram)(servePlan, table),
+        "percentile answered from the stored histogram sketch (no scan)" +
+          liveWindowNote(table, Seq("histogram"), "hist_windowed"),
+        "PERCENTILE/MEDIAN answered from the stored equi-width " +
+          "histogram (no scan; accurate to one bucket width)"),
+      family("hdr", storedPercentileAnswer(HdrSketch)(servePlan, table),
+        "percentile answered from the stored log-linear (HDR) sketch (no scan)" +
+          liveWindowNote(table, Seq("hdr"), "hdr_windowed"),
+        "PERCENTILE/MEDIAN answered from the stored log-linear " +
+          "sketch (no scan; within 1/m RELATIVE error of the true " +
+          "order statistic — the heavy-tail-safe bound)"),
+      // Grouped variant: SELECT g, percentile(x, p) ... GROUP BY g over
+      // a stored per-group blob — each group answered on its own grid,
+      // still with no scan. The log grid is global, so marginal
+      // collapse (GROUP BY a over an "a,b" blob) and residual filters
+      // merge EXACTLY there.
+      family("grouped_histogram",
+        storedGroupedPercentileAnswer(Histogram)(servePlan, table, opts.ciColumns),
+        "per-group percentile answered from the stored grouped histogram (no scan)",
+        "PERCENTILE/MEDIAN answered per group from the stored grouped " +
+          "histogram (no scan; accurate to one bucket width per group)"),
+      family("grouped_hdr",
+        storedGroupedPercentileAnswer(HdrSketch)(servePlan, table, opts.ciColumns),
+        "per-group percentile answered from the stored grouped log-linear (HDR) sketch (no scan)" +
+          liveWindowNote(table, Seq("hdr_grouped"), "hdrg_windowed"),
+        Seq("PERCENTILE/MEDIAN answered per group from the stored grouped " +
+          "log-linear sketch (no scan; within 1/m RELATIVE error per " +
+          "group — the heavy-tail-safe bound; groups merge exactly)") ++
+          (if (opts.ciColumns)
+            Seq("per-group rank-based CI companions from each group's " +
+              "exact recorded mass (quantiles re-evaluated at " +
+              "p ∓ 1.96·√(p(1−p)/n_g))")
+          else Nil): _*),
+      // Grouped statistics strategy: SELECT g, MIN/MAX/COUNT/SUM/AVG(x)
+      // ... GROUP BY g over the per-group stats blob the grouped
+      // histogram build records — exact, zero scan (same lone-COUNT(*)
+      // refusal as the statistics strategy).
+      family("grouped_stats", storedGroupedStatsAnswer(servePlan, table).map((_, 0.0)),
+        "per-group aggregate answered from stored grouped build statistics (no scan, exact)" +
+          liveWindowNote(table, Seq("stats_grouped"), "statsg_windowed"),
+        "per-group MIN/MAX/COUNT/SUM/AVG answered from stored grouped " +
+          "build statistics (no scan; exact as of sketch build)"),
+      // Distinct-count strategy: a bare COUNT(DISTINCT g...) over the
+      // group columns of a fresh grouped blob is EXACT from the recorded
+      // group list (complete by the MaxHllGroups build refusal) —
+      // preempting the HLL estimate for exactly these columns.
+      family("distinct_count", storedDistinctCountAnswer(servePlan, table).map((_, 0.0)),
+        "count(DISTINCT) answered exactly from a stored grouped sketch's group list (no scan)",
+        "COUNT(DISTINCT group columns) answered from the stored " +
+          "grouped sketch's recorded group set (no scan; complete and " +
+          "exact as of sketch build)"),
+      // Distinct-keys strategy: SELECT DISTINCT g / SELECT g ... GROUP
+      // BY g with no aggregates — the key list IS the recorded group
+      // set of any fresh grouped blob, so the filter-dropdown query
+      // every dashboard fires answers with zero scan and zero error.
+      family("distinct_keys", storedDistinctAnswer(servePlan, table).map((_, 0.0)),
+        "distinct keys answered from a stored grouped sketch's group list (no scan, exact)",
+        "DISTINCT / keys-only GROUP BY answered from the stored " +
+          "grouped sketch's recorded group set (no scan; complete and " +
+          "exact as of sketch build)"),
+      // Count-Min strategy: a bare COUNT(*) point-frequency query
+      // (`WHERE col = 'v'`) over a column with a fresh stored CMS —
+      // overestimate-only semantics (estimate >= truth always; within
+      // eps*N additive with prob 1-delta). eps is an additive bound
+      // relative to the TABLE size, served under the same budget
+      // comparison. Closes the reference's write-only-sketch gap for
+      // its third sketch type (its get_sketch has zero callers, SURVEY
+      // §4.4).
+      family("cms", storedCmsAnswer(servePlan, table),
+        "point-frequency answered from the stored Count-Min sketch (no scan)" +
+          liveWindowNote(table, Seq("countmin"), "cms_windowed"),
+        "COUNT(*) with a column=value filter answered from the stored " +
+          "Count-Min sketch (no scan; overestimate-only, eps*N additive bound)"),
+      // Range strategy: COUNT/SUM/AVG/percentile under a range
+      // predicate (BETWEEN / one-sided bounds) interpolated from the
+      // stored grid's bucket counts — the classic optimizer-statistics
+      // estimate surfaced as a serve, with the boundary buckets' mass
+      // as the honest error bound (1/m-relative clipped edges on the
+      // log grid, where heavy tails would put one huge equi-width
+      // bucket at the edge).
+      family("histogram_range", storedRangeAnswer(Histogram)(servePlan, table),
+        "range-predicate count answered from the stored histogram (no scan)" +
+          liveWindowNote(table, Seq("histogram"), "hist_windowed"),
+        "COUNT(*) with a range predicate interpolated from the stored " +
+          "equi-width histogram (no scan; bounded by the boundary buckets' mass)"),
+      family("hdr_range", storedRangeAnswer(HdrSketch)(servePlan, table),
+        "range-predicate count answered from the stored log-linear (HDR) sketch (no scan)" +
+          liveWindowNote(table, Seq("hdr"), "hdr_windowed"),
+        "COUNT(*) with a range predicate interpolated from the stored " +
+          "log-linear sketch (no scan; bounded by the clipped edge " +
+          "buckets' mass — 1/m-relative on any magnitude)"),
+      // Grouped range: GROUP BY g under a range predicate — each
+      // recorded group's estimate from its own sketch in the grouped
+      // blob.
+      family("grouped_histogram_range",
+        storedGroupedRangeAnswer(Histogram)(servePlan, table),
+        "per-group range-predicate count answered from the stored grouped histogram (no scan)",
+        "GROUP BY under a range predicate interpolated per group from " +
+          "the stored grouped histogram (no scan; worst group's boundary mass)"),
+      family("grouped_hdr_range",
+        storedGroupedRangeAnswer(HdrSketch)(servePlan, table),
+        "per-group range-predicate count answered from the stored grouped log-linear (HDR) sketch (no scan)" +
+          liveWindowNote(table, Seq("hdr_grouped"), "hdrg_windowed"),
+        "GROUP BY under a range predicate interpolated per group from " +
+          "the stored grouped log-linear sketch (no scan; 1/m-relative " +
+          "clipped-edge bound per group; groups merge exactly)"),
+      // Filtered-range twin: a group-equality (or IN) filter AND a range
+      // on the value column — the named group(s)' histograms (+ sum
+      // riders) answer the band's count/sum/avg/percentile with no scan.
+      family("filtered_range", storedFilteredRangeAnswer(servePlan, table),
+        "group-filtered range aggregate answered from the named groups' stored histograms (no scan)",
+        "equality/IN group filter + range predicate interpolated from " +
+          "the named groups' grouped histograms and sum riders (no scan; " +
+          "merged boundary-mass bound)"),
+      // Heavy-hitters strategy: `SELECT keys, count(*) GROUP BY keys
+      // ORDER BY count DESC LIMIT k` / `HAVING count >= x` over a
+      // HIGH-cardinality key answers EXACTLY from the stored "topk"
+      // blob (complete above its build threshold) — zero scan, zero
+      // error; the iceberg/top-k dashboard shape the MaxHllGroups-
+      // bounded grouped blobs refuse. Matches the RAW parsed plan (the
+      // clauses themselves decide servability), so its rows are not
+      // re-posted and it never disturbs the peel-based serves' plans.
+      Family("topk", () => storedTopKAnswer(parsed, table).map {
+        case (df, detail) =>
+          new Served(df, 0.0, table,
+            detail + liveWindowNote(table, Seq("topk"), "topk_windowed"),
+            Seq("top-k / iceberg GROUP BY answered from the stored " +
+              "heavy-hitters summary (no scan; exact above the stored " +
+              "threshold)"))
+      })
+    ) match {
+      case Some(r) => return r
+      case None    =>
     }
     if (!features.hasApproximableAgg && !features.hasDistinct)
       return finish(exact("no approximable aggregate (COUNT/SUM/AVG): exact execution"), sql, features, opts)
@@ -557,35 +514,32 @@ final class QueryEngine(
         // whose rsd adapts to the budget — the serve must be a valid
         // planner candidate, never an override of the error contract.
         val hllErr = 1.04 / math.sqrt(4096.0)
-        val stored: Option[AqeResult] =
-          if (hllErr > opts.maxRelError) None
-          else refusing(storedSketchAnswer(servePlan, table)).map { df =>
-            serveResult(posted(df), features, table, "hll", hllErr,
-              "COUNT(DISTINCT) answered from the stored HyperLogLog sketch (no scan)" +
-                liveWindowNote(table, Seq("hyperloglog"), "hll_windowed"),
-              Seq("COUNT(DISTINCT) answered from the stored HyperLogLog sketch (no scan)"),
-              opts)
-          }.orElse(refusing(storedGroupedSketchAnswer(servePlan, table)).map { df =>
-            serveResult(posted(df), features, table, "grouped_hll", hllErr,
-              "per-group COUNT(DISTINCT) answered from the stored grouped HyperLogLog sketch (no scan)" +
+        serve(
+          family("hll", storedSketchAnswer(servePlan, table).map((_, hllErr)),
+            "COUNT(DISTINCT) answered from the stored HyperLogLog sketch (no scan)" +
+              liveWindowNote(table, Seq("hyperloglog"), "hll_windowed"),
+            "COUNT(DISTINCT) answered from the stored HyperLogLog sketch (no scan)"),
+          family("grouped_hll",
+            storedGroupedSketchAnswer(servePlan, table).map((_, hllErr)),
+            "per-group COUNT(DISTINCT) answered from the stored grouped HyperLogLog sketch (no scan)" +
               liveWindowNote(table, Seq("hll_grouped"), "hllg_windowed"),
-              Seq("per-group COUNT(DISTINCT) answered from the stored grouped HyperLogLog sketch (no scan)"),
-              opts)
-          })
-        stored.getOrElse {
-            val d = SampleRewrite.Directive(table, Planner.ReadExact,
-              weight = None, rewriteDistinctToHll = true,
-              hllRsd = Some(math.max(0.005, math.min(opts.maxRelError, 0.1))),
-              addCiColumns = false)
-            val df = SampleRewrite.rewrite(spark, parsed, d)
-            val (spd, err) = StrategyChooser.predict(StrategyChooser.Sketch, tableSize, None)
-            AqeResult(df, "sketch", "sketch", choice.reasoning, choice.confidence,
-              spd, err, None, None,
-              Seq("COUNT(DISTINCT) answered by HyperLogLog++ (approx_count_distinct)"),
-              // the rewrite scans the table once: the exact candidate's cost
-              estimatedCost =
-                Some(Planner.estimateExactCost(features, tableSize)))
+            "per-group COUNT(DISTINCT) answered from the stored grouped HyperLogLog sketch (no scan)")
+        ) match {
+          case Some(r) => return r
+          case None    =>
         }
+        val d = SampleRewrite.Directive(table, Planner.ReadExact,
+          weight = None, rewriteDistinctToHll = true,
+          hllRsd = Some(math.max(0.005, math.min(opts.maxRelError, 0.1))),
+          addCiColumns = false)
+        val df = SampleRewrite.rewrite(spark, parsed, d)
+        val (spd, err) = StrategyChooser.predict(StrategyChooser.Sketch, tableSize, None)
+        AqeResult(df, "sketch", "sketch", choice.reasoning, choice.confidence,
+          spd, err, None, None,
+          Seq("COUNT(DISTINCT) answered by HyperLogLog++ (approx_count_distinct)"),
+          // the rewrite scans the table once: the exact candidate's cost
+          estimatedCost =
+            Some(Planner.estimateExactCost(features, tableSize)))
 
       case strat @ (StrategyChooser.Sample | StrategyChooser.Sketch |
                     StrategyChooser.Stratified) =>
@@ -1380,6 +1334,29 @@ final class QueryEngine(
     r.copy(executionTimeMs = Some(tApprox.toLong), actualSpeedup = Some(speedup))
   }
 }
+
+/** A catalog serve's answer: the rows, the error bound the budget
+  * check compares, the table the cost model sizes, and the explain
+  * detail (built only if this answer serves) and transformations.
+  */
+private[engine] final class Served(val df: DataFrame, val err: Double,
+    val table: String, detail0: => String, val transforms: Seq[String]) {
+  lazy val detail: String = detail0
+}
+
+/** One catalog serve family: its serve kind and its attempt. None =
+  * the query's shape or the catalog does not match.
+  */
+private[engine] final case class Family(kind: String,
+    serve: () => Option[Served])
+
+/** One catalog serve family's outcome for a query: "served", "no
+  * match", "over budget" (the bound and the budget in `reason`) or
+  * "refused" (the IllegalArgumentException's message), with the
+  * attempt's wall time.
+  */
+final case class ServeStep(family: String, outcome: String, reason: String,
+    nanos: Long)
 
 /** See [[QueryEngine!.topKShape]] (top-level so the synthesized equals
   * carries no outer reference).

@@ -19,163 +19,41 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
     * GROUP BY g...` — optionally under `WHERE g = lit` / `g IN (lits)`
     * (groupKeyFilter: a GROUP BY keeps per-group grids separate, so a
     * multi-literal filter is a union of single-group serves, one row
-    * each) — with a fresh stored GROUPED histogram (built by
-    * SketchOps.createGroupedHistogram, group-by column set equal to
-    * the query's — composite keys welcome, in any column order)
-    * covering every percentile output, answer all (named) groups by
-    * interpolation from the catalog — zero scan. The reported error is
-    * one bucket width (1/buckets of the serving grid). A residual
-    * filter on the blob's OTHER key components (`WHERE a = lit GROUP
-    * BY b` over an "a,b" blob) collapses the filtered dimension by
-    * adding bucket counts — served only from sharedGrid builds, whose
-    * groups share one grid by construction (per-group grids refuse and
-    * the scan answers). Group keys are served as the string rendering
-    * recorded at build time; groups whose value column was all NULL
-    * are recorded with an empty payload and served with a NULL
-    * percentile — the exact GROUP BY row set, nothing dropped.
-    */
-  private[engine] def storedGroupedHistogramAnswer(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
-    parsed match {
-      case Aggregate(gs, outs, child, _) =>
-        val d = aggregateGroupKeys(gs, child, table).getOrElse(return None)
-        val (gNames, keyFilter) = (d.gNames, d.keyFilter)
-        // partial-key (residual) dispatch: the filtered-out dimension
-        // collapses by ADDING bucket counts — exact iff the collapsed
-        // groups share a grid (sharedGrid builds; per-group grids make
-        // Histogram.merge throw and the serve falls through to the
-        // scan, the pre-round-10 behavior)
-        def histBlobFor(c: String)
-            : Option[Seq[(Seq[Option[String]], Array[Byte])]] =
-          if (d.residual.isEmpty)
-            groupedBlobFor(table, c, "histogram_grouped", gNames)
-              .orElse(
-                try partialGroupedBlobFor(table, c, "histogram_grouped",
-                  gNames, Nil, histMergeBytes)
-                catch { case _: IllegalArgumentException => None })
-          else
-            try partialGroupedBlobFor(table, c, "histogram_grouped",
-              gNames, d.residual, histMergeBytes)
-            catch { case _: IllegalArgumentException => None }
-        val lower = gNames.map(_.toLowerCase)
-        val classified = outs.map {
-          case a: UnresolvedAttribute
-              if lower.contains(a.nameParts.last.toLowerCase) =>
-            Some(Left((a.nameParts.last,
-              lower.indexOf(a.nameParts.last.toLowerCase))))
-          case Alias(e, name)
-              if attrName(e).orElse(exprKeyName(e)).exists(n => lower.contains(n.toLowerCase)) =>
-            Some(Left((name, lower.indexOf(attrName(e).orElse(exprKeyName(e)).get.toLowerCase))))
-          case Alias(f: UnresolvedFunction, name)
-              if !f.isDistinct && f.filter.isEmpty =>
-            val colP: Option[(String, Double)] =
-              (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("percentile" | "percentile_approx" | "approx_percentile",
-                    Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case _ => None
-              }
-            colP.flatMap { case (c, p) =>
-              histBlobFor(c)
-                .map { entries =>
-                  // empty payload = all-NULL group (no grid): served as
-                  // a NULL percentile, matching exact GROUP BY output.
-                  // A key filter prunes to the named groups (NULL keys
-                  // never match a literal — SQL IN semantics).
-                  val hs = entries
-                    .filter { case (k, _) =>
-                      keyFilter.forall(_.matches(k.head)) }
-                    .map {
-                      case (k, b) =>
-                        k -> (if (b.isEmpty) None
-                              else Some(graft.sketch.Histogram.deserialize(b)))
-                    }
-                  Right((name,
-                    hs.map { case (k, h) => k -> h.map(_.percentile(p)) },
-                    hs.flatMap { case (_, h) => h.map(x => 1.0 / x.buckets) }
-                      .foldLeft(0.0)(math.max)))
-                }
-            }
-          case _ => None
-        }
-        if (classified.exists(_.isEmpty)) return None
-        val parts = classified.flatten
-        val keyIdx = parts.collect { case Left((_, i)) => i }
-        val estCols = parts.collect { case Right(v) => v }
-        if (keyIdx.toSet != gNames.indices.toSet || estCols.isEmpty)
-          return None
-        val keys = estCols.head._2.map(_._1)
-        if (!estCols.forall(_._2.map(_._1).toSet == keys.toSet)) return None
-        val kTypes = keyFieldTypes(table, gNames).getOrElse(return None)
-        val byName = estCols.map { case (n, est, _) => n -> est.toMap }.toMap
-        val rows = keys.map { k =>
-          org.apache.spark.sql.Row.fromSeq(parts.map {
-            case Left((_, i))     => typedKeyValue(kTypes(i), k(i))
-            case Right((n, _, _)) => byName(n)(k).map(Double.box).orNull
-          })
-        }
-        val schema = StructType(parts.map {
-          case Left((n, i))     => StructField(n, kTypes(i), nullable = true)
-          case Right((n, _, _)) => StructField(n, DoubleType, nullable = true)
-        })
-        import scala.jdk.CollectionConverters._
-        Some((spark.createDataFrame(rows.asJava, schema),
-          estCols.map(_._3).max))
-      case _ => None
-    }
-  }
-
-  /** [[storedGroupedHistogramAnswer]]'s RELATIVE-error twin: the same
-    * `SELECT g..., PERCENTILE(attr, p)... GROUP BY g...` shape served
-    * from a fresh "hdr_grouped" blob (SketchOps.createGroupedHdr) when
-    * no grouped equi-width histogram does. Error = 1/m RELATIVE per
-    * group (heavy-tail safe). Because the log grid is GLOBAL, the
-    * partial-key residual collapse AND the marginal collapse (GROUP BY
-    * a over an "a,b" blob) merge EXACTLY — the shapes per-group
-    * equi-width grids refuse at Histogram.merge. All-NULL groups
-    * (empty payloads) serve NULL percentiles; a key filter prunes to
-    * the named groups.
-    */
-  /** With `pctCi` (the caller's ciColumns option), every percentile
-    * output gains {name}_ci_low/_ci_high companions: the SAME sketch
-    * percentile evaluated at the rank-shifted quantiles
-    * p ∓ 1.96·√(p(1−p)/n_g) clamped to [0,1] — q168's distribution-free
-    * binomial order-statistic bound, computable PER GROUP here because
-    * the blob records each group's exact mass n_g (the plan-time
+    * each) — with a fresh stored grouped `grid` blob (built by
+    * SketchOps.createGroupedHistogram / createGroupedHdr, group-by
+    * column set equal to the query's — composite keys welcome, in any
+    * column order) covering every percentile output, answer all
+    * (named) groups by interpolation from the catalog — zero scan. The
+    * reported error is the grid's value error per group (one bucket
+    * width of the serving equi-width grid; 1/m RELATIVE on the log
+    * grid, heavy-tail safe). A residual filter on the blob's OTHER key
+    * components (`WHERE a = lit GROUP BY b` over an "a,b" blob) and a
+    * marginal (GROUP BY a over an "a,b" blob) collapse the unreferenced
+    * dimension with the grid's merge: exact on the global log grid,
+    * and on the equi-width grid only for sharedGrid builds — per-group
+    * grids refuse at Histogram.merge and the scan answers. Group keys
+    * are served as the string rendering recorded at build time; groups
+    * whose value column was all NULL are recorded with an empty payload
+    * and served with a NULL percentile — the exact GROUP BY row set,
+    * nothing dropped.
+    *
+    * With `ciColumns` on a grid that records each group's exact mass
+    * n_g (the log grid), every percentile output gains
+    * {name}_ci_low/_ci_high companions: the SAME sketch percentile
+    * evaluated at the rank-shifted quantiles p ∓ 1.96·√(p(1−p)/n_g)
+    * clamped to [0,1] — q168's distribution-free binomial
+    * order-statistic bound, computable PER GROUP here (the plan-time
     * unknowable that makes the sampled paths refuse grouped CIs).
     */
-  private[engine] def storedGroupedHdrAnswer(
+  private[engine] def storedGroupedPercentileAnswer[K, G <: graft.sketch.BucketGrid[K]](
+      grid: graft.sketch.BucketGrid.Kind[K, G])(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String, pctCi: Boolean): Option[(DataFrame, Double)] = {
+      table: String, ciColumns: Boolean): Option[(DataFrame, Double)] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+    import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
+    val pctCi = ciColumns && grid.percentileCi
     parsed match {
       case Aggregate(gs, outs, child, _) =>
         val d = aggregateGroupKeys(gs, child, table).getOrElse(return None)
@@ -185,16 +63,16 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
         // ONCE, not once per output
         val blobCache = scala.collection.mutable.Map
           .empty[String, Option[Seq[(Seq[Option[String]], Array[Byte])]]]
-        def hdrBlobFor(c: String)
+        def blobFor(c: String)
             : Option[Seq[(Seq[Option[String]], Array[Byte])]] =
           blobCache.getOrElseUpdate(c.toLowerCase,
             if (d.residual.isEmpty)
-              groupedBlobFor(table, c, "hdr_grouped", gNames)
-                .orElse(partialGroupedBlobFor(table, c, "hdr_grouped",
-                  gNames, Nil, hdrMergeBytes))
+              groupedBlobFor(table, c, grid.groupedType, gNames)
+                .orElse(partialGroupedBlobFor(table, c, grid.groupedType,
+                  gNames, Nil, grid.mergeBytes))
             else
-              partialGroupedBlobFor(table, c, "hdr_grouped",
-                gNames, d.residual, hdrMergeBytes))
+              partialGroupedBlobFor(table, c, grid.groupedType,
+                gNames, d.residual, grid.mergeBytes))
         val lower = gNames.map(_.toLowerCase)
         val classified = outs.map {
           case a: UnresolvedAttribute
@@ -206,17 +84,8 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
             Some(Left((name, lower.indexOf(attrName(e).orElse(exprKeyName(e)).get.toLowerCase))))
           case Alias(f: UnresolvedFunction, name)
               if !f.isDistinct && f.filter.isEmpty =>
-            val colP: Option[(String, Double)] =
-              (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("percentile" | "percentile_approx" | "approx_percentile",
-                    Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case _ => None
-              }
-            colP.flatMap { case (c, p) =>
-              hdrBlobFor(c)
+            percentileArg(f).flatMap { case (c, p) =>
+              blobFor(c)
                 .map { entries =>
                   // empty payload = all-NULL group: NULL percentile,
                   // matching exact GROUP BY output. A key filter
@@ -227,19 +96,17 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
                       keyFilter.forall(_.matches(k.head)) }
                     .map {
                       case (k, b) =>
-                        k -> (if (b.isEmpty) None
-                              else Some(graft.sketch.HdrSketch.deserialize(b)))
+                        k -> (if (b.isEmpty) None else Some(grid.deserialize(b)))
                     }
-                  def vals(h: Option[graft.sketch.HdrSketch])
-                      : Seq[Option[Double]] = {
-                    val est = h.flatMap(_.percentile(p))
+                  def vals(h: Option[G]): Seq[Option[Double]] = {
+                    val est = h.flatMap(_.quantile(p))
                     if (!pctCi) Seq(est)
                     else {
                       def shifted(sign: Double): Option[Double] =
                         h.flatMap { s =>
                           val n = s.n.toDouble
                           if (n <= 0) None
-                          else s.percentile(math.max(0.0, math.min(1.0,
+                          else s.quantile(math.max(0.0, math.min(1.0,
                             p + sign *
                               (1.96 * math.sqrt((p * (1.0 - p)) / n)))))
                         }
@@ -248,7 +115,7 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
                   }
                   Right((name,
                     hs.map { case (k, h) => k -> vals(h) },
-                    hs.flatMap { case (_, h) => h.map(_.relErrBound) }
+                    hs.flatMap { case (_, h) => h.map(_.valueErr) }
                       .foldLeft(0.0)(math.max)))
                 }
             }
@@ -306,10 +173,6 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     def isCountStar(args: Seq[Expression]): Boolean = args match {
       case Seq(_: UnresolvedStar)     => true
       case Seq(Literal(v: Number, _)) => v.intValue == 1
@@ -493,19 +356,10 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
         case Some(ByteType | ShortType | IntegerType | LongType) => 'i'
         case _ => 'x'
       }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     def isCountStar(args: Seq[Expression]): Boolean = args match {
       case Seq(_: UnresolvedStar)     => true
       case Seq(Literal(v: Number, _)) => v.intValue == 1
       case _                          => false
-    }
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
     }
     import graft.sketch.GroupedStats
     // column ownership across ALL of the query's tables: the serve
@@ -755,7 +609,7 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
         }.toMap
       val pctBlobs: Map[String, Map[CellKey, Array[Byte]]] =
         pctCols.map { vc =>
-          (try collapsed(vc, "histogram_grouped", histMergeBytes)
+          (try collapsed(vc, "histogram_grouped", graft.sketch.Histogram.mergeBytes)
           catch { case _: IllegalArgumentException => return None }) match {
             case Some(m) => vc -> m
             case None    => return None
@@ -877,7 +731,7 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
           }
           pctCols.foreach { pc =>
             val b = pctBlobs(pc)(ck0)
-            hg(pc) = hg.get(pc).fold(b)(histMergeBytes(_, b))
+            hg(pc) = hg.get(pc).fold(b)(graft.sketch.Histogram.mergeBytes(_, b))
           }
         }
       } catch { case _: IllegalArgumentException => return None }
@@ -1046,15 +900,6 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
         case Some(ByteType | ShortType | IntegerType | LongType) => 'i'
         case _ => 'x'
       }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
     val colSets: Map[String, Set[String]] = tables.map(t => t -> colSet(t)).toMap
     def owner(col: String): Option[String] = {
       val os = tables.filter(t => colSets(t).contains(col.toLowerCase))
@@ -1229,7 +1074,7 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
         }
       val histMap: Map[String, Array[Byte]] =
         try prunedHist.groupBy(_._1.head.get).view
-          .mapValues(es => es.map(_._2).reduce(histMergeBytes)).toMap
+          .mapValues(es => es.map(_._2).reduce(graft.sketch.Histogram.mergeBytes)).toMap
         catch { case _: IllegalArgumentException => return None }
       val sumsByKey: Map[String, Map[Int, BigInt]] =
         if (!needSums) Map.empty
@@ -1315,7 +1160,7 @@ private[engine] trait QueryEngineServeGrouped { self: QueryEngine =>
           val (hb, sb) = cells.getOrElse(cell, (Array.emptyByteArray,
             Map.empty[Int, BigInt]))
           val b = histMap(k)
-          val merged = histMergeBytes(hb, b)
+          val merged = graft.sketch.Histogram.mergeBytes(hb, b)
           val sums =
             if (!needSums || b.isEmpty) sb
             else sumsByKey.get(k) match {

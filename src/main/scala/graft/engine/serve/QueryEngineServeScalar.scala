@@ -110,8 +110,8 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     * app.py:106-111): confidence, speedup, and cost come from the
     * enumerated candidates, not per-path constants, so explain-mode
     * output names the serve the engine actually runs with the cost
-    * model's own figures. Every caller has already gated
-    * `err <= opts.maxRelError`, so the serve candidate is valid and —
+    * model's own figures. The dispatch loop (serveFirst) has already
+    * gated `err <= opts.maxRelError`, so the serve candidate is valid and —
     * costed at CatalogServeCost, below any scan — wins the
     * enumeration. Confidence derives from the serve's reported bound
     * (0.95 at zero error, the exact path's own confidence, shrinking
@@ -257,100 +257,71 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     else Some(rendered.flatten.flatten.distinct)
   }
 
-  /** If the query is a bare global aggregate over `table` whose every
-    * output is PERCENTILE(attr, p) / MEDIAN(attr) with a stored
-    * histogram sketch for attr, answer all of them by interpolation
-    * from the catalog — zero table scan. Returns the answer plus the
-    * reported error (one bucket width as a fraction of the grid).
-    */
-  private[engine] def storedHistogramAnswer(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.functions.lit
-    def litDouble(l: Literal): Option[Double] = l.value match {
+  /** A numeric literal's value (DECIMAL literals included). */
+  private[engine] def litDouble(
+      l: org.apache.spark.sql.catalyst.expressions.Literal): Option[Double] =
+    l.value match {
       case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
       case n: Number                             => Some(n.doubleValue())
       case _                                     => None
     }
+
+  /** A bare column reference's name. */
+  private[engine] def attrName(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Option[String] =
+    e match {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+        Some(a.nameParts.last)
+      case _ => None
+    }
+
+  /** (column, p) of `percentile(col, p)` — or its approx spellings — or
+    * `median(col)`; None for any other call.
+    */
+  private[engine] def percentileArg(
+      f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction)
+      : Option[(String, Double)] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    (f.nameParts.last.toLowerCase, f.arguments) match {
+      case ("percentile" | "percentile_approx" | "approx_percentile",
+          Seq(a: UnresolvedAttribute, l: Literal)) =>
+        litDouble(l).map(p => (a.nameParts.last, p))
+      case ("median", Seq(a: UnresolvedAttribute)) =>
+        Some((a.nameParts.last, 0.5))
+      case _ => None
+    }
+  }
+
+  /** If the query is a bare global aggregate over `table` whose every
+    * output is PERCENTILE(attr, p) / MEDIAN(attr) with a fresh stored
+    * `grid` sketch for attr ("histogram" or "hdr"), answer all of them
+    * by interpolation from the catalog — zero table scan. The reported
+    * error is the grid's value error: one bucket width as a fraction
+    * of the equi-width grid, or the log grid's 1/m RELATIVE bound (the
+    * heavy-tailed-column case, where one equi-width bucket can swallow
+    * 99% of the mass and the absolute bound degenerates). An EMPTY
+    * column serves NULL exactly like exact execution over zero rows.
+    */
+  private[engine] def storedPercentileAnswer[K, G <: graft.sketch.BucketGrid[K]](
+      grid: graft.sketch.BucketGrid.Kind[K, G])(
+      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      table: String): Option[(DataFrame, Double)] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.functions.lit
     parsed match {
       case Project(outs, r: UnresolvedRelation)
           if r.multipartIdentifier.last.equalsIgnoreCase(table) =>
         val answered = outs.map {
           case Alias(f: UnresolvedFunction, name)
               if !f.isDistinct && f.filter.isEmpty =>
-            val colP: Option[(String, Double)] =
-              (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("percentile" | "percentile_approx" | "approx_percentile",
-                    Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case _ => None
-              }
-            colP.flatMap { case (c, p) =>
-              catalog.getSketch(table, c, "histogram")
+            percentileArg(f).flatMap { case (c, p) =>
+              catalog.getSketch(table, c, grid.sketchType)
                 .filter(sketchIsFresh(table, _)).map { s =>
-                val h = graft.sketch.Histogram.deserialize(s.data)
-                (name, h.percentile(p), 1.0 / h.buckets)
-              }
-            }
-          case _ => None
-        }
-        if (answered.nonEmpty && answered.forall(_.isDefined)) {
-          val vals = answered.flatten
-          val cols = vals.map { case (n, v, _) => lit(v).as(n) }
-          Some((spark.range(1).select(cols: _*), vals.map(_._3).max))
-        } else None
-      case _ => None
-    }
-  }
-
-  /** The RELATIVE-error twin of [[storedHistogramAnswer]]: the same
-    * bare-percentile shape answered from a fresh log-linear "hdr"
-    * sketch (SketchOps.createHdr) when no equi-width histogram serves
-    * — the heavy-tailed-column case, where one equi-width bucket can
-    * swallow 99% of the mass and the absolute bound degenerates. The
-    * reported error is the sketch's 1/m relative bound; an EMPTY
-    * column serves NULL exactly like exact execution over zero rows.
-    * Dispatches AFTER the equi-width path in query(), so existing
-    * histogram serves (and their oracles) are untouched.
-    */
-  private[engine] def storedHdrAnswer(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.functions.lit
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    parsed match {
-      case Project(outs, r: UnresolvedRelation)
-          if r.multipartIdentifier.last.equalsIgnoreCase(table) &&
-            outs.nonEmpty =>
-        val answered = outs.map {
-          case Alias(f: UnresolvedFunction, name)
-              if !f.isDistinct && f.filter.isEmpty =>
-            val colP: Option[(String, Double)] =
-              (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("percentile" | "percentile_approx" | "approx_percentile",
-                    Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case _ => None
-              }
-            colP.flatMap { case (c, p) =>
-              catalog.getSketch(table, c, "hdr")
-                .filter(sketchIsFresh(table, _)).map { s =>
-                val h = graft.sketch.HdrSketch.deserialize(s.data)
-                (name, h.percentile(p), h.relErrBound)
+                val h = grid.deserialize(s.data)
+                (name, h.quantile(p), h.valueErr)
               }
             }
           case _ => None
@@ -370,11 +341,12 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
   /** If the query is `SELECT count(*)/sum(x)/avg(x)/percentile(x,p)...
     * FROM table WHERE <range on x>` — one NUMERIC column under
     * >=/>/<=/< literal bounds (BETWEEN parses to the same conjunction;
-    * one- or two-sided) — and a fresh stored histogram covers x,
-    * answer by linear interpolation over the bucket grid with NO scan
-    * (Histogram.rangeCount / rangePositions: interior buckets exact,
-    * boundary buckets fractional). SUM/AVG additionally need the
-    * "histsum" blob the histogram build writes (per-bucket exact
+    * one- or two-sided) — and a fresh stored `grid` sketch covers x,
+    * answer by interpolation over the bucket grid with NO scan: fully
+    * covered buckets exact, the boundary buckets fractional
+    * (`rangeCount`; on the log grid the zero bucket's point mass is
+    * charged whenever a range bound sits AT 0). SUM/AVG additionally
+    * need the grid's sum rider ("histsum" / "hdrsum": per-bucket exact
     * decimal sums): interior sums add exactly (unscaled decimal
     * addition, one cast to double), boundary buckets contribute their
     * covered fraction, and AVG is one division of the two estimates.
@@ -382,23 +354,20 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     * |sum|) over the estimate — the truth can differ by at most the
     * buckets the range edges cut through (strict vs inclusive bounds
     * differ only by point mass at the edge, inside those same
-    * buckets); AVG reports the first-order combination of both. The
-    * serve engages only when the worst output's ratio fits the
-    * caller's budget. Rows with NULL x fail the predicate and are
-    * outside the histogram alike.
+    * buckets); AVG reports the first-order combination of both,
+    * percentiles the grid's value error plus the boundary mass's
+    * rank-shift fraction. The serve engages only when the worst
+    * output's ratio fits the caller's budget. Rows with NULL x fail
+    * the predicate and are outside the sketch alike.
     */
-  private[engine] def storedHistogramRangeAnswer(
+  private[engine] def storedRangeAnswer[K, G <: graft.sketch.BucketGrid[K]](
+      grid: graft.sketch.BucketGrid.Kind[K, G])(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
     import org.apache.spark.sql.functions.lit
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
     sealed trait ROut { def name: String }
     case class CntOut(name: String) extends ROut
     case class SumOut(name: String, col: String) extends ROut
@@ -414,22 +383,14 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
             (f.nameParts.last.toLowerCase, f.arguments) match {
               case ("count", Seq(Literal(v: Number, _))) if v.intValue == 1 =>
                 Some(CntOut(name))
-              case ("count",
-                  Seq(_: org.apache.spark.sql.catalyst.analysis.UnresolvedStar)) =>
-                Some(CntOut(name))
+              case ("count", Seq(_: UnresolvedStar)) => Some(CntOut(name))
               case ("sum", Seq(a: UnresolvedAttribute)) =>
                 Some(SumOut(name, a.nameParts.last))
               case ("avg" | "mean", Seq(a: UnresolvedAttribute)) =>
                 Some(AvgOut(name, a.nameParts.last))
-              // percentile RESTRICTED to the range (round 10): the
-              // histogram's bucket masses clipped to the range bracket
-              // the rank — Histogram.rangePercentile
-              case ("percentile" | "percentile_approx" | "approx_percentile",
-                  Seq(a: UnresolvedAttribute, l: Literal)) =>
-                litDouble(l).map(p => PctOut(name, a.nameParts.last, p))
-              case ("median", Seq(a: UnresolvedAttribute)) =>
-                Some(PctOut(name, a.nameParts.last, 0.5))
-              case _ => None
+              // percentile RESTRICTED to the range: the clipped bucket
+              // masses bracket the rank (rangePercentile)
+              case _ => percentileArg(f).map { case (c, p) => PctOut(name, c, p) }
             }
           case _ => None
         }
@@ -437,70 +398,36 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
         val parts = classified.flatten
         val (c, lowerB, upperB) = rangeBounds(cond).getOrElse(return None)
         // SUM/AVG/PERCENTILE serve only over the RANGE column itself
-        // (the histogram models exactly that distribution; the histsum
-        // blob records that column's per-bucket sums)
-        val sumCols = parts.collect {
-          case SumOut(_, cc) => cc
-          case AvgOut(_, cc) => cc
-          case PctOut(_, cc, _) => cc
-        }
-        if (sumCols.exists(!_.equalsIgnoreCase(c))) return None
-        // the filter column must be numeric — a histogram only exists
-        // for castable columns, but the gate keeps intent explicit
+        // (the sketch and its sum rider model exactly that column)
+        if (parts.exists {
+          case SumOut(_, cc)    => !cc.equalsIgnoreCase(c)
+          case AvgOut(_, cc)    => !cc.equalsIgnoreCase(c)
+          case PctOut(_, cc, _) => !cc.equalsIgnoreCase(c)
+          case _                => false
+        }) return None
         if (!numericColumn(table, c)) return None
-        val h = catalog.getSketch(table, c, "histogram")
+        val h = catalog.getSketch(table, c, grid.sketchType)
           .filter(sketchIsFresh(table, _))
-          .map(s => graft.sketch.Histogram.deserialize(s.data))
+          .map(s => grid.deserialize(s.data))
           .getOrElse(return None)
-        // per-bucket exact decimal sums, needed only for SUM/AVG
-        // (percentiles read the histogram alone)
+        val (cntEst, cntBoundary) = h.rangeCount(lowerB, upperB)
+        val cntRel = cntBoundary.toDouble / math.max(1.0, cntEst)
         val needSums = parts.exists {
           case _: SumOut | _: AvgOut => true
           case _                     => false
         }
-        val bsums: Option[Array[BigInt]] =
-          if (!needSums) None
-          else if (!riderInSync(table, c, "histogram", "histsum"))
+        val (sumEst, sumRel): (Option[Double], Double) =
+          if (!needSums) (None, 0.0)
+          else if (!riderInSync(table, c, grid.sketchType, grid.sumType))
             return None // rider a batch behind the counts: refuse sums
-          else Some(catalog.getSketch(table, c, "histsum")
-            .filter(sketchIsFresh(table, _))
-            .flatMap { s =>
-              val byKey = graft.sketch.GroupedHll.unpack(s.data)
-                .collect { case (Some(k), b) => k.toInt -> BigInt(b) }.toMap
-              if (byKey.size == h.buckets)
-                Some(Array.tabulate(h.buckets)(byKey))
-              else None
-            }.getOrElse(return None))
-        val (cntEst, cntBoundary) = h.rangeCount(lowerB, upperB)
-        val cntRel = cntBoundary.toDouble / math.max(1.0, cntEst)
-        // SUM estimate on the SAME grid geometry: interior buckets add
-        // exactly (unscaled decimal addition, one cast), boundary
-        // buckets contribute their covered fraction
-        val (sumEst, sumBoundary): (Option[Double], Double) = bsums match {
-          case None => (None, 0.0)
-          case Some(bs) =>
-            def d(i: Int): Double =
-              new java.math.BigDecimal(bs(i).bigInteger, 4).doubleValue
-            h.rangePositions(lowerB, upperB) match {
-              case None => (None, 0.0) // empty range: SUM of no rows
-              case Some((pa, pb, ia, ib)) if ia == ib =>
-                (Some(d(ia) * (pb - pa)), math.abs(d(ia)))
-              case Some((pa, pb, ia, ib)) =>
-                var interior = BigInt(0)
-                var j = ia + 1
-                while (j < ib) { interior += bs(j); j += 1 }
-                val interiorD = new java.math.BigDecimal(
-                  interior.bigInteger, 4).doubleValue
-                (Some((interiorD + d(ia) * ((ia + 1).toDouble - pa)) +
-                  d(ib) * (pb - ib.toDouble)),
-                  math.abs(d(ia)) + math.abs(d(ib)))
-            }
-        }
-        val sumRel = sumEst match {
-          case Some(s0) if s0 != 0.0 => sumBoundary / math.abs(s0)
-          case Some(_) if sumBoundary > 0.0 => Double.PositiveInfinity
-          case _ => 0.0
-        }
+          else {
+            val sums = catalog.getSketch(table, c, grid.sumType)
+              .filter(sketchIsFresh(table, _))
+              .flatMap(s => grid.riderSums(s.data))
+              .filter(h.riderCovers)
+              .getOrElse(return None)
+            h.rangeSum(lowerB, upperB, k => sums.getOrElse(k, BigInt(0)))
+          }
         val avgEst: Option[Double] =
           if (cntEst > 0.0) sumEst.map(_ / cntEst) else None
         val cols = parts.map {
@@ -513,137 +440,11 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
             h.rangePercentile(lowerB, upperB, p)
               .map(lit(_)).getOrElse(lit(null).cast("double")).as(n)
         }
-        // the worst output's bound: counts/sums their own ratio, AVG a
-        // conservative first-order combination of both, percentiles
-        // one bucket width of value error plus the boundary mass's
-        // rank-shift fraction
         val err = parts.map {
           case _: CntOut => cntRel
           case _: SumOut => sumRel
           case _: AvgOut => cntRel + sumRel
-          case _: PctOut => 1.0 / h.buckets + cntRel
-        }.foldLeft(0.0)(math.max)
-        Some((spark.range(1).select(cols: _*), err))
-      case _ => None
-    }
-  }
-
-  /** The RELATIVE-error twin of [[storedHistogramRangeAnswer]] for
-    * COUNT shapes: `SELECT count(*) FROM t WHERE <range on x>` served
-    * from a fresh log-linear "hdr" sketch when no equi-width histogram
-    * does — fully covered buckets exact, the (≤2) clipped edge buckets
-    * interpolated with their mass as the bound, the zero bucket's point
-    * mass charged whenever a range bound sits AT 0 (inclusive vs
-    * strict differs by exactly that mass). Count-only: the hdr blob has
-    * no sum rider.
-    */
-  private[engine] def storedHdrRangeAnswer(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    import org.apache.spark.sql.functions.lit
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    sealed trait HOut { def name: String }
-    case class HCnt(name: String) extends HOut
-    case class HSum(name: String, col: String) extends HOut
-    case class HAvg(name: String, col: String) extends HOut
-    case class HPct(name: String, col: String, p: Double) extends HOut
-    parsed match {
-      case Project(outs, Filter(cond, r: UnresolvedRelation))
-          if r.multipartIdentifier.last.equalsIgnoreCase(table) &&
-            outs.nonEmpty =>
-        val classified = outs.map {
-          case Alias(f: UnresolvedFunction, name)
-              if !f.isDistinct && f.filter.isEmpty =>
-            (f.nameParts.last.toLowerCase, f.arguments) match {
-              case ("count", Seq(_: UnresolvedStar)) => Some(HCnt(name))
-              case ("count", Seq(Literal(v: Number, _))) if v.intValue == 1 =>
-                Some(HCnt(name))
-              case ("sum", Seq(a: UnresolvedAttribute)) =>
-                Some(HSum(name, a.nameParts.last))
-              case ("avg" | "mean", Seq(a: UnresolvedAttribute)) =>
-                Some(HAvg(name, a.nameParts.last))
-              // percentile RESTRICTED to the range: the log grid's
-              // clipped bucket masses bracket the rank —
-              // HdrSketch.rangePercentile (the q111 shape with a
-              // RELATIVE-error sketch behind it)
-              case ("percentile" | "percentile_approx" | "approx_percentile",
-                  Seq(a: UnresolvedAttribute, l: Literal)) =>
-                litDouble(l).map(p => HPct(name, a.nameParts.last, p))
-              case ("median", Seq(a: UnresolvedAttribute)) =>
-                Some(HPct(name, a.nameParts.last, 0.5))
-              case _ => None
-            }
-          case _ => None
-        }
-        if (classified.exists(_.isEmpty)) return None
-        val parts = classified.flatten
-        val (c, lowerB, upperB) = rangeBounds(cond).getOrElse(return None)
-        // SUM/AVG/PERCENTILE serve only over the range column itself
-        // (the hdr sketch and its hdrsum rider model exactly that
-        // column's distribution)
-        if (parts.exists {
-          case HSum(_, cc) => !cc.equalsIgnoreCase(c)
-          case HAvg(_, cc) => !cc.equalsIgnoreCase(c)
-          case HPct(_, cc, _) => !cc.equalsIgnoreCase(c)
-          case _           => false
-        }) return None
-        if (!numericColumn(table, c)) return None
-        val sk = catalog.getSketch(table, c, "hdr")
-          .filter(sketchIsFresh(table, _))
-          .map(s => graft.sketch.HdrSketch.deserialize(s.data))
-          .getOrElse(return None)
-        val (cntEst, cntBoundary) = sk.rangeCount(lowerB, upperB)
-        val cntRel = cntBoundary.toDouble / math.max(1.0, cntEst)
-        val needSums = parts.exists {
-          case _: HSum | _: HAvg => true
-          case _                 => false
-        }
-        // the hdrsum rider: per-(sign, e, s) exact scale-4 decimal
-        // sums — interior buckets add exactly (unscaled addition, one
-        // cast), clipped edge buckets contribute their covered
-        // fraction, |sum| boundary mass is the bound (the histsum
-        // discipline on the log grid)
-        val (sumEst, sumRel): (Option[Double], Double) =
-          if (!needSums) (None, 0.0)
-          else if (!riderInSync(table, c, "hdr", "hdrsum"))
-            return None // rider a batch behind the counts: refuse sums
-          else {
-            val bySums = catalog.getSketch(table, c, "hdrsum")
-              .filter(sketchIsFresh(table, _))
-              .map(s => graft.sketch.GroupedHll.unpack(s.data)
-                .collect { case (Some(k), b) => k -> BigInt(b) }.toMap)
-              .getOrElse(return None)
-            def sumOf(k: (Int, Int, Int)): BigInt =
-              bySums.getOrElse(s"${k._1}:${k._2}:${k._3}", BigInt(0))
-            hdrClipSum(sk, lowerB, upperB, sumOf)
-          }
-        val avgEst: Option[Double] =
-          if (cntEst > 0.0) sumEst.map(_ / cntEst) else None
-        val cols = parts.map {
-          case HCnt(n) => lit(cntEst).as(n)
-          case HSum(n, _) =>
-            sumEst.map(lit(_)).getOrElse(lit(null).cast("double")).as(n)
-          case HAvg(n, _) =>
-            avgEst.map(lit(_)).getOrElse(lit(null).cast("double")).as(n)
-          case HPct(n, _, p) =>
-            sk.rangePercentile(lowerB, upperB, p)
-              .map(lit(_)).getOrElse(lit(null).cast("double")).as(n)
-        }
-        // percentiles: 1/m relative value error plus the boundary
-        // mass's rank-shift fraction (the equi-width path's rule with
-        // the log grid's relative bound)
-        val err = parts.map {
-          case _: HCnt => cntRel
-          case _: HSum => sumRel
-          case _: HAvg => cntRel + sumRel
-          case _: HPct => sk.relErrBound + cntRel
+          case _: PctOut => h.valueErr + cntRel
         }.foldLeft(0.0)(math.max)
         Some((spark.range(1).select(cols: _*), err))
       case _ => None
@@ -662,11 +463,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
       : Option[(String, Option[Double], Option[Double])] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
     val sides = conjunctsOf(cond).map {
       case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) =>
         litDouble(l).map(v => (a.nameParts.last, true, v))
@@ -695,61 +491,54 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     Some((bs.head._1, lowers.headOption, uppers.headOption))
   }
 
-  /** Whether `c` is a numeric column of `table` — the gate both range
+  /** Whether `c` is a numeric column of `table` — the gate the range
     * serves apply before trusting a histogram over it. */
   private[engine] def numericColumn(table: String, c: String): Boolean =
     spark.table(table).schema.fields.exists(fld =>
       fld.name.equalsIgnoreCase(c) &&
         fld.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
 
-  /** Grouped twin of [[storedHistogramRangeAnswer]]: `SELECT g...,
-    * count(*) [, sum(x)/avg(x)/percentile(x, p)...] FROM table WHERE
-    * <range on x> GROUP BY g...` answers each RECORDED group's
-    * estimate from its own histogram in a fresh `histogram_grouped`
-    * blob whose value column is x and group set is the query's —
-    * per-group interpolation, zero scan. Percentile outputs (round 10
-    * third pass) run the q111 segment rule per group over that
-    * group's clipped bucket masses — works on per-group OR shared
-    * grids (no cross-group merge happens); they must target the range
-    * column itself. SUM/AVG outputs (round 10 fifth pass, the q106
-    * arithmetic per group) additionally need the "histsum_grouped"
-    * rider the grouped build writes (per-(group, bucket) exact
-    * decimal sums): interior buckets add exactly (unscaled decimal
-    * addition, one cast to double), boundary buckets contribute their
-    * covered fraction, AVG is one division of the two per-group
-    * estimates. RESIDUAL equality conjuncts on non-group columns
-    * (round 10 fifth pass) dispatch to the COMPOSITE blob keyed by
-    * group ∪ residual columns and PRUNE on the residual components —
-    * `WHERE a = 'x' AND <range> GROUP BY b` serves from an "a,b"
-    * blob, each surviving entry exactly one output group (the
-    * residual pins a point, so no cross-group merge happens and
-    * per-group grids serve too). Contract: one row per recorded
-    * group with estimated
-    * in-range mass > 0 (a group with true matches always has mass > 0
-    * — its rows' buckets overlap the range — so no group exact
-    * execution returns is dropped; extra near-range groups may
-    * appear, the approximate-count contract like the global case).
+  /** Grouped twin of [[storedRangeAnswer]]: `SELECT g..., count(*) [,
+    * sum(x)/avg(x)/percentile(x, p)...] FROM table WHERE <range on x>
+    * GROUP BY g...` answers each RECORDED group's estimate from its own
+    * sketch in a fresh grouped `grid` blob ("histogram_grouped" /
+    * "hdr_grouped") whose value column is x and group set is the
+    * query's — per-group interpolation, zero scan. Percentile outputs
+    * run the grid's range-percentile segment rule per group over that
+    * group's clipped bucket masses; they must target the range column
+    * itself. SUM/AVG outputs additionally need the grid's grouped sum
+    * rider (per-(group, bucket) exact decimal sums — the q106/q148
+    * arithmetic per group): interior buckets add exactly (unscaled
+    * decimal addition, one cast to double), boundary buckets
+    * contribute their covered fraction, AVG is one division of the two
+    * per-group estimates. RESIDUAL equality/IN conjuncts on non-group
+    * columns dispatch to the COMPOSITE blob keyed by group ∪ residual
+    * columns and PRUNE on the residual components — `WHERE a = 'x' AND
+    * <range> GROUP BY b` serves from an "a,b" blob; surviving cells of
+    * one output group merge (on the equi-width grid only when they
+    * share one grid; the global log grid always merges exactly, and
+    * there a SUPERSET blob's marginal serves counts/percentiles too).
+    * Rider cells pair with sketch cells: a missing rider cell or the
+    * grid's overflow poison under a massy cell refuses the serve
+    * rather than serve a silent zero, and all-NULL cells (empty
+    * payloads) are never consulted. Contract: one row per recorded
+    * group with estimated in-range mass > 0 (a group with true matches
+    * always has mass > 0 — its rows' buckets overlap the range — so no
+    * group exact execution returns is dropped; extra near-range groups
+    * may appear, the approximate-count contract like the global case).
     * The reported error is the WORST group's boundary-mass ratio per
     * output kind (AVG the first-order combination of count and sum),
-    * plus one bucket width when percentiles are served. Keys serve
-    * typed (keyFieldTypes).
+    * plus the grid's value error when percentiles are served. Keys
+    * serve typed (keyFieldTypes).
     */
-  private[engine] def storedGroupedRangeAnswer(
+  private[engine] def storedGroupedRangeAnswer[K, G <: graft.sketch.BucketGrid[K]](
+      grid: graft.sketch.BucketGrid.Kind[K, G])(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       table: String): Option[(DataFrame, Double)] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     parsed match {
       case Aggregate(gs, outs, Filter(cond, r: UnresolvedRelation), _)
           if r.multipartIdentifier.last.equalsIgnoreCase(table) &&
@@ -758,9 +547,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
         val lower = gNames.map(_.toLowerCase)
         // outputs: the group keys plus any mix of count(*), sum(x),
         // avg(x), and percentile(x, p)/median(x) over the RANGE column
-        // itself — counts/percentiles read each group's histogram,
-        // sums the "histsum_grouped" rider (per-(group, bucket) exact
-        // decimal sums, the q106 arithmetic per group)
         sealed trait AggOut
         case object CntA extends AggOut
         case object SumA extends AggOut
@@ -804,17 +590,8 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
                 case _ => return None
               }
             case Alias(f: UnresolvedFunction, name)
-                if !f.isDistinct && f.filter.isEmpty &&
-                  Set("percentile", "percentile_approx", "approx_percentile",
-                    "median").contains(f.nameParts.last.toLowerCase) =>
-              val colP = (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case (_, Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case _ => None
-              }
-              colP match {
+                if !f.isDistinct && f.filter.isEmpty =>
+              percentileArg(f) match {
                 case Some((cc, p)) if anchor(cc) =>
                   sawAgg = true; Right((name, PctA(p)))
                 case _ => return None
@@ -824,15 +601,12 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
         if (!sawAgg ||
             parts.collect { case Left((_, i)) => i }.toSet !=
               gNames.indices.toSet) return None
-        // the one-column numeric range parse, now tolerating RESIDUAL
-        // equality conjuncts on NON-group columns (round 10 fifth
-        // pass): `WHERE a = 'x' AND <range on v> GROUP BY b` looks up
-        // the COMPOSITE "b,a" blob and prunes on the a component —
-        // each surviving entry is exactly one output group (the
-        // residual pins a point, so no cross-group merge happens and
-        // per-group grids serve too)
-        val conj = conjunctsOf(cond)
-        val (cmps, eqsRaw) = conj.partition {
+        // the one-column numeric range parse, tolerating RESIDUAL
+        // equality/IN conjuncts on NON-group columns: each contributes
+        // a VALUE LIST (a singleton for an equality, several for an
+        // all-literal IN) and the entries matching any combination
+        // merge per output group below
+        val (cmps, eqsRaw) = conjunctsOf(cond).partition {
           case _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
                _: LessThanOrEqual => true
           case _ => false
@@ -844,127 +618,86 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
         if (lower.contains(c.toLowerCase)) return None // that's a WHERE on the key
         if (!numericColumn(table, c)) return None
         // sums/averages/percentiles serve only over the range column
-        // (the per-group histograms and sum riders model exactly that
-        // distribution)
         if (valCol.exists(!_.equalsIgnoreCase(c))) return None
-        // each residual conjunct contributes a VALUE LIST: a singleton
-        // for an equality, several for an all-literal IN — the entries
-        // matching any combination merge per output group below (the
-        // cross-group merge needs one grid, guarded at merge time)
-        val resid: Seq[(String, Seq[String])] = eqsRaw.map {
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(
-              a: UnresolvedAttribute, l: Literal) =>
-            typedLitKey(table, a.nameParts.last, l)
-              .map(v => (a.nameParts.last, Seq(v))).getOrElse(return None)
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(
-              l: Literal, a: UnresolvedAttribute) =>
-            typedLitKey(table, a.nameParts.last, l)
-              .map(v => (a.nameParts.last, Seq(v))).getOrElse(return None)
-          case org.apache.spark.sql.catalyst.expressions.In(
-              a: UnresolvedAttribute, lits)
-              if lits.nonEmpty && lits.forall(_.isInstanceOf[Literal]) =>
-            typedInListKeys(table, a.nameParts.last, lits)
-              .map(vs => (a.nameParts.last, vs)).getOrElse(return None)
-          case _ => return None
-        }
-        val residCols = resid.map(_._1)
-        if (residCols.map(_.toLowerCase).distinct.sizeIs != residCols.size)
-          return None
-        if (residCols.exists(rc => rc.equalsIgnoreCase(c) ||
-            lower.contains(rc.toLowerCase))) return None
-        val lookupCols = gNames ++ residCols
+        val resid: Seq[(String, Seq[String])] =
+          if (eqsRaw.isEmpty) Nil
+          else residualEqualityFilter(eqsRaw.reduce(
+            org.apache.spark.sql.catalyst.expressions.And), table, gNames)
+            .getOrElse(return None)
+        if (resid.exists(_._1.equalsIgnoreCase(c))) return None
+        val lookupCols = gNames ++ resid.map(_._1)
         val kTypes = keyFieldTypes(table, gNames).getOrElse(return None)
         val needSums = parts.exists {
           case Right((_, SumA | AvgA)) => true
           case _                       => false
         }
-        groupedBlobFor(table, c, "histogram_grouped", lookupCols)
-          .map { full =>
-          // prune on the residual components (typed literal match —
-          // any value in each conjunct's list); the serve below emits
-          // gs-prefix keys, several residual combinations MERGE per
-          // output group (same grid required), and sum lookups use the
-          // FULL tuple
+        // SUM/AVG need the rider's cells PAIRED with sketch cells (to
+        // tell overflow poison from all-NULL), so they require the
+        // exact key-set blob
+        val exactBlob = groupedBlobFor(table, c, grid.groupedType, lookupCols)
+        val blob =
+          if (needSums || !grid.rangeMarginals) exactBlob
+          else exactBlob.orElse(partialGroupedBlobFor(table, c,
+            grid.groupedType, lookupCols, Nil, grid.mergeBytes))
+        blob.map { full =>
+          // per-cell rider sums (None = the grid's overflow poison); a
+          // missing or batch-behind rider with SUM/AVG outputs refuses
+          val sumsByKey: Map[Seq[Option[String]], Option[Map[K, BigInt]]] =
+            if (!needSums) Map.empty
+            else if (!riderInSync(table, c, grid.groupedType,
+                grid.groupedSumType))
+              return None // rider a batch behind the counts
+            else groupedBlobFor(table, c, grid.groupedSumType, lookupCols) match {
+              case Some(se) => se.map { case (k, inner) =>
+                  k -> grid.riderSums(inner) }.toMap
+              case None => return None
+            }
+          // prune on the residual components (typed literal match — any
+          // value in each conjunct's list); the serve emits gs-prefix
+          // keys, several residual combinations MERGE per output group,
+          // and sum lookups use the FULL tuple
           val entries: Seq[(Seq[Option[String]], Array[Byte])] =
             full.collect {
               case (k, b) if resid.zipWithIndex.forall { case ((_, vs), i) =>
                   k(gNames.size + i).exists(vs.contains) } =>
                 (k, b)
             }
-          // per-group bucket sums (unscaled scale-4 decimals), only
-          // when SUM/AVG outputs need them; a missing or stale rider
-          // refuses the serve rather than inventing zeros
-          val sumsByKey: Map[Seq[Option[String]], Map[Int, BigInt]] =
-            if (!needSums) Map.empty
-            else if (!riderInSync(table, c, "histogram_grouped",
-                "histsum_grouped"))
-              return None // rider a batch behind the counts
-            else groupedBlobFor(table, c, "histsum_grouped", lookupCols) match {
-              case Some(se) => se.map { case (k, inner) =>
-                  k -> graft.sketch.GroupedHll.unpack(inner)
-                    .collect { case (Some(bk), bb) => bk.toInt -> BigInt(bb) }
-                    .toMap
-                }.toMap
-              case None => return None
-            }
           val byPrefix = entries.groupBy(_._1.take(gNames.size)).toSeq
             .sortBy(_._1.map(_.getOrElse("")).mkString("\u0000"))
           val served = byPrefix.flatMap { case (pk, es) =>
-            val hs = es.collect { case (_, b) if b.nonEmpty =>
-              graft.sketch.Histogram.deserialize(b) }
-            if (hs.isEmpty) None // all-NULL cell(s): no row passes the range
-            else if (hs.sizeIs > 1 && !hs.forall(h0 => h0.lo == hs.head.lo &&
-                h0.width == hs.head.width && h0.buckets == hs.head.buckets))
-              return None // multi-cell merge needs ONE (shared) grid
+            val merged = es.map(_._2).reduce(grid.mergeBytes)
+            if (merged.isEmpty) None // all-NULL cell(s): no row passes
             else {
-              val h = hs.reduce(_ merge _)
+              val h = grid.deserialize(merged)
               val (est, bnd) = h.rangeCount(lowerB, upperB)
-              if (est <= 0.0) None
-              else {
-                val cntRel = bnd / math.max(1.0, est)
-                val (sumEst, sumBnd): (Option[Double], Double) =
+              if (est <= 0.0) {
+                // boundary-ONLY mass (e.g. the zero bucket sitting AT a
+                // range bound): the truth may include this group — on
+                // the log grid dropping the row would silently
+                // understate the result AND its error, so it refuses
+                if (bnd > 0L && grid.boundaryOnlyRefuses) return None
+                None
+              } else {
+                // riders of the merged cells add EXACTLY (BigInt)
+                val (sumEst, sumRel): (Option[Double], Double) =
                   if (!needSums) (None, 0.0)
                   else {
-                    // riders of the merged cells add EXACTLY (BigInt)
-                    var bs = Map.empty[Int, BigInt]
+                    var bs = Map.empty[K, BigInt]
                     es.foreach { case (k, b) =>
                       if (b.nonEmpty) sumsByKey.get(k) match {
-                        case None => return None // rider lacks a cell
-                        // a cell with in-range mass but an EMPTY sum
-                        // map is the streaming overflow poison —
-                        // refuse rather than serve a silent zero
-                        case Some(m) if m.isEmpty => return None
-                        case Some(m) => m.foreach { case (i, v0) =>
-                          bs = bs.updated(i, bs.getOrElse(i, BigInt(0)) + v0)
+                        case None       => return None // rider lacks the cell
+                        case Some(None) => return None // overflow poison
+                        case Some(Some(m0)) => m0.foreach { case (kk, v0) =>
+                          bs = bs.updated(kk,
+                            bs.getOrElse(kk, BigInt(0)) + v0)
                         }
                       }
                     }
-                    def d(i: Int): Double = new java.math.BigDecimal(
-                      bs.getOrElse(i, BigInt(0)).bigInteger, 4).doubleValue
-                    h.rangePositions(lowerB, upperB) match {
-                      case None => (None, 0.0)
-                      case Some((pa, pb, ia, ib)) if ia == ib =>
-                        (Some(d(ia) * (pb - pa)), math.abs(d(ia)))
-                      case Some((pa, pb, ia, ib)) =>
-                        var interior = BigInt(0)
-                        var j = ia + 1
-                        while (j < ib) {
-                          interior += bs.getOrElse(j, BigInt(0)); j += 1
-                        }
-                        val interiorD = new java.math.BigDecimal(
-                          interior.bigInteger, 4).doubleValue
-                        (Some((interiorD +
-                          d(ia) * ((ia + 1).toDouble - pa)) +
-                          d(ib) * (pb - ib.toDouble)),
-                          math.abs(d(ia)) + math.abs(d(ib)))
-                    }
+                    h.rangeSum(lowerB, upperB,
+                      kk => bs.getOrElse(kk, BigInt(0)))
                   }
-                val sumRel = sumEst match {
-                  case Some(s0) if s0 != 0.0 => sumBnd / math.abs(s0)
-                  case Some(_) if sumBnd > 0.0 => Double.PositiveInfinity
-                  case _ => 0.0
-                }
-                Some((pk, h, est, cntRel, sumEst, sumRel))
+                Some((pk, h, est, bnd.toDouble / math.max(1.0, est),
+                  sumEst, sumRel))
               }
             }
           }
@@ -974,7 +707,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
               case Right((_, CntA))    => Double.box(est)
               case Right((_, SumA))    => sumEst.map(Double.box).orNull
               case Right((_, AvgA))    =>
-                sumEst.map(s => Double.box(s / est)).orNull
+                sumEst.map(s0 => Double.box(s0 / est)).orNull
               case Right((_, PctA(p))) =>
                 h.rangePercentile(lowerB, upperB, p)
                   .map(Double.box).orNull
@@ -988,284 +721,12 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
           import scala.jdk.CollectionConverters._
           val maxCnt = served.map(_._4).foldLeft(0.0)(math.max)
           val maxSum = served.map(_._6).foldLeft(0.0)(math.max)
-          val bucketTerm = parts.collectFirst {
-            case Right((_, PctA(_))) => served.map { case (_, h, _, _, _, _) =>
-              1.0 / h.buckets }.foldLeft(0.0)(math.max)
-          }.getOrElse(0.0)
+          val valueErr = served.map(_._2.valueErr).foldLeft(0.0)(math.max)
           val err = parts.map {
             case Right((_, CntA))    => maxCnt
             case Right((_, SumA))    => maxSum
             case Right((_, AvgA))    => maxCnt + maxSum
-            case Right((_, PctA(_))) => bucketTerm + maxCnt
-            case Left(_)             => 0.0
-          }.foldLeft(0.0)(math.max)
-          (spark.createDataFrame(rows.asJava, schema), err)
-        }
-      case _ => None
-    }
-  }
-
-  /** [[storedGroupedRangeAnswer]]'s RELATIVE-error twin: `SELECT g...,
-    * count(*) [, sum(x)/avg(x)/percentile(x, p)...] FROM t WHERE
-    * <range on x> GROUP BY g...` from a fresh "hdr_grouped" blob when
-    * no grouped equi-width histogram serves — per-group clip counts
-    * (HdrSketch.rangeCount) and range percentiles
-    * (HdrSketch.rangePercentile), 1/m-RELATIVE on any magnitude.
-    * SUM/AVG read the "hdrsum_grouped" rider the build writes
-    * (per-(group, log-bucket) exact decimal sums): interior buckets
-    * add exactly, clipped edge buckets scale by the covered fraction,
-    * AVG is one division — the q148 arithmetic per group. Residual
-    * equality/IN conjuncts prune the composite blob, and because the
-    * log grid is global, surviving cells of one output group — and
-    * full MARGINAL collapses — merge EXACTLY (the shared-grid
-    * requirement the equi-width twin imposes does not exist here);
-    * rider cells pair with sketch cells so the empty-pack overflow
-    * POISON refuses sums while counts keep serving, and all-NULL
-    * cells (empty sketches) are never consulted. SUM/AVG require the
-    * exact key-set blob (a SUPERSET blob's marginal keeps serving
-    * counts/percentiles only). Same row contract as the equi-width
-    * twin: one row per recorded group with positive in-range mass.
-    */
-  private[engine] def storedGroupedHdrRangeAnswer(
-      parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      table: String): Option[(DataFrame, Double)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
-    parsed match {
-      case Aggregate(gs, outs, Filter(cond, r: UnresolvedRelation), _)
-          if r.multipartIdentifier.last.equalsIgnoreCase(table) &&
-            gs.nonEmpty && gs.forall(_.isInstanceOf[UnresolvedAttribute]) =>
-        val gNames = gs.map(_.asInstanceOf[UnresolvedAttribute].nameParts.last)
-        val lower = gNames.map(_.toLowerCase)
-        sealed trait AggOut
-        case object CntA extends AggOut
-        case object SumA extends AggOut
-        case object AvgA extends AggOut
-        case class PctA(p: Double) extends AggOut
-        var sawAgg = false
-        var valCol: Option[String] = None
-        def anchor(cc: String): Boolean =
-          if (valCol.forall(_.equalsIgnoreCase(cc))) { valCol = Some(cc); true }
-          else false
-        val parts: Seq[Either[(String, Int), (String, AggOut)]] =
-          outs.map {
-            case a: UnresolvedAttribute
-                if lower.contains(a.nameParts.last.toLowerCase) =>
-              Left((a.nameParts.last,
-                lower.indexOf(a.nameParts.last.toLowerCase)))
-            case Alias(e, name)
-                if attrName(e).orElse(exprKeyName(e)).exists(n => lower.contains(n.toLowerCase)) =>
-              Left((name, lower.indexOf(attrName(e).orElse(exprKeyName(e)).get.toLowerCase)))
-            case Alias(f: UnresolvedFunction, name)
-                if f.nameParts.last.equalsIgnoreCase("count") &&
-                  !f.isDistinct && f.filter.isEmpty && (f.arguments match {
-                    case Seq(Literal(v: Number, _)) => v.intValue == 1
-                    case Seq(_: UnresolvedStar)     => true
-                    case _                          => false
-                  }) =>
-              sawAgg = true; Right((name, CntA))
-            case Alias(f: UnresolvedFunction, name)
-                if !f.isDistinct && f.filter.isEmpty &&
-                  Set("sum", "avg", "mean").contains(
-                    f.nameParts.last.toLowerCase) =>
-              f.arguments match {
-                case Seq(a: UnresolvedAttribute)
-                    if anchor(a.nameParts.last) =>
-                  sawAgg = true
-                  Right((name,
-                    if (f.nameParts.last.equalsIgnoreCase("sum")) SumA
-                    else AvgA))
-                case _ => return None
-              }
-            case Alias(f: UnresolvedFunction, name)
-                if !f.isDistinct && f.filter.isEmpty &&
-                  Set("percentile", "percentile_approx", "approx_percentile",
-                    "median").contains(f.nameParts.last.toLowerCase) =>
-              val colP = (f.nameParts.last.toLowerCase, f.arguments) match {
-                case ("median", Seq(a: UnresolvedAttribute)) =>
-                  Some((a.nameParts.last, 0.5))
-                case (_, Seq(a: UnresolvedAttribute, l: Literal)) =>
-                  litDouble(l).map(p => (a.nameParts.last, p))
-                case _ => None
-              }
-              colP match {
-                case Some((cc, p)) if anchor(cc) =>
-                  sawAgg = true; Right((name, PctA(p)))
-                case _ => return None
-              }
-            case _ => return None
-          }
-        if (!sawAgg ||
-            parts.collect { case Left((_, i)) => i }.toSet !=
-              gNames.indices.toSet) return None
-        val conj = conjunctsOf(cond)
-        val (cmps, eqsRaw) = conj.partition {
-          case _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
-               _: LessThanOrEqual => true
-          case _ => false
-        }
-        if (cmps.isEmpty) return None
-        val (c, lowerB, upperB) = rangeBounds(cmps.reduce(
-          org.apache.spark.sql.catalyst.expressions.And))
-          .getOrElse(return None)
-        if (lower.contains(c.toLowerCase)) return None
-        if (!numericColumn(table, c)) return None
-        if (valCol.exists(!_.equalsIgnoreCase(c))) return None
-        val resid: Seq[(String, Seq[String])] = eqsRaw.map {
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(
-              a: UnresolvedAttribute, l: Literal) =>
-            typedLitKey(table, a.nameParts.last, l)
-              .map(v => (a.nameParts.last, Seq(v))).getOrElse(return None)
-          case org.apache.spark.sql.catalyst.expressions.EqualTo(
-              l: Literal, a: UnresolvedAttribute) =>
-            typedLitKey(table, a.nameParts.last, l)
-              .map(v => (a.nameParts.last, Seq(v))).getOrElse(return None)
-          case org.apache.spark.sql.catalyst.expressions.In(
-              a: UnresolvedAttribute, lits)
-              if lits.nonEmpty && lits.forall(_.isInstanceOf[Literal]) =>
-            typedInListKeys(table, a.nameParts.last, lits)
-              .map(vs => (a.nameParts.last, vs)).getOrElse(return None)
-          case _ => return None
-        }
-        val residCols = resid.map(_._1)
-        if (residCols.map(_.toLowerCase).distinct.sizeIs != residCols.size)
-          return None
-        if (residCols.exists(rc => rc.equalsIgnoreCase(c) ||
-            lower.contains(rc.toLowerCase))) return None
-        val lookupCols = gNames ++ residCols
-        val kTypes = keyFieldTypes(table, gNames).getOrElse(return None)
-        val needSums = parts.exists {
-          case Right((_, SumA | AvgA)) => true
-          case _                       => false
-        }
-        // exact key-set match first; a SUPERSET composite blob also
-        // serves — the unreferenced components collapse exactly on
-        // the global log grid (partialGroupedBlobFor's marginal rule).
-        // SUM/AVG need the rider's cells PAIRED with sketch cells to
-        // tell overflow poison from all-NULL, so they require the
-        // exact-set blob.
-        val exactBlob = groupedBlobFor(table, c, "hdr_grouped", lookupCols)
-        val blob =
-          if (needSums) exactBlob
-          else exactBlob.orElse(partialGroupedBlobFor(table, c,
-            "hdr_grouped", lookupCols, Nil, hdrMergeBytes))
-        blob.map { full =>
-          // per-cell rider packs (inner key "sg:e:s" -> unscaled
-          // scale-4 decimal bytes; None = the "!" overflow-poison
-          // sentinel); a missing or batch-behind rider with SUM/AVG
-          // outputs refuses
-          val sumsByKey: Map[Seq[Option[String]],
-              Option[Map[(Int, Int, Int), BigInt]]] =
-            if (!needSums) Map.empty
-            else if (!riderInSync(table, c, "hdr_grouped",
-                "hdrsum_grouped"))
-              return None // rider a batch behind the counts
-            else groupedBlobFor(table, c, "hdrsum_grouped", lookupCols) match {
-              case Some(se) => se.map { case (k, inner) =>
-                  val entries = graft.sketch.GroupedHll.unpack(inner)
-                  if (entries.exists(_._1.contains(
-                      graft.sketch.SketchOps.HdrSumPoisonKey)))
-                    k -> None // per-group overflow poison
-                  else k -> Some(entries.map {
-                    case (Some(kk), bb) => kk.split(":") match {
-                      case Array(sg, e0, s0) =>
-                        (sg.toInt, e0.toInt, s0.toInt) -> BigInt(bb)
-                      case _ => return None
-                    }
-                    case _ => return None
-                  }.toMap)
-                }.toMap
-              case None => return None
-            }
-          val entries: Seq[(Seq[Option[String]], Array[Byte])] =
-            full.collect {
-              case (k, b) if resid.zipWithIndex.forall { case ((_, vs), i) =>
-                  k(gNames.size + i).exists(vs.contains) } =>
-                (k, b)
-            }
-          val byPrefix = entries.groupBy(_._1.take(gNames.size)).toSeq
-            .sortBy(_._1.map(_.getOrElse("")).mkString(" "))
-          var relBound = 0.0
-          val served = byPrefix.flatMap { case (pk, es) =>
-            val merged = es.map(_._2).reduce(hdrMergeBytes)
-            if (merged.isEmpty) None // all-NULL cell(s): no row passes
-            else {
-              val sk = graft.sketch.HdrSketch.deserialize(merged)
-              relBound = math.max(relBound, sk.relErrBound)
-              val (est, bnd) = sk.rangeCount(lowerB, upperB)
-              if (est <= 0.0) {
-                // boundary-ONLY mass (e.g. the zero bucket sitting AT
-                // a range bound): the truth may include this group, so
-                // dropping the row would silently understate the result
-                // AND its error — refuse the whole serve to the scan,
-                // exactly like the global twin's bnd/max(1,0) blow-up
-                if (bnd > 0L) return None
-                None // genuinely no covered mass: exact returns no row
-              }
-              else {
-                // riders of the in-play cells add EXACTLY (BigInt); a
-                // missing rider cell or the overflow-poison sentinel
-                // under a massy sketch refuses rather than serving a
-                // silent zero (an EMPTY rider map is a legitimate
-                // all-zero-valued cell — every nonzero-bucket sum is 0)
-                val (sumEst, sumRel): (Option[Double], Double) =
-                  if (!needSums) (None, 0.0)
-                  else {
-                    var bs = Map.empty[(Int, Int, Int), BigInt]
-                    es.foreach { case (k, b) =>
-                      if (b.nonEmpty) sumsByKey.get(k) match {
-                        case None       => return None // rider lacks the cell
-                        case Some(None) => return None // overflow poison
-                        case Some(Some(m0)) => m0.foreach { case (kk, v0) =>
-                          bs = bs.updated(kk,
-                            bs.getOrElse(kk, BigInt(0)) + v0)
-                        }
-                      }
-                    }
-                    hdrClipSum(sk, lowerB, upperB,
-                      kk => bs.getOrElse(kk, BigInt(0)))
-                  }
-                Some((pk, sk, est, bnd.toDouble / math.max(1.0, est),
-                  sumEst, sumRel))
-              }
-            }
-          }
-          val rows = served.map { case (k, sk, est, _, sumEst, _) =>
-            org.apache.spark.sql.Row.fromSeq(parts.map {
-              case Left((_, i))        => typedKeyValue(kTypes(i), k(i))
-              case Right((_, CntA))    => Double.box(est)
-              case Right((_, SumA))    => sumEst.map(Double.box).orNull
-              case Right((_, AvgA))    =>
-                sumEst.map(s0 => Double.box(s0 / est)).orNull
-              case Right((_, PctA(p))) =>
-                sk.rangePercentile(lowerB, upperB, p)
-                  .map(Double.box).orNull
-            })
-          }
-          val schema = StructType(parts.map {
-            case Left((n, i)) => StructField(n, kTypes(i), nullable = true)
-            case Right((n, a)) =>
-              StructField(n, DoubleType, nullable = a != CntA)
-          })
-          import scala.jdk.CollectionConverters._
-          val maxCnt = served.map(_._4).foldLeft(0.0)(math.max)
-          val maxSum = served.map(_._6).foldLeft(0.0)(math.max)
-          val err = parts.map {
-            case Right((_, CntA))    => maxCnt
-            case Right((_, SumA))    => maxSum
-            case Right((_, AvgA))    => maxCnt + maxSum
-            case Right((_, PctA(_))) => relBound + maxCnt
+            case Right((_, PctA(_))) => valueErr + maxCnt
             case Left(_)             => 0.0
           }.foldLeft(0.0)(math.max)
           (spark.createDataFrame(rows.asJava, schema), err)
@@ -1300,11 +761,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     import org.apache.spark.sql.catalyst.expressions.{Alias, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
     import org.apache.spark.sql.functions.lit
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
     sealed trait ROut { def name: String }
     case class CntOut(name: String) extends ROut
     case class SumOut(name: String, col: String) extends ROut
@@ -1325,12 +781,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
                 Some(SumOut(name, a.nameParts.last))
               case ("avg" | "mean", Seq(a: UnresolvedAttribute)) =>
                 Some(AvgOut(name, a.nameParts.last))
-              case ("percentile" | "percentile_approx" | "approx_percentile",
-                  Seq(a: UnresolvedAttribute, l: Literal)) =>
-                litDouble(l).map(p => PctOut(name, a.nameParts.last, p))
-              case ("median", Seq(a: UnresolvedAttribute)) =>
-                Some(PctOut(name, a.nameParts.last, 0.5))
-              case _ => None
+              case _ => percentileArg(f).map { case (c, p) => PctOut(name, c, p) }
             }
           case _ => None
         }
@@ -1412,13 +863,11 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
                   if (b.nonEmpty) sm.get(k) match {
                     case None => return None // rider lacks the group
                     case Some(inner) =>
-                      val im = graft.sketch.GroupedHll.unpack(inner)
-                        .collect { case (Some(bk), bb) =>
-                          bk.toInt -> BigInt(bb) }.toMap
-                      if (im.isEmpty) return None // overflow poison
-                      im.foreach { case (i, v0) =>
-                        acc = acc.updated(i, acc.getOrElse(i, BigInt(0)) + v0)
-                      }
+                      graft.sketch.Histogram.riderSums(inner)
+                        .getOrElse(return None) // overflow poison
+                        .foreach { case (i, v0) =>
+                          acc = acc.updated(i, acc.getOrElse(i, BigInt(0)) + v0)
+                        }
                   }
                 }
                 acc
@@ -1430,32 +879,10 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
               val (est, bnd) = h.rangeCount(lowerB, upperB)
               (est, bnd / math.max(1.0, est))
           }
-          val (sumEst, sumBnd): (Option[Double], Double) = hOpt match {
+          val (sumEst, sumRel): (Option[Double], Double) = hOpt match {
             case Some(h) if needSums =>
-              def d(i: Int): Double = new java.math.BigDecimal(
-                sums.getOrElse(i, BigInt(0)).bigInteger, 4).doubleValue
-              h.rangePositions(lowerB, upperB) match {
-                case None => (None, 0.0)
-                case Some((pa, pb, ia, ib)) if ia == ib =>
-                  (Some(d(ia) * (pb - pa)), math.abs(d(ia)))
-                case Some((pa, pb, ia, ib)) =>
-                  var interior = BigInt(0)
-                  var j = ia + 1
-                  while (j < ib) {
-                    interior += sums.getOrElse(j, BigInt(0)); j += 1
-                  }
-                  val interiorD = new java.math.BigDecimal(
-                    interior.bigInteger, 4).doubleValue
-                  (Some((interiorD + d(ia) * ((ia + 1).toDouble - pa)) +
-                    d(ib) * (pb - ib.toDouble)),
-                    math.abs(d(ia)) + math.abs(d(ib)))
-              }
+              h.rangeSum(lowerB, upperB, i => sums.getOrElse(i, BigInt(0)))
             case _ => (None, 0.0)
-          }
-          val sumRel = sumEst match {
-            case Some(s0) if s0 != 0.0 => sumBnd / math.abs(s0)
-            case Some(_) if sumBnd > 0.0 => Double.PositiveInfinity
-            case _ => 0.0
           }
           val avgEst: Option[Double] =
             if (cntEst > 0.0) sumEst.map(_ / cntEst) else None
@@ -2117,16 +1544,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     if (ok) Some(all) else None
   }
 
-  /** Malformed catalog metadata — an unparseable blob key string, a
-    * corrupt parameter — must REFUSE a serve (fall through to the next
-    * strategy / the scan), never fail the query. Every decode branch
-    * throws IllegalArgumentException subtypes by contract
-    * (typedKeyValue rewraps the timestamp parser's DateTimeException),
-    * so one narrow catch at each dispatch makes the refusal uniform.
-    */
-  private[engine] def refusing[A](f: => Option[A]): Option[A] =
-    try f catch { case _: IllegalArgumentException => None }
-
   /** Whether the session time zone has one fixed offset (UTC, +02:00,
     * ...). Timestamp group keys are gated on this at build AND serve:
     * the blobs key groups by the zone-LOCAL cast-to-string rendering,
@@ -2172,58 +1589,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
       }
     }.orNull
   }
-
-  /** Histogram collapse for partial-key dispatch: empty payloads
-    * (all-NULL groups — percentile ignores NULLs) are identities;
-    * non-empty payloads add bucket counts, which is EXACT for the
-    * union iff both sit on the same grid (`Histogram.merge` throws
-    * otherwise — shared-grid builds guarantee a match by construction;
-    * per-group grids refuse naturally, the caller catches and falls
-    * through to the scan).
-    */
-  private[engine] def histMergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a.isEmpty) b
-    else if (b.isEmpty) a
-    else graft.sketch.Histogram.deserialize(a)
-      .merge(graft.sketch.Histogram.deserialize(b)).serialize
-
-  /** HDR collapse for partial-key / marginal dispatch: empty payloads
-    * (all-NULL groups) are identities; non-empty payloads add
-    * per-bucket counts, which is EXACT for ANY two groups — the log
-    * grid is the real line's binades, global by construction, so
-    * grouped HDR blobs never have the differing-grid refusal the
-    * per-group equi-width histograms do.
-    */
-  private[engine] def hdrMergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    graft.sketch.HdrSketch.mergeBytes(a, b)
-
-  /** The hdrsum clip fold (the q148/q160 arithmetic), shared by the
-    * global and grouped serves so the bit-exactness-sensitive
-    * associations can never drift: interior decimal sums add exactly
-    * (unscaled BigInt addition, ONE cast to double), the <=2 clipped
-    * edge terms scale by the covered fraction in partial order, and
-    * the |sum| boundary mass bounds the estimate.
-    */
-  private[engine] def hdrClipSum(sk: graft.sketch.HdrSketch,
-      lowerB: Option[Double], upperB: Option[Double],
-      sumOf: ((Int, Int, Int)) => BigInt): (Option[Double], Double) =
-    sk.rangeClip(lowerB, upperB) match {
-      case None => (Some(0.0), 0.0) // empty range: SUM of no rows
-      case Some(clip) =>
-        var interior = BigInt(0)
-        clip.interior.foreach { case (kk, _) => interior += sumOf(kk) }
-        def d(v: BigInt): Double =
-          new java.math.BigDecimal(v.bigInteger, 4).doubleValue
-        val terms = clip.partial.map(pt => d(sumOf(pt.key)) * pt.frac)
-        val est = (d(interior) + terms.headOption.getOrElse(0.0)) +
-          terms.drop(1).headOption.getOrElse(0.0)
-        val bMass = clip.partial.map(pt => math.abs(d(sumOf(pt.key)))).sum
-        val rel =
-          if (est != 0.0) bMass / math.abs(est)
-          else if (bMass > 0.0) Double.PositiveInfinity
-          else 0.0
-        (Some(est), rel)
-    }
 
   private[engine] val riderLastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
 

@@ -68,10 +68,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
         case Some(ByteType | ShortType | IntegerType | LongType) => 'i'
         case _ => 'x'
       }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     val statsFns = Set("min", "max", "count", "sum", "avg", "mean")
     val colSets: Map[String, Set[String]] = tables.map(t => t -> colSet(t)).toMap
     def owner(col: String): Option[String] = {
@@ -232,10 +228,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, LogicalPlan, Project}
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     val shape: Option[(Seq[Expression], Seq[NamedExpression], LogicalPlan)] =
       parsed match {
         case Aggregate(gs, outs, child, _) if gs.nonEmpty =>
@@ -662,11 +654,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     // rather than serving the wrong (usually empty) group
     def litKey(c: String, l: Literal): Option[String] =
       typedLitKey(table, c, l)
-    def litDouble(l: Literal): Option[Double] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-      case n: Number                             => Some(n.doubleValue())
-      case _                                     => None
-    }
     sealed trait Part
     case class PctPart(name: String, value: Option[Double], err: Double) extends Part
     case class StatPart(name: String, fn: String,
@@ -785,7 +772,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
         def matchedHdrPayloads(c: String): Option[Seq[Array[Byte]]] =
           groupedBlobFor(table, c, "hdr_grouped", predCols)
             .orElse(partialGroupedBlobFor(table, c, "hdr_grouped",
-              predCols, Nil, hdrMergeBytes))
+              predCols, Nil, graft.sketch.HdrSketch.mergeBytes))
             .map(select)
         def mergedHdr(ps: Seq[Array[Byte]])
             : Option[graft.sketch.HdrSketch] = {
@@ -1212,10 +1199,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.nameParts.last)
-      case _                      => None
-    }
     parsed match {
       case Aggregate(gs, outs, child, _) =>
         val d = aggregateGroupKeys(gs, child, table).getOrElse(return None)

@@ -652,7 +652,7 @@ object Aqp {
 
     // Histogram strategy, END-TO-END oracle-gated: build the 64-bucket
     // equi-width histogram over orders.o_totalprice, then let the FULL
-    // engine path (features -> storedHistogramAnswer) serve three
+    // engine path (features -> storedPercentileAnswer) serve three
     // percentiles from it with no scan. Every step of the estimator —
     // grid (hi-lo)/64, bucket bracket, within-bucket interpolation — is
     // a single correctly-rounded IEEE op over exact counts, so DuckDB

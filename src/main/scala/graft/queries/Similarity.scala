@@ -398,7 +398,7 @@ object Similarity {
     * `Dedup.minhashEdges`: the edge set IS the dedup index —
     * deterministic in the inputs — and re-running the within-cell
     * cosine join per invocation was 0.9 s of q145's 4.1 s warm pass
-    * (round-17 Scratch probe) for identical output. The directed-edge
+    * (round-17 probe) for identical output. The directed-edge
     * checkpoint exists only so the union reads the join once; it
     * retires as soon as the undirected copy is materialized.
     */
@@ -417,29 +417,21 @@ object Similarity {
     })
   }
 
-  /** q145's implementation (SemDeDup): cell assignment → within-cell
-    * cosine edges → min-label propagation → kept flags. Factored out
-    * so `tools/Scratch --semdedup` can stage-time it in isolation
-    * (`verbose`) — the round-12/13 bench drift adjudication needed
-    * per-stage numbers, not another whole-query reading.
-    * `hopsPerRound` trades keyed shuffles per materialization against
-    * driver-action rounds (identical fixpoint for ANY value — min-label
-    * propagation is monotone and the convergence probe is exact). The
-    * round-17 probe read 3/4/6 hops as a tie within host noise (2.93 /
-    * 2.96 / 2.80 s warm), so the round-16 value 3 stays: fewer wasted
-    * post-fixpoint hops (3 rounds x 3 = 9 vs 2 x 6 = 12 for the same
-    * depth-6 components) and smaller per-round plans at scale.
+  /** Propagation hops per materialization in [[semanticDedupOf]]: it
+    * trades keyed shuffles per round against driver-action rounds
+    * (identical fixpoint for ANY value — min-label propagation is
+    * monotone and the convergence probe is exact). The round-17 probe
+    * read 3/4/6 hops as a tie within host noise (2.93 / 2.96 / 2.80 s
+    * warm), so the round-16 value 3 stays: fewer wasted post-fixpoint
+    * hops (3 rounds x 3 = 9 vs 2 x 6 = 12 for the same depth-6
+    * components) and smaller per-round plans at scale.
     */
-  private[graft] def semanticDedupOf(s: SparkSession, dir: String,
-      verbose: Boolean = false, hopsPerRound: Int = 3): DataFrame = {
-    def t[T](label: String)(body: => T): T =
-      if (!verbose) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        println(f"[semdedup] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+  private val SemDedupHopsPerRound = 3
+
+  /** q145's implementation (SemDeDup): cell assignment → within-cell
+    * cosine edges → min-label propagation → kept flags.
+    */
+  private[graft] def semanticDedupOf(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
     // min-label propagation over the cell-scoped edge set (the q44
@@ -453,10 +445,10 @@ object Similarity {
     // eager-checkpoint action + join-and-count probe (two actions, one
     // of them a shuffle join). The round-13 probe put the loop at 3.0
     // of q145's 5.7 s.
-    val und = t("undirected")(semDedupUndFor(s, dir))
-    var lbl = t("labels0")(und.select(col("src").as("id")).distinct()
+    val und = semDedupUndFor(s, dir)
+    var lbl = und.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .localCheckpoint())
+      .localCheckpoint()
     def lblSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(expr("cast(lbl as decimal(38,0))"))).collect()(0)
         .getDecimal(0)
@@ -468,40 +460,38 @@ object Similarity {
     var converged = prevSum == null
     var iter = 0
     while (!converged && iter < 50) {
-      t(s"iter$iter") {
-        // MULTIPLE propagation hops per materialization/action (round
-        // 16 measured 3 as the optimum; round 17 re-probed 4 and 6 —
-        // tie within noise, see semanticDedupOf doc):
-        // per-round cost at any scale is the driver action + checkpoint
-        // round trip, not the tiny keyed shuffles — chaining hops
-        // before the convergence check converges in ceil(d/hops)+1
-        // rounds with the identical min-label fixpoint (r16 measured
-        // 7 rounds -> 3 at hops=3, q145 loop 2.5 s -> 1.9 s; the probes
-        // pinned equal label checksums). Each hop is still one keyed
-        // shuffle — nothing grows with corpus size.
-        var cur = lbl
-        for (_ <- 1 to hopsPerRound) {
-          val prop = und.join(cur, und("src") === cur("id"))
-            .select(col("dst").as("id"), col("lbl"))
-          cur = cur.unionAll(prop)
-            .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-        }
-        val next = cur
-          .localCheckpoint(false) // lazy: materialized by the sum below
-        val nextSum = lblSum(next)
-        // a DECIMAL(38,0) overflow under non-ANSI sum semantics would
-        // surface as a NULL sum mid-loop — fail loud, never NPE on the
-        // compareTo below (defensive: headroom is ~2^60 × corpus size)
-        require(nextSum != null,
-          "q145 label-sum overflowed decimal(38,0) — convergence probe invalid")
-        // the sum above materialized `next`; the superseded iterate's
-        // blocks retire immediately (one label generation live)
-        Checkpoints.free(lbl)
-        lbl = next
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        iter += 1
+      // MULTIPLE propagation hops per materialization/action (round
+      // 16 measured 3 as the optimum; round 17 re-probed 4 and 6 —
+      // tie within noise, see semanticDedupOf doc):
+      // per-round cost at any scale is the driver action + checkpoint
+      // round trip, not the tiny keyed shuffles — chaining hops
+      // before the convergence check converges in ceil(d/hops)+1
+      // rounds with the identical min-label fixpoint (r16 measured
+      // 7 rounds -> 3 at hops=3, q145 loop 2.5 s -> 1.9 s; the probes
+      // pinned equal label checksums). Each hop is still one keyed
+      // shuffle — nothing grows with corpus size.
+      var cur = lbl
+      for (_ <- 1 to SemDedupHopsPerRound) {
+        val prop = und.join(cur, und("src") === cur("id"))
+          .select(col("dst").as("id"), col("lbl"))
+        cur = cur.unionAll(prop)
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
       }
+      val next = cur
+        .localCheckpoint(false) // lazy: materialized by the sum below
+      val nextSum = lblSum(next)
+      // a DECIMAL(38,0) overflow under non-ANSI sum semantics would
+      // surface as a NULL sum mid-loop — fail loud, never NPE on the
+      // compareTo below (defensive: headroom is ~2^60 × corpus size)
+      require(nextSum != null,
+        "q145 label-sum overflowed decimal(38,0) — convergence probe invalid")
+      // the sum above materialized `next`; the superseded iterate's
+      // blocks retire immediately (one label generation live)
+      Checkpoints.free(lbl)
+      lbl = next
+      converged = nextSum.compareTo(prevSum) == 0
+      prevSum = nextSum
+      iter += 1
     }
     // `und` is the session-memoized candidate graph — it stays live
     // for the next invocation (the minhashEdges policy). The final

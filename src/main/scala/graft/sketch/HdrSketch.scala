@@ -41,7 +41,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * equal-width structures.
   */
 final case class HdrSketch(m: Int, zero: Long,
-    neg: Vector[((Int, Int), Long)], pos: Vector[((Int, Int), Long)]) {
+    neg: Vector[((Int, Int), Long)], pos: Vector[((Int, Int), Long)])
+    extends BucketGrid[(Int, Int, Int)] {
   require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
 
   def n: Long = zero + neg.iterator.map(_._2).sum + pos.iterator.map(_._2).sum
@@ -50,6 +51,10 @@ final case class HdrSketch(m: Int, zero: Long,
     * its own bucket's lower magnitude, 1/m (zero serves exactly).
     */
   def relErrBound: Double = 1.0 / m
+
+  def valueErr: Double = relErrBound
+
+  def quantile(p: Double): Option[Double] = percentile(p)
 
   private def pow2(e: Int): Double = java.lang.Math.pow(2.0, e)
 
@@ -251,6 +256,35 @@ final case class HdrSketch(m: Int, zero: Long,
       }
     }
 
+  /** The "hdrsum" clip fold (the q148/q160 arithmetic) over
+    * [[rangeClip]]: interior decimal sums add exactly (unscaled BigInt
+    * addition, ONE cast to double), the <=2 clipped edge terms scale by
+    * the covered fraction in partial order, and the |sum| boundary
+    * mass bounds the estimate.
+    */
+  def rangeSum(lower: Option[Double], upper: Option[Double],
+      sumOf: ((Int, Int, Int)) => BigInt): (Option[Double], Double) =
+    rangeClip(lower, upper) match {
+      case None => (Some(0.0), 0.0) // empty range: SUM of no rows
+      case Some(clip) =>
+        var interior = BigInt(0)
+        clip.interior.foreach { case (kk, _) => interior += sumOf(kk) }
+        def d(v: BigInt): Double =
+          new java.math.BigDecimal(v.bigInteger, 4).doubleValue
+        val terms = clip.partial.map(pt => d(sumOf(pt.key)) * pt.frac)
+        val est = (d(interior) + terms.headOption.getOrElse(0.0)) +
+          terms.drop(1).headOption.getOrElse(0.0)
+        val bMass = clip.partial.map(pt => math.abs(d(sumOf(pt.key)))).sum
+        val rel =
+          if (est != 0.0) bMass / math.abs(est)
+          else if (bMass > 0.0) Double.PositiveInfinity
+          else 0.0
+        (Some(est), rel)
+    }
+
+  /** The log grid has no fixed bucket set: absent buckets sum to 0. */
+  def riderCovers(sums: Map[(Int, Int, Int), BigInt]): Boolean = true
+
   /** Exact merge: per-bucket count addition (the log grid is global by
     * construction, so any two sketches of the same m merge).
     */
@@ -285,17 +319,45 @@ final case class HdrSketch(m: Int, zero: Long,
   }
 }
 
-object HdrSketch {
+object HdrSketch extends BucketGrid.Kind[(Int, Int, Int), HdrSketch] {
+  val sketchType = "hdr"
+  val sumType = "hdrsum"
+  val groupedType = "hdr_grouped"
+  val groupedSumType = "hdrsum_grouped"
 
   /** Byte-level merge with the empty payload as identity — THE rule
     * shared by the engine's partial-key/marginal collapse and the
     * streaming maintainer's fold, so the stream==batch byte-equality
-    * law can never drift from the serve-side collapse semantics.
+    * law can never drift from the serve-side collapse semantics. Exact
+    * for ANY two groups: the log grid is the real line's binades.
     */
   def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
     if (a.isEmpty) b
     else if (b.isEmpty) a
     else deserialize(a).merge(deserialize(b)).serialize
+
+  /** "sg:e:s" -> sum; the [[SketchOps.HdrSumPoisonKey]] entry is the
+    * overflow poison, while an EMPTY pack is a legitimate all-zero cell
+    * (the zero bucket carries no rider entry).
+    */
+  def riderSums(pack: Array[Byte]): Option[Map[(Int, Int, Int), BigInt]] = {
+    val entries = GroupedHll.unpack(pack)
+    if (entries.exists(_._1.contains(SketchOps.HdrSumPoisonKey))) None
+    else Some(entries.map {
+      case (Some(k), b) => k.split(":") match {
+        case Array(sg, e, s) => (sg.toInt, e.toInt, s.toInt) -> BigInt(b)
+        case _ => throw new IllegalArgumentException(s"malformed hdrsum key '$k'")
+      }
+      case (None, _) => throw new IllegalArgumentException("null hdrsum key")
+    }.toMap)
+  }
+
+  // the log grid is global: cells of any groups merge exactly, so a
+  // superset blob's marginal serves, a boundary-only cell cannot be
+  // dropped silently, and each group's exact mass gives rank CIs
+  val rangeMarginals = true
+  val boundaryOnlyRefuses = true
+  val percentileCi = true
 
   /** Deterministic bucket of a nonzero magnitude: candidate
     * floor(log2(av)) corrected against exact powers of two, then the

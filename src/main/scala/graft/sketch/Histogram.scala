@@ -12,7 +12,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * rank, so it is within one bucket width of the true order statistic by
   * construction — the error bound the engine reports.
   */
-final case class Histogram(lo: Double, width: Double, counts: Array[Long]) {
+final case class Histogram(lo: Double, width: Double, counts: Array[Long])
+    extends BucketGrid[Int] {
 
   def buckets: Int = counts.length
   def n: Long = { var s = 0L; var i = 0; while (i < counts.length) { s += counts(i); i += 1 }; s }
@@ -137,6 +138,47 @@ final case class Histogram(lo: Double, width: Double, counts: Array[Long]) {
       }
     }
 
+  def quantile(p: Double): Option[Double] = Some(percentile(p))
+
+  def valueErr: Double = 1.0 / buckets
+
+  /** Range SUM over the "histsum" rider on [[rangePositions]]' geometry:
+    * interior buckets add exactly (unscaled decimal addition, one
+    * cast), boundary buckets contribute their covered fraction — the
+    * fixed association the q106 oracle re-derives.
+    */
+  def rangeSum(lower: Option[Double], upper: Option[Double],
+      sumOf: Int => BigInt): (Option[Double], Double) = {
+    def d(i: Int): Double =
+      new java.math.BigDecimal(sumOf(i).bigInteger, 4).doubleValue
+    val (est, boundary): (Option[Double], Double) =
+      rangePositions(lower, upper) match {
+        case None => (None, 0.0) // empty range: SUM of no rows
+        case Some((pa, pb, ia, ib)) if ia == ib =>
+          (Some(d(ia) * (pb - pa)), math.abs(d(ia)))
+        case Some((pa, pb, ia, ib)) =>
+          var interior = BigInt(0)
+          var j = ia + 1
+          while (j < ib) { interior += sumOf(j); j += 1 }
+          val interiorD = new java.math.BigDecimal(
+            interior.bigInteger, 4).doubleValue
+          (Some((interiorD + d(ia) * ((ia + 1).toDouble - pa)) +
+            d(ib) * (pb - ib.toDouble)),
+            math.abs(d(ia)) + math.abs(d(ib)))
+      }
+    (est, est match {
+      case Some(s0) if s0 != 0.0 => boundary / math.abs(s0)
+      case Some(_) if boundary > 0.0 => Double.PositiveInfinity
+      case _ => 0.0
+    })
+  }
+
+  /** A whole-column rider holds one sum per bucket of THIS grid, so a
+    * rider left over from a build on another grid refuses.
+    */
+  def riderCovers(sums: Map[Int, BigInt]): Boolean =
+    sums.size == buckets && sums.keysIterator.forall(i => i >= 0 && i < buckets)
+
   def merge(other: Histogram): Histogram = {
     require(other.lo == lo && other.width == width &&
       other.counts.length == counts.length,
@@ -156,7 +198,36 @@ final case class Histogram(lo: Double, width: Double, counts: Array[Long]) {
   }
 }
 
-object Histogram {
+object Histogram extends BucketGrid.Kind[Int, Histogram] {
+  val sketchType = "histogram"
+  val sumType = "histsum"
+  val groupedType = "histogram_grouped"
+  val groupedSumType = "histsum_grouped"
+
+  /** Counts add only on a shared grid: per-group grids refuse
+    * ([[Histogram.merge]] throws) and the serve falls through.
+    */
+  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    if (a.isEmpty) b
+    else if (b.isEmpty) a
+    else deserialize(a).merge(deserialize(b)).serialize
+
+  /** Bucket index -> sum; an EMPTY pack is the overflow poison the
+    * streaming maintainers write.
+    */
+  def riderSums(pack: Array[Byte]): Option[Map[Int, BigInt]] = {
+    val sums = GroupedHll.unpack(pack)
+      .collect { case (Some(k), b) => k.toInt -> BigInt(b) }.toMap
+    if (sums.isEmpty) None else Some(sums)
+  }
+
+  // per-group grids: a superset blob's marginal would merge differing
+  // grids, and a boundary-only cell drops its row; grouped percentiles
+  // carry no CI companions
+  val rangeMarginals = false
+  val boundaryOnlyRefuses = false
+  val percentileCi = false
+
   def deserialize(data: Array[Byte]): Histogram = {
     val buf = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
     val b = buf.getInt

@@ -1085,7 +1085,7 @@ object EventStreams {
   /** Streaming GROUPED-histogram maintenance — the q84 strategy made
     * LIVE: each micro-batch folds per-(group, bucket) counts into the
     * catalog's grouped histogram blob, and
-    * `QueryEngine.storedGroupedHistogramAnswer` serves
+    * `QueryEngine.storedGroupedPercentileAnswer(Histogram)` serves
     * `SELECT g, percentile(x, p) ... GROUP BY g` over the live table
     * with NO scan. Like the ungrouped maintainHistogramSketch, the
     * per-group grids are FIXED up front (per-batch grids cannot merge);

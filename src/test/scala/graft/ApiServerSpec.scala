@@ -104,6 +104,32 @@ class ApiServerSpec extends SparkSpec {
     assert(v("result").isEmpty)
   }
 
+  test("POST /query marks a result cut at the row cap instead of passing the cap off as the row count") {
+    val sql = "SELECT to_date(l_shipdate) AS day, count(*) AS n FROM lineitem " +
+      "GROUP BY to_date(l_shipdate)"
+    val groups = spark.sql(sql).count()
+    assert(groups > 1000, s"fixture has only $groups days")
+    val (code, body) = http("POST", "/query", Some(
+      s"""{"sql": "$sql", "prefer_exact": true}"""))
+    assert(code == 200, body.take(400))
+    val v = parsed(body)
+    val meta = v("meta").getOrElse(fail(s"no meta: ${body.take(400)}"))
+    assert(meta("rows").flatMap(_.num).contains(1000.0))
+    assert(meta("truncated").flatMap(_.bool).contains(true))
+    assert(meta("row_cap").flatMap(_.num).contains(1000.0))
+    v("result") match {
+      case Some(Json.A(rows)) => assert(rows.size == 1000)
+      case other              => fail(s"expected result rows: $other")
+    }
+    // an answer under the cap keeps meta.rows as its true row count
+    val (c2, b2) = http("POST", "/query", Some(
+      """{"sql": "SELECT n_name FROM nation", "prefer_exact": true}"""))
+    assert(c2 == 200, b2.take(400))
+    val m2 = parsed(b2)("meta").getOrElse(fail(b2.take(400)))
+    assert(m2("rows").flatMap(_.num).contains(25.0))
+    assert(m2("truncated").flatMap(_.bool).contains(false))
+  }
+
   test("POST /query without sql is a 400") {
     val (code, body) = http("POST", "/query", Some("""{"max_rel_error": 0.1}"""))
     assert(code == 400)

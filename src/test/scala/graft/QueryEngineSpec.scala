@@ -4384,4 +4384,82 @@ class QueryEngineSpec extends SparkSpec {
     val r4 = eng2.query(hllSql)
     assert(!r4.servedFromCatalog, r4.reason)
   }
+
+  test("a corrupt blob of a once-unguarded family refuses to the scan and the trace names it") {
+    import org.apache.spark.sql.functions.expr
+    val cat = new MetaCatalog(
+      Files.createTempDirectory("graft-refuse-cms").toString)
+    val eng = new QueryEngine(spark, cat)
+    spark.range(0, 5000).select(expr("concat('k', id % 7)").as("k"))
+      .createOrReplaceTempView("refuse_cms_t")
+    graft.sketch.SketchOps.createCms(spark, cat, "refuse_cms_t", "k")
+    cat.upsertTableStats("refuse_cms_t", 5000L)
+    // keep the parameters (the serve reaches the decode) but store a
+    // 1x1 table header: Cms.deserialize's dimension check throws
+    val good = cat.getSketch("refuse_cms_t", "k", "countmin").get
+    val bad = java.nio.ByteBuffer.allocate(24)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(1).putInt(1).putDouble(0.01).putDouble(0.01).array()
+    cat.upsertSketch(good.copy(data = bad))
+    val sql = "SELECT count(*) AS n FROM refuse_cms_t WHERE k = 'k3'"
+    val r = eng.query(sql)
+    assert(!r.servedFromCatalog, s"${r.planType}: ${r.reason}")
+    val step = r.trace.find(_.family == "cms")
+      .getOrElse(fail(s"no cms step in ${r.trace}"))
+    assert(step.outcome == "refused", step.toString)
+    assert(step.reason.contains("parameter/dimension mismatch"), step.toString)
+    // the families before it were tried in order and did not match
+    assert(r.trace.map(_.family).takeWhile(_ != "cms") ==
+      Seq("stats", "filtered_group", "histogram", "hdr", "grouped_histogram",
+        "grouped_hdr", "grouped_stats", "distinct_count", "distinct_keys"),
+      r.trace.toString)
+    assert(r.df.collect().head.get(0) != null)
+  }
+
+  test("a serve failure that is not a declared refusal fails the query") {
+    import org.apache.spark.sql.functions.expr
+    val cat = new MetaCatalog(
+      Files.createTempDirectory("graft-refuse-loud").toString)
+    val eng = new QueryEngine(spark, cat)
+    spark.range(0, 1000).select(expr("cast(id as double)").as("v"))
+      .createOrReplaceTempView("refuse_loud_t")
+    graft.sketch.SketchOps.createHistogram(spark, cat, "refuse_loud_t", "v")
+    // a truncated blob is a bug, not malformed metadata: the decode's
+    // BufferUnderflowException must surface, never become a refusal
+    val good = cat.getSketch("refuse_loud_t", "v", "histogram").get
+    cat.upsertSketch(good.copy(data = good.data.take(6)))
+    intercept[java.nio.BufferUnderflowException] {
+      eng.query("SELECT percentile(v, 0.5) AS p FROM refuse_loud_t")
+    }
+  }
+
+  test("explain's serve_trace lists the equi-width histogram as served ahead of the HDR sketch") {
+    val cat = new MetaCatalog(
+      Files.createTempDirectory("graft-trace-explain").toString)
+    val eng = new QueryEngine(spark, cat)
+    spark.range(0, 4000)
+      .selectExpr("exp(cast(id % 800 as double) / 100.0d) as v")
+      .createOrReplaceTempView("trace_t")
+    graft.sketch.SketchOps.createHistogram(spark, cat, "trace_t", "v", 64)
+    graft.sketch.SketchOps.createHdr(spark, cat, "trace_t", "v")
+    // both bounds (1/64 and 1/32) fit this budget: order decides
+    val r = eng.query("SELECT percentile(v, 0.5) AS p50 FROM trace_t",
+      eng.Options(maxRelError = 0.05))
+    assert(r.serveKind.contains("histogram"), r.reason)
+    val v = graft.api.Json.parse(graft.api.Response.renderExplain(r))
+      .fold(m => fail(m), identity)
+    val steps = v("serve_trace") match {
+      case Some(graft.api.Json.A(items)) => items.map(i =>
+        (i("family").flatMap(_.str).get, i("outcome").flatMap(_.str).get))
+      case other => fail(s"no serve_trace: $other")
+    }
+    assert(steps == Seq("stats" -> "no match", "filtered_group" -> "no match",
+      "histogram" -> "served"), steps.toString)
+    // the HDR sketch does serve the shape once the histogram is gone
+    cat.dropSketch("trace_t", "v", "histogram")
+    val rH = eng.query("SELECT percentile(v, 0.5) AS p50 FROM trace_t",
+      eng.Options(maxRelError = 0.05))
+    assert(rH.serveKind.contains("hdr"), rH.reason)
+    assert(rH.trace.map(s => s.family -> s.outcome).contains("histogram" -> "no match"))
+  }
 }
