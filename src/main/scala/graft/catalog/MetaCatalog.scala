@@ -63,7 +63,13 @@ final class MetaCatalog(val workDir: String) {
     */
   case class SketchInfo(tableName: String, columnName: String,
       sketchType: String, data: Array[Byte], parameters: String,
-      createdAt: Long, version: Long = 0L)
+      createdAt: Long, version: Long = 0L) {
+    /** One field of the flat params, unquoted (see [[MetaCatalog.param]]). */
+    def param(key: String): Option[String] = MetaCatalog.param(parameters, key)
+    def paramLong(key: String): Option[Long] = param(key).flatMap(_.toLongOption)
+    def paramDouble(key: String): Option[Double] =
+      param(key).flatMap(_.toDoubleOption)
+  }
   case class StratumInfo(sampleTable: String, strataValue: String,
       popSize: Long, sampleSize: Long, fraction: Double, weight: Double,
       variance: Double)
@@ -481,12 +487,10 @@ final class MetaCatalog(val workDir: String) {
     */
   def vacuum(table: String): (Seq[String], Seq[(String, String, String)]) = {
     val droppedSamples = vacuumStaleSamples(table)()
-    val rowsRe = """"rows"\s*:\s*(\d+)""".r
     val droppedSketches = listSketches(Some(table))
       .filterNot(s => isMaintainerState(s.sketchType))
       .filter { s =>
-        (rowsRe.findFirstMatchIn(s.parameters).map(_.group(1).toLong),
-          statsFor(table)) match {
+        (s.paramLong("rows"), statsFor(table)) match {
           case (Some(recorded), Some(ts)) => recorded != ts.rowCount
           case _                          => false
         }
@@ -579,15 +583,13 @@ final class MetaCatalog(val workDir: String) {
     * batch builder owns `rows`) must not silently drop the other
     * writer's fields — losing `rows` would disable the engine's
     * freshness guard; losing `last_batch` would let a replayed stream
-    * batch double-count after a batch rebuild. Parameters are always
-    * the catalog's own flat {"k":v,...} objects, so a field regex is a
-    * complete parser here. Removing a field requires a new key.
+    * batch double-count after a batch rebuild. Removing a field
+    * requires a new key.
     */
-  private val paramFieldRe = """"([^"]+)"\s*:\s*("[^"]*"|[^,}\s]+)""".r
   private[graft] def mergeParams(prev: String, next: String): String = {
     val fields = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    paramFieldRe.findAllMatchIn(prev).foreach(m => fields(m.group(1)) = m.group(2))
-    paramFieldRe.findAllMatchIn(next).foreach(m => fields(m.group(1)) = m.group(2))
+    MetaCatalog.paramFields(prev).foreach { case (k, v) => fields(k) = v }
+    MetaCatalog.paramFields(next).foreach { case (k, v) => fields(k) = v }
     fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   }
 
@@ -703,6 +705,23 @@ final class MetaCatalog(val workDir: String) {
 }
 
 object MetaCatalog {
+  /** The one reader of sketch parameters. Parameters are always the
+    * catalog's own flat {"k":v,...} objects (no nesting, no escaped
+    * quotes), so a field regex is a complete parser: values are a
+    * quoted string or a bare token.
+    */
+  private val paramFieldRe = """"([^"]+)"\s*:\s*("[^"]*"|[^,}\s]+)""".r
+
+  /** (key, raw value) pairs in order; string values keep their quotes. */
+  private[catalog] def paramFields(params: String): Iterator[(String, String)] =
+    paramFieldRe.findAllMatchIn(params).map(m => m.group(1) -> m.group(2))
+
+  /** The first `key` field's value, string values unquoted. */
+  private[catalog] def param(params: String, key: String): Option[String] =
+    paramFields(params).collectFirst { case (`key`, v) =>
+      if (v.startsWith("\"")) v.substring(1, v.length - 1) else v
+    }
+
   /** One monitor per lock-file path, JVM-wide: two catalogs over the
     * same workDir in one process serialize here (an OS FileLock cannot
     * — same-process overlap throws instead of blocking).

@@ -811,9 +811,8 @@ final class QueryEngine(
               val safe = catalog.listSketches(Some(table))
                 .find(sk => sk.sketchType == riderType &&
                   sk.columnName.equalsIgnoreCase(riderCol))
-                .flatMap(r => """"decsafe"\s*:\s*"([^"]*)"""".r
-                  .findFirstMatchIn(r.parameters))
-                .map(_.group(1).split(",").filter(_.nonEmpty).toSet)
+                .flatMap(_.param("decsafe"))
+                .map(_.split(",").filter(_.nonEmpty).toSet)
                 .getOrElse(Set.empty[String])
               allSumAvgArgsBare(parsed) &&
                 sumAvgArgColumns(parsed, includePercentiles = false)
@@ -832,9 +831,7 @@ final class QueryEngine(
                   .find(sk => sk.sketchType == "bottomkg_rider" &&
                     catalog.bottomKGroupColumn(s)
                       .exists(sk.columnName.equalsIgnoreCase))
-                  .flatMap(r => """"k"\s*:\s*(\d+)""".r
-                    .findFirstMatchIn(r.parameters))
-                  .map(_.group(1).toDouble)
+                  .flatMap(_.paramLong("k")).map(_.toDouble)
                   .getOrElse(catalog.strataFor(s.sampleTable)
                     .map(_.sampleSize).foldLeft(0L)(math.max).toDouble)
                 val d = SampleRewrite.Directive(table,
@@ -1185,9 +1182,7 @@ final class QueryEngine(
               sk.columnName.equalsIgnoreCase(g1))
             .forall { sk =>
               val est = graft.sketch.Hll.deserialize(sk.data).count
-              val b = """"b"\s*:\s*(\d+)""".r
-                .findFirstMatchIn(sk.parameters)
-                .map(_.group(1).toInt).getOrElse(12)
+              val b = sk.paramLong("b").getOrElse(12L)
               val rsd = 1.04 / math.sqrt(math.pow(2.0, b.toDouble))
               nGroups >= math.floor(est * math.max(0.0, 1 - 3 * rsd)).toLong
             }

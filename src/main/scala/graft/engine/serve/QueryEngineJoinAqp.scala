@@ -475,7 +475,6 @@ private[engine] trait QueryEngineJoinAqp { self: QueryEngine =>
     * any missing piece returns None and the decision falls back to
     * reference-parity exact.
     */
-  private[engine] val agmsEncRe = """"enc"\s*:\s*"([^"]*)"""".r
   private[engine] def agmsJoinEstimate(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       sizes: Seq[(String, Long)], fact: String): Option[Long] = {
@@ -484,7 +483,7 @@ private[engine] trait QueryEngineJoinAqp { self: QueryEngine =>
     // rendering (composite sketches record "enc"; absent = the
     // single-key raw-cast contract) or the dot product is meaningless
     def enc(s: catalog.SketchInfo): Option[String] =
-      agmsEncRe.findFirstMatchIn(s.parameters).map(_.group(1))
+      s.param("enc")
     joinTreeEdges(parsed, sizes.map(_._1), fact).flatMap { edges =>
       val ests = edges.map { case (parent, pks, child, cks) =>
         for {

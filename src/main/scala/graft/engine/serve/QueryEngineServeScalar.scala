@@ -31,10 +31,8 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     * place must rebuild the affected sketches (or bump table stats) as
     * part of the rewrite.
     */
-  private[engine] val sketchRowsRe = """"rows"\s*:\s*(\d+)""".r
   private[engine] def sketchIsFresh(table: String, s: catalog.SketchInfo): Boolean =
-    (sketchRowsRe.findFirstMatchIn(s.parameters).map(_.group(1).toLong),
-      catalog.statsFor(table)) match {
+    (s.paramLong("rows"), catalog.statsFor(table)) match {
       case (Some(recorded), Some(ts)) => recorded == ts.rowCount
       case _                          => true
     }
@@ -48,8 +46,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
   private[engine] def tableRowsHint(table: String): Option[Long] =
     catalog.statsFor(table).map(_.rowCount).orElse(
       catalog.listSketches(Some(table))
-        .flatMap(s => sketchRowsRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1).toLong))
+        .flatMap(_.paramLong("rows"))
         .maxOption)
 
   /** Explain-contract tag for serves backed by a WINDOWED/TTL
@@ -931,16 +928,11 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.functions.lit
-    val minRe = """"min"\s*:\s*([^,}]+)""".r
-    val maxRe = """"max"\s*:\s*([^,}]+)""".r
-    val nnullRe = """"nnull"\s*:\s*(\d+)""".r
-    val sum4Re = """"sum4"\s*:\s*([^,}]+)""".r
     // sx: build-time proof the recorded doubles round-trip the column's
     // exact values (SketchOps.createHistogram) — without it the "no
     // scan, exact" label would be a lie for bigints beyond 2^53 or wide
     // decimals. sx gates MIN/MAX/SUM/AVG; COUNT serves regardless (the
     // recorded nnull/rows are exact longs whatever the column type).
-    val sxRe = """"sx"\s*:\s*true""".r
     case class Stats(min: Double, max: Double, nnull: Long,
         sum4: Option[Double], rows: Long, sx: Boolean)
     def statsFor(c: String): Option[Stats] =
@@ -948,18 +940,14 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
         .filter(sketchIsFresh(table, _))
         .flatMap { s =>
           for {
-            mn <- minRe.findFirstMatchIn(s.parameters)
-            mx <- maxRe.findFirstMatchIn(s.parameters)
-            nn <- nnullRe.findFirstMatchIn(s.parameters)
-            rw <- sketchRowsRe.findFirstMatchIn(s.parameters)
-          } yield Stats(
-            java.lang.Double.parseDouble(mn.group(1)),
-            java.lang.Double.parseDouble(mx.group(1)),
-            nn.group(1).toLong,
-            sum4Re.findFirstMatchIn(s.parameters)
-              .map(m => java.lang.Double.parseDouble(m.group(1))),
-            rw.group(1).toLong,
-            sxRe.findFirstMatchIn(s.parameters).isDefined)
+            mn <- s.param("min")
+            mx <- s.param("max")
+            nn <- s.paramLong("nnull")
+            rw <- s.paramLong("rows")
+          } yield Stats(java.lang.Double.parseDouble(mn),
+            java.lang.Double.parseDouble(mx), nn,
+            s.param("sum4").map(java.lang.Double.parseDouble), rw,
+            s.param("sx").contains("true"))
         }
     def isCountStar(args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
       args match {
@@ -1276,8 +1264,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     catalog.getSketch(table, column, tpe)
       .filter(sketchIsFresh(table, _))
       .flatMap { s =>
-        groupByParamRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1).split(",").map(canonKey).toSeq)
+        s.param("group_by").map(_.split(",").map(canonKey).toSeq)
           .filter(scols => scols.sorted == q.sorted)
           .flatMap { scols =>
             val perm = q.map(scols.indexOf)
@@ -1463,8 +1450,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     catalog.getSketch(table, column, tpe)
       .filter(sketchIsFresh(table, _))
       .flatMap { s =>
-        groupByParamRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1).split(",").map(canonKey).toSeq)
+        s.param("group_by").map(_.split(",").map(canonKey).toSeq)
           .filter(scols => all.distinct.sizeIs == all.size &&
             all.forall(scols.contains))
           .flatMap { scols =>
@@ -1590,8 +1576,6 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
     }.orNull
   }
 
-  private[engine] val riderLastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-
   /** Streaming maintainers fold sum riders AFTER their counts blob, so
     * a crash between the two upserts leaves the rider one batch
     * behind. Sum serves must therefore REFUSE whenever the two blobs
@@ -1602,9 +1586,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
   private[engine] def riderInSync(table: String, column: String,
       countsType: String, riderType: String): Boolean = {
     def lb(t: String): Option[Long] =
-      catalog.getSketch(table, column, t).flatMap(s =>
-        riderLastBatchRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1).toLong))
+      catalog.getSketch(table, column, t).flatMap(_.paramLong("last_batch"))
     lb(countsType) == lb(riderType)
   }
 

@@ -489,14 +489,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     * inflated threshold refuse, and top-k serves only when the k-th
     * stored metric clears it.
     */
-  private[engine] val topkThresholdRe = """"threshold"\s*:\s*([0-9.eE+-]+)""".r
-  private[engine] val topkAggRe = """"agg"\s*:\s*"([^"]*)"""".r
-  private[engine] val topkValueColRe = """"value_col"\s*:\s*"([^"]*)"""".r
-  // streaming maintenance inflates the completeness bound: any group
-  // the blob cannot name totals strictly below threshold + this
-  // accumulated per-batch unknown-group mass (EventStreams
-  // .maintainTopKSketch); absent on batch-built blobs = 0
-  private[engine] val topkUnknownRe = """"unknown_bound"\s*:\s*([0-9.eE+-]+)""".r
   private[engine] def storedTopKAnswer(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       table: String): Option[(DataFrame, String)] = {
@@ -511,19 +503,14 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
       // count(*) shapes; sum blobs whose value_col is the summed
       // column for sum(x) shapes
       .filter { s =>
-        val agg = topkAggRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1)).getOrElse("count")
-        agg == wantAgg && sh.sumCol.forall(c =>
-          topkValueColRe.findFirstMatchIn(s.parameters)
-            .exists(_.group(1).equalsIgnoreCase(c)))
+        s.param("agg").getOrElse("count") == wantAgg &&
+          sh.sumCol.forall(c => s.param("value_col").exists(_.equalsIgnoreCase(c)))
       }
       .flatMap { s =>
-        groupByParamRe.findFirstMatchIn(s.parameters)
-          .map(_.group(1).split(",").map(canonKey).toSeq)
+        s.param("group_by").map(_.split(",").map(canonKey).toSeq)
           .filter(scols => scols.sorted == q.sorted)
           .flatMap { scols =>
-            topkThresholdRe.findFirstMatchIn(s.parameters)
-              .map(_.group(1).toDouble)
+            s.paramDouble("threshold")
               .flatMap { t =>
                 val perm = q.map(scols.indexOf)
                 // metric values: count blobs hold LE longs, sum blobs
@@ -544,8 +531,12 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
                 }
                 if (es.exists(_.isEmpty)) None
                 else {
-                  val ub = topkUnknownRe.findFirstMatchIn(s.parameters)
-                    .map(_.group(1).toDouble).getOrElse(0.0)
+                  // streaming maintenance inflates the completeness
+                  // bound: any group the blob cannot name totals
+                  // strictly below threshold + this accumulated
+                  // unknown-group mass (EventStreams.maintainTopKSketch);
+                  // absent on batch-built blobs = 0
+                  val ub = s.paramDouble("unknown_bound").getOrElse(0.0)
                   Some((t, ub, es.map(_.get)))
                 }
               }
@@ -909,7 +900,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     * are answerable (typedLitKey) — anything else falls through to the
     * scan path.
     */
-  private[engine] val cmsEpsRe = """"epsilon"\s*:\s*([0-9.eE+-]+)""".r
   private[engine] def storedCmsAnswer(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       table: String): Option[(DataFrame, Double)] = {
@@ -974,8 +964,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
             catalog.getSketch(table, c, "countmin")
               .filter(sketchIsFresh(table, _))
               .flatMap { s =>
-                cmsEpsRe.findFirstMatchIn(s.parameters)
-                  .map(_.group(1).toDouble)
+                s.paramDouble("epsilon")
                   .map { eps =>
                     val cms = graft.sketch.Cms.deserialize(s.data)
                     val est = keys.map(cms.estimateString).sum
@@ -988,7 +977,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
             catalog.listSketches(Some(table))
               .find { s =>
                 s.sketchType == "countmin" &&
-                  s.parameters.contains("\"enc\":\"j1\"") && {
+                  s.param("enc").contains("j1") && {
                     val cols = s.columnName.split(",").map(_.trim)
                     cols.length == many.size &&
                       cols.map(_.toLowerCase).toSet == want
@@ -996,8 +985,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
               }
               .filter(sketchIsFresh(table, _))
               .flatMap { s =>
-                cmsEpsRe.findFirstMatchIn(s.parameters)
-                  .map(_.group(1).toDouble)
+                s.paramDouble("epsilon")
                   .map { eps =>
                     // render each literal tuple in the SKETCH's stored
                     // column order — the order the builder hashed
@@ -1036,8 +1024,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     * instead of serving noise. Returns (df, error, op label, the
     * larger side's table for the cost model's rows hint).
     */
-  private[engine] val kmvKRe = """"k"\s*:\s*(\d+)""".r
-
   /** The set-op count shape: `SELECT count(*) AS c FROM (SELECT a FROM
     * t1 <INTERSECT|UNION|EXCEPT> SELECT b FROM t2) x`. Returns (count
     * alias, op label, (left table, left column), (right table, right
@@ -1119,8 +1105,8 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
       (name, op, (lt, lc), (rt, rc)) <- setOpCountShape(parsed)
       ls <- catalog.getSketch(lt, lc, "kmv").filter(sketchIsFresh(lt, _))
       rs <- catalog.getSketch(rt, rc, "kmv").filter(sketchIsFresh(rt, _))
-      lk <- kmvKRe.findFirstMatchIn(ls.parameters).map(_.group(1).toInt)
-      rk <- kmvKRe.findFirstMatchIn(rs.parameters).map(_.group(1).toInt)
+      lk <- ls.paramLong("k").map(_.toInt)
+      rk <- rs.paramLong("k").map(_.toInt)
       if lk == rk
     } yield {
       val se = graft.sketch.Kmv.setEstimate(
@@ -1191,7 +1177,6 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
     * every consulted sketch must carry the same group-key set (they
     * were built from the same table state or not at all).
     */
-  private[engine] val groupByParamRe = """"group_by"\s*:\s*"([^"]*)"""".r
   private[engine] def storedGroupedSketchAnswer(
       parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       table: String): Option[DataFrame] = {
@@ -1906,14 +1891,12 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
             val keySet =
               if (c.sketchType == "topk") c.column else c.groupBy.getOrElse("")
             s.sketchType == "topk" && sketchIsFresh(c.table, s) &&
-              topkAggRe.findFirstMatchIn(s.parameters).map(_.group(1))
-                .getOrElse("count") ==
+              s.param("agg").getOrElse("count") ==
                 (if (c.sketchType == "topk") "count" else "sum") &&
               (c.sketchType == "topk" ||
-                topkValueColRe.findFirstMatchIn(s.parameters)
-                  .exists(_.group(1).equalsIgnoreCase(c.column))) &&
-              groupByParamRe.findFirstMatchIn(s.parameters).exists(m =>
-                m.group(1).split(",").map(canonKey).toSet ==
+                s.param("value_col").exists(_.equalsIgnoreCase(c.column))) &&
+              s.param("group_by").exists(g =>
+                g.split(",").map(canonKey).toSet ==
                   keySet.split(",").map(canonKey).toSet)
           }
         else {
@@ -1932,12 +1915,12 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
             // build — a per-group-grid blob of the same shape cannot
             // serve the merge, so it must not retire the advice
             .filter(s => c.sketchType != "histogram_grouped_shared" ||
-              s.parameters.contains("\"grid\":\"shared\""))
+              s.param("grid").contains("shared"))
             .exists(s => c.groupBy.forall(g =>
               // SET comparison: a sketch built as "a,b" covers a miss
               // recorded from a GROUP BY b, a (dispatch is set-equality)
-              groupByParamRe.findFirstMatchIn(s.parameters).exists(m =>
-                m.group(1).split(",").map(canonKey).toSet ==
+              s.param("group_by").exists(sg =>
+                sg.split(",").map(canonKey).toSet ==
                   g.split(",").map(canonKey).toSet)))
         }
       }
@@ -1950,7 +1933,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
         val streamed = catalog.listSketches(Some(c.table)).exists(s =>
           s.sketchType.endsWith("_windowed") ||
             s.sketchType == "bottomkw_state" ||
-            s.parameters.contains("\"last_batch\""))
+            s.param("last_batch").isDefined)
         val build =
           if (streamed)
             SketchAdvisor.windowedRecipe(c)

@@ -265,7 +265,7 @@ final case class HdrSketch(m: Int, zero: Long,
   def rangeSum(lower: Option[Double], upper: Option[Double],
       sumOf: ((Int, Int, Int)) => BigInt): (Option[Double], Double) =
     rangeClip(lower, upper) match {
-      case None => (Some(0.0), 0.0) // empty range: SUM of no rows
+      case None => (None, 0.0) // empty range: SUM of no rows is NULL
       case Some(clip) =>
         var interior = BigInt(0)
         clip.interior.foreach { case (kk, _) => interior += sumOf(kk) }

@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import scala.util.chaining._
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+
+import graft.sketch.GroupedHll
 
 /** Structured Streaming surface — the streaming capability the reference
   * only aspires to (/root/reference/README.md:303-305 "Streaming
@@ -289,13 +289,11 @@ object EventStreams {
       catalog: graft.catalog.MetaCatalog, table: String,
       checkpointLocation: Option[String] = None,
       compactFileThreshold: Int = BandRegistryCompactFiles)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBandAdmissionBatch(batch, batchId, catalog, table,
-          compactFileThreshold)
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+      : StreamingQuery =
+    Fold.run(docs, checkpointLocation) { (batch, batchId) =>
+      foldBandAdmissionBatch(batch, batchId, catalog, table,
+        compactFileThreshold)
+    }
 
   /** Registry compaction trigger: part files in the current registry
     * version directory. Each micro-batch appends up to one file per
@@ -317,13 +315,11 @@ object EventStreams {
     */
   def bandRegistryDir(catalog: graft.catalog.MetaCatalog, table: String): String = {
     val base = s"${catalog.samplesDir}/${table}__admitted__registry"
-    val params = catalog.getSketch(table, "text", "bandreg_state")
-      .map(_.parameters).getOrElse("{}")
-    """"reg_v"\s*:\s*(\d+)""".r.findFirstMatchIn(params)
-      .map(m => s"${base}_v${m.group(1)}").getOrElse(base)
+    catalog.getSketch(table, "text", "bandreg_state")
+      .flatMap(_.paramLong("reg_v")).fold(base)(v => s"${base}_v$v")
   }
 
-  /** One fold of the band-admission operator — the foreachBatch body,
+  /** One fold of the band-admission operator — the micro-batch body,
     * shared verbatim with the batch materializer
     * [[materializeBandAdmission]] so the streaming and batch artifacts
     * cannot drift. See [[maintainBandAdmission]] for the contract.
@@ -337,11 +333,7 @@ object EventStreams {
     val s = batch.sparkSession
     graft.functions.GraftFunctions.register(s)
     val rider = catalog.getSketch(table, "text", "bandreg_state")
-    val riderParams = rider.map(_.parameters).getOrElse("{}")
-    val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-      .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-    val regV = """"reg_v"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(riderParams).map(_.group(1).toInt)
+    val regV = rider.flatMap(_.paramLong("reg_v")).map(_.toInt)
     val regDir = regV.map(v => s"${regBase}_v$v").getOrElse(regBase)
     // stale-version cleanup: a crash between the rider stamp and this
     // point leaves the retired version dir (and a crash before the
@@ -359,14 +351,11 @@ object EventStreams {
             deleteRecursively(f)
         }
     }
-    if (batchId > lastBatch) {
-      val prevRows = """"rows"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(0L)
-      val prevSeen = """"seen"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(0L)
-      val prevMaxId = """"max_id"\s*:\s*(-?\d+)""".r
-        .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-        .getOrElse(Long.MinValue)
+    if (batchId > Fold.lastBatch(rider)) {
+      val prevRows = rider.flatMap(_.paramLong("rows")).getOrElse(0L)
+      val prevSeen = rider.flatMap(_.paramLong("seen")).getOrElse(0L)
+      val prevMaxId =
+        rider.flatMap(_.paramLong("max_id")).getOrElse(Long.MinValue)
       val idStats = batch.agg(count(lit(1)).as("n"),
         count(col("doc_id")).as("nn"),
         countDistinct(col("doc_id")).as("nd"),
@@ -447,7 +436,7 @@ object EventStreams {
         } else regV
       val nAdm = s.read.parquet(s"$path/b$batchId")
         .filter(col("admitted") === 1).count()
-      // no temp-view registration here: foreachBatch runs in a
+      // no temp-view registration here: a micro-batch body runs in a
       // CLONED session, so a view would never reach the serving
       // session (the round-14 lesson) — consumers read the
       // persisted output (`<path>/b*`), the durable authority
@@ -584,183 +573,202 @@ object EventStreams {
       .agg(min_by(col("cell"), struct(expr("-score"), col("cell"))).as("cell"))
   }
 
+  // -----------------------------------------------------------------
+  // Sketch maintainers. Each is a declaration of its summary run by
+  // `Fold.append` (all-time blobs) or `Fold.windowed` (TTL blobs); the
+  // replay guard, crash-safe write order, group bound and window rule
+  // are the fold's (see [[Fold]]). Every stream-built blob is
+  // BYTE-equal to the batch builder's over the same rows (the
+  // EventStreamsSpec laws): the batch passes and the canonical
+  // serializations are shared.
+  // -----------------------------------------------------------------
+
+  private val hllMerge: (Array[Byte], Array[Byte]) => Array[Byte] =
+    (p, n) => graft.sketch.Hll.deserialize(p)
+      .merge(graft.sketch.Hll.deserialize(n)).serialize
+  private val cmsMerge: (Array[Byte], Array[Byte]) => Array[Byte] =
+    (p, n) => graft.sketch.Cms.deserialize(p)
+      .merge(graft.sketch.Cms.deserialize(n)).serialize
+
+  /** Additive merge of two bucket -> unscaled scale-4 sum packs (the
+    * histsum riders). An EMPTY pack is the overflow poison and absorbs:
+    * a sum that silently missed a batch never serves.
+    */
+  private def addSumPacks(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
+    val (xa, ya) = (GroupedHll.unpack(x), GroupedHll.unpack(y))
+    if (xa.isEmpty || ya.isEmpty) GroupedHll.pack(Seq.empty)
+    else {
+      def sums(a: Seq[(Option[String], Array[Byte])]) =
+        a.collect { case (Some(k), b) => k.toInt -> BigInt(b) }.toMap
+      GroupedHll.pack(Fold.union(sums(xa), sums(ya))(_ + _).toSeq.map {
+        case (i, v) => Option(i.toString) -> v.toByteArray
+      })
+    }
+  }
+
+  private[streaming] def unscaled4(d: java.math.BigDecimal): BigInt =
+    BigInt(d.setScale(4).unscaledValue())
+
+  /** The grouped-stats batch aggregate: min/max (as double), counts and
+    * the exact decimal(38,4) sum, mirroring the batch builder (try_sum:
+    * a huge group can neither throw under ANSI nor wrap).
+    */
+  private[streaming] def statsAgg(valueCol: String): Seq[Column] = Seq(
+    min(col(valueCol)).cast("double").as("lo"),
+    max(col(valueCol)).cast("double").as("hi"),
+    count(lit(1)).as("n"), count(col(valueCol)).as("nnull"),
+    expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
+
+  /** One [[statsAgg]] row as (group, stat). A NULL sum over non-NULL
+    * values is a decimal(38,4) overflow: refuse loudly rather than
+    * encode a silent zero the serve would label exact.
+    */
+  private[streaming] def statOf(r: Row, what: String)
+      : (Option[String], graft.sketch.GroupedStats.Stat) = {
+    val sum4 = r.getAs[java.math.BigDecimal]("sum4")
+    val nnull = r.getAs[Long]("nnull")
+    if (sum4 == null && nnull > 0L)
+      throw new IllegalArgumentException(
+        s"$what: batch group sum overflows decimal(38,4)")
+    val lo = Option(r.getAs[java.lang.Double]("lo")).map(_.doubleValue)
+    Option(r.getAs[String]("g")) -> graft.sketch.GroupedStats.Stat(lo,
+      lo.map(_ => r.getAs[Double]("hi")), nnull, r.getAs[Long]("n"),
+      Option(sum4).map(unscaled4).getOrElse(BigInt(0)))
+  }
+
+  /** AGMS cells: per (`by`..., bucket) signed counter sums `c` and row
+    * counts `n` over bucket = h60('js:'‖key) % B, sign from the next
+    * hash bit — the exact derivation `SketchOps.createAgms` uses.
+    * NULL-key rows land in a NULL bucket and still count as rows.
+    */
+  private[streaming] def agmsCells(df: DataFrame, keys: Seq[String],
+      buckets: Int, by: String*): Array[Row] = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    val keyExpr = graft.plan.SampleRewrite.tupleKeyExpr("js:", keys)
+    df.select(by.map(col) :+ expr(s"graft_h60($keyExpr)").as("h"): _*)
+      .select(by.map(col) ++ Seq(
+        expr(s"cast(h % ${buckets}L as int)").as("bucket"),
+        expr(s"case when (h div ${buckets}L) % 2 = 0 then 1L else -1L end")
+          .as("sgn")): _*)
+      .groupBy((by :+ "bucket").map(col): _*)
+      .agg(sum(col("sgn")).as("c"), count(lit(1)).as("n"))
+      .collect()
+  }
+
+  /** Fold [[agmsCells]] rows into (rows incl. NULL keys, counters). */
+  private[streaming] def agmsCounters(rows: Iterable[Row], buckets: Int)
+      : (Long, Array[Long]) = {
+    val counters = new Array[Long](buckets)
+    var total = 0L
+    rows.foreach { r =>
+      if (!r.isNullAt(r.fieldIndex("bucket")))
+        counters(r.getAs[Int]("bucket")) = r.getAs[Long]("c")
+      total += r.getAs[Long]("n")
+    }
+    (total, counters)
+  }
+
+  /** [count][sketch] per event bucket: the windowed HLL/CMS state. */
+  private def countedSketchWindow(kind: String, riderParams: String,
+      empty: Array[Byte], merge: (Array[Byte], Array[Byte]) => Array[Byte],
+      agg: Column)(serve: (Array[Byte], Long) => (String, Array[Byte], String))
+      : Fold.Windowed[(Long, Array[Byte])] =
+    Fold.Windowed[(Long, Array[Byte])](kind, riderParams, (0L, empty),
+      bucketed = _.groupBy(col("graft_bucket"))
+        .agg(agg.as("sk"), count(lit(1)).as("c")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(2), r.getAs[Array[Byte]](1)))
+        .toMap,
+      merge = { case ((c1, s1), (c2, s2)) => (c1 + c2, merge(s1, s2)) },
+      rows = _._1, encode = { case (c, s) => Fold.counted(c, s) },
+      decode = Fold.uncounted,
+      serve = { case ((_, sk), liveN, _) => Seq(serve(sk, liveN)) })
+
   /** Streaming sketch maintenance: fold each micro-batch into a
     * catalog-registered HyperLogLog — the streaming twin of
     * `SketchOps.createHll`, closing the loop stream → sketch catalog →
     * engine (`QueryEngine.storedSketchAnswer` then serves
-    * COUNT(DISTINCT) over the live table with NO scan, answering from
-    * state a stream maintained). Per micro-batch: one distributed HLL
-    * aggregate (mergeable partial registers), then one driver-side
+    * COUNT(DISTINCT) over the live table with NO scan). Per micro-batch:
+    * one distributed HLL aggregate, then one driver-side register-max
     * merge of the 2^b-byte batch sketch into the stored sketch —
-    * bounded state regardless of stream volume, and HLL's merge
-    * idempotence means re-processed values never overcount.
+    * bounded state regardless of stream volume; register max is
+    * idempotent, so the blob carries no replay guard.
     */
   def maintainHllSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
-      b: Int = 12): org.apache.spark.sql.streaming.StreamingQuery =
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bytes = batch
-          .select(graft.sketch.Hll.sketchAgg(col(column).cast("string"), b)
-            .as("s"))
-          .collect().head.getAs[Array[Byte]]("s")
-        // atomic merge under the catalog's CAS: two streams maintaining
-        // the same (table, column) sketch can interleave safely
-        catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-          "hyperloglog", bytes, s"""{"b":$b}""",
-          System.currentTimeMillis())) { (prev, next) =>
-          graft.sketch.Hll.deserialize(prev)
-            .merge(graft.sketch.Hll.deserialize(next)).serialize
-        }
-        ()
+      b: Int = 12): StreamingQuery =
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, column, batchId)(
+        Fold.Blob("hyperloglog", hllMerge, additive = false)) {
+        Seq(Some(batch
+          .select(graft.sketch.Hll.sketchAgg(col(column).cast("string"), b))
+          .collect().head.getAs[Array[Byte]](0) -> s"""{"b":$b}"""))
       }
-      .start()
+    }
 
   /** Streaming KMV (bottom-k) maintenance — the set-operation
     * cardinality serve's input kept LIVE: each micro-batch folds its
-    * own bottom-k distinct h60 hashes into the stored sketch under the
-    * catalog's CAS merge, and `QueryEngine.storedSetOpAnswer` keeps
-    * serving INTERSECT/UNION/EXCEPT counts as the stream appends.
-    * Bottom-k union is IDEMPOTENT (a set union truncated at k — like
-    * HLL's register max, unlike the additive histogram/CMS folds), so
-    * replayed batches never change the result and no last_batch guard
-    * is needed; the stream-built sketch is BYTE-equal to a batch build
-    * over the same rows (bottom-k of a union == union of bottom-ks).
+    * own bottom-k distinct h60 hashes into the stored sketch, and
+    * `QueryEngine.storedSetOpAnswer` keeps serving INTERSECT/UNION/
+    * EXCEPT counts as the stream appends. Bottom-k union is IDEMPOTENT
+    * (a set union truncated at k), so the blob carries no replay guard.
     * Per batch: one distributed distinct + takeOrdered (≤ k rows reach
-    * the driver), one CAS-merged upsert — O(k) state regardless of
-    * stream volume.
+    * the driver) — O(k) state regardless of stream volume.
     */
   def maintainKmvSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
-      k: Int = 1024): org.apache.spark.sql.streaming.StreamingQuery = {
+      k: Int = 1024): StreamingQuery = {
     require(k >= 2, s"k must be >= 2, got $k")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, column, batchId)(
+        Fold.Blob("kmv", (p, n) => graft.sketch.Kmv.deserialize(p)
+          .union(graft.sketch.Kmv.deserialize(n)).serialize,
+          additive = false)) {
         graft.functions.GraftFunctions.register(batch.sparkSession)
         val hs = batch.filter(col(column).isNotNull)
           .select(expr(s"graft_h60(cast($column as string))").as("h"))
           .distinct().orderBy(col("h")).limit(k)
           .collect().map(_.getLong(0))
-        val sk = graft.sketch.Kmv.Sketch(k, hs.sorted)
-        catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-          "kmv", sk.serialize, s"""{"k":$k}""",
-          System.currentTimeMillis())) { (prev, next) =>
-          graft.sketch.Kmv.deserialize(prev)
-            .union(graft.sketch.Kmv.deserialize(next)).serialize
-        }
-        ()
+        Seq(Some(graft.sketch.Kmv.Sketch(k, hs.sorted).serialize ->
+          s"""{"k":$k}"""))
       }
-      .start()
+    }
   }
 
   /** Streaming WINDOWED HLL maintenance (round 13 — the TTL form for
     * the SKETCH family, closing the same append-only gap
-    * [[SampleMaintainers.maintainBottomKWindowed]] closes for samples): HLL registers
-    * are max-merge (idempotent) but NOT subtractable, so a windowed
-    * distinct sketch keeps ONE HLL PER event-time BUCKET
-    * (O(liveBuckets · 2^b) state), drops buckets that fall out of the
-    * last `windowMicros` at the watermark (max event time seen), and
-    * re-merges the live buckets into the serving "hyperloglog" sketch
-    * — `QueryEngine.storedSketchAnswer` then answers
-    * COUNT(DISTINCT column) OVER THE LIVE WINDOW with no scan, and the
-    * catalog's table stats track the live-row count so the freshness
-    * guard stays coherent. Each per-bucket payload packs
-    * [count: i64 BE][hll bytes] (counts are additive, so a
-    * `last_batch` replay guard rides the rider, stamped LAST — the
-    * crash-safe fold discipline; register merge itself is idempotent).
-    * Expiry is bucket-granular, the q183 trade. Batch twin: q184's
-    * per-bucket register chain (the merge law, oracle-gated on the
-    * deterministic h60 register form).
+    * [[SampleMaintainers.maintainBottomKWindowed]] closes for samples):
+    * HLL registers are max-merge but NOT subtractable, so the windowed
+    * distinct sketch keeps ONE HLL PER event-time bucket
+    * ([count: i64 BE][hll bytes] per bucket in the "hll_windowed"
+    * rider) and re-merges the live buckets into the serving
+    * "hyperloglog" sketch — `QueryEngine.storedSketchAnswer` then
+    * answers COUNT(DISTINCT column) OVER THE LIVE WINDOW with no scan.
+    * The ride-along counts are additive, so the rider is guarded. Batch
+    * twin: q184's per-bucket register chain.
     */
   def maintainHllWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       b: Int = 12, checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val rider = catalog.getSketch(table, column, "hll_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          val perBucket = batch
-            .select(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              col(column).cast("string").as("graft_v"))
-            .groupBy(col("graft_bucket"))
-            .agg(graft.sketch.Hll.sketchAgg(col("graft_v"), b).as("sk"),
-              count(lit(1)).as("c"))
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(2), r.getAs[Array[Byte]](1)))
-          val batchMaxUs = batch
-            .agg(max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r                  => r.getLong(0)
-          }
-          val prevMaxUs = """"maxus"\s*:\s*(-?\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .getOrElse(Long.MinValue)
-          val maxUs = math.max(prevMaxUs, batchMaxUs)
-          def split(payload: Array[Byte]): (Long, Array[Byte]) = {
-            val bb = java.nio.ByteBuffer.wrap(payload)
-            (bb.getLong, payload.drop(8))
-          }
-          def join(c: Long, hll: Array[Byte]): Array[Byte] = {
-            val bb = java.nio.ByteBuffer.allocate(8 + hll.length)
-            bb.putLong(c); bb.put(hll); bb.array()
-          }
-          val prev: Map[Long, (Long, Array[Byte])] = rider
-            .map(r => graft.sketch.GroupedHll.unpack(r.data))
-            .getOrElse(Nil)
-            .collect { case (Some(k), payload) => k.toLong -> split(payload) }
-            .toMap
-          val merged = perBucket.foldLeft(prev) {
-            case (acc, (bkt, c, sk)) =>
-              val (pc, psk) = acc.getOrElse(bkt,
-                (0L, new graft.sketch.Hll(b).serialize))
-              acc.updated(bkt, (pc + c,
-                graft.sketch.Hll.deserialize(psk)
-                  .merge(graft.sketch.Hll.deserialize(sk)).serialize))
-          }
-          val live = merged.filter { case (bkt, _) =>
-            (bkt + 1L) * bucketMicros > maxUs - windowMicros
-          }
-          val serving = live.values
-            .map { case (_, sk) => graft.sketch.Hll.deserialize(sk) }
-            .foldLeft(new graft.sketch.Hll(b))(_ merge _)
-          val liveN = live.valuesIterator.map(_._1).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hyperloglog", serving.serialize,
-            s"""{"b":$b,"rows":$liveN}""", System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hll_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, sk)) => (Some(bkt.toString), join(c, sk))
-            }),
-            s"""{"maxus":$maxUs,"b":$b,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
-  }
+      : StreamingQuery =
+    Fold.windowed(values, catalog, table, column, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(countedSketchWindow("hll_windowed",
+        s""""b":$b,""", new graft.sketch.Hll(b).serialize, hllMerge,
+        graft.sketch.Hll.sketchAgg(col(column).cast("string"), b)) {
+        (sk, liveN) => ("hyperloglog", sk, s"""{"b":$b,"rows":$liveN}""")
+      })
 
   /** WINDOWED CMS frequency — the batch twin of [[maintainCmsWindowed]]
     * (round 13): per-bucket Count-Min sketches over the live window
-    * (the q183/q184 bucket rule), merged counter-wise (CMS merge IS
-    * addition, so the merged sketch equals the direct CMS over live
-    * rows), then each key's min-over-d-rows estimate next to its exact
-    * live count. One distributed per-bucket aggregate + one exact
-    * count; ≤liveBuckets sketches and |keys| rows touch the driver.
-    * The q185 oracle re-derives the DIRECT chain (q90's SHA-256 bucket
-    * arithmetic restricted to the live window) — the additive merge
-    * law, hash-gated.
+    * (the q183/q184 bucket rule; NULL event times belong to no bucket),
+    * merged counter-wise (CMS merge IS addition, so the merged sketch
+    * equals the direct CMS over live rows), then each key's
+    * min-over-d-rows estimate next to its exact live count. One
+    * distributed per-bucket aggregate + one exact count; ≤liveBuckets
+    * sketches and |keys| rows touch the driver. The q185 oracle
+    * re-derives the DIRECT chain (q90's SHA-256 bucket arithmetic
+    * restricted to the live window) — the additive merge law,
+    * hash-gated.
     */
   def windowedCmsFrequency(df: DataFrame, column: String, tsCol: String,
       windowMicros: Long, bucketMicros: Long, keys: Seq[String],
@@ -769,12 +777,12 @@ object EventStreams {
       "need keys and window >= bucket > 0")
     val s = df.sparkSession
     import s.implicits._
-    val withUs = df.select(col(column).cast("string").as("graft_v"),
-      expr(s"unix_micros($tsCol)").as("graft_us"),
-      expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"))
+    val withUs = df.filter(col(tsCol).isNotNull)
+      .select(col(column).cast("string").as("graft_v"),
+        expr(s"unix_micros($tsCol)").as("graft_us"),
+        expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"))
     // empty input / all-NULL timestamps: zero live buckets — serve the
-    // empty CMS's answer (est 0, exact 0 per key) instead of NPE-ing
-    // on the null max (the maintainers' isNullAt guard mirrored)
+    // empty CMS's answer (est 0, exact 0 per key)
     val maxRow = withUs.agg(max(col("graft_us"))).collect()(0)
     if (maxRow.isNullAt(0))
       return keys.sorted.map(k => (k, 0L, 0L)).toDF("k", "est", "n_exact")
@@ -804,100 +812,28 @@ object EventStreams {
 
   /** Streaming WINDOWED CMS maintenance (round 13): the frequency
     * family's TTL form, completing the windowed trio with
-    * [[SampleMaintainers.maintainBottomKWindowed]] (samples) and [[maintainHllWindowed]]
-    * (distinct). CMS counters are ADDITIVE — per-bucket sketches merge
-    * by counter addition and a dropped bucket subtracts exactly — so
-    * the maintainer keeps one CMS per event-time bucket
-    * ([count i64 BE][cms bytes] payloads, O(liveBuckets · w·d) state),
-    * expires buckets at the watermark, and re-merges live buckets into
-    * the serving "countmin" sketch: `QueryEngine.storedCmsAnswer` then
+    * [[SampleMaintainers.maintainBottomKWindowed]] (samples) and
+    * [[maintainHllWindowed]] (distinct). CMS counters are ADDITIVE, so
+    * a dropped bucket subtracts exactly: one CMS per event-time bucket
+    * ([count i64 BE][cms bytes] in the "cms_windowed" rider,
+    * O(liveBuckets · w·d) state), live buckets re-merged into the
+    * serving "countmin" sketch — `QueryEngine.storedCmsAnswer` then
     * answers point-frequency counts OVER THE LIVE WINDOW with no scan.
-    * Additive counts ⇒ the `last_batch` replay guard is REQUIRED (the
-    * single-key maintainer's discipline), stamped LAST (crash-safe
-    * fold).
     */
   def maintainCmsWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       epsilon: Double = 0.01, delta: Double = 0.01,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val rider = catalog.getSketch(table, column, "cms_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          val perBucket = batch
-            .select(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              col(column).cast("string").as("graft_v"))
-            .groupBy(col("graft_bucket"))
-            .agg(graft.sketch.Cms.sketchAgg(col("graft_v"), epsilon, delta)
-              .as("sk"),
-              count(lit(1)).as("c"))
-            .collect()
-            .map(r => (r.getLong(0), r.getLong(2), r.getAs[Array[Byte]](1)))
-          val batchMaxUs = batch
-            .agg(max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r                  => r.getLong(0)
-          }
-          val prevMaxUs = """"maxus"\s*:\s*(-?\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .getOrElse(Long.MinValue)
-          val maxUs = math.max(prevMaxUs, batchMaxUs)
-          def split(payload: Array[Byte]): (Long, Array[Byte]) = {
-            val bb = java.nio.ByteBuffer.wrap(payload)
-            (bb.getLong, payload.drop(8))
-          }
-          def join(c: Long, sk: Array[Byte]): Array[Byte] = {
-            val bb = java.nio.ByteBuffer.allocate(8 + sk.length)
-            bb.putLong(c); bb.put(sk); bb.array()
-          }
-          val prev: Map[Long, (Long, Array[Byte])] = rider
-            .map(r => graft.sketch.GroupedHll.unpack(r.data))
-            .getOrElse(Nil)
-            .collect { case (Some(k), payload) => k.toLong -> split(payload) }
-            .toMap
-          val merged = perBucket.foldLeft(prev) {
-            case (acc, (bkt, c, sk)) =>
-              acc.get(bkt) match {
-                case None => acc.updated(bkt, (c, sk))
-                case Some((pc, psk)) => acc.updated(bkt, (pc + c,
-                  graft.sketch.Cms.deserialize(psk)
-                    .merge(graft.sketch.Cms.deserialize(sk)).serialize))
-              }
-          }
-          val live = merged.filter { case (bkt, _) =>
-            (bkt + 1L) * bucketMicros > maxUs - windowMicros
-          }
-          val serving = live.values
-            .map { case (_, sk) => graft.sketch.Cms.deserialize(sk) }
-            .foldLeft(new graft.sketch.Cms(epsilon, delta))(_ merge _)
-          val liveN = live.valuesIterator.map(_._1).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "countmin", serving.serialize,
-            s"""{"epsilon":$epsilon,"delta":$delta,"rows":$liveN}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "cms_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, sk)) => (Some(bkt.toString), join(c, sk))
-            }),
-            s"""{"maxus":$maxUs,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
-  }
+      : StreamingQuery =
+    Fold.windowed(values, catalog, table, column, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(countedSketchWindow("cms_windowed",
+        "", new graft.sketch.Cms(epsilon, delta).serialize, cmsMerge,
+        graft.sketch.Cms.sketchAgg(col(column).cast("string"), epsilon,
+          delta)) { (sk, liveN) =>
+        ("countmin", sk,
+          s"""{"epsilon":$epsilon,"delta":$delta,"rows":$liveN}""")
+      })
 
   /** Streaming histogram maintenance — the q74 strategy made LIVE: a
     * stream folds per-micro-batch bucket counts into the catalog's
@@ -907,135 +843,62 @@ object EventStreams {
     * cannot merge; values outside the grid clamp into the edge buckets
     * (the usual streaming-histogram trade — re-profile and rebuild when
     * the domain drifts). Per micro-batch: one distributed bucket-count
-    * aggregate (≤`buckets` rows collected), one CAS-merged catalog
-    * upsert — O(buckets) state regardless of stream volume. Histogram
-    * merge is ADDITIVE (unlike HLL's idempotent register-max), so a
-    * replayed batch would double-count; the stored `last_batch` id
-    * skips re-delivered batch ids (exact under single-writer-per-
-    * (table, column), the same discipline maintainHllSketch documents).
-    * Catalog upserts merge parameters field-wise (MetaCatalog
-    * .mergeParams), so a batch-built sketch's `rows` freshness field
-    * survives stream maintenance and `last_batch` survives a batch
-    * rebuild — neither writer can disable the other's guard. The
-    * "histsum" rider (per-bucket exact decimal sums — the range
-    * SUM/AVG serve's input) maintains in the same pass: BigInt
-    * addition is exact, so the stream-built blob is BYTE-equal to a
-    * batch `createHistogram` over the same rows; an overflowing batch
-    * poisons it (SUM/AVG refuse, counts keep serving) instead of
-    * letting the sums silently miss a batch.
+    * aggregate (≤`buckets` rows collected) — O(buckets) state
+    * regardless of stream volume. The "histsum" rider (per-bucket
+    * exact decimal sums — the range SUM/AVG serve's input) maintains
+    * in the same pass: BigInt addition is exact, so the stream-built
+    * blob is BYTE-equal to a batch `createHistogram` over the same
+    * rows; an overflowing batch poisons it (SUM/AVG refuse, counts keep
+    * serving) instead of letting the sums silently miss a batch.
     */
   def maintainHistogramSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
-      lo: Double, width: Double, buckets: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      lo: Double, width: Double, buckets: Int): StreamingQuery = {
     require(buckets >= 1 && width > 0, "need buckets >= 1 and width > 0")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val alreadyMerged = catalog.getSketch(table, column, "histogram")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        // the rider's replay guard is evaluated INDEPENDENTLY and up
-        // front: a crash between the counts upsert and the rider
-        // upsert leaves the rider one batch behind, and the REPLAYED
-        // batch must still fold it (nesting it under the counts guard
-        // would skip the whole body and lose that batch's sums forever)
-        val sumsMerged = catalog.getSketch(table, column, "histsum")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged || !sumsMerged) {
-          val counts = new Array[Long](buckets)
-          val bsums = Array.fill(buckets)(BigInt(0))
-          var sumOverflow = false
-          // one pass: per-bucket counts AND exact decimal sums (the
-          // histsum rider that keeps the range-SUM/AVG serve live)
-          // clamp in DOUBLE space BEFORE the int cast: a value far
-          // outside the grid would otherwise overflow the ANSI cast
-          // instead of landing in the edge bucket as documented
-          batch.filter(col(column).isNotNull)
-            .select(expr(
-              s"cast(least(cast(${buckets - 1} as double), greatest(cast(0 as double), " +
-                s"floor((cast($column as double) - $lo) / $width))) as int)")
-              .as("b"), col(column))
-            .groupBy(col("b"))
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n"),
-              expr(s"try_sum(cast($column as decimal(38,4)))").as("s4"))
-            .collect()
-            .foreach { r =>
-              counts(r.getInt(0)) = r.getAs[Long]("n")
-              Option(r.getDecimal(2)) match {
-                case Some(d) =>
-                  bsums(r.getInt(0)) = BigInt(d.setScale(4).unscaledValue())
-                case None => sumOverflow = true
-              }
-            }
-          val h = graft.sketch.Histogram(lo, width, counts)
-          if (!alreadyMerged)
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "histogram", h.serialize,
-              s"""{"buckets":$buckets,"last_batch":$batchId}""",
-              System.currentTimeMillis())) { (prev, next) =>
-              graft.sketch.Histogram.deserialize(prev)
-                .merge(graft.sketch.Histogram.deserialize(next)).serialize
-            }
-          // histsum: per-bucket unscaled decimal sums, additive BigInt
-          // merge under its OWN replay guard (additive like the
-          // histogram, unlike HLL's idempotent max). A batch whose
-          // bucket sum overflows decimal(38,4) POISONS the blob with
-          // an empty pack — the engine's bucket-count check then
-          // refuses SUM/AVG serves (counts keep serving) instead of
-          // serving a sum that silently missed a batch; poison absorbs
-          // in the merge so later batches cannot un-poison it.
-          if (!sumsMerged) {
-            val payload: Seq[(Option[String], Array[Byte])] =
-              if (sumOverflow) Seq.empty
-              else bsums.zipWithIndex.toSeq.map { case (s, i) =>
-                Option(i.toString) -> s.toByteArray
-              }
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "histsum", graft.sketch.GroupedHll.pack(payload),
-              s"""{"buckets":$buckets,"last_batch":$batchId}""",
-              System.currentTimeMillis())) { (prev, next) =>
-              val pa = graft.sketch.GroupedHll.unpack(prev)
-              val na = graft.sketch.GroupedHll.unpack(next)
-              if (pa.isEmpty || na.isEmpty)
-                graft.sketch.GroupedHll.pack(Seq.empty)
-              else {
-                val pm = pa.collect { case (Some(k), b) => k.toInt -> BigInt(b) }.toMap
-                val nm = na.collect { case (Some(k), b) => k.toInt -> BigInt(b) }.toMap
-                graft.sketch.GroupedHll.pack((0 until buckets).map(i =>
-                  Option(i.toString) ->
-                    (pm.getOrElse(i, BigInt(0)) + nm.getOrElse(i, BigInt(0)))
-                      .toByteArray))
-              }
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, column, batchId)(
+        Fold.Blob("histogram", graft.sketch.Histogram.mergeBytes),
+        Fold.Blob("histsum", addSumPacks)) {
+        val counts = new Array[Long](buckets)
+        val bsums = Array.fill(buckets)(BigInt(0))
+        var sumOverflow = false
+        batch.filter(col(column).isNotNull)
+          .select(expr(WindowedSketches.gridBucketExpr(column, lo, width,
+            buckets)).as("b"), col(column))
+          .groupBy(col("b"))
+          .agg(count(lit(1)).as("n"),
+            expr(s"try_sum(cast($column as decimal(38,4)))").as("s4"))
+          .collect()
+          .foreach { r =>
+            counts(r.getInt(0)) = r.getAs[Long]("n")
+            Option(r.getDecimal(2)) match {
+              case Some(d) => bsums(r.getInt(0)) = unscaled4(d)
+              case None    => sumOverflow = true
             }
           }
-        }
-        ()
+        val params = s"""{"buckets":$buckets,"last_batch":$batchId}"""
+        Seq(Some(graft.sketch.Histogram(lo, width, counts).serialize -> params),
+          Some(GroupedHll.pack(
+            if (sumOverflow) Seq.empty
+            else bsums.toSeq.zipWithIndex.map { case (s, i) =>
+              Option(i.toString) -> s.toByteArray
+            }) -> params))
       }
-      .start()
+    }
   }
 
   /** Streaming GROUPED-HLL maintenance — the per-group COUNT(DISTINCT)
     * strategy made LIVE: each micro-batch folds one HLL per group into
     * the catalog's grouped blob (one distributed per-group sketch
-    * aggregate, then one driver-side register-max union under the CAS
-    * merge), and `QueryEngine.storedGroupedSketchAnswer` serves
+    * aggregate, then one driver-side register-max union), and
+    * `QueryEngine.storedGroupedSketchAnswer` serves
     * `SELECT g, count(distinct x) ... GROUP BY g` over the live table
-    * with NO scan. Register-max merge is IDEMPOTENT (like
-    * maintainHllSketch, unlike the additive histogram/CMS folds), so
-    * replayed batches never overcount and no last_batch guard is
-    * needed. State is bounded by `SketchOps.MaxHllGroups` sketches —
-    * a grouping column wider than that is data, not a dimension, and
-    * the maintenance refuses it rather than growing an unbounded blob.
+    * with NO scan. Register-max merge is IDEMPOTENT, so the blob carries
+    * no replay guard.
     */
   def maintainGroupedHllSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, groupCol: String,
-      valueCol: String, b: Int = 12)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      valueCol: String, b: Int = 12): StreamingQuery =
     maintainGroupedHllSketch(values, catalog, table, Seq(groupCol),
       valueCol, b)
 
@@ -1045,41 +908,23 @@ object EventStreams {
     */
   def maintainGroupedHllSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
-      groupCols: Seq[String], valueCol: String, b: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      groupCols: Seq[String], valueCol: String, b: Int): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     val groupCol = groupCols.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch
-          .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols, batch.schema.fieldNames.toSeq).as("g"))
+    val label = s"grouped HLL over $table.$groupCol"
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, valueCol, batchId)(Fold.Blob("hll_grouped",
+        Fold.capped(label)(GroupedHll.mergeBytes), additive = false)) {
+        val rows = Fold.groups(batch
+          .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
+            batch.schema.fieldNames.toSeq).as("g"))
           .agg(graft.sketch.Hll.sketchAgg(col(valueCol).cast("string"), b)
-            .as("s"))
-          .limit(graft.sketch.SketchOps.MaxHllGroups + 1)
-          .collect()
-        if (rows.length > graft.sketch.SketchOps.MaxHllGroups)
-          throw new IllegalArgumentException(
-            s"grouped HLL over $table.$groupCol: more than " +
-              s"${graft.sketch.SketchOps.MaxHllGroups} groups in one batch")
-        if (rows.nonEmpty) {
-          val bytes = graft.sketch.GroupedHll.serialize(rows.toSeq.map { r =>
-            (Option(r.getAs[String]("g")), r.getAs[Array[Byte]]("s"))
-          })
-          catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-            "hll_grouped", bytes, s"""{"b":$b,"group_by":"$groupCol"}""",
-            System.currentTimeMillis())) { (prev, next) =>
-            val merged = graft.sketch.GroupedHll.mergeBytes(prev, next)
-            if (graft.sketch.GroupedHll.deserialize(merged)
-                .sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-              throw new IllegalArgumentException(
-                s"grouped HLL over $table.$groupCol: merged group count " +
-                  s"exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-            merged
-          }
-        }
-        ()
+            .as("s")), label)
+        Seq(Option.when(rows.nonEmpty)(GroupedHll.serialize(rows.toSeq.map {
+          r => Option(r.getAs[String]("g")) -> r.getAs[Array[Byte]]("s")
+        }) -> s"""{"b":$b,"group_by":"$groupCol"}"""))
       }
-      .start()
+    }
   }
 
   /** Streaming GROUPED-histogram maintenance — the q84 strategy made
@@ -1092,22 +937,20 @@ object EventStreams {
     * values outside a group's grid clamp into its edge buckets, and a
     * batch containing a group with NO declared grid is REFUSED — new
     * groups are domain drift: re-profile and rebuild, don't guess a
-    * grid. Histogram merge is ADDITIVE, so the stored `last_batch` id
-    * skips re-delivered batch ids (exact under single-writer-per-
-    * (table, column)). Per micro-batch: one distributed count aggregate
-    * (≤ groups × buckets rows collected), one CAS-merged upsert —
-    * O(groups × buckets) state regardless of stream volume. The
-    * "histsum_grouped" rider (per-(group, bucket) exact decimal sums —
-    * the grouped range-SUM/AVG serve's input) maintains in the same
-    * aggregate: BigInt addition is exact, so the stream-built rider is
-    * BYTE-equal to a batch `createGroupedHistogram` over the same
-    * rows; a group whose batch sum overflows poisons that group (its
-    * SUM/AVG refuses, counts keep serving).
+    * grid. Per micro-batch: one distributed count aggregate
+    * (≤ groups × buckets rows collected) — O(groups × buckets) state
+    * regardless of stream volume. The "histsum_grouped" rider
+    * (per-(group, bucket) exact decimal sums — the grouped range-SUM/AVG
+    * serve's input) maintains in the same aggregate: BigInt addition is
+    * exact, so the stream-built rider is BYTE-equal to a batch
+    * `createGroupedHistogram` over the same rows; a group whose batch
+    * sum overflows poisons that group (an EMPTY inner pack: its SUM/AVG
+    * refuses, counts keep serving).
     */
   def maintainGroupedHistogramSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, groupCol: String,
       valueCol: String, grids: Seq[(Option[String], Double, Double)],
-      buckets: Int): org.apache.spark.sql.streaming.StreamingQuery =
+      buckets: Int): StreamingQuery =
     maintainGroupedHistogramSketch(values, catalog, table, Seq(groupCol),
       valueCol, grids, buckets)
 
@@ -1122,126 +965,64 @@ object EventStreams {
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], valueCol: String,
       grids: Seq[(Option[String], Double, Double)],
-      buckets: Int): org.apache.spark.sql.streaming.StreamingQuery = {
+      buckets: Int): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     require(buckets >= 1 && grids.nonEmpty && grids.forall(_._3 > 0),
       "need buckets >= 1 and non-empty per-group grids with width > 0")
     val groupCol = groupCols.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
     val spark = values.sparkSession
     import spark.implicits._
     val gridDf = broadcast(grids.map { case (k, lo, w) => (k.orNull, lo, w) }
       .toDF("gg", "glo", "gw"))
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val alreadyMerged = catalog
-          .getSketch(table, valueCol, "histogram_grouped")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        // independent rider guard, evaluated UP FRONT: a crash between
-        // the counts upsert and the rider upsert must not make the
-        // replayed batch skip the rider fold (see maintainHistogramSketch)
-        val sumsMergedG = catalog
-          .getSketch(table, valueCol, "histsum_grouped")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged || !sumsMergedG) {
-          val in = batch.filter(col(valueCol).isNotNull)
-            .select(graft.sketch.SketchOps.groupKeyExpr(groupCols, batch.schema.fieldNames.toSeq).as("g"),
-              col(valueCol).cast("double").as("v"),
-              col(valueCol).as("raw"))
-          // null-safe left join: a NULL group is still a group, and a
-          // group with no grid surfaces as a null glo below. Per-(g, b)
-          // exact decimal sums ride the same aggregate into the
-          // "histsum_grouped" rider fold below (the grouped range
-          // SUM/AVG serve's input) — no extra pass.
-          val joined = in.join(gridDf, in("g") <=> gridDf("gg"), "left")
-          val counts = joined.select(col("g"), col("glo"),
-              expr(s"case when glo is null then cast(null as int) else " +
-                s"least(${buckets - 1}, greatest(0, " +
-                "cast(floor((v - glo) / gw) as int))) end").as("b"),
-              col("raw"))
-            .groupBy(col("g"), col("b"), col("glo"))
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("count"),
-              expr("try_sum(cast(raw as decimal(38,4)))").as("s4"))
-            .collect()
-          counts.find(_.isNullAt(2)).foreach { r =>
-            throw new IllegalArgumentException(
-              s"grouped histogram over $table.$groupCol: batch $batchId " +
-                s"contains group '${r.getString(0)}' with no declared grid " +
-                "— domain drift; rebuild the sketch with the new groups")
-          }
-          if (counts.nonEmpty) {
-            val byGroup = counts.groupBy(r => Option(r.getAs[String]("g")))
-            val gridByKey = grids.map { case (k, lo, w) => k -> (lo, w) }.toMap
-            val packed = byGroup.toSeq.map { case (k, rs) =>
-              val (lo, w) = gridByKey(k)
-              val arr = new Array[Long](buckets)
-              rs.foreach(r => arr(r.getAs[Int]("b")) = r.getAs[Long]("count"))
-              k -> graft.sketch.Histogram(lo, w, arr).serialize
-            }
-            if (!alreadyMerged)
-              catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-                "histogram_grouped", graft.sketch.GroupedHll.pack(packed),
-                s"""{"buckets":$buckets,"group_by":"$groupCol","last_batch":$batchId}""",
-                System.currentTimeMillis())) { (prev, next) =>
-                graft.sketch.GroupedHll.mergePacked(prev, next) { (x, y) =>
-                  graft.sketch.Histogram.deserialize(x)
-                    .merge(graft.sketch.Histogram.deserialize(y)).serialize
-                }
-              }
-            // histsum_grouped rider: per-group inner packs of bucket ->
-            // unscaled scale-4 decimal sums, additive BigInt merge under
-            // its OWN replay guard. A group whose batch sum overflows
-            // decimal(38,4) POISONS that group with an EMPTY inner pack
-            // — the engine refuses its SUM/AVG serve (counts keep
-            // serving) instead of serving a sum that silently missed a
-            // batch; poison absorbs in the merge.
-            if (!sumsMergedG) {
-              val packedSums = byGroup.toSeq.map { case (k, rs) =>
-                var poison = false
-                val entries = rs.toSeq.flatMap { r =>
-                  Option(r.getDecimal(4)) match {
-                    case Some(d) =>
-                      Seq(Option(r.getAs[Int]("b").toString) ->
-                        BigInt(d.setScale(4).unscaledValue()).toByteArray)
-                    case None => poison = true; Seq.empty
-                  }
-                }
-                k -> graft.sketch.GroupedHll.pack(
-                  if (poison) Seq.empty else entries)
-              }
-              catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-                "histsum_grouped", graft.sketch.GroupedHll.pack(packedSums),
-                s"""{"buckets":$buckets,"group_by":"$groupCol","last_batch":$batchId}""",
-                System.currentTimeMillis())) { (prev, next) =>
-                graft.sketch.GroupedHll.mergePacked(prev, next) { (x, y) =>
-                  val xa = graft.sketch.GroupedHll.unpack(x)
-                  val ya = graft.sketch.GroupedHll.unpack(y)
-                  if (xa.isEmpty || ya.isEmpty)
-                    graft.sketch.GroupedHll.pack(Seq.empty) // poison absorbs
-                  else {
-                    val xm = xa.collect {
-                      case (Some(bk), bb) => bk.toInt -> BigInt(bb) }.toMap
-                    val ym = ya.collect {
-                      case (Some(bk), bb) => bk.toInt -> BigInt(bb) }.toMap
-                    graft.sketch.GroupedHll.pack(
-                      (xm.keySet ++ ym.keySet).toSeq.map(i =>
-                        Option(i.toString) ->
-                          (xm.getOrElse(i, BigInt(0)) +
-                            ym.getOrElse(i, BigInt(0))).toByteArray))
-                  }
-                }
-              }
-            }
-          }
+    val gridByKey = grids.map { case (k, lo, w) => k -> (lo, w) }.toMap
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, valueCol, batchId)(
+        Fold.Blob("histogram_grouped", (p, n) => GroupedHll.mergePacked(p, n)(
+          graft.sketch.Histogram.mergeBytes)),
+        Fold.Blob("histsum_grouped",
+          (p, n) => GroupedHll.mergePacked(p, n)(addSumPacks))) {
+        val in = batch.filter(col(valueCol).isNotNull)
+          .select(graft.sketch.SketchOps.groupKeyExpr(groupCols,
+            batch.schema.fieldNames.toSeq).as("g"),
+            col(valueCol).cast("double").as("v"), col(valueCol).as("raw"))
+        // null-safe left join: a NULL group is still a group, and a
+        // group with no grid surfaces as a null glo below
+        val counts = in.join(gridDf, in("g") <=> gridDf("gg"), "left")
+          .select(col("g"), col("glo"),
+            expr(s"case when glo is null then cast(null as int) else " +
+              s"least(${buckets - 1}, greatest(0, " +
+              "cast(floor((v - glo) / gw) as int))) end").as("b"),
+            col("raw"))
+          .groupBy(col("g"), col("b"), col("glo"))
+          .agg(count(lit(1)).as("count"),
+            expr("try_sum(cast(raw as decimal(38,4)))").as("s4"))
+          .collect()
+        counts.find(_.isNullAt(2)).foreach { r =>
+          throw new IllegalArgumentException(
+            s"grouped histogram over $table.$groupCol: batch $batchId " +
+              s"contains group '${r.getString(0)}' with no declared grid " +
+              "— domain drift; rebuild the sketch with the new groups")
         }
-        ()
+        val byGroup = counts.toSeq.groupBy(r => Option(r.getAs[String]("g")))
+        val params =
+          s"""{"buckets":$buckets,"group_by":"$groupCol","last_batch":$batchId}"""
+        val packed = byGroup.toSeq.map { case (k, rs) =>
+          val (lo, w) = gridByKey(k)
+          val arr = new Array[Long](buckets)
+          rs.foreach(r => arr(r.getAs[Int]("b")) = r.getAs[Long]("count"))
+          k -> graft.sketch.Histogram(lo, w, arr).serialize
+        }
+        val sums = byGroup.toSeq.map { case (k, rs) =>
+          val entries = rs.map(r => Option(r.getDecimal(4)).map(d =>
+            Option(r.getAs[Int]("b").toString) -> unscaled4(d).toByteArray))
+          k -> GroupedHll.pack(
+            if (entries.contains(None)) Seq.empty else entries.flatten)
+        }
+        if (counts.isEmpty) Seq(None, None)
+        else Seq(Some(GroupedHll.pack(packed) -> params),
+          Some(GroupedHll.pack(sums) -> params))
       }
-      .start()
+    }
   }
 
   /** Streaming GROUPED-statistics maintenance — the q86 strategy made
@@ -1255,14 +1036,11 @@ object EventStreams {
     * (BigInt addition — no float drift), so the stream-maintained blob
     * is BYTE-equal to a one-pass batch build over the same rows. New
     * groups union in freely (stats need no pre-declared grid, unlike
-    * the grouped histogram), bounded by `SketchOps.MaxHllGroups`.
-    * Count/sum merges are additive, so the stored `last_batch` id
-    * skips re-delivered batch ids (single-writer discipline, like the
-    * histogram and CMS folds).
+    * the grouped histogram).
     */
   def maintainGroupedStatsSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, groupCol: String,
-      valueCol: String): org.apache.spark.sql.streaming.StreamingQuery =
+      valueCol: String): StreamingQuery =
     maintainGroupedStatsSketch(values, catalog, table, Seq(groupCol),
       valueCol)
 
@@ -1275,123 +1053,44 @@ object EventStreams {
     */
   def maintainGroupedStatsSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
-      groupCols: Seq[String], valueCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      groupCols: Seq[String], valueCol: String): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     val groupCol = groupCols.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val alreadyMerged = catalog
-          .getSketch(table, valueCol, "stats_grouped")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged) {
-          import org.apache.spark.sql.functions.{count, expr, lit, max, min}
-          val rows = batch
-            .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols, batch.schema.fieldNames.toSeq).as("g"))
-            .agg(min(col(valueCol)).cast("double").as("lo"),
-              max(col(valueCol)).cast("double").as("hi"),
-              count(lit(1)).as("n"),
-              count(col(valueCol)).as("nnull"),
-              // decimal(38,4) + try_sum, mirroring the batch builder: a
-              // huge micro-batch group can neither throw (ANSI) nor
-              // wrap; values in range are identical, so the byte-
-              // equality law vs the batch build is unchanged
-              expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
-            .limit(graft.sketch.SketchOps.MaxHllGroups + 1)
-            .collect()
-          if (rows.length > graft.sketch.SketchOps.MaxHllGroups)
-            throw new IllegalArgumentException(
-              s"grouped stats over $table.$groupCol: more than " +
-                s"${graft.sketch.SketchOps.MaxHllGroups} groups in one batch")
-          if (rows.nonEmpty) {
-            val packed = graft.sketch.GroupedHll.pack(rows.toSeq.map { r =>
-              val absent = r.isNullAt(1)
-              // NULL sum with non-NULL values = try_sum overflowed even
-              // decimal(38,4): refuse loudly rather than encode a
-              // silent zero the serve would label exact
-              if (r.isNullAt(5) && r.getAs[Long]("nnull") > 0L)
-                throw new IllegalArgumentException(
-                  s"grouped stats over $table.$valueCol: batch group sum " +
-                    "overflows decimal(38,4)")
-              val sum = Option(r.getDecimal(5))
-                .map(d => BigInt(d.setScale(4).unscaledValue()))
-                .getOrElse(BigInt(0))
-              Option(r.getAs[String]("g")) ->
-                graft.sketch.GroupedStats.encode(graft.sketch.GroupedStats.Stat(
-                  if (absent) None else Some(r.getDouble(1)),
-                  if (absent) None else Some(r.getDouble(2)),
-                  r.getAs[Long]("nnull"), r.getAs[Long]("n"), sum))
-            })
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-              "stats_grouped",
-              packed, s"""{"group_by":"$groupCol","last_batch":$batchId}""",
-              System.currentTimeMillis())) { (prev, next) =>
-              val merged = graft.sketch.GroupedHll.mergePacked(prev, next) {
-                (x, y) => graft.sketch.GroupedStats.encode(
-                  graft.sketch.GroupedStats.merge(
-                    graft.sketch.GroupedStats.decode(x),
-                    graft.sketch.GroupedStats.decode(y)))
-              }
-              if (graft.sketch.GroupedHll.unpack(merged)
-                  .sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-                throw new IllegalArgumentException(
-                  s"grouped stats over $table.$groupCol: merged group count " +
-                    s"exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-              merged
-            }
-          }
-        }
-        ()
+    val label = s"grouped stats over $table.$groupCol"
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, valueCol, batchId)(Fold.Blob("stats_grouped",
+        Fold.capped(label)((p, n) => GroupedHll.mergePacked(p, n) { (x, y) =>
+          graft.sketch.GroupedStats.encode(graft.sketch.GroupedStats.merge(
+            graft.sketch.GroupedStats.decode(x),
+            graft.sketch.GroupedStats.decode(y)))
+        }))) {
+        val rows = Fold.groups(batch
+          .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
+            batch.schema.fieldNames.toSeq).as("g"))
+          .agg(statsAgg(valueCol).head, statsAgg(valueCol).tail: _*), label)
+        Seq(Option.when(rows.nonEmpty)(GroupedHll.pack(rows.toSeq.map { r =>
+          val (g, st) = statOf(r, s"grouped stats over $table.$valueCol")
+          g -> graft.sketch.GroupedStats.encode(st)
+        }) -> s"""{"group_by":"$groupCol","last_batch":$batchId}"""))
       }
-      .start()
+    }
   }
 
   /** Streaming Count-Min maintenance — the engine's point-frequency
     * strategy made LIVE: each micro-batch's values fold into the
     * catalog's CMS (one distributed sketch aggregate per batch — the
-    * counter matrix is the mergeable state — then one CAS-merged
-    * catalog upsert), and `QueryEngine.storedCmsAnswer` serves
-    * `COUNT(*) WHERE col = 'v'` over the live table with NO scan.
-    * CMS merge is ADDITIVE (element-wise counter addition, like the
-    * histogram and unlike HLL's idempotent register-max), so a replayed
-    * batch would double-count; the stored `last_batch` id skips
-    * re-delivered batch ids (exact under single-writer-per-(table,
-    * column), the discipline maintainHistogramSketch documents).
-    * O(eps^-1 ln delta^-1) counters of state regardless of stream
-    * volume — the only way per-key frequency tracking survives an
-    * unbounded key domain.
+    * counter matrix is the mergeable state), and
+    * `QueryEngine.storedCmsAnswer` serves `COUNT(*) WHERE col = 'v'`
+    * over the live table with NO scan. CMS merge is ADDITIVE, so the
+    * blob is replay-guarded. O(eps^-1 ln delta^-1) counters of state
+    * regardless of stream volume — the only way per-key frequency
+    * tracking survives an unbounded key domain.
     */
   def maintainCmsSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
-      epsilon: Double = 0.01, delta: Double = 0.01)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val alreadyMerged = catalog.getSketch(table, column, "countmin")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged) {
-          val bytes = batch
-            .select(graft.sketch.Cms
-              .sketchAgg(col(column).cast("string"), epsilon, delta).as("s"))
-            .collect().head.getAs[Array[Byte]]("s")
-          catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-            "countmin", bytes,
-            s"""{"epsilon":$epsilon,"delta":$delta,"last_batch":$batchId}""",
-            System.currentTimeMillis())) { (prev, next) =>
-            graft.sketch.Cms.deserialize(prev)
-              .merge(graft.sketch.Cms.deserialize(next)).serialize
-          }
-        }
-        ()
-      }
-      .start()
-  }
+      epsilon: Double = 0.01, delta: Double = 0.01): StreamingQuery =
+    cmsFold(values, catalog, table, column, col(column).cast("string"), "",
+      epsilon, delta)
 
   /** Composite-key variant of [[maintainCmsSketch]]: each batch keys
     * its rows with the batch builder's `to_json(array(...))` tuple
@@ -1400,122 +1099,70 @@ object EventStreams {
     * row), and the blob lands under the comma-joined column list with
     * `"enc":"j1"` — exactly where `QueryEngine.storedCmsAnswer`'s
     * composite dispatch looks, so conjunctive point frequencies serve
-    * LIVE. Same additive merge + replay guard as the single-key form.
+    * LIVE.
     */
   def maintainCmsSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       columns: Seq[String], epsilon: Double, delta: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(columns.nonEmpty, "at least one column required")
     if (columns.sizeIs == 1)
       return maintainCmsSketch(values, catalog, table, columns.head,
         epsilon, delta)
-    val column = columns.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
     val arr = columns.map(c => s"cast($c as string)")
       .mkString("to_json(array(", ", ", "))")
     val anyNull = columns.map(c => s"$c is null").mkString(" or ")
-    val key = org.apache.spark.sql.functions.expr(
-      s"case when $anyNull then cast(null as string) else $arr end")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val alreadyMerged = catalog.getSketch(table, column, "countmin")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged) {
-          val bytes = batch
-            .select(graft.sketch.Cms.sketchAgg(key, epsilon, delta).as("s"))
-            .collect().head.getAs[Array[Byte]]("s")
-          catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-            "countmin", bytes,
-            s"""{"epsilon":$epsilon,"delta":$delta,"last_batch":$batchId,"enc":"j1"}""",
-            System.currentTimeMillis())) { (prev, next) =>
-            graft.sketch.Cms.deserialize(prev)
-              .merge(graft.sketch.Cms.deserialize(next)).serialize
-          }
-        }
-        ()
-      }
-      .start()
+    cmsFold(values, catalog, table, columns.mkString(","),
+      expr(s"case when $anyNull then cast(null as string) else $arr end"),
+      ""","enc":"j1"""", epsilon, delta)
   }
 
+  private def cmsFold(values: DataFrame, catalog: graft.catalog.MetaCatalog,
+      table: String, column: String, key: Column, enc: String,
+      epsilon: Double, delta: Double): StreamingQuery =
+    Fold.run(values) { (batch, batchId) =>
+      Fold.append(catalog, table, column, batchId)(
+        Fold.Blob("countmin", cmsMerge)) {
+        Seq(Some(batch.select(graft.sketch.Cms.sketchAgg(key, epsilon, delta))
+          .collect().head.getAs[Array[Byte]](0) ->
+          s"""{"epsilon":$epsilon,"delta":$delta,"last_batch":$batchId$enc}"""))
+      }
+    }
+
   /** Streaming AGMS maintenance — live join-cardinality evidence: each
-    * micro-batch's keys fold into the stored AGMS counters (bucket =
-    * h60('js:'&#124;&#124;key) % B, sign from the next hash bit — the exact
-    * derivation `SketchOps.createAgms` uses, so the stream-built sketch
-    * is BYTE-equal to a batch build over the same rows; signed-counter
-    * addition is associative/commutative), and `"rows"` accumulates the
-    * batch counts — the cardinality input the engine's join estimate
-    * reads. With a fresh pair maintained this way, automatic costed
-    * join AQP keeps working as the stream appends: the plan decision
-    * stays scan-free while the evidence stays current. Additive merge ⇒
-    * the same `last_batch` replay guard as CMS/histograms (exact under
-    * the single-writer-per-(table, keys) discipline all maintainers
-    * document). Composite keys render with the shared to_json tuple
-    * encoding (`"enc":"j1"`), matching the batch builder. A stored
-    * sketch with a DIFFERENT bucket count refuses (counters of unequal
-    * width cannot add).
+    * micro-batch's keys fold into the stored AGMS counters
+    * ([[agmsCells]] — the derivation `SketchOps.createAgms` uses, so
+    * the stream-built sketch is BYTE-equal to a batch build over the
+    * same rows; signed-counter addition is associative/commutative),
+    * and `"rows"` accumulates the batch counts — the cardinality input
+    * the engine's join estimate reads. With a fresh pair maintained
+    * this way, automatic costed join AQP keeps working as the stream
+    * appends: the plan decision stays scan-free while the evidence
+    * stays current. Composite keys render with the shared to_json
+    * tuple encoding (`"enc":"j1"`), matching the batch builder. A
+    * stored sketch with a DIFFERENT bucket count refuses (counters of
+    * unequal width cannot add).
     */
   def maintainAgmsSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, keys: Seq[String],
-      buckets: Int = 1024): org.apache.spark.sql.streaming.StreamingQuery = {
+      buckets: Int = 1024): StreamingQuery = {
     require(keys.nonEmpty, "at least one key column required")
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val column = keys.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    val rowsRe = """"rows"\s*:\s*(-?\d+)""".r
-    val bucketsRe = """"buckets"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = catalog.getSketch(table, column, "agms")
-        prev.foreach { s =>
-          val b0 = bucketsRe.findFirstMatchIn(s.parameters).map(_.group(1).toInt)
-          if (!b0.contains(buckets))
-            throw new IllegalArgumentException(
-              s"agms over $table.$column: stored sketch has buckets=" +
-                s"${b0.getOrElse(-1)}, maintainer configured $buckets")
-        }
-        val alreadyMerged = prev
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged) {
-          graft.functions.GraftFunctions.register(batch.sparkSession)
-          import org.apache.spark.sql.functions.{count, expr, lit, sum}
-          val keyExpr = graft.plan.SampleRewrite.tupleKeyExpr("js:", keys)
-          val rows = batch
-            .select(expr(s"graft_h60($keyExpr)").as("h"))
-            .select(expr(s"cast(h % ${buckets}L as int)").as("bucket"),
-              expr(s"case when (h div ${buckets}L) % 2 = 0 then 1L else -1L end")
-                .as("sgn"))
-            .groupBy(col("bucket"))
-            .agg(sum(col("sgn")).as("c"), count(lit(1)).as("n"))
-            .collect()
-          val counters = new Array[Long](buckets)
-          var total = 0L // incl. NULL-key rows: the true batch rowcount
-          rows.foreach { r =>
-            if (!r.isNullAt(0)) counters(r.getInt(0)) = r.getLong(1)
-            total += r.getLong(2)
-          }
-          val prevRows = prev
-            .flatMap(s => rowsRe.findFirstMatchIn(s.parameters)
-              .map(_.group(1).toLong))
-            .getOrElse(0L)
-          val enc = if (keys.sizeIs > 1) ""","enc":"j1"""" else ""
-          catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-            "agms", graft.sketch.Agms.serialize(counters),
-            s"""{"buckets":$buckets,"rows":${prevRows + total},"last_batch":$batchId$enc}""",
-            System.currentTimeMillis())) { (p, n) =>
-            val a = graft.sketch.Agms.deserialize(p)
-            val b = graft.sketch.Agms.deserialize(n)
-            graft.sketch.Agms.serialize(
-              a.zip(b).map { case (x, y) => x + y })
-          }
-        }
-        ()
+    val enc = if (keys.sizeIs > 1) ""","enc":"j1"""" else ""
+    Fold.run(values) { (batch, batchId) =>
+      val prev = catalog.getSketch(table, column, "agms")
+      Fold.sameParam(prev, "buckets", buckets, s"agms over $table.$column")
+      Fold.append(catalog, table, column, batchId)(Fold.Blob("agms",
+        (p, n) => graft.sketch.Agms.serialize(graft.sketch.Agms.deserialize(p)
+          .zip(graft.sketch.Agms.deserialize(n)).map { case (x, y) => x + y }))) {
+        val (total, counters) =
+          agmsCounters(agmsCells(batch, keys, buckets), buckets)
+        val rows = prev.flatMap(_.paramLong("rows")).getOrElse(0L) + total
+        Seq(Some(graft.sketch.Agms.serialize(counters) ->
+          s"""{"buckets":$buckets,"rows":$rows,"last_batch":$batchId$enc}"""))
       }
-      .start()
+    }
   }
 
   /** Streaming HDR maintenance — the relative-error quantile sketch
@@ -1524,203 +1171,94 @@ object EventStreams {
     * derivation the batch builder runs, so the stream-built blob is
     * BYTE-equal to a batch build over the same rows; the log grid is
     * global by construction, so per-bucket counts add exactly with no
-    * grid to disagree on) and fold into the stored blob under the
-    * catalog's CAS merge. `"rows"` accumulates batch counts for the
-    * freshness guard; the additive merge gets the same `last_batch`
-    * replay guard as CMS/AGMS (exact under the single-writer-per-
-    * (table, column) discipline all maintainers document). A stored
-    * sketch with a different m refuses (sub-bucket layouts cannot
-    * add).
+    * grid to disagree on). `"rows"` accumulates batch counts for the
+    * freshness guard; the "hdrsum" rider folds decimal sums after the
+    * counts. A stored sketch with a different m refuses (sub-bucket
+    * layouts cannot add).
     */
   def maintainHdrSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
-      m: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
+      m: Int = 32): StreamingQuery = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    val rowsRe = """"rows"\s*:\s*(-?\d+)""".r
-    val mRe = """"m"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = catalog.getSketch(table, column, "hdr")
-        prev.foreach { s =>
-          val m0 = mRe.findFirstMatchIn(s.parameters).map(_.group(1).toInt)
-          if (!m0.contains(m))
-            throw new IllegalArgumentException(
-              s"hdr over $table.$column: stored sketch has m=" +
-                s"${m0.getOrElse(-1)}, maintainer configured $m")
-        }
-        val alreadyMerged = prev
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        // the rider's replay guard is INDEPENDENT and evaluated up
-        // front: a crash between the counts upsert and the rider
-        // upsert leaves the rider one batch behind, and the replayed
-        // batch must still fold it (nesting it under the counts guard
-        // would lose that batch's sums forever; the serve-side
-        // last_batch cross-check refuses sums in the interim)
-        val sumsMerged = catalog.getSketch(table, column, "hdrsum")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged || !sumsMerged) {
-          val total = batch.count()
-          val (sk, sums, sumOverflow) =
-            graft.sketch.SketchOps.hdrAggregate(batch, column, m,
-              s"hdr stream over $table.$column")
-          if (sumOverflow)
-            throw new IllegalArgumentException(
-              s"hdr stream over $table.$column: a batch bucket sum " +
-                "overflows decimal(38,4)")
-          val prevRows = prev
-            .flatMap(s => rowsRe.findFirstMatchIn(s.parameters)
-              .map(_.group(1).toLong))
-            .getOrElse(0L)
-          if (!alreadyMerged)
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "hdr", sk.serialize,
-              s"""{"m":$m,"rows":${prevRows + total},"last_batch":$batchId}""",
-              System.currentTimeMillis())) { (p, n) =>
-              graft.sketch.HdrSketch.deserialize(p)
-                .merge(graft.sketch.HdrSketch.deserialize(n)).serialize
-            }
-          // the "hdrsum" rider folds decimal sums additively AFTER the
-          // counts (a rider-first order could double-count sums on
-          // redelivery of the crash window)
-          if (!sumsMerged)
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "hdrsum",
-              graft.sketch.GroupedHll.pack(sums.map { case ((sg, e, s), v) =>
-                Option(s"$sg:$e:$s") -> v.toByteArray
-              }),
-              s"""{"m":$m,"rows":${prevRows + total},"last_batch":$batchId}""",
-              System.currentTimeMillis())) { (p, n) =>
-              val a = graft.sketch.GroupedHll.unpack(p)
-                .map { case (k, b) => k -> BigInt(b) }.toMap
-              val b = graft.sketch.GroupedHll.unpack(n)
-                .map { case (k, b0) => k -> BigInt(b0) }
-              val merged = (a.keySet ++ b.map(_._1)).toSeq.map { k =>
-                k -> (a.getOrElse(k, BigInt(0)) +
-                  b.collectFirst { case (`k`, v) => v }.getOrElse(BigInt(0)))
-              }
-              graft.sketch.GroupedHll.pack(
-                merged.map { case (k, v) => k -> v.toByteArray })
-            }
-        }
-        ()
+    Fold.run(values) { (batch, batchId) =>
+      val prev = catalog.getSketch(table, column, "hdr")
+      Fold.sameParam(prev, "m", m, s"hdr over $table.$column")
+      Fold.append(catalog, table, column, batchId)(
+        Fold.Blob("hdr", graft.sketch.HdrSketch.mergeBytes),
+        Fold.Blob("hdrsum", graft.sketch.SketchOps.hdrSumMergeBytes)) {
+        val total = batch.count()
+        val (sk, sums, sumOverflow) =
+          graft.sketch.SketchOps.hdrAggregate(batch, column, m,
+            s"hdr stream over $table.$column")
+        if (sumOverflow)
+          throw new IllegalArgumentException(
+            s"hdr stream over $table.$column: a batch bucket sum " +
+              "overflows decimal(38,4)")
+        val rows = prev.flatMap(_.paramLong("rows")).getOrElse(0L) + total
+        val params = s"""{"m":$m,"rows":$rows,"last_batch":$batchId}"""
+        Seq(Some(sk.serialize -> params),
+          Some(GroupedHll.pack(sums.map { case ((sg, e, s), v) =>
+            Option(s"$sg:$e:$s") -> v.toByteArray
+          }) -> params))
       }
-      .start()
+    }
   }
 
   /** Streaming GROUPED-HDR maintenance — per-group relative-error
     * quantile sketches kept LIVE. The log grid is GLOBAL (the real
     * line's binades), so unlike the grouped histogram there is NO
-    * pre-declared grid: new groups union in freely (bounded by
-    * `SketchOps.MaxHllGroups`) and per-bucket counts add exactly,
-    * making the stream-maintained blob BYTE-equal to a batch
-    * `createGroupedHdr` over the same rows (the shared
+    * pre-declared grid: new groups union in freely and per-bucket
+    * counts add exactly, making the stream-maintained blob BYTE-equal
+    * to a batch `createGroupedHdr` over the same rows (the shared
     * `hdrGroupedAggregate` pass + canonical per-sketch serialization).
     * Groups whose batch values are all NULL are still recorded (empty
     * payload — the identity of the merge), matching the batch
-    * builder's all-NULL-group contract. Additive merge ⇒ the stored
-    * `last_batch` id skips re-delivered batch ids (single-writer
-    * discipline); a stored blob with a different m refuses. The
-    * "hdrsum_grouped" rider (per-(group, log-bucket) decimal sums —
-    * the grouped range-SUM/AVG serve's input) folds in the same
-    * micro-batch under its own replay guard, counts first.
+    * builder's all-NULL-group contract; a stored blob with a different
+    * m refuses. The "hdrsum_grouped" rider (per-(group, log-bucket)
+    * decimal sums — the grouped range-SUM/AVG serve's input) folds in
+    * the same micro-batch after the counts; it omits all-NULL groups,
+    * and per-group overflow POISON (the "!" sentinel entry) absorbs in
+    * the merge — an EMPTY pack is the additive identity of an
+    * all-zero-valued batch group, never poison.
     */
   def maintainGroupedHdrSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], valueCol: String,
-      m: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
+      m: Int = 32): StreamingQuery = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
     require(groupCols.nonEmpty, "at least one group column required")
     val groupCol = groupCols.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    val mRe = """"m"\s*:\s*(-?\d+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = catalog.getSketch(table, valueCol, "hdr_grouped")
-        prev.foreach { s =>
-          val m0 = mRe.findFirstMatchIn(s.parameters).map(_.group(1).toInt)
-          if (!m0.contains(m))
-            throw new IllegalArgumentException(
-              s"grouped hdr over $table.$valueCol: stored blob has m=" +
-                s"${m0.getOrElse(-1)}, maintainer configured $m")
+    val label = s"grouped hdr over $table.$groupCol"
+    Fold.run(values) { (batch, batchId) =>
+      Fold.sameParam(catalog.getSketch(table, valueCol, "hdr_grouped"), "m", m,
+        s"grouped hdr over $table.$valueCol")
+      Fold.append(catalog, table, valueCol, batchId)(
+        Fold.Blob("hdr_grouped", Fold.capped(label)((p, n) =>
+          GroupedHll.mergePacked(p, n)(graft.sketch.HdrSketch.mergeBytes))),
+        Fold.Blob("hdrsum_grouped", (p, n) => GroupedHll.mergePacked(p, n)(
+          graft.sketch.SketchOps.hdrSumMergeBytes))) {
+        // all groups in the batch (all-NULL ones included) — the bucket
+        // pass only sees non-NULL values
+        val gs = Fold.groups(batch
+          .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
+            batch.schema.fieldNames.toSeq).as("g"))
+          .agg(count(lit(1)).as("n")), label)
+        if (gs.isEmpty) Seq(None, None)
+        else {
+          val agg = graft.sketch.SketchOps.hdrGroupedAggregate(
+            batch, groupCols, valueCol, m,
+            s"grouped hdr stream over $table.$valueCol")
+          val params =
+            s"""{"m":$m,"group_by":"$groupCol","last_batch":$batchId}"""
+          Seq(Some(GroupedHll.pack(gs.toSeq.map { r =>
+              val k = Option(r.getAs[String]("g"))
+              k -> agg.get(k).map(_._1).getOrElse(Array.empty[Byte])
+            }) -> params),
+            Some(GroupedHll.pack(agg.toSeq.map { case (k, (_, rider)) =>
+              k -> rider }) -> params))
         }
-        val alreadyMerged = prev
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        // independent rider guard, evaluated UP FRONT (see
-        // maintainHdrSketch): the crash window between the two upserts
-        // must not make the replayed batch skip the rider fold
-        val sumsMerged = catalog
-          .getSketch(table, valueCol, "hdrsum_grouped")
-          .flatMap(s => lastBatchRe.findFirstMatchIn(s.parameters)
-            .map(_.group(1).toLong))
-          .exists(batchId <= _)
-        if (!alreadyMerged || !sumsMerged) {
-          import org.apache.spark.sql.functions.{count, lit}
-          // all groups in the batch (all-NULL ones included) — the
-          // bucket pass only sees non-NULL values
-          val gs = batch
-            .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
-              batch.schema.fieldNames.toSeq).as("g"))
-            .agg(count(lit(1)).as("n"))
-            .limit(graft.sketch.SketchOps.MaxHllGroups + 1)
-            .collect()
-          if (gs.length > graft.sketch.SketchOps.MaxHllGroups)
-            throw new IllegalArgumentException(
-              s"grouped hdr over $table.$groupCol: more than " +
-                s"${graft.sketch.SketchOps.MaxHllGroups} groups in one batch")
-          if (gs.nonEmpty) {
-            val agg = graft.sketch.SketchOps.hdrGroupedAggregate(
-              batch, groupCols, valueCol, m,
-              s"grouped hdr stream over $table.$valueCol")
-            val keys = gs.toSeq.map(r => Option(r.getAs[String]("g")))
-            val packed = graft.sketch.GroupedHll.pack(
-              keys.map(k =>
-                k -> agg.get(k).map(_._1).getOrElse(Array.empty[Byte])))
-            if (!alreadyMerged)
-              catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-                "hdr_grouped", packed,
-                s"""{"m":$m,"group_by":"$groupCol","last_batch":$batchId}""",
-                System.currentTimeMillis())) { (prevB, next) =>
-                val merged = graft.sketch.GroupedHll.mergePacked(prevB, next)(
-                  graft.sketch.HdrSketch.mergeBytes)
-                if (graft.sketch.GroupedHll.unpack(merged)
-                    .sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-                  throw new IllegalArgumentException(
-                    s"grouped hdr over $table.$groupCol: merged group count " +
-                      s"exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-                merged
-              }
-            // the "hdrsum_grouped" rider folds per-(group, log-bucket)
-            // decimal sums additively AFTER the counts (rider-first
-            // could double-count sums on crash-window redelivery).
-            // Per-group overflow POISON (the "!" sentinel entry)
-            // absorbs in the merge — an EMPTY pack is the additive
-            // identity of an all-zero-valued batch group, never poison.
-            if (!sumsMerged) {
-              // groups with VALUES only (all-NULL-batch groups are
-              // omitted — mergePacked's union leaves the stored side
-              // untouched)
-              val packedSums = graft.sketch.GroupedHll.pack(
-                agg.toSeq.map { case (k, (_, rider)) => k -> rider })
-              catalog.upsertSketchMerging(catalog.SketchInfo(table, valueCol,
-                "hdrsum_grouped", packedSums,
-                s"""{"m":$m,"group_by":"$groupCol","last_batch":$batchId}""",
-                System.currentTimeMillis())) { (prevB, next) =>
-                graft.sketch.GroupedHll.mergePacked(prevB, next)(
-                  graft.sketch.SketchOps.hdrSumMergeBytes)
-              }
-            }
-          }
-        }
-        ()
       }
-      .start()
+    }
   }
 
   /** Streaming HEAVY-HITTERS maintenance — the q109/q110 "topk" serve
@@ -1737,90 +1275,28 @@ object EventStreams {
     * serves only when the k-th stored metric clears it) while stored
     * counts stay exact — correctness is never traded, only coverage
     * narrows as unknown mass accumulates. Rebuild on a schedule to
-    * reset the bound. Counts add, so the stored `last_batch` id skips
-    * re-delivered batch ids (single-writer discipline, like the
-    * histogram and CMS folds). Requires the blob to exist (the
-    * threshold lives in the build) and refuses loudly otherwise —
-    * silently skipped batches would leave a stale blob serving as
-    * fresh.
+    * reset the bound. Requires the blob to exist (the threshold lives
+    * in the build) and refuses loudly otherwise — silently skipped
+    * batches would leave a stale blob serving as fresh.
     */
   def maintainTopKSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
-      groupCols: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery = {
+      groupCols: Seq[String]): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     val column = groupCols.mkString(",")
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    val rowsRe = """"rows"\s*:\s*(-?\d+)""".r
-    val unknownRe = """"unknown_bound"\s*:\s*([0-9.eE+-]+)""".r
-    val aggRe = """"agg"\s*:\s*"([^"]*)"""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = catalog.getSketch(table, column, "topk").getOrElse(
-          throw new IllegalStateException(
-            s"topk over $table.$column: no stored blob to maintain — " +
-              "build with SketchOps.createTopK first"))
-        val agg = aggRe.findFirstMatchIn(prev.parameters)
-          .map(_.group(1)).getOrElse("count")
-        if (agg != "count")
-          throw new IllegalArgumentException(
-            s"topk over $table.$column: stored blob aggregates '$agg', " +
-              "maintainTopKSketch folds counts — use maintainTopKSumSketch")
-        val alreadyMerged = lastBatchRe.findFirstMatchIn(prev.parameters)
-          .map(_.group(1).toLong).exists(batchId <= _)
-        if (!alreadyMerged) {
-          val spark = batch.sparkSession
-          val storedKeys: Seq[Option[String]] =
-            graft.sketch.GroupedHll.unpack(prev.data).map(_._1)
-          val bg = batch
-            .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols, batch.schema.fieldNames.toSeq).as("g"))
-            .agg(count(lit(1)).as("n"))
-          import spark.implicits._
-          val sk = spark.createDataset(storedKeys.map(_.orNull)).toDF("sk")
-            .withColumn("hit", lit(true))
-          // null-safe join: the NULL group is a stored key like any
-          // other; `hit` (not sk's nullness) marks membership
-          val marked = bg.join(broadcast(sk), bg("g") <=> sk("sk"), "left")
-            .persist()
-          try {
-            val hits = marked.filter(col("hit"))
-              .select(col("g"), col("n")).collect()
-            val u = marked.filter(col("hit").isNull)
-              .agg(coalesce(max(col("n")), lit(0L)).as("mx"),
-                coalesce(sum(col("n")), lit(0L)).as("tot"))
-              .collect().head
-            val (unknownMax, unknownTot) = (u.getLong(0), u.getLong(1))
-            val batchRows =
-              hits.iterator.map(_.getAs[Long]("n")).sum + unknownTot
-            val prevRows = rowsRe.findFirstMatchIn(prev.parameters)
-              .map(_.group(1).toLong).getOrElse(0L)
-            val prevUb = unknownRe.findFirstMatchIn(prev.parameters)
-              .map(_.group(1).toDouble).getOrElse(0.0)
-            val newUb = prevUb + unknownMax
-            val delta = graft.sketch.GroupedHll.pack(hits.toSeq.map { r =>
-              val buf = java.nio.ByteBuffer.allocate(8)
-                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              buf.putLong(r.getAs[Long]("n"))
-              Option(r.getAs[String]("g")) -> buf.array()
-            })
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "topk", delta,
-              s"""{"unknown_bound":$newUb,"rows":${prevRows + batchRows},""" +
-                s""""last_batch":$batchId}""",
-              System.currentTimeMillis())) { (p, n) =>
-              graft.sketch.GroupedHll.mergePacked(p, n) { (x, y) =>
-                def le(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b)
-                  .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-                val buf = java.nio.ByteBuffer.allocate(8)
-                  .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                buf.putLong(le(x) + le(y))
-                buf.array()
-              }
-            }
-          } finally marked.unpersist()
-        }
-        ()
-      }
-      .start()
+    topKFold(values, catalog, table, column, groupCols, counts = true,
+      Seq(count(lit(1)).as("n")),
+      (x, y) => Fold.leLong(Fold.le(x) + Fold.le(y))) { marked =>
+      val hits = marked.filter(col("hit")).select(col("g"), col("n")).collect()
+      val u = marked.filter(col("hit").isNull)
+        .agg(coalesce(max(col("n")), lit(0L)).as("mx"),
+          coalesce(sum(col("n")), lit(0L)).as("tot"))
+        .collect().head
+      (hits.toSeq.map(r =>
+        Option(r.getAs[String]("g")) -> Fold.leLong(r.getAs[Long]("n"))),
+        u.getLong(0).toDouble,
+        hits.iterator.map(_.getAs[Long]("n")).sum + u.getLong(1))
+    }
   }
 
   /** SUM twin of [[maintainTopKSketch]] for `createTopKSum` blobs (the
@@ -1835,79 +1311,79 @@ object EventStreams {
     */
   def maintainTopKSumSketch(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
-      groupCols: Seq[String], valueCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      groupCols: Seq[String], valueCol: String): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     val column = s"${groupCols.mkString(",")}->$valueCol"
-    val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-    val rowsRe = """"rows"\s*:\s*(-?\d+)""".r
-    val unknownRe = """"unknown_bound"\s*:\s*([0-9.eE+-]+)""".r
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = catalog.getSketch(table, column, "topk").getOrElse(
-          throw new IllegalStateException(
-            s"topk-sum over $table.$column: no stored blob to maintain — " +
-              "build with SketchOps.createTopKSum first"))
-        val alreadyMerged = lastBatchRe.findFirstMatchIn(prev.parameters)
-          .map(_.group(1).toLong).exists(batchId <= _)
-        if (!alreadyMerged) {
-          val spark = batch.sparkSession
-          val storedKeys: Seq[Option[String]] =
-            graft.sketch.GroupedHll.unpack(prev.data).map(_._1)
-          val bg = batch
-            .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols, batch.schema.fieldNames.toSeq).as("g"))
-            .agg(expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("s4"),
-              count(col(valueCol)).as("nn"), count(lit(1)).as("n"))
-          import spark.implicits._
-          val sk = spark.createDataset(storedKeys.map(_.orNull)).toDF("sk")
-            .withColumn("hit", lit(true))
-          val marked = bg.join(broadcast(sk), bg("g") <=> sk("sk"), "left")
-            .persist()
-          try {
-            // NULL sum with non-NULL values = try_sum overflowed even
-            // decimal(38,4): refuse loudly (stored OR unstored — an
-            // unstored overflow breaks the unknown bound too)
-            if (marked.filter(col("s4").isNull && col("nn") > 0L)
-                .limit(1).count() > 0)
-              throw new IllegalArgumentException(
-                s"topk-sum over $table.$valueCol: a batch group sum " +
-                  "overflows decimal(38,4)")
-            val hits = marked.filter(col("hit"))
-              .select(col("g"), col("s4"), col("n")).collect()
-            val u = marked.filter(col("hit").isNull)
-              .agg(coalesce(max(expr("cast(s4 as double)")), lit(0.0))
-                .as("mx"), coalesce(sum(col("n")), lit(0L)).as("tot"))
-              .collect().head
-            val (unknownMax, unknownTot) =
-              (math.max(0.0, u.getDouble(0)), u.getLong(1))
-            val batchRows =
-              hits.iterator.map(_.getAs[Long]("n")).sum + unknownTot
-            val prevRows = rowsRe.findFirstMatchIn(prev.parameters)
-              .map(_.group(1).toLong).getOrElse(0L)
-            val prevUb = unknownRe.findFirstMatchIn(prev.parameters)
-              .map(_.group(1).toDouble).getOrElse(0.0)
-            val newUb = prevUb + unknownMax
-            val delta = graft.sketch.GroupedHll.pack(hits.toSeq.map { r =>
-              val s = Option(r.getDecimal(1))
-                .map(d => BigInt(d.setScale(4).unscaledValue()))
-                .getOrElse(BigInt(0))
-              Option(r.getAs[String]("g")) -> s.toByteArray
-            })
-            catalog.upsertSketchMerging(catalog.SketchInfo(table, column,
-              "topk", delta,
-              s"""{"unknown_bound":$newUb,"rows":${prevRows + batchRows},""" +
-                s""""last_batch":$batchId}""",
-              System.currentTimeMillis())) { (p, n) =>
-              graft.sketch.GroupedHll.mergePacked(p, n) { (x, y) =>
-                (BigInt(x) + BigInt(y)).toByteArray
-              }
-            }
-          } finally marked.unpersist()
-        }
-        ()
-      }
-      .start()
+    topKFold(values, catalog, table, column, groupCols, counts = false,
+      Seq(expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("s4"),
+        count(col(valueCol)).as("nn"), count(lit(1)).as("n")),
+      (x, y) => (BigInt(x) + BigInt(y)).toByteArray) { marked =>
+      // NULL sum with non-NULL values = try_sum overflowed even
+      // decimal(38,4): refuse loudly (stored OR unstored — an unstored
+      // overflow breaks the unknown bound too)
+      if (marked.filter(col("s4").isNull && col("nn") > 0L)
+          .limit(1).count() > 0)
+        throw new IllegalArgumentException(
+          s"topk-sum over $table.$valueCol: a batch group sum " +
+            "overflows decimal(38,4)")
+      val hits = marked.filter(col("hit"))
+        .select(col("g"), col("s4"), col("n")).collect()
+      val u = marked.filter(col("hit").isNull)
+        .agg(coalesce(max(expr("cast(s4 as double)")), lit(0.0))
+          .as("mx"), coalesce(sum(col("n")), lit(0L)).as("tot"))
+        .collect().head
+      (hits.toSeq.map { r =>
+        Option(r.getAs[String]("g")) -> Option(r.getDecimal(1))
+          .map(unscaled4).getOrElse(BigInt(0)).toByteArray
+      }, math.max(0.0, u.getDouble(0)),
+        hits.iterator.map(_.getAs[Long]("n")).sum + u.getLong(1))
+    }
   }
+
+  /** The top-k fold shared by the count and sum forms: the batch's
+    * per-group aggregate is null-safe-joined to the stored key set
+    * (`hit` marks membership; the NULL group is a stored key like any
+    * other), and `delta` turns the marked batch into (stored-group
+    * increments, the largest unstored contribution, batch rows).
+    */
+  private def topKFold(values: DataFrame, catalog: graft.catalog.MetaCatalog,
+      table: String, column: String, groupCols: Seq[String], counts: Boolean,
+      aggs: Seq[Column], add: (Array[Byte], Array[Byte]) => Array[Byte])(
+      delta: DataFrame => (Seq[(Option[String], Array[Byte])], Double, Long))
+      : StreamingQuery =
+    Fold.run(values) { (batch, batchId) =>
+      val (what, builder) =
+        if (counts) ("topk", "createTopK") else ("topk-sum", "createTopKSum")
+      val prev = catalog.getSketch(table, column, "topk").getOrElse(
+        throw new IllegalStateException(
+          s"$what over $table.$column: no stored blob to maintain — " +
+            s"build with SketchOps.$builder first"))
+      val agg = prev.param("agg").getOrElse("count")
+      if (counts && agg != "count")
+        throw new IllegalArgumentException(
+          s"topk over $table.$column: stored blob aggregates '$agg', " +
+            "maintainTopKSketch folds counts — use maintainTopKSumSketch")
+      Fold.append(catalog, table, column, batchId)(Fold.Blob("topk",
+        (p, n) => GroupedHll.mergePacked(p, n)(add))) {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val bg = batch
+          .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
+            batch.schema.fieldNames.toSeq).as("g"))
+          .agg(aggs.head, aggs.tail: _*)
+        val sk = spark.createDataset(
+            GroupedHll.unpack(prev.data).map(_._1.orNull))
+          .toDF("sk").withColumn("hit", lit(true))
+        val marked = bg.join(broadcast(sk), bg("g") <=> sk("sk"), "left")
+          .persist()
+        val (hits, unknownMax, batchRows) =
+          try delta(marked) finally marked.unpersist()
+        val ub = prev.paramDouble("unknown_bound").getOrElse(0.0) + unknownMax
+        val rows = prev.paramLong("rows").getOrElse(0L) + batchRows
+        Seq(Some(GroupedHll.pack(hits) ->
+          s"""{"unknown_bound":$ub,"rows":$rows,"last_batch":$batchId}"""))
+      }
+    }
 
   /** Run a streaming query over `df` into an in-memory sink and return
     * the sink table name (test/demo harness).

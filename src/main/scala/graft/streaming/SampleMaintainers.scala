@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.util.chaining._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,114 +47,108 @@ object SampleMaintainers {
     require(k >= 1, s"k must be >= 1, got $k")
     val name = s"${table}__bottomk_$keyCol"
     val path = s"${catalog.samplesDir}/$name"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val riderParams = catalog.getSketch(table, keyCol, "bottomk_rider")
-          .map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          val keyIdx = batch.schema.fieldIndex(keyCol)
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(keyIdx).dataType.typeName),
-            s"bottom-k stream key $keyCol must be integral")
-          val hExpr = expr(
-            s"graft_h60(concat('bk:', cast($keyCol as string)))")
-          val withH = batch.withColumn("graft_h", hExpr)
-          val batchTop = withH
-            .orderBy(col("graft_h").asc, col(keyCol).asc).limit(k)
-            .collect()
-          val batchN = batch.count()
-          val schema = withH.schema
-          // normalize the STORED rows to the batch frame's field order
-          // before the positional merge (keyIdx/hIdx are computed from
-          // the batch schema; a batch-built parquet with a different
-          // column order would otherwise be read positionally wrong —
-          // the grouped maintainer's existing discipline)
-          val stored =
-            if (new java.io.File(path).exists)
-              s.read.parquet(path)
-                .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-                .collect()
-            else Array.empty[org.apache.spark.sql.Row]
-          val hIdx = schema.fieldIndex("graft_h")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          // idempotent on rows: dedup by key, THEN truncate at k under
-          // the (hash, key) total order — a replayed batch's rows merge
-          // to the identical set
-          val merged = (stored ++ batchTop)
-            .groupBy(keyOf).map(_._2.head).toArray
-            .sortBy(r => (r.getLong(hIdx), keyOf(r)))
-            .take(k)
-          // CONTINUE the base count: the rider carries it across folds,
-          // and a maintainer taking over a BATCH-BUILT sample (no fold
-          // yet — the builder writes the rider too, but an old catalog
-          // may predate it) seeds from the sample's recorded baseRows
-          // instead of silently resetting N to one batch's worth
-          val prevN = """"rows"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .orElse(catalog.samplesFor(table)
-              .find(_.sampleTable == name).flatMap(_.baseRows))
-            .getOrElse(0L)
-          // FIRST-EVER fold on a pure stream (no rider yet): stamp a
-          // PROVISIONAL rider carrying the pre-batch count BEFORE any
-          // other catalog write, closing the round-13 crash window —
-          // a crash between addSample and the final stamp used to make
-          // the replay seed prevN from the crashed fold's baseRows and
-          // re-add the batch (N over by one batch). With the
-          // provisional rider, the replay's fallback chain reads the
-          // un-advanced "rows" and the fold stays exactly idempotent.
-          if (catalog.getSketch(table, keyCol, "bottomk_rider").isEmpty)
-            catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-              "bottomk_rider", Array.emptyByteArray,
-              s"""{"rows":$prevN,"k":$k,"last_batch":$lastBatch}""",
-              System.currentTimeMillis()))
-          val n = prevN + batchN
-          s.createDataFrame(
-            java.util.Arrays.asList(merged: _*), schema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          val sampleDf = s.read.parquet(path)
-          sampleDf.createOrReplaceTempView(name)
-          val achieved = merged.length.toLong
-          val fraction = math.min(0.9999,
-            achieved.toDouble / math.max(1L, n))
-          // re-prove decimal safety over the CURRENT fold's rows (the
-          // builder's check, verbatim — new rows can carry values the
-          // batch-validated set never saw)
-          val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__bottomk__${keyCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, Seq(
-            catalog.StratumInfo(name, "all", n, achieved, fraction,
-              n.toDouble / math.max(1L, achieved), 0.0)))
-          // the replay-guard stamp lands LAST: a crash mid-fold leaves
-          // last_batch at its previous value, so the replayed batch
-          // re-runs the whole fold (rows are idempotent, N continues
-          // from the un-advanced rider) instead of leaving the catalog
-          // entry/stats/strata one fold behind the rewritten parquet.
-          // The first-ever fold is covered too (round 14): the
-          // provisional rider stamped above addSample means EVERY
-          // replay reads the un-advanced "rows" from the rider — no
-          // fold, first or later, can double-count N.
+    Fold.run(values) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, keyCol, "bottomk_rider")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        val keyIdx = batch.schema.fieldIndex(keyCol)
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(keyIdx).dataType.typeName),
+          s"bottom-k stream key $keyCol must be integral")
+        val hExpr = expr(
+          s"graft_h60(concat('bk:', cast($keyCol as string)))")
+        val withH = batch.withColumn("graft_h", hExpr)
+        val batchTop = withH
+          .orderBy(col("graft_h").asc, col(keyCol).asc).limit(k)
+          .collect()
+        val batchN = batch.count()
+        val schema = withH.schema
+        // normalize the STORED rows to the batch frame's field order
+        // before the positional merge (keyIdx/hIdx are computed from
+        // the batch schema; a batch-built parquet with a different
+        // column order would otherwise be read positionally wrong —
+        // the grouped maintainer's existing discipline)
+        val stored =
+          if (new java.io.File(path).exists)
+            s.read.parquet(path)
+              .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+              .collect()
+          else Array.empty[org.apache.spark.sql.Row]
+        val hIdx = schema.fieldIndex("graft_h")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
+          }
+        // idempotent on rows: dedup by key, THEN truncate at k under
+        // the (hash, key) total order — a replayed batch's rows merge
+        // to the identical set
+        val merged = (stored ++ batchTop)
+          .groupBy(keyOf).map(_._2.head).toArray
+          .sortBy(r => (r.getLong(hIdx), keyOf(r)))
+          .take(k)
+        // CONTINUE the base count: the rider carries it across folds,
+        // and a maintainer taking over a BATCH-BUILT sample (no fold
+        // yet — the builder writes the rider too, but an old catalog
+        // may predate it) seeds from the sample's recorded baseRows
+        // instead of silently resetting N to one batch's worth
+        val prevN = rider.flatMap(_.paramLong("rows"))
+          .orElse(catalog.samplesFor(table)
+            .find(_.sampleTable == name).flatMap(_.baseRows))
+          .getOrElse(0L)
+        // FIRST-EVER fold on a pure stream (no rider yet): stamp a
+        // PROVISIONAL rider carrying the pre-batch count BEFORE any
+        // other catalog write, closing the round-13 crash window —
+        // a crash between addSample and the final stamp used to make
+        // the replay seed prevN from the crashed fold's baseRows and
+        // re-add the batch (N over by one batch). With the
+        // provisional rider, the replay's fallback chain reads the
+        // un-advanced "rows" and the fold stays exactly idempotent.
+        if (catalog.getSketch(table, keyCol, "bottomk_rider").isEmpty)
           catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
             "bottomk_rider", Array.emptyByteArray,
-            s"""{"rows":$n,"k":$k,"last_batch":$batchId,"decsafe":"$decsafe"}""",
+            s"""{"rows":$prevN,"k":$k,"last_batch":$lastBatch}""",
             System.currentTimeMillis()))
-        }
-        ()
+        val n = prevN + batchN
+        s.createDataFrame(
+          java.util.Arrays.asList(merged: _*), schema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        val sampleDf = s.read.parquet(path)
+        sampleDf.createOrReplaceTempView(name)
+        val achieved = merged.length.toLong
+        val fraction = math.min(0.9999,
+          achieved.toDouble / math.max(1L, n))
+        // re-prove decimal safety over the CURRENT fold's rows (the
+        // builder's check, verbatim — new rows can carry values the
+        // batch-validated set never saw)
+        val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__bottomk__${keyCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, Seq(
+          catalog.StratumInfo(name, "all", n, achieved, fraction,
+            n.toDouble / math.max(1L, achieved), 0.0)))
+        // the replay-guard stamp lands LAST: a crash mid-fold leaves
+        // last_batch at its previous value, so the replayed batch
+        // re-runs the whole fold (rows are idempotent, N continues
+        // from the un-advanced rider) instead of leaving the catalog
+        // entry/stats/strata one fold behind the rewritten parquet.
+        // The first-ever fold is covered too (round 14): the
+        // provisional rider stamped above addSample means EVERY
+        // replay reads the un-advanced "rows" from the rider — no
+        // fold, first or later, can double-count N.
+        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
+          "bottomk_rider", Array.emptyByteArray,
+          s"""{"rows":$n,"k":$k,"last_batch":$batchId,"decsafe":"$decsafe"}""",
+          System.currentTimeMillis()))
       }
-      .start()
+    }
   }
 
   /** Streaming GROUPED bottom-k sample maintenance — the streamable
@@ -178,147 +170,142 @@ object SampleMaintainers {
     require(kPerGroup >= 1, s"kPerGroup must be >= 1, got $kPerGroup")
     val name = s"${table}__bottomkg_$groupCol"
     val path = s"${catalog.samplesDir}/$name"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, groupCol, "bottomkg_rider")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(rider.map(_.parameters).getOrElse("{}"))
-          .map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          val keyIdx = batch.schema.fieldIndex(keyCol)
-          val gIdx = batch.schema.fieldIndex(groupCol)
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(keyIdx).dataType.typeName),
-            s"grouped bottom-k stream key $keyCol must be integral")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(groupCol))
-            .orderBy(
-              expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))").asc,
-              col(keyCol).asc)
-          val withH = batch.withColumn("graft_h",
-            expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
-          val batchTop = withH
-            .withColumn("graft_rn",
-              org.apache.spark.sql.functions.row_number().over(w))
-            .filter(col("graft_rn") <= kPerGroup)
-            .drop("graft_rn")
-            .collect()
-          val batchCountRows = batch.groupBy(col(groupCol))
-            .agg(count(lit(1)).as("c")).collect()
-          // the batch builder REQUIRES non-null groups (a NULL group
-          // cannot carry a weight); the fold enforces the same contract
-          // instead of silently folding nulls as the string "null"
-          batchCountRows.foreach(r => require(!r.isNullAt(0),
-            s"grouped bottom-k stream group $groupCol must be non-null"))
-          val batchCounts = batchCountRows
-            .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-          // running per-group counts: the rider blob (escaped lines —
-          // group values can contain tabs/newlines) continues across
-          // folds; a maintainer taking over a BATCH-BUILT sample with
-          // no blob yet seeds from the catalog's per-group strata
-          // instead of resetting every count to one batch's worth
-          // gate on rider PRESENCE, not blob non-emptiness: a
-          // provisional first-fold rider (below) carries a genuinely
-          // empty count map, and falling through to strata here would
-          // re-open the crash window it exists to close (replayed
-          // first fold double-counting via the crashed fold's strata)
-          val prevCounts: Map[String, Long] = rider match {
-            case Some(r) => BlobEscape.decodeCounts(r.data)
-            case None => catalog.strataFor(name)
-              .map(st => st.strataValue -> st.popSize).toMap
-          }
-          // FIRST-EVER fold: provisional rider with the pre-batch
-          // counts BEFORE any other catalog write (the plain
-          // maintainer's round-14 discipline) — a crash between
-          // putStrata and the final stamp can no longer make the
-          // replay seed from the crashed fold's strata
-          if (rider.isEmpty)
-            catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-              "bottomkg_rider", BlobEscape.encodeCounts(prevCounts),
-              s"""{"rows":${prevCounts.valuesIterator.sum},"k":$kPerGroup,"last_batch":$lastBatch}""",
-              System.currentTimeMillis()))
-          val counts = (prevCounts.keySet ++ batchCounts.keySet).iterator
-            .map(g => g -> (prevCounts.getOrElse(g, 0L) +
-              batchCounts.getOrElse(g, 0L))).toMap
-          // base-row shape shared by stored and batch rows: the batch
-          // columns + graft_h (stored rows drop their stale gn/gw)
-          val baseSchema = withH.schema
-          val stored: Array[org.apache.spark.sql.Row] =
-            if (new java.io.File(path).exists)
-              s.read.parquet(path)
-                .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-                .collect()
-            else Array.empty
-          val hIdx = baseSchema.fieldIndex("graft_h")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          val merged = (stored ++ batchTop)
-            .groupBy(keyOf).map(_._2.head).toArray
-            .groupBy(r => String.valueOf(r.get(gIdx)))
-            .valuesIterator
-            .flatMap(rows =>
-              rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-            .toArray
-          // stamp the live gn/gw per row from the running counts
-          val outSchema = org.apache.spark.sql.types.StructType(
-            baseSchema.fields ++ Seq(
-              org.apache.spark.sql.types.StructField("graft_gn",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("graft_gw",
-                org.apache.spark.sql.types.DoubleType, nullable = false)))
-          val achievedPerGroup = merged
-            .groupBy(r => String.valueOf(r.get(gIdx)))
-            .map { case (g, rows) => g -> rows.length.toLong }
-          val out = merged.map { r =>
-            val g = String.valueOf(r.get(gIdx))
-            // defensive floor: a stored group missing from the counts
-            // map (possible only on a corrupted rider) still gets a
-            // consistent weight >= 1 instead of killing the stream
-            val gk = achievedPerGroup(g)
-            val gn = math.max(counts.getOrElse(g, gk), gk)
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq ++ Seq[Any](gn, gn.toDouble / math.max(1L, gk)))
-          }
-          s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          s.read.parquet(path).createOrReplaceTempView(name)
-          val n = counts.valuesIterator.sum
-          val achieved = merged.length.toLong
-          val fraction = math.min(0.9999,
-            achieved.toDouble / math.max(1L, n))
-          val blob = BlobEscape.encodeCounts(counts)
-          val decsafe = graft.sample.Samplers.decimalSafeCols(
-            s.read.parquet(path))
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, counts.toSeq.sortBy(_._1).map {
-            case (g, gn) =>
-              val gk = achievedPerGroup.getOrElse(g, 0L)
-              catalog.StratumInfo(name, g, gn, gk,
-                gk.toDouble / math.max(1L, gn),
-                gn.toDouble / math.max(1L, gk), 0.0)
-          })
-          // replay-guard stamp LAST (see the plain maintainer): a crash
-          // mid-fold re-runs the whole idempotent fold on replay rather
-          // than skipping it with half the catalog writes missing
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "bottomkg_rider", blob,
-            s"""{"rows":$n,"k":$kPerGroup,"last_batch":$batchId,"decsafe":"$decsafe"}""",
-            System.currentTimeMillis()))
+    Fold.run(values) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, groupCol, "bottomkg_rider")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        val keyIdx = batch.schema.fieldIndex(keyCol)
+        val gIdx = batch.schema.fieldIndex(groupCol)
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(keyIdx).dataType.typeName),
+          s"grouped bottom-k stream key $keyCol must be integral")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(groupCol))
+          .orderBy(
+            expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))").asc,
+            col(keyCol).asc)
+        val withH = batch.withColumn("graft_h",
+          expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
+        val batchTop = withH
+          .withColumn("graft_rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .filter(col("graft_rn") <= kPerGroup)
+          .drop("graft_rn")
+          .collect()
+        val batchCountRows = batch.groupBy(col(groupCol))
+          .agg(count(lit(1)).as("c")).collect()
+        // the batch builder REQUIRES non-null groups (a NULL group
+        // cannot carry a weight); the fold enforces the same contract
+        // instead of silently folding nulls as the string "null"
+        batchCountRows.foreach(r => require(!r.isNullAt(0),
+          s"grouped bottom-k stream group $groupCol must be non-null"))
+        val batchCounts = batchCountRows
+          .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+        // running per-group counts: the rider blob (escaped lines —
+        // group values can contain tabs/newlines) continues across
+        // folds; a maintainer taking over a BATCH-BUILT sample with
+        // no blob yet seeds from the catalog's per-group strata
+        // instead of resetting every count to one batch's worth
+        // gate on rider PRESENCE, not blob non-emptiness: a
+        // provisional first-fold rider (below) carries a genuinely
+        // empty count map, and falling through to strata here would
+        // re-open the crash window it exists to close (replayed
+        // first fold double-counting via the crashed fold's strata)
+        val prevCounts: Map[String, Long] = rider match {
+          case Some(r) => BlobEscape.decodeCounts(r.data)
+          case None => catalog.strataFor(name)
+            .map(st => st.strataValue -> st.popSize).toMap
         }
-        ()
+        // FIRST-EVER fold: provisional rider with the pre-batch
+        // counts BEFORE any other catalog write (the plain
+        // maintainer's round-14 discipline) — a crash between
+        // putStrata and the final stamp can no longer make the
+        // replay seed from the crashed fold's strata
+        if (rider.isEmpty)
+          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
+            "bottomkg_rider", BlobEscape.encodeCounts(prevCounts),
+            s"""{"rows":${prevCounts.valuesIterator.sum},"k":$kPerGroup,"last_batch":$lastBatch}""",
+            System.currentTimeMillis()))
+        val counts = (prevCounts.keySet ++ batchCounts.keySet).iterator
+          .map(g => g -> (prevCounts.getOrElse(g, 0L) +
+            batchCounts.getOrElse(g, 0L))).toMap
+        // base-row shape shared by stored and batch rows: the batch
+        // columns + graft_h (stored rows drop their stale gn/gw)
+        val baseSchema = withH.schema
+        val stored: Array[org.apache.spark.sql.Row] =
+          if (new java.io.File(path).exists)
+            s.read.parquet(path)
+              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
+              .collect()
+          else Array.empty
+        val hIdx = baseSchema.fieldIndex("graft_h")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
+          }
+        val merged = (stored ++ batchTop)
+          .groupBy(keyOf).map(_._2.head).toArray
+          .groupBy(r => String.valueOf(r.get(gIdx)))
+          .valuesIterator
+          .flatMap(rows =>
+            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
+          .toArray
+        // stamp the live gn/gw per row from the running counts
+        val outSchema = org.apache.spark.sql.types.StructType(
+          baseSchema.fields ++ Seq(
+            org.apache.spark.sql.types.StructField("graft_gn",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("graft_gw",
+              org.apache.spark.sql.types.DoubleType, nullable = false)))
+        val achievedPerGroup = merged
+          .groupBy(r => String.valueOf(r.get(gIdx)))
+          .map { case (g, rows) => g -> rows.length.toLong }
+        val out = merged.map { r =>
+          val g = String.valueOf(r.get(gIdx))
+          // defensive floor: a stored group missing from the counts
+          // map (possible only on a corrupted rider) still gets a
+          // consistent weight >= 1 instead of killing the stream
+          val gk = achievedPerGroup(g)
+          val gn = math.max(counts.getOrElse(g, gk), gk)
+          org.apache.spark.sql.Row.fromSeq(
+            r.toSeq ++ Seq[Any](gn, gn.toDouble / math.max(1L, gk)))
+        }
+        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        s.read.parquet(path).createOrReplaceTempView(name)
+        val n = counts.valuesIterator.sum
+        val achieved = merged.length.toLong
+        val fraction = math.min(0.9999,
+          achieved.toDouble / math.max(1L, n))
+        val blob = BlobEscape.encodeCounts(counts)
+        val decsafe = graft.sample.Samplers.decimalSafeCols(
+          s.read.parquet(path))
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, counts.toSeq.sortBy(_._1).map {
+          case (g, gn) =>
+            val gk = achievedPerGroup.getOrElse(g, 0L)
+            catalog.StratumInfo(name, g, gn, gk,
+              gk.toDouble / math.max(1L, gn),
+              gn.toDouble / math.max(1L, gk), 0.0)
+        })
+        // replay-guard stamp LAST (see the plain maintainer): a crash
+        // mid-fold re-runs the whole idempotent fold on replay rather
+        // than skipping it with half the catalog writes missing
+        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
+          "bottomkg_rider", blob,
+          s"""{"rows":$n,"k":$kPerGroup,"last_batch":$batchId,"decsafe":"$decsafe"}""",
+          System.currentTimeMillis()))
       }
-      .start()
+    }
   }
 
   /** Streaming OUTLIER-INDEXED sample maintenance (round 14 — the
@@ -368,210 +355,204 @@ object SampleMaintainers {
       else s"${table}__outlier_$valueCol"
     val path = s"${catalog.samplesDir}/$name"
     val statePath = s"${catalog.samplesDir}/${name}__state"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, valueCol, "outlier_rider")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-              .dataType.typeName),
-            s"outlier stream key $keyCol must be integral")
-          def annotate(df: DataFrame): DataFrame = df
-            .withColumn("graft_olv",
-              col(valueCol).cast("double"))
-            .withColumn("graft_olh",
-              expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
-          val withH = annotate(batch)
-          val baseSchema = withH.schema // batch columns + olv + olh
-          val keyIdx = baseSchema.fieldIndex(keyCol)
-          val vIdx = baseSchema.fieldIndex("graft_olv")
-          val hIdx = baseSchema.fieldIndex("graft_olh")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          // the two tail total orders (builder parity: DESC/ASC on the
-          // double-cast value, key tie-break)
-          val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-            r => (-r.getDouble(vIdx), keyOf(r)))
-          val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-            r => (r.getDouble(vIdx), keyOf(r)))
-          val batchN = batch.count()
-          val prevN = """"rows"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .orElse(catalog.samplesFor(table)
-              .find(_.sampleTable == name).flatMap(_.baseRows))
-            .getOrElse(0L)
-          // provisional rider BEFORE any other catalog write (the
-          // bottom-k maintainers' round-14 discipline): a first-fold
-          // crash after addSample can no longer double-count N
-          if (rider.isEmpty)
-            catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-              "outlier_rider", Array.emptyByteArray,
-              s"""{"rows":$prevN,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$lastBatch}""",
-              System.currentTimeMillis()))
-          val n = prevN + batchN
-          // the CURRENT power-of-two weight — monotone in N, so the
-          // lottery threshold only ever tightens
-          val m = math.max(0L, n - outlierK - lowK) / targetRest
-          val w = if (m < 1L) 1L
-            else math.min(8192L, java.lang.Long.highestOneBit(m))
-          val threshold = 8192L / w
-          // batch contributions: one TakeOrdered per tail, the lottery
-          // winners at the (already-final) current threshold
-          val batchHigh = withH.filter(col(valueCol).isNotNull)
-            .orderBy(col("graft_olv").desc, col(keyCol).asc)
-            .limit(outlierK).collect()
-          val batchLow =
-            if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
-            else withH.filter(col(valueCol).isNotNull)
-              .orderBy(col("graft_olv").asc, col(keyCol).asc)
-              .limit(lowK).collect()
-          val batchWinners = withH
-            .filter(col("graft_olh") % lit(8192L) < lit(threshold))
-            .collect()
-          // stored state: (part, row); takeover re-derives parts from
-          // the batch-built sample parquet (exact under the total
-          // order — every rest row sorts after the k-th tail row)
-          val baseCols = baseSchema.fieldNames.toIndexedSeq
-          val stored: Array[(String, org.apache.spark.sql.Row)] =
-            if (new java.io.File(statePath).exists) {
-              s.read.parquet(statePath)
-                .select((baseCols :+ "graft_part").map(col): _*)
-                .collect()
-                .map(r => r.getString(baseCols.length) ->
-                  org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-            } else if (new java.io.File(path).exists) {
-              // Takeover from a batch build: the tail sizes are the
-              // BUILD's, not the maintainer's — re-derive parts from the
-              // recorded strata (achieved hi/lo sizes) instead of the
-              // configured outlierK/lowK. Sorting with a LARGER k would
-              // silently promote lottery (weight-w) rows into the exact
-              // tails; a SMALLER one would demote true weight-1 tail rows
-              // through the lottery — both bias every weighted estimate.
-              // Growth direction is safe (tails refill from new batches),
-              // shrink direction is refused loudly.
-              val built = catalog.strataFor(name)
-              require(built.nonEmpty,
-                s"outlier maintainer takeover of $name needs the build's " +
-                  "strata to recover its tail sizes; none recorded")
-              val builtHi = built.find(_.strataValue == "outlier")
-                .map(_.sampleSize).getOrElse(0L)
-              val builtLo = built.find(_.strataValue == "outlier_low")
-                .map(_.sampleSize).getOrElse(0L)
-              require(builtHi <= outlierK && builtLo <= lowK,
-                s"outlier maintainer takeover of $name: built tails " +
-                  s"(hi=$builtHi, lo=$builtLo) exceed configured " +
-                  s"(k=$outlierK, lowK=$lowK) — shrinking a tail would " +
-                  "demote exact weight-1 rows through the lottery; " +
-                  "rebuild the sample or raise the maintainer's k")
-              val rows = annotate(
-                s.read.parquet(path).drop("graft_weight")
-                  .select(batch.schema.fieldNames.map(col).toIndexedSeq: _*))
-                .select(baseCols.map(col): _*)
-                .collect()
-              val (valued, nulls) = rows.partition(!_.isNullAt(vIdx))
-              val hi = valued.sorted(hiOrd).take(builtHi.toInt)
-              val hiKeys = hi.map(keyOf).toSet
-              val lo = valued.filterNot(r => hiKeys.contains(keyOf(r)))
-                .sorted(loOrd).take(builtLo.toInt)
-              val loKeys = lo.map(keyOf).toSet
-              val rest = valued.filterNot(r =>
-                hiKeys.contains(keyOf(r)) || loKeys.contains(keyOf(r))) ++
-                nulls
-              (hi.map("hi" -> _) ++ lo.map("lo" -> _) ++
-                rest.map("rest" -> _))
-            } else Array.empty
-          def part(p: String) = stored.collect { case (`p`, r) => r }
-          // merge the tails (dedup by key — replay-idempotent rows),
-          // then demote displaced weight-1 rows through the lottery
-          val mergedHigh = (part("hi") ++ batchHigh)
-            .groupBy(keyOf).map(_._2.head).toArray
-            .sorted(hiOrd).take(outlierK)
-          val hiKeys = mergedHigh.map(keyOf).toSet
-          // part("hi") joins the low-tail candidates too: a row DISPLACED
-          // from the high tail this fold must compete for the low tail
-          // before falling to the lottery, or on small populations the
-          // maintained bottom-lowK could hold fewer rows than a rebuild's
-          // (hi→lo crossover; the filterNot keeps surviving hi rows out)
-          val mergedLow = (part("lo") ++ batchLow ++ part("hi"))
-            .groupBy(keyOf).map(_._2.head).toArray
-            .filterNot(r => hiKeys.contains(keyOf(r)))
-            .sorted(loOrd).take(lowK)
-          val loKeys = mergedLow.map(keyOf).toSet
-          def inTail(r: org.apache.spark.sql.Row): Boolean = {
-            val k0 = keyOf(r)
-            hiKeys.contains(k0) || loKeys.contains(k0)
+    Fold.run(values) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, valueCol, "outlier_rider")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
+            .dataType.typeName),
+          s"outlier stream key $keyCol must be integral")
+        def annotate(df: DataFrame): DataFrame = df
+          .withColumn("graft_olv",
+            col(valueCol).cast("double"))
+          .withColumn("graft_olh",
+            expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
+        val withH = annotate(batch)
+        val baseSchema = withH.schema // batch columns + olv + olh
+        val keyIdx = baseSchema.fieldIndex(keyCol)
+        val vIdx = baseSchema.fieldIndex("graft_olv")
+        val hIdx = baseSchema.fieldIndex("graft_olh")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
           }
-          val mergedRest = (part("rest") ++ part("hi") ++ part("lo") ++
-            batchWinners)
-            .groupBy(keyOf).map(_._2.head).toArray
-            .filterNot(inTail)
-            // h60 is a non-negative 60-bit hash: plain % matches the
-            // builder's SQL-side `% 8192` exactly
-            .filter(r => r.getLong(hIdx) % 8192L < threshold)
-          // state + serving rewrites (serving = builder's layout:
-          // batch columns + graft_weight)
-          val stateSchema = org.apache.spark.sql.types.StructType(
-            baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-              "graft_part", org.apache.spark.sql.types.StringType,
-              nullable = false))
-          val stateRows =
-            mergedHigh.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "hi")) ++
-            mergedLow.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "lo")) ++
-            mergedRest.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "rest"))
-          s.createDataFrame(
-            java.util.Arrays.asList(stateRows: _*), stateSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(statePath)
-          s.read.parquet(statePath)
-            .withColumn("graft_weight",
-              expr(s"case when graft_part = 'rest' then cast($w as double) " +
-                "else cast(1 as double) end"))
-            .drop("graft_olv", "graft_olh", "graft_part")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          val sampleDf = s.read.parquet(path)
-          sampleDf.createOrReplaceTempView(name)
-          val (nOut, nLow, nRest) =
-            (mergedHigh.length.toLong, mergedLow.length.toLong,
-              mergedRest.length.toLong)
-          val fraction = math.min(0.9999,
-            (nOut + nLow + nRest).toDouble / math.max(1L, n))
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__outlier__${valueCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, Seq(
-            catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
-              0.0)) ++
-            (if (lowK > 0)
-              Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
-                1.0, 1.0, 0.0))
-            else Nil) ++ Seq(
-            catalog.StratumInfo(name, "rest",
-              math.max(0L, n - nOut - nLow), nRest, 1.0 / w, w.toDouble,
-              0.0)))
-          // replay-guard stamp LAST (crash-safe fold discipline)
+        // the two tail total orders (builder parity: DESC/ASC on the
+        // double-cast value, key tie-break)
+        val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
+          r => (-r.getDouble(vIdx), keyOf(r)))
+        val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
+          r => (r.getDouble(vIdx), keyOf(r)))
+        val batchN = batch.count()
+        val prevN = rider.flatMap(_.paramLong("rows"))
+          .orElse(catalog.samplesFor(table)
+            .find(_.sampleTable == name).flatMap(_.baseRows))
+          .getOrElse(0L)
+        // provisional rider BEFORE any other catalog write (the
+        // bottom-k maintainers' round-14 discipline): a first-fold
+        // crash after addSample can no longer double-count N
+        if (rider.isEmpty)
           catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
             "outlier_rider", Array.emptyByteArray,
-            s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$batchId}""",
+            s"""{"rows":$prevN,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$lastBatch}""",
             System.currentTimeMillis()))
+        val n = prevN + batchN
+        // the CURRENT power-of-two weight — monotone in N, so the
+        // lottery threshold only ever tightens
+        val m = math.max(0L, n - outlierK - lowK) / targetRest
+        val w = if (m < 1L) 1L
+          else math.min(8192L, java.lang.Long.highestOneBit(m))
+        val threshold = 8192L / w
+        // batch contributions: one TakeOrdered per tail, the lottery
+        // winners at the (already-final) current threshold
+        val batchHigh = withH.filter(col(valueCol).isNotNull)
+          .orderBy(col("graft_olv").desc, col(keyCol).asc)
+          .limit(outlierK).collect()
+        val batchLow =
+          if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
+          else withH.filter(col(valueCol).isNotNull)
+            .orderBy(col("graft_olv").asc, col(keyCol).asc)
+            .limit(lowK).collect()
+        val batchWinners = withH
+          .filter(col("graft_olh") % lit(8192L) < lit(threshold))
+          .collect()
+        // stored state: (part, row); takeover re-derives parts from
+        // the batch-built sample parquet (exact under the total
+        // order — every rest row sorts after the k-th tail row)
+        val baseCols = baseSchema.fieldNames.toIndexedSeq
+        val stored: Array[(String, org.apache.spark.sql.Row)] =
+          if (new java.io.File(statePath).exists) {
+            s.read.parquet(statePath)
+              .select((baseCols :+ "graft_part").map(col): _*)
+              .collect()
+              .map(r => r.getString(baseCols.length) ->
+                org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
+          } else if (new java.io.File(path).exists) {
+            // Takeover from a batch build: the tail sizes are the
+            // BUILD's, not the maintainer's — re-derive parts from the
+            // recorded strata (achieved hi/lo sizes) instead of the
+            // configured outlierK/lowK. Sorting with a LARGER k would
+            // silently promote lottery (weight-w) rows into the exact
+            // tails; a SMALLER one would demote true weight-1 tail rows
+            // through the lottery — both bias every weighted estimate.
+            // Growth direction is safe (tails refill from new batches),
+            // shrink direction is refused loudly.
+            val built = catalog.strataFor(name)
+            require(built.nonEmpty,
+              s"outlier maintainer takeover of $name needs the build's " +
+                "strata to recover its tail sizes; none recorded")
+            val builtHi = built.find(_.strataValue == "outlier")
+              .map(_.sampleSize).getOrElse(0L)
+            val builtLo = built.find(_.strataValue == "outlier_low")
+              .map(_.sampleSize).getOrElse(0L)
+            require(builtHi <= outlierK && builtLo <= lowK,
+              s"outlier maintainer takeover of $name: built tails " +
+                s"(hi=$builtHi, lo=$builtLo) exceed configured " +
+                s"(k=$outlierK, lowK=$lowK) — shrinking a tail would " +
+                "demote exact weight-1 rows through the lottery; " +
+                "rebuild the sample or raise the maintainer's k")
+            val rows = annotate(
+              s.read.parquet(path).drop("graft_weight")
+                .select(batch.schema.fieldNames.map(col).toIndexedSeq: _*))
+              .select(baseCols.map(col): _*)
+              .collect()
+            val (valued, nulls) = rows.partition(!_.isNullAt(vIdx))
+            val hi = valued.sorted(hiOrd).take(builtHi.toInt)
+            val hiKeys = hi.map(keyOf).toSet
+            val lo = valued.filterNot(r => hiKeys.contains(keyOf(r)))
+              .sorted(loOrd).take(builtLo.toInt)
+            val loKeys = lo.map(keyOf).toSet
+            val rest = valued.filterNot(r =>
+              hiKeys.contains(keyOf(r)) || loKeys.contains(keyOf(r))) ++
+              nulls
+            (hi.map("hi" -> _) ++ lo.map("lo" -> _) ++
+              rest.map("rest" -> _))
+          } else Array.empty
+        def part(p: String) = stored.collect { case (`p`, r) => r }
+        // merge the tails (dedup by key — replay-idempotent rows),
+        // then demote displaced weight-1 rows through the lottery
+        val mergedHigh = (part("hi") ++ batchHigh)
+          .groupBy(keyOf).map(_._2.head).toArray
+          .sorted(hiOrd).take(outlierK)
+        val hiKeys = mergedHigh.map(keyOf).toSet
+        // part("hi") joins the low-tail candidates too: a row DISPLACED
+        // from the high tail this fold must compete for the low tail
+        // before falling to the lottery, or on small populations the
+        // maintained bottom-lowK could hold fewer rows than a rebuild's
+        // (hi→lo crossover; the filterNot keeps surviving hi rows out)
+        val mergedLow = (part("lo") ++ batchLow ++ part("hi"))
+          .groupBy(keyOf).map(_._2.head).toArray
+          .filterNot(r => hiKeys.contains(keyOf(r)))
+          .sorted(loOrd).take(lowK)
+        val loKeys = mergedLow.map(keyOf).toSet
+        def inTail(r: org.apache.spark.sql.Row): Boolean = {
+          val k0 = keyOf(r)
+          hiKeys.contains(k0) || loKeys.contains(k0)
         }
-        ()
+        val mergedRest = (part("rest") ++ part("hi") ++ part("lo") ++
+          batchWinners)
+          .groupBy(keyOf).map(_._2.head).toArray
+          .filterNot(inTail)
+          // h60 is a non-negative 60-bit hash: plain % matches the
+          // builder's SQL-side `% 8192` exactly
+          .filter(r => r.getLong(hIdx) % 8192L < threshold)
+        // state + serving rewrites (serving = builder's layout:
+        // batch columns + graft_weight)
+        val stateSchema = org.apache.spark.sql.types.StructType(
+          baseSchema.fields :+ org.apache.spark.sql.types.StructField(
+            "graft_part", org.apache.spark.sql.types.StringType,
+            nullable = false))
+        val stateRows =
+          mergedHigh.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "hi")) ++
+          mergedLow.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "lo")) ++
+          mergedRest.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "rest"))
+        s.createDataFrame(
+          java.util.Arrays.asList(stateRows: _*), stateSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(statePath)
+        s.read.parquet(statePath)
+          .withColumn("graft_weight",
+            expr(s"case when graft_part = 'rest' then cast($w as double) " +
+              "else cast(1 as double) end"))
+          .drop("graft_olv", "graft_olh", "graft_part")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        val sampleDf = s.read.parquet(path)
+        sampleDf.createOrReplaceTempView(name)
+        val (nOut, nLow, nRest) =
+          (mergedHigh.length.toLong, mergedLow.length.toLong,
+            mergedRest.length.toLong)
+        val fraction = math.min(0.9999,
+          (nOut + nLow + nRest).toDouble / math.max(1L, n))
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__outlier__${valueCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, Seq(
+          catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
+            0.0)) ++
+          (if (lowK > 0)
+            Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
+              1.0, 1.0, 0.0))
+          else Nil) ++ Seq(
+          catalog.StratumInfo(name, "rest",
+            math.max(0L, n - nOut - nLow), nRest, 1.0 / w, w.toDouble,
+            0.0)))
+        // replay-guard stamp LAST (crash-safe fold discipline)
+        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
+          "outlier_rider", Array.emptyByteArray,
+          s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$batchId}""",
+          System.currentTimeMillis()))
       }
-      .start()
+    }
   }
 
   /** WINDOWED bottom-k — the batch twin of [[maintainBottomKWindowed]]
@@ -651,132 +632,126 @@ object SampleMaintainers {
     val name = s"${table}__bottomkw_$keyCol"
     val path = s"${catalog.samplesDir}/$name"
     val statePath = s"${catalog.samplesDir}/${name}__state"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, keyCol, "bottomkw_state")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-              .dataType.typeName),
-            s"windowed bottom-k stream key $keyCol must be integral")
-          // NULL event times carry no bucket: drop them up front (the
-          // grouped/windowed maintainers' shared discipline) or the
-          // driver-side getLong on the NULL graft_bucket NPEs the query
-          val withH = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-            .withColumn("graft_h",
-              expr(s"graft_h60(concat('bkw:', cast($keyCol as string)))"))
-            .drop(tsCol)
-          // positional indices come from the POST-drop schema (dropping
-          // ts shifts any column that followed it)
-          val keyIdx = withH.schema.fieldIndex(keyCol)
-          val wb = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("graft_bucket"))
-            .orderBy(col("graft_h").asc, col(keyCol).asc)
-          val batchTop = withH
-            .withColumn("graft_rn", row_number().over(wb))
-            .filter(col("graft_rn") <= k).drop("graft_rn")
-            .collect()
-          val batchCounts = withH.groupBy(col("graft_bucket"))
-            .agg(count(lit(1)).as("c")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val batchMaxUs = batch.agg(
-            max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r                  => r.getLong(0)
-          }
-          val baseSchema = withH.schema
-          val stored: Array[org.apache.spark.sql.Row] =
-            if (new java.io.File(statePath).exists)
-              s.read.parquet(statePath)
-                .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-                .collect()
-            else Array.empty
-          val hIdx = baseSchema.fieldIndex("graft_h")
-          val bIdx = baseSchema.fieldIndex("graft_bucket")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          // watermark CONTINUES across folds; counts continue per bucket
-          val prevMaxUs = """"maxus"\s*:\s*(-?\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .getOrElse(Long.MinValue)
-          val maxUs = math.max(prevMaxUs, batchMaxUs)
-          val prevCounts: Map[Long, Long] = rider
-            .map(r => BlobEscape.decodeCounts(r.data))
-            .getOrElse(Map.empty)
-            .map { case (b, c) => b.toLong -> c }
-          val mergedCounts =
-            (prevCounts.keySet ++ batchCounts.keySet).iterator
-              .map(b => b -> (prevCounts.getOrElse(b, 0L) +
-                batchCounts.getOrElse(b, 0L))).toMap
-          def liveB(b: Long): Boolean =
-            (b + 1L) * bucketMicros > maxUs - windowMicros
-          val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-          // fold rows per bucket (idempotent: dedup by key, truncate k
-          // under the (hash, key) total order), then EXPIRE buckets
-          val mergedState = (stored ++ batchTop)
-            .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-            .toArray
-            .groupBy(_.getLong(bIdx))
-            .filter { case (b, _) => liveB(b) }
-            .valuesIterator
-            .flatMap(rows =>
-              rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k))
-            .toArray
-          s.createDataFrame(
-            java.util.Arrays.asList(mergedState: _*), baseSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(statePath)
-          // serving sample: global re-merge of the live buckets' samples
-          val serving = mergedState
-            .sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k)
-          s.createDataFrame(
-            java.util.Arrays.asList(serving: _*), baseSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          val sampleDf = s.read.parquet(path)
-          sampleDf.createOrReplaceTempView(name)
-          val n = liveCounts.valuesIterator.sum
-          val achieved = serving.length.toLong
-          val fraction = math.min(0.9999,
-            achieved.toDouble / math.max(1L, n))
-          val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__bottomk__${keyCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, Seq(
-            catalog.StratumInfo(name, "all", n, achieved, fraction,
-              n.toDouble / math.max(1L, achieved), 0.0)))
-          // the serving rider keeps the plain-bottom-k serve contracts
-          // (decimal proof, N, k) working unchanged on the windowed
-          // sample
-          catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-            "bottomk_rider", Array.emptyByteArray,
-            s"""{"rows":$n,"k":$k,"decsafe":"$decsafe"}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-            "bottomkw_state",
-            BlobEscape.encodeCounts(
-              liveCounts.map { case (b, c) => b.toString -> c }),
-            s"""{"maxus":$maxUs,"k":$k,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
+    Fold.run(values, checkpointLocation) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, keyCol, "bottomkw_state")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
+            .dataType.typeName),
+          s"windowed bottom-k stream key $keyCol must be integral")
+        // NULL event times carry no bucket: drop them up front (the
+        // grouped/windowed maintainers' shared discipline) or the
+        // driver-side getLong on the NULL graft_bucket NPEs the query
+        val withH = batch.filter(col(tsCol).isNotNull)
+          .withColumn("graft_bucket",
+            expr(s"unix_micros($tsCol) div $bucketMicros"))
+          .withColumn("graft_h",
+            expr(s"graft_h60(concat('bkw:', cast($keyCol as string)))"))
+          .drop(tsCol)
+        // positional indices come from the POST-drop schema (dropping
+        // ts shifts any column that followed it)
+        val keyIdx = withH.schema.fieldIndex(keyCol)
+        val wb = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("graft_bucket"))
+          .orderBy(col("graft_h").asc, col(keyCol).asc)
+        val batchTop = withH
+          .withColumn("graft_rn", row_number().over(wb))
+          .filter(col("graft_rn") <= k).drop("graft_rn")
+          .collect()
+        val batchCounts = withH.groupBy(col("graft_bucket"))
+          .agg(count(lit(1)).as("c")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val batchMaxUs = batch.agg(
+          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
+          case r if r.isNullAt(0) => Long.MinValue
+          case r                  => r.getLong(0)
         }
-        ()
+        val baseSchema = withH.schema
+        val stored: Array[org.apache.spark.sql.Row] =
+          if (new java.io.File(statePath).exists)
+            s.read.parquet(statePath)
+              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
+              .collect()
+          else Array.empty
+        val hIdx = baseSchema.fieldIndex("graft_h")
+        val bIdx = baseSchema.fieldIndex("graft_bucket")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
+          }
+        // watermark CONTINUES across folds; counts continue per bucket
+        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
+          .getOrElse(Long.MinValue)
+        val maxUs = math.max(prevMaxUs, batchMaxUs)
+        val prevCounts: Map[Long, Long] = rider
+          .map(r => BlobEscape.decodeCounts(r.data))
+          .getOrElse(Map.empty)
+          .map { case (b, c) => b.toLong -> c }
+        val mergedCounts =
+          (prevCounts.keySet ++ batchCounts.keySet).iterator
+            .map(b => b -> (prevCounts.getOrElse(b, 0L) +
+              batchCounts.getOrElse(b, 0L))).toMap
+        def liveB(b: Long): Boolean =
+          (b + 1L) * bucketMicros > maxUs - windowMicros
+        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
+        // fold rows per bucket (idempotent: dedup by key, truncate k
+        // under the (hash, key) total order), then EXPIRE buckets
+        val mergedState = (stored ++ batchTop)
+          .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
+          .toArray
+          .groupBy(_.getLong(bIdx))
+          .filter { case (b, _) => liveB(b) }
+          .valuesIterator
+          .flatMap(rows =>
+            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k))
+          .toArray
+        s.createDataFrame(
+          java.util.Arrays.asList(mergedState: _*), baseSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(statePath)
+        // serving sample: global re-merge of the live buckets' samples
+        val serving = mergedState
+          .sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k)
+        s.createDataFrame(
+          java.util.Arrays.asList(serving: _*), baseSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        val sampleDf = s.read.parquet(path)
+        sampleDf.createOrReplaceTempView(name)
+        val n = liveCounts.valuesIterator.sum
+        val achieved = serving.length.toLong
+        val fraction = math.min(0.9999,
+          achieved.toDouble / math.max(1L, n))
+        val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__bottomk__${keyCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, Seq(
+          catalog.StratumInfo(name, "all", n, achieved, fraction,
+            n.toDouble / math.max(1L, achieved), 0.0)))
+        // the serving rider keeps the plain-bottom-k serve contracts
+        // (decimal proof, N, k) working unchanged on the windowed
+        // sample
+        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
+          "bottomk_rider", Array.emptyByteArray,
+          s"""{"rows":$n,"k":$k,"decsafe":"$decsafe"}""",
+          System.currentTimeMillis()))
+        // replay-guard stamp LAST (crash-safe fold discipline)
+        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
+          "bottomkw_state",
+          BlobEscape.encodeCounts(
+            liveCounts.map { case (b, c) => b.toString -> c }),
+          s"""{"maxus":$maxUs,"k":$k,"last_batch":$batchId}""",
+          System.currentTimeMillis()))
       }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+    }
   }
 
   /** Streaming WINDOWED GROUPED bottom-k sample maintenance (round 14)
@@ -812,179 +787,173 @@ object SampleMaintainers {
     val name = s"${table}__bottomkg_$groupCol"
     val path = s"${catalog.samplesDir}/$name"
     val statePath = s"${catalog.samplesDir}/${name}__state"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, groupCol, "bkgw_state")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-              .dataType.typeName),
-            s"windowed grouped bottom-k stream key $keyCol must be integral")
-          val withH = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-            .withColumn("graft_h",
-              expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
-            .drop(tsCol)
-          // positional indices from the POST-drop schema
-          val keyIdx = withH.schema.fieldIndex(keyCol)
-          val gIdx = withH.schema.fieldIndex(groupCol)
-          val wb = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("graft_bucket"), col(groupCol))
-            .orderBy(col("graft_h").asc, col(keyCol).asc)
-          val batchTop = withH
-            .withColumn("graft_rn", row_number().over(wb))
-            .filter(col("graft_rn") <= kPerGroup).drop("graft_rn")
-            .collect()
-          val batchCountRows = withH
-            .groupBy(col("graft_bucket"), col(groupCol))
-            .agg(count(lit(1)).as("c")).collect()
-          batchCountRows.foreach(r => require(!r.isNullAt(1),
-            s"windowed grouped bottom-k group $groupCol must be non-null"))
-          val batchCounts: Map[Long, Map[String, Long]] =
-            batchCountRows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-              bkt -> rs.map(r =>
-                String.valueOf(r.get(1)) -> r.getLong(2)).toMap
-            }
-          val batchMaxUs = batch.agg(
-            max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r                  => r.getLong(0)
+    Fold.run(values) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, groupCol, "bkgw_state")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
+            .dataType.typeName),
+          s"windowed grouped bottom-k stream key $keyCol must be integral")
+        val withH = batch.filter(col(tsCol).isNotNull)
+          .withColumn("graft_bucket",
+            expr(s"unix_micros($tsCol) div $bucketMicros"))
+          .withColumn("graft_h",
+            expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
+          .drop(tsCol)
+        // positional indices from the POST-drop schema
+        val keyIdx = withH.schema.fieldIndex(keyCol)
+        val gIdx = withH.schema.fieldIndex(groupCol)
+        val wb = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("graft_bucket"), col(groupCol))
+          .orderBy(col("graft_h").asc, col(keyCol).asc)
+        val batchTop = withH
+          .withColumn("graft_rn", row_number().over(wb))
+          .filter(col("graft_rn") <= kPerGroup).drop("graft_rn")
+          .collect()
+        val batchCountRows = withH
+          .groupBy(col("graft_bucket"), col(groupCol))
+          .agg(count(lit(1)).as("c")).collect()
+        batchCountRows.foreach(r => require(!r.isNullAt(1),
+          s"windowed grouped bottom-k group $groupCol must be non-null"))
+        val batchCounts: Map[Long, Map[String, Long]] =
+          batchCountRows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
+            bkt -> rs.map(r =>
+              String.valueOf(r.get(1)) -> r.getLong(2)).toMap
           }
-          val prevMaxUs = """"maxus"\s*:\s*(-?\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .getOrElse(Long.MinValue)
-          val maxUs = math.max(prevMaxUs, batchMaxUs)
-          // per-(bucket, group) counts continue across folds (nested
-          // packs: bucket -> escaped group\tcount lines)
-          val prevCounts: Map[Long, Map[String, Long]] = rider
-            .map(r => graft.sketch.GroupedHll.unpack(r.data))
-            .getOrElse(Nil)
-            .collect { case (Some(bk), blob) =>
-              bk.toLong -> BlobEscape.decodeCounts(blob)
-            }.toMap
-          val mergedCounts: Map[Long, Map[String, Long]] =
-            (prevCounts.keySet ++ batchCounts.keySet).iterator.map { bkt =>
-              val a = prevCounts.getOrElse(bkt, Map.empty[String, Long])
-              val c = batchCounts.getOrElse(bkt, Map.empty[String, Long])
-              bkt -> (a.keySet ++ c.keySet).iterator.map(g =>
-                g -> (a.getOrElse(g, 0L) + c.getOrElse(g, 0L))).toMap
-            }.toMap
-          def liveB(b: Long): Boolean =
-            (b + 1L) * bucketMicros > maxUs - windowMicros
-          val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-          val baseSchema = withH.schema
-          val stored: Array[org.apache.spark.sql.Row] =
-            if (new java.io.File(statePath).exists)
-              s.read.parquet(statePath)
-                .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-                .collect()
-            else Array.empty
-          val hIdx = baseSchema.fieldIndex("graft_h")
-          val bIdx = baseSchema.fieldIndex("graft_bucket")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          // fold rows per (bucket, group) cell (idempotent: dedup by
-          // key, truncate k under the (hash, key) order), then EXPIRE
-          val mergedState = (stored ++ batchTop)
-            .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-            .toArray
-            .filter(r => liveB(r.getLong(bIdx)))
-            .groupBy(r => (r.getLong(bIdx), String.valueOf(r.get(gIdx))))
-            .valuesIterator
-            .flatMap(rows =>
-              rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-            .toArray
-          s.createDataFrame(
-            java.util.Arrays.asList(mergedState: _*), baseSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(statePath)
-          // serving sample: per-group re-merge of the live buckets,
-          // gn/gw stamped from the exact live counts (graft_bucket is
-          // an internal state column and stays out of the sample)
-          val liveTotals: Map[String, Long] = liveCounts.values
-            .foldLeft(Map.empty[String, Long]) { (acc, m) =>
-              (acc.keySet ++ m.keySet).iterator.map(g =>
-                g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
-            }
-          val servingBase = mergedState
-            .groupBy(r => String.valueOf(r.get(gIdx)))
-            .valuesIterator
-            .flatMap(rows =>
-              rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-            .toArray
-          val sampleFields = baseSchema.fields
-            .filterNot(_.name == "graft_bucket")
-          val sampleIdx = sampleFields.map(f =>
-            baseSchema.fieldIndex(f.name))
-          val achievedPerGroup = servingBase
-            .groupBy(r => String.valueOf(r.get(gIdx)))
-            .map { case (g, rows) => g -> rows.length.toLong }
-          val outSchema = org.apache.spark.sql.types.StructType(
-            sampleFields ++ Seq(
-              org.apache.spark.sql.types.StructField("graft_gn",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("graft_gw",
-                org.apache.spark.sql.types.DoubleType, nullable = false)))
-          val out = servingBase.map { r =>
-            val g = String.valueOf(r.get(gIdx))
-            val gk = achievedPerGroup(g)
-            val gn = math.max(liveTotals.getOrElse(g, gk), gk)
-            org.apache.spark.sql.Row.fromSeq(
-              sampleIdx.toSeq.map(r.get) ++ Seq[Any](gn,
-                gn.toDouble / math.max(1L, gk)))
-          }
-          s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          s.read.parquet(path).createOrReplaceTempView(name)
-          val n = liveTotals.valuesIterator.sum
-          val achieved = servingBase.length.toLong
-          val fraction = math.min(0.9999,
-            achieved.toDouble / math.max(1L, n))
-          val decsafe = graft.sample.Samplers.decimalSafeCols(
-            s.read.parquet(path))
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, liveTotals.toSeq.sortBy(_._1).map {
-            case (g, gn) =>
-              val gk = achievedPerGroup.getOrElse(g, 0L)
-              catalog.StratumInfo(name, g, gn, gk,
-                gk.toDouble / math.max(1L, gn),
-                gn.toDouble / math.max(1L, gk), 0.0)
-          })
-          // the serving rider keeps the grouped serve contracts
-          // (kPerGroup CIs, decimal proof, per-group counts) on the
-          // windowed sample
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "bottomkg_rider", BlobEscape.encodeCounts(liveTotals),
-            s"""{"rows":$n,"k":$kPerGroup,"decsafe":"$decsafe"}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "bkgw_state",
-            graft.sketch.GroupedHll.pack(liveCounts.toSeq.map {
-              case (bkt, gs) =>
-                Option(bkt.toString) -> BlobEscape.encodeCounts(gs)
-            }),
-            s"""{"maxus":$maxUs,"k":$kPerGroup,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
+        val batchMaxUs = batch.agg(
+          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
+          case r if r.isNullAt(0) => Long.MinValue
+          case r                  => r.getLong(0)
         }
-        ()
+        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
+          .getOrElse(Long.MinValue)
+        val maxUs = math.max(prevMaxUs, batchMaxUs)
+        // per-(bucket, group) counts continue across folds (nested
+        // packs: bucket -> escaped group\tcount lines)
+        val prevCounts: Map[Long, Map[String, Long]] = rider
+          .map(r => graft.sketch.GroupedHll.unpack(r.data))
+          .getOrElse(Nil)
+          .collect { case (Some(bk), blob) =>
+            bk.toLong -> BlobEscape.decodeCounts(blob)
+          }.toMap
+        val mergedCounts: Map[Long, Map[String, Long]] =
+          (prevCounts.keySet ++ batchCounts.keySet).iterator.map { bkt =>
+            val a = prevCounts.getOrElse(bkt, Map.empty[String, Long])
+            val c = batchCounts.getOrElse(bkt, Map.empty[String, Long])
+            bkt -> (a.keySet ++ c.keySet).iterator.map(g =>
+              g -> (a.getOrElse(g, 0L) + c.getOrElse(g, 0L))).toMap
+          }.toMap
+        def liveB(b: Long): Boolean =
+          (b + 1L) * bucketMicros > maxUs - windowMicros
+        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
+        val baseSchema = withH.schema
+        val stored: Array[org.apache.spark.sql.Row] =
+          if (new java.io.File(statePath).exists)
+            s.read.parquet(statePath)
+              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
+              .collect()
+          else Array.empty
+        val hIdx = baseSchema.fieldIndex("graft_h")
+        val bIdx = baseSchema.fieldIndex("graft_bucket")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
+          }
+        // fold rows per (bucket, group) cell (idempotent: dedup by
+        // key, truncate k under the (hash, key) order), then EXPIRE
+        val mergedState = (stored ++ batchTop)
+          .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
+          .toArray
+          .filter(r => liveB(r.getLong(bIdx)))
+          .groupBy(r => (r.getLong(bIdx), String.valueOf(r.get(gIdx))))
+          .valuesIterator
+          .flatMap(rows =>
+            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
+          .toArray
+        s.createDataFrame(
+          java.util.Arrays.asList(mergedState: _*), baseSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(statePath)
+        // serving sample: per-group re-merge of the live buckets,
+        // gn/gw stamped from the exact live counts (graft_bucket is
+        // an internal state column and stays out of the sample)
+        val liveTotals: Map[String, Long] = liveCounts.values
+          .foldLeft(Map.empty[String, Long]) { (acc, m) =>
+            (acc.keySet ++ m.keySet).iterator.map(g =>
+              g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
+          }
+        val servingBase = mergedState
+          .groupBy(r => String.valueOf(r.get(gIdx)))
+          .valuesIterator
+          .flatMap(rows =>
+            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
+          .toArray
+        val sampleFields = baseSchema.fields
+          .filterNot(_.name == "graft_bucket")
+        val sampleIdx = sampleFields.map(f =>
+          baseSchema.fieldIndex(f.name))
+        val achievedPerGroup = servingBase
+          .groupBy(r => String.valueOf(r.get(gIdx)))
+          .map { case (g, rows) => g -> rows.length.toLong }
+        val outSchema = org.apache.spark.sql.types.StructType(
+          sampleFields ++ Seq(
+            org.apache.spark.sql.types.StructField("graft_gn",
+              org.apache.spark.sql.types.LongType, nullable = false),
+            org.apache.spark.sql.types.StructField("graft_gw",
+              org.apache.spark.sql.types.DoubleType, nullable = false)))
+        val out = servingBase.map { r =>
+          val g = String.valueOf(r.get(gIdx))
+          val gk = achievedPerGroup(g)
+          val gn = math.max(liveTotals.getOrElse(g, gk), gk)
+          org.apache.spark.sql.Row.fromSeq(
+            sampleIdx.toSeq.map(r.get) ++ Seq[Any](gn,
+              gn.toDouble / math.max(1L, gk)))
+        }
+        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        s.read.parquet(path).createOrReplaceTempView(name)
+        val n = liveTotals.valuesIterator.sum
+        val achieved = servingBase.length.toLong
+        val fraction = math.min(0.9999,
+          achieved.toDouble / math.max(1L, n))
+        val decsafe = graft.sample.Samplers.decimalSafeCols(
+          s.read.parquet(path))
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, liveTotals.toSeq.sortBy(_._1).map {
+          case (g, gn) =>
+            val gk = achievedPerGroup.getOrElse(g, 0L)
+            catalog.StratumInfo(name, g, gn, gk,
+              gk.toDouble / math.max(1L, gn),
+              gn.toDouble / math.max(1L, gk), 0.0)
+        })
+        // the serving rider keeps the grouped serve contracts
+        // (kPerGroup CIs, decimal proof, per-group counts) on the
+        // windowed sample
+        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
+          "bottomkg_rider", BlobEscape.encodeCounts(liveTotals),
+          s"""{"rows":$n,"k":$kPerGroup,"decsafe":"$decsafe"}""",
+          System.currentTimeMillis()))
+        // replay-guard stamp LAST (crash-safe fold discipline)
+        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
+          "bkgw_state",
+          graft.sketch.GroupedHll.pack(liveCounts.toSeq.map {
+            case (bkt, gs) =>
+              Option(bkt.toString) -> BlobEscape.encodeCounts(gs)
+          }),
+          s"""{"maxus":$maxUs,"k":$kPerGroup,"last_batch":$batchId}""",
+          System.currentTimeMillis()))
       }
-      .start()
+    }
   }
 
   /** Streaming WINDOWED OUTLIER-INDEXED sample maintenance (round 14)
@@ -1032,195 +1001,189 @@ object SampleMaintainers {
       else s"${table}__outlier_$valueCol"
     val path = s"${catalog.samplesDir}/$name"
     val statePath = s"${catalog.samplesDir}/${name}__wstate"
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, valueCol, "outlierw_state")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        val lastBatch = """"last_batch"\s*:\s*(-?\d+)""".r
-          .findFirstMatchIn(riderParams).map(_.group(1).toLong).getOrElse(-1L)
-        if (batchId > lastBatch) {
-          require(Seq("integer", "long", "short")
-            .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-              .dataType.typeName),
-            s"windowed outlier stream key $keyCol must be integral")
-          val withH = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-            .withColumn("graft_olv", col(valueCol).cast("double"))
-            .withColumn("graft_olh",
-              expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
-            .drop(tsCol)
-          val baseSchema = withH.schema
-          val keyIdx = baseSchema.fieldIndex(keyCol)
-          val vIdx = baseSchema.fieldIndex("graft_olv")
-          val hIdx = baseSchema.fieldIndex("graft_olh")
-          val bIdx = baseSchema.fieldIndex("graft_bucket")
-          def keyOf(r: org.apache.spark.sql.Row): Long =
-            r.get(keyIdx) match {
-              case l: java.lang.Long    => l.longValue
-              case i: java.lang.Integer => i.longValue
-              case x: java.lang.Short   => x.longValue
-              case other => sys.error(s"non-integral key $other")
-            }
-          val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-            r => (-r.getDouble(vIdx), keyOf(r)))
-          val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-            r => (r.getDouble(vIdx), keyOf(r)))
-          val wbHi = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("graft_bucket"))
-            .orderBy(col("graft_olv").desc, col(keyCol).asc)
-          val batchHi = withH.filter(col(valueCol).isNotNull)
-            .withColumn("graft_rn", row_number().over(wbHi))
-            .filter(col("graft_rn") <= outlierK).drop("graft_rn")
-            .collect()
-          val wbLo = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("graft_bucket"))
-            .orderBy(col("graft_olv").asc, col(keyCol).asc)
-          val batchLo =
-            if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
-            else withH.filter(col(valueCol).isNotNull)
-              .withColumn("graft_rn", row_number().over(wbLo))
-              .filter(col("graft_rn") <= lowK).drop("graft_rn")
-              .collect()
-          val batchRest = withH
-            .filter(col("graft_olh") % lit(8192L) < lit(threshold))
-            .collect()
-          val batchCounts = withH.groupBy(col("graft_bucket"))
-            .agg(count(lit(1)).as("c")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val batchMaxUs = batch.agg(
-            max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-            case r if r.isNullAt(0) => Long.MinValue
-            case r                  => r.getLong(0)
+    Fold.run(values) { (batch, batchId) =>
+      val s = batch.sparkSession
+      graft.functions.GraftFunctions.register(s)
+      val rider = catalog.getSketch(table, valueCol, "outlierw_state")
+      val lastBatch = Fold.lastBatch(rider)
+      if (batchId > lastBatch) {
+        require(Seq("integer", "long", "short")
+          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
+            .dataType.typeName),
+          s"windowed outlier stream key $keyCol must be integral")
+        val withH = batch.filter(col(tsCol).isNotNull)
+          .withColumn("graft_bucket",
+            expr(s"unix_micros($tsCol) div $bucketMicros"))
+          .withColumn("graft_olv", col(valueCol).cast("double"))
+          .withColumn("graft_olh",
+            expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
+          .drop(tsCol)
+        val baseSchema = withH.schema
+        val keyIdx = baseSchema.fieldIndex(keyCol)
+        val vIdx = baseSchema.fieldIndex("graft_olv")
+        val hIdx = baseSchema.fieldIndex("graft_olh")
+        val bIdx = baseSchema.fieldIndex("graft_bucket")
+        def keyOf(r: org.apache.spark.sql.Row): Long =
+          r.get(keyIdx) match {
+            case l: java.lang.Long    => l.longValue
+            case i: java.lang.Integer => i.longValue
+            case x: java.lang.Short   => x.longValue
+            case other => sys.error(s"non-integral key $other")
           }
-          val prevMaxUs = """"maxus"\s*:\s*(-?\d+)""".r
-            .findFirstMatchIn(riderParams).map(_.group(1).toLong)
-            .getOrElse(Long.MinValue)
-          val maxUs = math.max(prevMaxUs, batchMaxUs)
-          val prevCounts: Map[Long, Long] = rider
-            .map(r => BlobEscape.decodeCounts(r.data))
-            .getOrElse(Map.empty)
-            .map { case (b, c) => b.toLong -> c }
-          val mergedCounts =
-            (prevCounts.keySet ++ batchCounts.keySet).iterator
-              .map(b => b -> (prevCounts.getOrElse(b, 0L) +
-                batchCounts.getOrElse(b, 0L))).toMap
-          def liveB(b: Long): Boolean =
-            (b + 1L) * bucketMicros > maxUs - windowMicros
-          val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-          val baseCols = baseSchema.fieldNames.toIndexedSeq
-          val stored: Array[(String, org.apache.spark.sql.Row)] =
-            if (new java.io.File(statePath).exists)
-              s.read.parquet(statePath)
-                .select((baseCols :+ "graft_part").map(col): _*)
-                .collect()
-                .map(r => r.getString(baseCols.length) ->
-                  org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-            else Array.empty
-          def part(p: String) = stored.collect { case (`p`, r) => r }
-          // fold each part per bucket (dedup by key — replay-safe),
-          // then EXPIRE dead buckets
-          def foldPart(prev: Array[org.apache.spark.sql.Row],
-              add: Array[org.apache.spark.sql.Row],
-              perBucketCap: Option[(Int, Ordering[org.apache.spark.sql.Row])])
-              : Array[org.apache.spark.sql.Row] = {
-            val merged = (prev ++ add)
-              .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-              .toArray
-              .filter(r => liveB(r.getLong(bIdx)))
-            perBucketCap match {
-              case Some((k, ord)) => merged.groupBy(_.getLong(bIdx))
-                .valuesIterator.flatMap(_.sorted(ord).take(k)).toArray
-              case None => merged
-            }
-          }
-          val hiState = foldPart(part("hi"), batchHi,
-            Some((outlierK, hiOrd)))
-          val loState = foldPart(part("lo"), batchLo, Some((lowK, loOrd)))
-          val restState = foldPart(part("rest"), batchRest, None)
-          val stateSchema = org.apache.spark.sql.types.StructType(
-            baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-              "graft_part", org.apache.spark.sql.types.StringType,
-              nullable = false))
-          val stateRows =
-            hiState.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "hi")) ++
-            loState.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "lo")) ++
-            restState.map(r => org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ "rest"))
-          s.createDataFrame(
-            java.util.Arrays.asList(stateRows: _*), stateSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(statePath)
-          // serving sample: global tails over the live candidates,
-          // rest = live winners minus the tail keys; the internal
-          // bucket column stays in the state only
-          val servingHi = hiState.groupBy(keyOf).map(_._2.head).toArray
-            .sorted(hiOrd).take(outlierK)
-          val hiKeys = servingHi.map(keyOf).toSet
-          val servingLo = loState.groupBy(keyOf).map(_._2.head).toArray
-            .filterNot(r => hiKeys.contains(keyOf(r)))
-            .sorted(loOrd).take(lowK)
-          val loKeys = servingLo.map(keyOf).toSet
-          val servingRest = restState.groupBy(keyOf).map(_._2.head).toArray
-            .filterNot { r =>
-              val k0 = keyOf(r)
-              hiKeys.contains(k0) || loKeys.contains(k0)
-            }
-          val sampleFields = baseSchema.fields
-            .filterNot(_.name == "graft_bucket")
-          val sampleIdx = sampleFields.map(f =>
-            baseSchema.fieldIndex(f.name))
-          val outSchema = org.apache.spark.sql.types.StructType(
-            sampleFields :+ org.apache.spark.sql.types.StructField(
-              "graft_weight", org.apache.spark.sql.types.DoubleType,
-              nullable = false))
-          def emit(rows: Array[org.apache.spark.sql.Row], w: Double) =
-            rows.map(r => org.apache.spark.sql.Row.fromSeq(
-              sampleIdx.toSeq.map(r.get) :+ (w: Any)))
-          val out = emit(servingHi, 1.0) ++ emit(servingLo, 1.0) ++
-            emit(servingRest, restWeight.toDouble)
-          s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(path)
-          s.read.parquet(path).createOrReplaceTempView(name)
-          val n = liveCounts.valuesIterator.sum
-          val (nOut, nLow, nRest) =
-            (servingHi.length.toLong, servingLo.length.toLong,
-              servingRest.length.toLong)
-          val fraction = math.min(0.9999,
-            (nOut + nLow + nRest).toDouble / math.max(1L, n))
-          catalog.upsertTableStats(table, n)
-          catalog.addSample(catalog.SampleInfo(table, name, fraction,
-            Some(s"__outlier__${valueCol.toLowerCase}"), path,
-            System.currentTimeMillis(), baseRows = Some(n)))
-          catalog.putStrata(name, Seq(
-            catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
-              0.0)) ++
-            (if (lowK > 0)
-              Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
-                1.0, 1.0, 0.0))
-            else Nil) ++ Seq(
-            catalog.StratumInfo(name, "rest",
-              math.max(0L, n - nOut - nLow), nRest,
-              1.0 / restWeight, restWeight.toDouble, 0.0)))
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "outlier_rider", Array.emptyByteArray,
-            s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "outlierw_state",
-            BlobEscape.encodeCounts(
-              liveCounts.map { case (b, c) => b.toString -> c }),
-            s"""{"maxus":$maxUs,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
+        val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
+          r => (-r.getDouble(vIdx), keyOf(r)))
+        val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
+          r => (r.getDouble(vIdx), keyOf(r)))
+        val wbHi = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("graft_bucket"))
+          .orderBy(col("graft_olv").desc, col(keyCol).asc)
+        val batchHi = withH.filter(col(valueCol).isNotNull)
+          .withColumn("graft_rn", row_number().over(wbHi))
+          .filter(col("graft_rn") <= outlierK).drop("graft_rn")
+          .collect()
+        val wbLo = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("graft_bucket"))
+          .orderBy(col("graft_olv").asc, col(keyCol).asc)
+        val batchLo =
+          if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
+          else withH.filter(col(valueCol).isNotNull)
+            .withColumn("graft_rn", row_number().over(wbLo))
+            .filter(col("graft_rn") <= lowK).drop("graft_rn")
+            .collect()
+        val batchRest = withH
+          .filter(col("graft_olh") % lit(8192L) < lit(threshold))
+          .collect()
+        val batchCounts = withH.groupBy(col("graft_bucket"))
+          .agg(count(lit(1)).as("c")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val batchMaxUs = batch.agg(
+          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
+          case r if r.isNullAt(0) => Long.MinValue
+          case r                  => r.getLong(0)
         }
-        ()
+        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
+          .getOrElse(Long.MinValue)
+        val maxUs = math.max(prevMaxUs, batchMaxUs)
+        val prevCounts: Map[Long, Long] = rider
+          .map(r => BlobEscape.decodeCounts(r.data))
+          .getOrElse(Map.empty)
+          .map { case (b, c) => b.toLong -> c }
+        val mergedCounts =
+          (prevCounts.keySet ++ batchCounts.keySet).iterator
+            .map(b => b -> (prevCounts.getOrElse(b, 0L) +
+              batchCounts.getOrElse(b, 0L))).toMap
+        def liveB(b: Long): Boolean =
+          (b + 1L) * bucketMicros > maxUs - windowMicros
+        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
+        val baseCols = baseSchema.fieldNames.toIndexedSeq
+        val stored: Array[(String, org.apache.spark.sql.Row)] =
+          if (new java.io.File(statePath).exists)
+            s.read.parquet(statePath)
+              .select((baseCols :+ "graft_part").map(col): _*)
+              .collect()
+              .map(r => r.getString(baseCols.length) ->
+                org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
+          else Array.empty
+        def part(p: String) = stored.collect { case (`p`, r) => r }
+        // fold each part per bucket (dedup by key — replay-safe),
+        // then EXPIRE dead buckets
+        def foldPart(prev: Array[org.apache.spark.sql.Row],
+            add: Array[org.apache.spark.sql.Row],
+            perBucketCap: Option[(Int, Ordering[org.apache.spark.sql.Row])])
+            : Array[org.apache.spark.sql.Row] = {
+          val merged = (prev ++ add)
+            .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
+            .toArray
+            .filter(r => liveB(r.getLong(bIdx)))
+          perBucketCap match {
+            case Some((k, ord)) => merged.groupBy(_.getLong(bIdx))
+              .valuesIterator.flatMap(_.sorted(ord).take(k)).toArray
+            case None => merged
+          }
+        }
+        val hiState = foldPart(part("hi"), batchHi,
+          Some((outlierK, hiOrd)))
+        val loState = foldPart(part("lo"), batchLo, Some((lowK, loOrd)))
+        val restState = foldPart(part("rest"), batchRest, None)
+        val stateSchema = org.apache.spark.sql.types.StructType(
+          baseSchema.fields :+ org.apache.spark.sql.types.StructField(
+            "graft_part", org.apache.spark.sql.types.StringType,
+            nullable = false))
+        val stateRows =
+          hiState.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "hi")) ++
+          loState.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "lo")) ++
+          restState.map(r => org.apache.spark.sql.Row.fromSeq(
+            r.toSeq :+ "rest"))
+        s.createDataFrame(
+          java.util.Arrays.asList(stateRows: _*), stateSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(statePath)
+        // serving sample: global tails over the live candidates,
+        // rest = live winners minus the tail keys; the internal
+        // bucket column stays in the state only
+        val servingHi = hiState.groupBy(keyOf).map(_._2.head).toArray
+          .sorted(hiOrd).take(outlierK)
+        val hiKeys = servingHi.map(keyOf).toSet
+        val servingLo = loState.groupBy(keyOf).map(_._2.head).toArray
+          .filterNot(r => hiKeys.contains(keyOf(r)))
+          .sorted(loOrd).take(lowK)
+        val loKeys = servingLo.map(keyOf).toSet
+        val servingRest = restState.groupBy(keyOf).map(_._2.head).toArray
+          .filterNot { r =>
+            val k0 = keyOf(r)
+            hiKeys.contains(k0) || loKeys.contains(k0)
+          }
+        val sampleFields = baseSchema.fields
+          .filterNot(_.name == "graft_bucket")
+        val sampleIdx = sampleFields.map(f =>
+          baseSchema.fieldIndex(f.name))
+        val outSchema = org.apache.spark.sql.types.StructType(
+          sampleFields :+ org.apache.spark.sql.types.StructField(
+            "graft_weight", org.apache.spark.sql.types.DoubleType,
+            nullable = false))
+        def emit(rows: Array[org.apache.spark.sql.Row], w: Double) =
+          rows.map(r => org.apache.spark.sql.Row.fromSeq(
+            sampleIdx.toSeq.map(r.get) :+ (w: Any)))
+        val out = emit(servingHi, 1.0) ++ emit(servingLo, 1.0) ++
+          emit(servingRest, restWeight.toDouble)
+        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(path)
+        s.read.parquet(path).createOrReplaceTempView(name)
+        val n = liveCounts.valuesIterator.sum
+        val (nOut, nLow, nRest) =
+          (servingHi.length.toLong, servingLo.length.toLong,
+            servingRest.length.toLong)
+        val fraction = math.min(0.9999,
+          (nOut + nLow + nRest).toDouble / math.max(1L, n))
+        catalog.upsertTableStats(table, n)
+        catalog.addSample(catalog.SampleInfo(table, name, fraction,
+          Some(s"__outlier__${valueCol.toLowerCase}"), path,
+          System.currentTimeMillis(), baseRows = Some(n)))
+        catalog.putStrata(name, Seq(
+          catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
+            0.0)) ++
+          (if (lowK > 0)
+            Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
+              1.0, 1.0, 0.0))
+          else Nil) ++ Seq(
+          catalog.StratumInfo(name, "rest",
+            math.max(0L, n - nOut - nLow), nRest,
+            1.0 / restWeight, restWeight.toDouble, 0.0)))
+        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
+          "outlier_rider", Array.emptyByteArray,
+          s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
+          System.currentTimeMillis()))
+        // replay-guard stamp LAST (crash-safe fold discipline)
+        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
+          "outlierw_state",
+          BlobEscape.encodeCounts(
+            liveCounts.map { case (b, c) => b.toString -> c }),
+          s"""{"maxus":$maxUs,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
+          System.currentTimeMillis()))
       }
-      .start()
+    }
   }
 }

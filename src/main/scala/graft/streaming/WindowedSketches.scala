@@ -1,35 +1,32 @@
 package graft.streaming
 
-import scala.util.chaining._
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Round 14: windowed/TTL maintenance for the remaining ADDITIVE
-  * sketch families — histogram+histsum, grouped statistics, KMV, and
-  * top-k heavy hitters. Completes the per-event-time-bucket pattern
-  * q183–q185 established (`SampleMaintainers.maintainBottomKWindowed` /
-  * `maintainHllWindowed` / `maintainCmsWindowed`): the append-only
-  * maintainers in [[EventStreams]] serve ALL-TIME data under a
-  * retention/TTL workload, so every range/percentile/set-op/trending
+import graft.sketch.{GroupedHll, GroupedStats, HdrSketch, Histogram, Kmv, SketchOps}
+
+/** Round 14: windowed/TTL maintenance for the remaining sketch families
+  * — histogram+histsum, grouped statistics, KMV, top-k heavy hitters,
+  * HDR, grouped HLL, grouped HDR and AGMS. Completes the
+  * per-event-time-bucket pattern q183–q185 established
+  * (`SampleMaintainers.maintainBottomKWindowed` /
+  * `EventStreams.maintainHllWindowed` / `maintainCmsWindowed`): the
+  * append-only maintainers in [[EventStreams]] serve ALL-TIME data under
+  * a retention/TTL workload, so every range/percentile/set-op/trending
   * dashboard over a TTL'd stream needed these forms.
   *
-  * Shared discipline (the q183 trade, verbatim):
-  *  - ONE summary per event-time bucket (`floor(us / bucketMicros)`),
-  *    O(liveBuckets · summary) state; a bucket is LIVE iff its end
-  *    exceeds the watermark (max event time seen) − `windowMicros`.
-  *  - Counters/sums/counts are ADDITIVE, so expiry subtracts EXACTLY:
-  *    dropping a bucket removes precisely its contribution (the q185
-  *    CMS rule). Min/max and bottom-k hashes are not subtractable and
-  *    re-merge from the live buckets instead (the q184 HLL rule).
-  *  - Additive folds replay-unsafely, so every maintainer carries the
-  *    `last_batch` guard, stamped LAST in the state rider (crash-safe:
-  *    a mid-fold crash re-runs the whole fold on replay).
-  *  - The SERVING blob is written under the batch builder's type and
-  *    params ("histogram"+"histsum", "stats_grouped", "kmv", "topk"),
-  *    so the engine's existing serve paths answer over the LIVE WINDOW
-  *    with no new dispatch; `upsertTableStats(table, liveN)` keeps the
-  *    freshness guard coherent with the live-row count.
+  * Each maintainer declares one event bucket's state, its merge, rider
+  * encoding and serving blobs; [[Fold.windowed]] runs the rest (bucket
+  * rule, expiry, replay guard, write order). Counters, sums and counts
+  * are ADDITIVE, so expiry subtracts EXACTLY — dropping a bucket removes
+  * precisely its contribution (the q185 CMS rule); min/max and bottom-k
+  * hashes are not subtractable and re-merge from the live buckets
+  * instead (the q184 HLL rule). The serving blobs are written under the
+  * batch builders' types and params, so the engine's existing serve
+  * paths answer over the LIVE WINDOW with no new dispatch, and where a
+  * family has a sum rider both serving blobs stamp the same
+  * `last_batch` (the engine's riderInSync cross-check).
   *
   * Expiry is bucket-granular (a window of W serves between W and
   * W + bucket of history) — the standard trade, documented at q183.
@@ -39,39 +36,8 @@ import org.apache.spark.sql.functions._
   */
 object WindowedSketches {
 
-  private val lastBatchRe = """"last_batch"\s*:\s*(-?\d+)""".r
-  private val maxUsRe = """"maxus"\s*:\s*(-?\d+)""".r
-
-  private def lastBatchOf(params: String): Long =
-    lastBatchRe.findFirstMatchIn(params).map(_.group(1).toLong).getOrElse(-1L)
-  private def prevMaxUsOf(params: String): Long =
-    maxUsRe.findFirstMatchIn(params).map(_.group(1).toLong)
-      .getOrElse(Long.MinValue)
-
-  /** [count: i64 BE][payload] — the per-bucket ride-along row count
-    * (the q184/q185 payload convention).
-    */
-  private def joinCounted(c: Long, payload: Array[Byte]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-    bb.putLong(c); bb.put(payload); bb.array()
-  }
-  private def splitCounted(data: Array[Byte]): (Long, Array[Byte]) = {
-    val bb = java.nio.ByteBuffer.wrap(data)
-    (bb.getLong, data.drop(8))
-  }
-
-  /** Max-event-time of a batch with the maintainers' null guard (empty
-    * batch / all-NULL timestamps fold as "no watermark advance").
-    */
-  private def batchMaxUs(batch: DataFrame, tsCol: String): Long =
-    batch.agg(max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-      case r if r.isNullAt(0) => Long.MinValue
-      case r                  => r.getLong(0)
-    }
-
-  private def liveBucket(bkt: Long, bucketMicros: Long, maxUs: Long,
-      windowMicros: Long): Boolean =
-    (bkt + 1L) * bucketMicros > maxUs - windowMicros
+  private def addArrays(a: Array[Long], b: Array[Long]): Array[Long] =
+    a.zip(b).map { case (x, y) => x + y }
 
   // ---------------------------------------------------------------
   // histogram + histsum (the q74 percentile / range-count / range-sum
@@ -90,150 +56,83 @@ object WindowedSketches {
 
   /** Streaming WINDOWED histogram maintenance: one equi-width
     * histogram (+ exact per-grid-bucket decimal sums) per EVENT-TIME
-    * bucket, watermark expiry, live buckets re-merged into the serving
-    * "histogram" + "histsum" blobs — the engine's percentile /
-    * range-count / range-SUM/AVG serves then answer OVER THE LIVE
-    * WINDOW with no scan. The value grid (lo/width/buckets) is fixed
-    * up front exactly like the append-only maintainer (per-batch grids
-    * cannot merge); out-of-grid values clamp into the edge buckets.
-    * Histogram counts and BigInt sums are additive, so bucket expiry
-    * subtracts exactly (the q185 rule); a batch whose grid-bucket sum
-    * overflows decimal(38,4) POISONS that event bucket's sums (empty
-    * inner pack — absorbing in the merge), and ANY live poisoned
-    * bucket poisons the serving "histsum" so SUM/AVG refuse while
-    * counts keep serving. Both serving blobs stamp the same
-    * `last_batch`, keeping the engine's riderInSync cross-check green.
-    * State: "hist_windowed" rider, per-bucket payloads
-    * pack("c" → rows, "h" → histogram, "s" → sums pack), stamped LAST.
-    * Batch twin: [[windowedHistogramStats]] (q186).
+    * bucket, live buckets re-merged into the serving "histogram" +
+    * "histsum" blobs — the engine's percentile / range-count /
+    * range-SUM/AVG serves then answer OVER THE LIVE WINDOW with no
+    * scan. The value grid (lo/width/buckets) is fixed up front exactly
+    * like the append-only maintainer (per-batch grids cannot merge);
+    * out-of-grid values clamp into the edge buckets. A batch whose
+    * grid-bucket sum overflows decimal(38,4) POISONS that event
+    * bucket's sums (empty inner pack — absorbing in the merge), and
+    * ANY live poisoned bucket poisons the serving "histsum" so SUM/AVG
+    * refuse while counts keep serving. State: "hist_windowed" rider,
+    * per-bucket payloads pack("c" → rows, "h" → histogram, "s" → sums
+    * pack). Batch twin: [[windowedHistogramStats]] (q186).
     */
   def maintainHistogramWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       lo: Double, width: Double, buckets: Int,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointLocation: Option[String] = None): StreamingQuery = {
     require(buckets >= 1 && width > 0, "need buckets >= 1 and width > 0")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, column, "hist_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          // one distributed pass: per (event bucket, grid bucket) rows,
-          // counts and exact decimal sums; NULL-ts rows can never be
-          // live and are excluded up front
-          val agg = batch.filter(col(tsCol).isNotNull)
-            .select(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              expr(s"case when $column is null then cast(null as int) else " +
-                gridBucketExpr(column, lo, width, buckets) + " end").as("b"),
-              col(column))
-            .groupBy(col("graft_bucket"), col("b"))
-            .agg(count(lit(1)).as("n"),
-              expr(s"try_sum(cast($column as decimal(38,4)))").as("s4"))
-            .collect()
-          // fold the batch into per-event-bucket (rows, counts, sums)
-          final case class B(var rows: Long, counts: Array[Long],
-              sums: Array[BigInt], var poison: Boolean)
-          val batchBuckets = scala.collection.mutable.Map[Long, B]()
-          agg.foreach { r =>
-            val st = batchBuckets.getOrElseUpdate(r.getLong(0),
-              B(0L, new Array[Long](buckets), Array.fill(buckets)(BigInt(0)),
-                poison = false))
-            st.rows += r.getAs[Long]("n")
+    // (rows, grid counts, exact grid sums — None once poisoned)
+    type S = (Long, Array[Long], Option[Array[BigInt]])
+    def sumsPack(sums: Option[Array[BigInt]]): Array[Byte] = GroupedHll.pack(
+      sums.toSeq.flatMap(_.toSeq.zipWithIndex.map { case (s, i) =>
+        Option(i.toString) -> s.toByteArray
+      }))
+    Fold.windowed(values, catalog, table, column, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(Fold.Windowed[S]("hist_windowed",
+      s""""buckets":$buckets,""",
+      (0L, new Array[Long](buckets), Some(Array.fill(buckets)(BigInt(0)))),
+      bucketed = _.select(col("graft_bucket"),
+          expr(s"case when $column is null then cast(null as int) else " +
+            gridBucketExpr(column, lo, width, buckets) + " end").as("b"),
+          col(column))
+        .groupBy(col("graft_bucket"), col("b"))
+        .agg(count(lit(1)).as("n"),
+          expr(s"try_sum(cast($column as decimal(38,4)))").as("s4"))
+        .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+          val counts = new Array[Long](buckets)
+          val sums = Array.fill(buckets)(BigInt(0))
+          var poison = false
+          rs.foreach { r =>
             if (!r.isNullAt(1)) { // NULL grid bucket = NULL values: rows only
-              val b = r.getInt(1)
-              st.counts(b) += r.getAs[Long]("n")
+              counts(r.getInt(1)) += r.getAs[Long]("n")
               Option(r.getDecimal(3)) match {
-                case Some(d) =>
-                  st.sums(b) += BigInt(d.setScale(4).unscaledValue())
-                case None => st.poison = true // try_sum overflow
+                case Some(d) => sums(r.getInt(1)) += EventStreams.unscaled4(d)
+                case None    => poison = true // try_sum overflow
               }
             }
           }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          // decode stored per-bucket state
-          def decode(payload: Array[Byte]): (Long, Array[Byte], Seq[(Option[String], Array[Byte])]) = {
-            val parts = graft.sketch.GroupedHll.unpack(payload)
-              .collect { case (Some(k), v) => k -> v }.toMap
-            (java.nio.ByteBuffer.wrap(parts("c")).getLong, parts("h"),
-              graft.sketch.GroupedHll.unpack(parts("s")))
-          }
-          val prev: Map[Long, (Long, Array[Long], Option[Array[BigInt]])] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(k), payload) =>
-                val (c, hb, sp) = decode(payload)
-                val h = graft.sketch.Histogram.deserialize(hb)
-                val sums =
-                  if (sp.isEmpty) None // poison
-                  else Some {
-                    val a = Array.fill(buckets)(BigInt(0))
-                    sp.foreach { case (bk, bb) => a(bk.get.toInt) = BigInt(bb) }
-                    a
-                  }
-                k.toLong -> (c, h.counts, sums)
-              }.toMap
-          val merged = batchBuckets.foldLeft(prev) {
-            case (acc, (bkt, st)) =>
-              val (pc, pcounts, psums) = acc.getOrElse(bkt,
-                (0L, new Array[Long](buckets),
-                  Option(Array.fill(buckets)(BigInt(0)))))
-              val counts = pcounts.zip(st.counts).map { case (x, y) => x + y }
-              val sums =
-                if (st.poison) None
-                else psums.map(_.zip(st.sums).map { case (x, y) => x + y })
-              acc.updated(bkt, (pc + st.rows, counts, sums))
-          }
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val liveN = live.valuesIterator.map(_._1).sum
-          val liveCounts = live.values.map(_._2)
-            .foldLeft(new Array[Long](buckets))(
-              (a, c) => a.zip(c).map { case (x, y) => x + y })
-          val livePoison = live.values.exists(_._3.isEmpty)
-          val liveSums = live.values.flatMap(_._3)
-            .foldLeft(Array.fill(buckets)(BigInt(0)))(
-              (a, s) => a.zip(s).map { case (x, y) => x + y })
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "histogram",
-            graft.sketch.Histogram(lo, width, liveCounts).serialize,
-            s"""{"buckets":$buckets,"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "histsum",
-            graft.sketch.GroupedHll.pack(
-              if (livePoison) Seq.empty
-              else liveSums.zipWithIndex.toSeq.map { case (s, i) =>
-                Option(i.toString) -> s.toByteArray
-              }),
-            s"""{"buckets":$buckets,"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hist_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, counts, sums)) =>
-                val cb = java.nio.ByteBuffer.allocate(8).putLong(c).array()
-                Option(bkt.toString) -> graft.sketch.GroupedHll.pack(Seq(
-                  Option("c") -> cb,
-                  Option("h") -> graft.sketch.Histogram(lo, width, counts)
-                    .serialize,
-                  Option("s") -> graft.sketch.GroupedHll.pack(
-                    sums.map(_.zipWithIndex.toSeq.map { case (s, i) =>
-                      Option(i.toString) -> s.toByteArray
-                    }).getOrElse(Seq.empty))))
-            }),
-            s"""{"maxus":$maxUs,"buckets":$buckets,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+          bkt -> (rs.map(_.getAs[Long]("n")).sum, counts,
+            Option.when(!poison)(sums))
+        },
+      merge = { case ((r1, c1, s1), (r2, c2, s2)) =>
+        (r1 + r2, addArrays(c1, c2),
+          for (a <- s1; b <- s2) yield a.zip(b).map { case (x, y) => x + y })
+      },
+      rows = _._1,
+      encode = { case (c, counts, sums) =>
+        Fold.partsOf("c" -> Fold.beLong(c),
+          "h" -> Histogram(lo, width, counts).serialize, "s" -> sumsPack(sums))
+      },
+      decode = { payload =>
+        val ps = Fold.parts(payload)
+        val sp = GroupedHll.unpack(ps("s"))
+        (java.nio.ByteBuffer.wrap(ps("c")).getLong,
+          Histogram.deserialize(ps("h")).counts,
+          Option.when(sp.nonEmpty) {
+            val a = Array.fill(buckets)(BigInt(0))
+            sp.foreach { case (bk, bb) => a(bk.get.toInt) = BigInt(bb) }
+            a
+          })
+      },
+      serve = { case ((_, counts, sums), liveN, batchId) =>
+        val params = s"""{"buckets":$buckets,"rows":$liveN,"last_batch":$batchId}"""
+        Seq(("histogram", Histogram(lo, width, counts).serialize, params),
+          ("histsum", sumsPack(sums), params))
+      }))
   }
 
   /** WINDOWED histogram stats — the batch twin of
@@ -285,8 +184,8 @@ object WindowedSketches {
   // ---------------------------------------------------------------
 
   /** Streaming WINDOWED grouped-statistics maintenance: one per-group
-    * stats record set per EVENT-TIME bucket, watermark expiry, live
-    * buckets re-merged into the serving "stats_grouped" blob —
+    * stats record set per EVENT-TIME bucket, live buckets re-merged
+    * into the serving "stats_grouped" blob —
     * `QueryEngine.storedGroupedStatsAnswer` then serves per-group
     * MIN/MAX/COUNT/SUM/AVG OVER THE LIVE WINDOW with no scan and no
     * error. Counts and unscaled decimal sums are additive (expiry
@@ -294,123 +193,43 @@ object WindowedSketches {
     * and re-merge from the live buckets (the q184 rule) — which is
     * exactly `GroupedStats.merge` applied across live buckets, so the
     * serving blob is BYTE-equal to a batch build over exactly the live
-    * rows (the EventStreamsSpec law). New groups union in freely;
-    * merged live groups are bounded by `SketchOps.MaxHllGroups`. A
+    * rows (the EventStreamsSpec law). New groups union in freely. A
     * batch group sum overflowing decimal(38,4) fails the batch loudly
-    * (the append-only maintainer's rule). Additive counts ⇒
-    * `last_batch` guard, stamped LAST on the "statsg_windowed" rider.
+    * (the append-only maintainer's rule). State: "statsg_windowed".
     * Batch twin: [[windowedGroupedStats]] (q187).
     */
   def maintainGroupedStatsWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], valueCol: String, tsCol: String,
-      windowMicros: Long, bucketMicros: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      windowMicros: Long, bucketMicros: Long): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
     val groupCol = groupCols.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, valueCol, "statsg_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val rows = batch.filter(col(tsCol).isNotNull)
-            .groupBy(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              graft.sketch.SketchOps.groupKeyExpr(groupCols,
-                batch.schema.fieldNames.toSeq).as("g"))
-            .agg(min(col(valueCol)).cast("double").as("lo"),
-              max(col(valueCol)).cast("double").as("hi"),
-              count(lit(1)).as("n"),
-              count(col(valueCol)).as("nnull"),
-              expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
-            .collect()
-          val batchBuckets = rows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-            bkt -> rs.map { r =>
-              val absent = r.isNullAt(2)
-              if (r.isNullAt(6) && r.getAs[Long]("nnull") > 0L)
-                throw new IllegalArgumentException(
-                  s"windowed grouped stats over $table.$valueCol: batch " +
-                    "group sum overflows decimal(38,4)")
-              val sum = Option(r.getDecimal(6))
-                .map(d => BigInt(d.setScale(4).unscaledValue()))
-                .getOrElse(BigInt(0))
-              Option(r.getAs[String]("g")) ->
-                graft.sketch.GroupedStats.Stat(
-                  if (absent) None else Some(r.getDouble(2)),
-                  if (absent) None else Some(r.getDouble(3)),
-                  r.getAs[Long]("nnull"), r.getAs[Long]("n"), sum)
-            }.toMap
-          }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          val prev: Map[Long, Map[Option[String], graft.sketch.GroupedStats.Stat]] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(k), payload) =>
-                k.toLong -> graft.sketch.GroupedHll.unpack(payload)
-                  .map { case (g, b) =>
-                    g -> graft.sketch.GroupedStats.decode(b)
-                  }.toMap
-              }.toMap
-          val merged = batchBuckets.foldLeft(prev) {
-            case (acc, (bkt, gs)) =>
-              val p = acc.getOrElse(bkt,
-                Map.empty[Option[String], graft.sketch.GroupedStats.Stat])
-              acc.updated(bkt, (p.keySet ++ gs.keySet).iterator.map { g =>
-                g -> ((p.get(g), gs.get(g)) match {
-                  case (Some(a), Some(b)) => graft.sketch.GroupedStats.merge(a, b)
-                  case (Some(a), None)    => a
-                  case (None, Some(b))    => b
-                  case _ => sys.error("unreachable")
-                })
-              }.toMap)
-          }
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          // re-merge the live buckets per group (min/max re-derive,
-          // counts/sums re-add — GroupedStats.merge IS both rules)
-          val liveGroups = live.values
-            .foldLeft(Map.empty[Option[String], graft.sketch.GroupedStats.Stat]) {
-              (acc, gs) =>
-                (acc.keySet ++ gs.keySet).iterator.map { g =>
-                  g -> ((acc.get(g), gs.get(g)) match {
-                    case (Some(a), Some(b)) => graft.sketch.GroupedStats.merge(a, b)
-                    case (Some(a), None)    => a
-                    case (None, Some(b))    => b
-                    case _ => sys.error("unreachable")
-                  })
-                }.toMap
-            }
-          if (liveGroups.sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-            throw new IllegalArgumentException(
-              s"windowed grouped stats over $table.$groupCol: live group " +
-                s"count exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-          val liveN = liveGroups.valuesIterator.map(_.nrows).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "stats_grouped",
-            graft.sketch.GroupedHll.pack(liveGroups.toSeq.map {
-              case (g, st) => g -> graft.sketch.GroupedStats.encode(st)
-            }),
-            s"""{"group_by":"$groupCol","groups":${liveGroups.size},"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "statsg_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map { case (bkt, gs) =>
-              Option(bkt.toString) -> graft.sketch.GroupedHll.pack(
-                gs.toSeq.map { case (g, st) =>
-                  g -> graft.sketch.GroupedStats.encode(st)
-                })
-            }),
-            s"""{"maxus":$maxUs,"group_by":"$groupCol","last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .start()
+    type S = Map[Option[String], GroupedStats.Stat]
+    Fold.windowed(values, catalog, table, valueCol, tsCol, windowMicros,
+      bucketMicros)(Fold.Windowed[S]("statsg_windowed",
+      s""""group_by":"$groupCol",""", Map.empty,
+      bucketed = timed => timed
+        .groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
+          timed.schema.fieldNames.toSeq).as("g"))
+        .agg(EventStreams.statsAgg(valueCol).head,
+          EventStreams.statsAgg(valueCol).tail: _*)
+        .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+          bkt -> rs.map(EventStreams.statOf(_,
+            s"windowed grouped stats over $table.$valueCol")).toMap
+        },
+      merge = Fold.union(_, _)(GroupedStats.merge),
+      rows = _.valuesIterator.map(_.nrows).sum,
+      encode = gs => GroupedHll.pack(gs.toSeq.map { case (g, st) =>
+        g -> GroupedStats.encode(st) }),
+      decode = GroupedHll.unpack(_).map { case (g, b) =>
+        g -> GroupedStats.decode(b) }.toMap,
+      serve = { (live, liveN, batchId) =>
+        Fold.capGroups(live.size,
+          s"windowed grouped stats over $table.$groupCol: live")
+        Seq(("stats_grouped", GroupedHll.pack(live.toSeq.map {
+            case (g, st) => g -> GroupedStats.encode(st) }),
+          s"""{"group_by":"$groupCol","groups":${live.size},"rows":$liveN,"last_batch":$batchId}"""))
+      }))
   }
 
   /** WINDOWED grouped stats — the batch twin of
@@ -460,96 +279,58 @@ object WindowedSketches {
   // ---------------------------------------------------------------
 
   /** Streaming WINDOWED KMV maintenance: one bottom-k hash sketch per
-    * EVENT-TIME bucket, watermark expiry, live buckets re-merged
-    * (bottom-k union — idempotent, the q184 re-merge rule) into the
-    * serving "kmv" sketch, so `QueryEngine.storedSetOpAnswer` serves
+    * EVENT-TIME bucket, live buckets re-merged (bottom-k union —
+    * idempotent, the q184 re-merge rule) into the serving "kmv"
+    * sketch, so `QueryEngine.storedSetOpAnswer` serves
     * INTERSECT/UNION/EXCEPT counts OVER THE LIVE WINDOW with no scan.
     * Hashes are keyed by VALUE with no salt (the `createKmv`
     * convention — set-op comparability is the whole point). The
     * ride-along per-bucket row counts are ADDITIVE (they feed the
-    * catalog's live-row table stats), so the `last_batch` guard is
-    * required even though the hash union itself is replay-idempotent.
-    * State: "kmv_windowed" rider ([rows i64 BE][kmv bytes] per
-    * bucket), stamped LAST. Batch twin: [[windowedKmvDistinct]]
-    * (q188).
+    * catalog's live-row table stats), so the rider is guarded even
+    * though the hash union itself is replay-idempotent. State:
+    * "kmv_windowed" rider ([rows i64 BE][kmv bytes] per bucket). Batch
+    * twin: [[windowedKmvDistinct]] (q188).
     */
   def maintainKmvWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       k: Int = 1024, checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(k >= 2, s"k must be >= 2, got $k")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, column, "kmv_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val withBkt = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-          // per-bucket bottom-k of distinct value hashes: the window
-          // rank runs over DISTINCT (bucket, hash) pairs, so at most
-          // liveBuckets·k rows reach the driver
-          val wb = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("graft_bucket")).orderBy(col("h").asc)
-          val hs = withBkt.filter(col(column).isNotNull)
-            .select(col("graft_bucket"),
-              expr(s"graft_h60(cast($column as string))").as("h"))
-            .distinct()
-            .withColumn("graft_rn", row_number().over(wb))
-            .filter(col("graft_rn") <= k)
-            .collect()
-          val batchSketches = hs.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-            bkt -> graft.sketch.Kmv.Sketch(k,
-              rs.map(_.getLong(1)).sorted)
+    val empty = Kmv.Sketch(k, Array.empty[Long])
+    Fold.windowed(values, catalog, table, column, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(Fold.Windowed[(Long, Kmv.Sketch)](
+      "kmv_windowed", s""""k":$k,""", (0L, empty),
+      bucketed = { timed =>
+        graft.functions.GraftFunctions.register(timed.sparkSession)
+        // per-bucket bottom-k of distinct value hashes: the window
+        // rank runs over DISTINCT (bucket, hash) pairs, so at most
+        // liveBuckets·k rows reach the driver
+        val wb = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("graft_bucket")).orderBy(col("h").asc)
+        val sketches = timed.filter(col(column).isNotNull)
+          .select(col("graft_bucket"),
+            expr(s"graft_h60(cast($column as string))").as("h"))
+          .distinct()
+          .withColumn("graft_rn", row_number().over(wb))
+          .filter(col("graft_rn") <= k)
+          .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+            bkt -> Kmv.Sketch(k, rs.map(_.getLong(1)).sorted)
           }
-          val batchCounts = withBkt.groupBy(col("graft_bucket"))
-            .agg(count(lit(1)).as("c")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          val prev: Map[Long, (Long, graft.sketch.Kmv.Sketch)] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(bk), payload) =>
-                val (c, kb) = splitCounted(payload)
-                bk.toLong -> (c, graft.sketch.Kmv.deserialize(kb))
-              }.toMap
-          val allBkts = prev.keySet ++ batchCounts.keySet ++
-            batchSketches.keySet
-          val merged = allBkts.iterator.map { bkt =>
-            val (pc, psk) = prev.getOrElse(bkt,
-              (0L, graft.sketch.Kmv.Sketch(k, Array.empty[Long])))
-            val sk = batchSketches.get(bkt).fold(psk)(psk.union)
-            bkt -> (pc + batchCounts.getOrElse(bkt, 0L), sk)
-          }.toMap
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val serving = live.values.map(_._2)
-            .foldLeft(graft.sketch.Kmv.Sketch(k, Array.empty[Long]))(_ union _)
-          val liveN = live.valuesIterator.map(_._1).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "kmv", serving.serialize,
-            s"""{"k":$k,"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "kmv_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, sk)) =>
-                Option(bkt.toString) -> joinCounted(c, sk.serialize)
-            }),
-            s"""{"maxus":$maxUs,"k":$k,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+        timed.groupBy(col("graft_bucket")).agg(count(lit(1)).as("c"))
+          .collect().map(r => r.getLong(0) ->
+            (r.getLong(1), sketches.getOrElse(r.getLong(0), empty))).toMap
+      },
+      merge = { case ((c1, s1), (c2, s2)) => (c1 + c2, s1.union(s2)) },
+      rows = _._1, encode = { case (c, sk) => Fold.counted(c, sk.serialize) },
+      decode = { p =>
+        val (c, kb) = Fold.uncounted(p)
+        (c, Kmv.deserialize(kb))
+      },
+      serve = { case ((_, sk), liveN, batchId) =>
+        Seq(("kmv", sk.serialize,
+          s"""{"k":$k,"rows":$liveN,"last_batch":$batchId}"""))
+      }))
   }
 
   /** WINDOWED KMV distinct — the batch twin of [[maintainKmvWindowed]]
@@ -611,119 +392,71 @@ object WindowedSketches {
   // ---------------------------------------------------------------
 
   /** Streaming WINDOWED top-k / heavy-hitters maintenance: EXACT
-    * per-group counts per EVENT-TIME bucket, watermark expiry, live
-    * buckets re-merged (counter addition — expiry subtracts exactly,
-    * the q185 rule) into the serving "topk" blob, so
-    * `QueryEngine.storedTopKAnswer` serves `ORDER BY count DESC LIMIT
-    * k` / `HAVING count >= x` OVER THE LIVE WINDOW with no scan.
-    * Unlike the append-only [[EventStreams.maintainTopKSketch]] (whose
-    * unknown_bound only GROWS — coverage narrows forever), the
-    * windowed form keeps every group of every live bucket EXACTLY, so
-    * the serving blob's completeness guarantee is exact
-    * (unknown_bound 0): every group below `threshold` is provably
-    * below it over the live window. The honesty guard is the domain
-    * bound: a bucket (or the merged live set) holding more than
-    * `maxEntries` groups refuses loudly — per-bucket group sets must
-    * be dimensions, not data (the MaxHllGroups rule); for truly
-    * unbounded keys, bound the domain first (hash-bucket the key) or
-    * accept the append-only form's narrowing bound. Additive counts ⇒
-    * `last_batch` guard, stamped LAST on "topk_windowed".
+    * per-group counts per EVENT-TIME bucket, live buckets re-merged
+    * (counter addition — expiry subtracts exactly, the q185 rule) into
+    * the serving "topk" blob, so `QueryEngine.storedTopKAnswer` serves
+    * `ORDER BY count DESC LIMIT k` / `HAVING count >= x` OVER THE LIVE
+    * WINDOW with no scan. Unlike the append-only
+    * [[EventStreams.maintainTopKSketch]] (whose unknown_bound only
+    * GROWS — coverage narrows forever), the windowed form keeps every
+    * group of every live bucket EXACTLY, so the serving blob's
+    * completeness guarantee is exact (unknown_bound 0): every group
+    * below `threshold` is provably below it over the live window. The
+    * honesty guard is the domain bound: a batch bucket (or the merged
+    * live set) holding more than `maxEntries` groups refuses loudly —
+    * per-bucket group sets must be dimensions, not data (the
+    * MaxHllGroups rule); for truly unbounded keys, bound the domain
+    * first (hash-bucket the key) or accept the append-only form's
+    * narrowing bound. State: "topk_windowed".
     * Batch twin: [[windowedTopK]] (q189).
     */
   def maintainTopKWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], tsCol: String,
       windowMicros: Long, bucketMicros: Long, threshold: Long,
-      maxEntries: Int = graft.sketch.SketchOps.MaxHllGroups,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      maxEntries: Int = SketchOps.MaxHllGroups,
+      checkpointLocation: Option[String] = None): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
     require(threshold >= 1, s"threshold must be >= 1, got $threshold")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
     val groupCol = groupCols.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, groupCol, "topk_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val rows = batch.filter(col(tsCol).isNotNull)
-            .groupBy(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              graft.sketch.SketchOps.groupKeyExpr(groupCols,
-                batch.schema.fieldNames.toSeq).as("g"))
-            .agg(count(lit(1)).as("n"))
-            .collect()
-          val batchBuckets: Map[Long, Map[Option[String], Long]] =
-            rows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-              bkt -> rs.map(r =>
-                Option(r.getAs[String]("g")) -> r.getAs[Long]("n")).toMap
-            }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          def le(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-          def leBytes(v: Long): Array[Byte] = java.nio.ByteBuffer.allocate(8)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
-          val prev: Map[Long, Map[Option[String], Long]] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(bk), payload) =>
-                bk.toLong -> graft.sketch.GroupedHll.unpack(payload)
-                  .map { case (g, b) => g -> le(b) }.toMap
-              }.toMap
-          val merged = batchBuckets.foldLeft(prev) {
-            case (acc, (bkt, gs)) =>
-              val p = acc.getOrElse(bkt, Map.empty[Option[String], Long])
-              acc.updated(bkt, (p.keySet ++ gs.keySet).iterator.map(g =>
-                g -> (p.getOrElse(g, 0L) + gs.getOrElse(g, 0L))).toMap)
-          }
-          merged.find(_._2.sizeIs > maxEntries).foreach { case (bkt, gs) =>
-            throw new IllegalArgumentException(
-              s"windowed topk over $table.$groupCol: bucket $bkt holds " +
-                s"${gs.size} groups (> $maxEntries) — the key is data, " +
-                "not a dimension")
-          }
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val liveCounts = live.values
-            .foldLeft(Map.empty[Option[String], Long]) { (acc, gs) =>
-              (acc.keySet ++ gs.keySet).iterator.map(g =>
-                g -> (acc.getOrElse(g, 0L) + gs.getOrElse(g, 0L))).toMap
-            }
-          // the MERGED live set is the driver-state/serving-blob bound
-          // the doc promises: per-bucket sets can each pass while their
-          // union (≤ liveBuckets·maxEntries) does not
-          if (liveCounts.sizeIs > maxEntries)
-            throw new IllegalArgumentException(
-              s"windowed topk over $table.$groupCol: live window holds " +
-                s"${liveCounts.size} groups (> $maxEntries) — the key is " +
-                "data, not a dimension")
-          val liveN = liveCounts.valuesIterator.sum
-          val entries = liveCounts.filter(_._2 >= threshold)
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "topk",
-            graft.sketch.GroupedHll.pack(entries.toSeq.map { case (g, n) =>
-              g -> leBytes(n)
-            }),
-            s"""{"group_by":"$groupCol","agg":"count","threshold":$threshold,""" +
-              s""""entries":${entries.size},"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "topk_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map { case (bkt, gs) =>
-              Option(bkt.toString) -> graft.sketch.GroupedHll.pack(
-                gs.toSeq.map { case (g, n) => g -> leBytes(n) })
-            }),
-            s"""{"maxus":$maxUs,"threshold":$threshold,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+    def bounded(gs: Map[Option[String], Long], where: String) =
+      if (gs.sizeIs > maxEntries)
+        throw new IllegalArgumentException(
+          s"windowed topk over $table.$groupCol: $where holds " +
+            s"${gs.size} groups (> $maxEntries) — the key is data, " +
+            "not a dimension")
+    type S = Map[Option[String], Long]
+    Fold.windowed(values, catalog, table, groupCol, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(Fold.Windowed[S]("topk_windowed",
+      s""""threshold":$threshold,""", Map.empty,
+      bucketed = timed => timed
+        .groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
+          timed.schema.fieldNames.toSeq).as("g"))
+        .agg(count(lit(1)).as("n"))
+        .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+          val gs = rs.map(r =>
+            Option(r.getAs[String]("g")) -> r.getAs[Long]("n")).toMap
+          bounded(gs, s"bucket $bkt")
+          bkt -> gs
+        },
+      merge = Fold.union(_, _)(_ + _),
+      rows = _.valuesIterator.sum,
+      encode = gs => GroupedHll.pack(gs.toSeq.map { case (g, n) =>
+        g -> Fold.leLong(n) }),
+      decode = GroupedHll.unpack(_).map { case (g, b) => g -> Fold.le(b) }
+        .toMap,
+      serve = { (live, liveN, batchId) =>
+        // the MERGED live set is the driver-state/serving-blob bound:
+        // per-bucket sets can each pass while their union does not
+        bounded(live, "live window")
+        val entries = live.filter(_._2 >= threshold)
+        Seq(("topk", GroupedHll.pack(entries.toSeq.map { case (g, n) =>
+            g -> Fold.leLong(n) }),
+          s"""{"group_by":"$groupCol","agg":"count","threshold":$threshold,""" +
+            s""""entries":${entries.size},"rows":$liveN,"last_batch":$batchId}"""))
+      }))
   }
+
 
   // ---------------------------------------------------------------
   // HDR (relative-error percentile / range serves over the live
@@ -732,122 +465,60 @@ object WindowedSketches {
 
   /** Streaming WINDOWED HDR maintenance: one log-linear sketch (+
     * per-(sign, binade, sub-bucket) decimal-sum rider) per EVENT-TIME
-    * bucket, watermark expiry, live buckets re-merged into the serving
-    * "hdr" + "hdrsum" blobs — the engine's relative-error percentile
-    * and range serves (q144/q146 family) then answer OVER THE LIVE
-    * WINDOW with no scan. The log grid is GLOBAL (the real line's
-    * binades), so per-bucket counts and BigInt sums add exactly and
-    * expiry subtracts exactly (the q185 rule) with no grid to declare
-    * up front — the advantage over the equi-width windowed form. One
-    * distributed (bucket, sg, e, s) aggregate per micro-batch
-    * (`SketchOps.hdrBucketedAggregate` — the batch builder's chain
-    * keyed by event bucket); infinities and decimal overflow refuse
-    * loudly. Both serving blobs stamp the same `last_batch`
-    * (riderInSync); state: "hdr_windowed", payloads
-    * pack("c" → rows, "h" → hdr, "s" → sums pack), stamped LAST.
+    * bucket, live buckets re-merged into the serving "hdr" + "hdrsum"
+    * blobs — the engine's relative-error percentile and range serves
+    * (q144/q146 family) then answer OVER THE LIVE WINDOW with no scan.
+    * The log grid is GLOBAL (the real line's binades), so per-bucket
+    * counts and BigInt sums add exactly and expiry subtracts exactly
+    * (the q185 rule) with no grid to declare up front — the advantage
+    * over the equi-width windowed form. One distributed (bucket, sg, e,
+    * s) aggregate per micro-batch (`SketchOps.hdrBucketedAggregate` —
+    * the batch builder's chain keyed by event bucket); infinities and
+    * decimal overflow refuse loudly. State: "hdr_windowed", payloads
+    * pack("c" → rows, "h" → hdr, "s" → sums pack).
     * Batch twin: [[windowedHdrPercentile]] (q190).
     */
   def maintainHdrWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, column: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       m: Int = 32, checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, column, "hdr_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val withBkt = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-          val batchAgg = graft.sketch.SketchOps.hdrBucketedAggregate(
-            withBkt, column, "graft_bucket", m,
-            s"windowed hdr over $table.$column")
-          val batchCounts = withBkt.groupBy(col("graft_bucket"))
-            .agg(count(lit(1)).as("c")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          type Sums = Map[String, BigInt]
-          def decode(payload: Array[Byte])
-              : (Long, graft.sketch.HdrSketch, Sums) = {
-            val parts = graft.sketch.GroupedHll.unpack(payload)
-              .collect { case (Some(k), v) => k -> v }.toMap
-            (java.nio.ByteBuffer.wrap(parts("c")).getLong,
-              graft.sketch.HdrSketch.deserialize(parts("h")),
-              graft.sketch.GroupedHll.unpack(parts("s"))
-                .collect { case (Some(k), b) => k -> BigInt(b) }.toMap)
-          }
-          val prev: Map[Long, (Long, graft.sketch.HdrSketch, Sums)] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(k), payload) => k.toLong -> decode(payload) }
-              .toMap
-          val allBkts = prev.keySet ++ batchCounts.keySet ++ batchAgg.keySet
-          val merged = allBkts.iterator.map { bkt =>
-            val (pc, psk, psums) = prev.getOrElse(bkt,
-              (0L, graft.sketch.HdrSketch(m, 0L, Vector.empty, Vector.empty),
-                Map.empty: Sums))
-            val (sk, sums) = batchAgg.get(bkt) match {
-              case Some((bsk, bsums)) =>
-                val bm = bsums.map { case ((sg, e, s), v) =>
-                  s"$sg:$e:$s" -> v
-                }.toMap
-                (psk.merge(bsk),
-                  (psums.keySet ++ bm.keySet).iterator.map(k =>
-                    k -> (psums.getOrElse(k, BigInt(0)) +
-                      bm.getOrElse(k, BigInt(0)))).toMap)
-              case None => (psk, psums)
-            }
-            bkt -> (pc + batchCounts.getOrElse(bkt, 0L), sk, sums)
+    type S = (Long, HdrSketch, Map[String, BigInt])
+    def sumsPack(sums: Map[String, BigInt]) =
+      GroupedHll.pack(sums.toSeq.map { case (k, v) => Option(k) -> v.toByteArray })
+    Fold.windowed(values, catalog, table, column, tsCol, windowMicros,
+      bucketMicros, checkpointLocation)(Fold.Windowed[S]("hdr_windowed",
+      s""""m":$m,""", (0L, HdrSketch(m, 0L, Vector.empty, Vector.empty), Map.empty),
+      bucketed = { timed =>
+        val agg = SketchOps.hdrBucketedAggregate(timed, column, "graft_bucket",
+          m, s"windowed hdr over $table.$column")
+        timed.groupBy(col("graft_bucket")).agg(count(lit(1)).as("c"))
+          .collect().map { r =>
+            val (sk, sums) = agg.getOrElse(r.getLong(0),
+              (HdrSketch(m, 0L, Vector.empty, Vector.empty), Nil))
+            r.getLong(0) -> (r.getLong(1), sk,
+              sums.map { case ((sg, e, s), v) => s"$sg:$e:$s" -> v }.toMap)
           }.toMap
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val serving = live.values.map(_._2)
-            .foldLeft(graft.sketch.HdrSketch(m, 0L, Vector.empty,
-              Vector.empty))(_ merge _)
-          val liveSums = live.values.map(_._3)
-            .foldLeft(Map.empty[String, BigInt]) { (acc, s) =>
-              (acc.keySet ++ s.keySet).iterator.map(k =>
-                k -> (acc.getOrElse(k, BigInt(0)) +
-                  s.getOrElse(k, BigInt(0)))).toMap
-            }
-          val liveN = live.valuesIterator.map(_._1).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hdr", serving.serialize,
-            s"""{"m":$m,"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hdrsum",
-            graft.sketch.GroupedHll.pack(liveSums.toSeq.map {
-              case (k, v) => Option(k) -> v.toByteArray
-            }),
-            s"""{"m":$m,"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "hdr_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, sk, sums)) =>
-                val cb = java.nio.ByteBuffer.allocate(8).putLong(c).array()
-                Option(bkt.toString) -> graft.sketch.GroupedHll.pack(Seq(
-                  Option("c") -> cb,
-                  Option("h") -> sk.serialize,
-                  Option("s") -> graft.sketch.GroupedHll.pack(
-                    sums.toSeq.map { case (k, v) =>
-                      Option(k) -> v.toByteArray
-                    })))
-            }),
-            s"""{"maxus":$maxUs,"m":$m,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .pipe(w => StreamCkpt.start(w, checkpointLocation))
+      },
+      merge = { case ((c1, h1, s1), (c2, h2, s2)) =>
+        (c1 + c2, h1.merge(h2), Fold.union(s1, s2)(_ + _)) },
+      rows = _._1,
+      encode = { case (c, sk, sums) =>
+        Fold.partsOf("c" -> Fold.beLong(c), "h" -> sk.serialize,
+          "s" -> sumsPack(sums))
+      },
+      decode = { payload =>
+        val ps = Fold.parts(payload)
+        (java.nio.ByteBuffer.wrap(ps("c")).getLong,
+          HdrSketch.deserialize(ps("h")),
+          GroupedHll.unpack(ps("s")).collect { case (Some(k), b) =>
+            k -> BigInt(b) }.toMap)
+      },
+      serve = { case ((_, sk, sums), liveN, batchId) =>
+        val params = s"""{"m":$m,"rows":$liveN,"last_batch":$batchId}"""
+        Seq(("hdr", sk.serialize, params), ("hdrsum", sumsPack(sums), params))
+      }))
   }
 
   /** WINDOWED HDR percentile — the batch twin of [[maintainHdrWindowed]]
@@ -901,106 +572,53 @@ object WindowedSketches {
 
   /** Streaming WINDOWED grouped-HLL maintenance: one per-group HLL set
     * per EVENT-TIME bucket ([rows i64 BE][hll] payloads inside a
-    * per-bucket pack), watermark expiry, live buckets re-merged
-    * (register max per group — idempotent, the q184 rule) into the
-    * serving "hll_grouped" blob, so
-    * `QueryEngine.storedGroupedSketchAnswer` serves
+    * per-bucket pack), live buckets re-merged (register max per group
+    * — idempotent, the q184 rule) into the serving "hll_grouped" blob,
+    * so `QueryEngine.storedGroupedSketchAnswer` serves
     * `SELECT g, count(DISTINCT x) ... GROUP BY g` OVER THE LIVE
     * WINDOW with no scan (and the distinct-keys/distinct-count serves
     * read the LIVE group set). The ride-along per-(bucket, group) row
     * counts are additive (they produce the live-row table stats and
-    * the blob's freshness `rows`), so the `last_batch` guard is
-    * required even though register merge is replay-idempotent. Merged
-    * live groups bounded by MaxHllGroups. Batch twin: q191's
-    * per-group deterministic register chain.
+    * the blob's freshness `rows`), so the rider is guarded even though
+    * register merge is replay-idempotent. Batch twin: q191's per-group
+    * deterministic register chain.
     */
   def maintainGroupedHllWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], valueCol: String, tsCol: String,
       windowMicros: Long, bucketMicros: Long,
-      b: Int = 12): org.apache.spark.sql.streaming.StreamingQuery = {
+      b: Int = 12): StreamingQuery = {
     require(groupCols.nonEmpty, "at least one group column required")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
     val groupCol = groupCols.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, valueCol, "hllg_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val rows = batch.filter(col(tsCol).isNotNull)
-            .groupBy(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              graft.sketch.SketchOps.groupKeyExpr(groupCols,
-                batch.schema.fieldNames.toSeq).as("g"))
-            .agg(graft.sketch.Hll.sketchAgg(col(valueCol).cast("string"), b)
-              .as("s"), count(lit(1)).as("n"))
-            .collect()
-          val batchBuckets: Map[Long, Map[Option[String], (Long, Array[Byte])]] =
-            rows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-              bkt -> rs.map(r => Option(r.getAs[String]("g")) ->
-                (r.getAs[Long]("n"), r.getAs[Array[Byte]]("s"))).toMap
-            }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          val prev: Map[Long, Map[Option[String], (Long, Array[Byte])]] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(bk), payload) =>
-                bk.toLong -> graft.sketch.GroupedHll.unpack(payload)
-                  .map { case (g, pb) => g -> splitCounted(pb) }.toMap
-              }.toMap
-          def mergeGroupMaps(
-              a: Map[Option[String], (Long, Array[Byte])],
-              c: Map[Option[String], (Long, Array[Byte])])
-              : Map[Option[String], (Long, Array[Byte])] =
-            (a.keySet ++ c.keySet).iterator.map { g =>
-              g -> ((a.get(g), c.get(g)) match {
-                case (Some((n1, s1)), Some((n2, s2))) => (n1 + n2,
-                  graft.sketch.Hll.deserialize(s1)
-                    .merge(graft.sketch.Hll.deserialize(s2)).serialize)
-                case (Some(x), None) => x
-                case (None, Some(y)) => y
-                case _ => sys.error("unreachable")
-              })
-            }.toMap
-          val merged = batchBuckets.foldLeft(prev) { case (acc, (bkt, gs)) =>
-            acc.updated(bkt, mergeGroupMaps(
-              acc.getOrElse(bkt, Map.empty), gs))
-          }
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val liveGroups = live.values
-            .foldLeft(Map.empty[Option[String], (Long, Array[Byte])])(
-              mergeGroupMaps)
-          if (liveGroups.sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-            throw new IllegalArgumentException(
-              s"windowed grouped HLL over $table.$groupCol: live group " +
-                s"count exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-          val liveN = liveGroups.valuesIterator.map(_._1).sum
-          catalog.upsertTableStats(table, liveN)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "hll_grouped",
-            graft.sketch.GroupedHll.serialize(liveGroups.toSeq.map {
-              case (g, (_, sk)) => g -> sk
-            }),
-            s"""{"b":$b,"group_by":"$groupCol","groups":${liveGroups.size},"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "hllg_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map { case (bkt, gs) =>
-              Option(bkt.toString) -> graft.sketch.GroupedHll.pack(
-                gs.toSeq.map { case (g, (n, sk)) =>
-                  g -> joinCounted(n, sk)
-                })
-            }),
-            s"""{"maxus":$maxUs,"b":$b,"group_by":"$groupCol","last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .start()
+    type S = Map[Option[String], (Long, Array[Byte])]
+    Fold.windowed(values, catalog, table, valueCol, tsCol, windowMicros,
+      bucketMicros)(Fold.Windowed[S]("hllg_windowed",
+      s""""b":$b,"group_by":"$groupCol",""", Map.empty,
+      bucketed = timed => timed
+        .groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
+          timed.schema.fieldNames.toSeq).as("g"))
+        .agg(graft.sketch.Hll.sketchAgg(col(valueCol).cast("string"), b)
+          .as("s"), count(lit(1)).as("n"))
+        .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+          bkt -> rs.map(r => Option(r.getAs[String]("g")) ->
+            (r.getAs[Long]("n"), r.getAs[Array[Byte]]("s"))).toMap
+        },
+      merge = Fold.union(_, _) { case ((n1, s1), (n2, s2)) =>
+        (n1 + n2, graft.sketch.Hll.deserialize(s1)
+          .merge(graft.sketch.Hll.deserialize(s2)).serialize)
+      },
+      rows = _.valuesIterator.map(_._1).sum,
+      encode = gs => GroupedHll.pack(gs.toSeq.map { case (g, (n, sk)) =>
+        g -> Fold.counted(n, sk) }),
+      decode = GroupedHll.unpack(_).map { case (g, p) =>
+        g -> Fold.uncounted(p) }.toMap,
+      serve = { (live, liveN, batchId) =>
+        Fold.capGroups(live.size,
+          s"windowed grouped HLL over $table.$groupCol: live")
+        Seq(("hll_grouped", GroupedHll.serialize(live.toSeq.map {
+            case (g, (_, sk)) => g -> sk }),
+          s"""{"b":$b,"group_by":"$groupCol","groups":${live.size},"rows":$liveN,"last_batch":$batchId}"""))
+      }))
   }
 
   // ---------------------------------------------------------------
@@ -1011,151 +629,79 @@ object WindowedSketches {
   /** Streaming WINDOWED grouped-HDR maintenance: per-(event-time
     * bucket, group) log-linear sketches + per-(group, log-bucket)
     * decimal-sum riders (`SketchOps.hdrGroupedBucketedAggregate` —
-    * ONE distributed pass per micro-batch), watermark expiry, live
-    * buckets re-merged into the serving "hdr_grouped" +
-    * "hdrsum_grouped" blobs, so the engine's per-group percentile /
-    * range / SUM/AVG serves (q150 family) answer OVER THE LIVE WINDOW
-    * with no scan. The log grid is GLOBAL, so per-group binade counts
-    * and BigInt sums add exactly across buckets and expiry subtracts
-    * exactly — no per-group grid to declare (the advantage over a
-    * windowed equi-width grouped histogram, which this form therefore
-    * supersedes for TTL workloads). All-NULL-value groups are still
-    * groups (empty hdr payload, the batch builder's contract);
-    * per-group sum overflow poisons that group's rider (the "!"
-    * sentinel, absorbing in the merge). Additive counts ⇒
-    * `last_batch` guard on "hdrg_windowed", stamped LAST; both
-    * serving blobs stamp the same id (riderInSync).
+    * ONE distributed pass per micro-batch), live buckets re-merged
+    * into the serving "hdr_grouped" + "hdrsum_grouped" blobs, so the
+    * engine's per-group percentile / range / SUM/AVG serves (q150
+    * family) answer OVER THE LIVE WINDOW with no scan. The log grid is
+    * GLOBAL, so per-group binade counts and BigInt sums add exactly
+    * across buckets and expiry subtracts exactly — no per-group grid
+    * to declare (the advantage over a windowed equi-width grouped
+    * histogram, which this form therefore supersedes for TTL
+    * workloads). All-NULL-value groups are still groups (empty hdr
+    * payload, the batch builder's contract); per-group sum overflow
+    * poisons that group's rider (the "!" sentinel, absorbing in the
+    * merge). State: "hdrg_windowed".
     */
   def maintainGroupedHdrWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String,
       groupCols: Seq[String], valueCol: String, tsCol: String,
       windowMicros: Long, bucketMicros: Long,
-      m: Int = 32): org.apache.spark.sql.streaming.StreamingQuery = {
+      m: Int = 32): StreamingQuery = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
     require(groupCols.nonEmpty, "at least one group column required")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
     val groupCol = groupCols.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rider = catalog.getSketch(table, valueCol, "hdrg_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val withBkt = batch.filter(col(tsCol).isNotNull)
-            .withColumn("graft_bucket",
-              expr(s"unix_micros($tsCol) div $bucketMicros"))
-          // sketches+riders for groups WITH values ...
-          val batchAgg = graft.sketch.SketchOps.hdrGroupedBucketedAggregate(
-            withBkt, groupCols, valueCol, "graft_bucket", m,
-            s"windowed grouped hdr over $table.$valueCol")
-          // ... and row counts for ALL groups (all-NULL ones included)
-          val batchCounts: Map[Long, Map[Option[String], Long]] = withBkt
-            .groupBy(col("graft_bucket"),
-              graft.sketch.SketchOps.groupKeyExpr(groupCols,
-                withBkt.schema.fieldNames.toSeq).as("g"))
-            .agg(count(lit(1)).as("n"))
-            .collect()
-            .groupBy(_.getLong(0)).map { case (bkt, rs) =>
-              bkt -> rs.map(r =>
-                Option(r.getAs[String]("g")) -> r.getAs[Long]("n")).toMap
-            }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          // per-bucket state: (group -> rows, group -> hdr, group -> sums)
-          type GState = (Map[Option[String], Long],
-            Map[Option[String], Array[Byte]],
-            Map[Option[String], Array[Byte]])
-          def decode(payload: Array[Byte]): GState = {
-            val parts = graft.sketch.GroupedHll.unpack(payload)
-              .collect { case (Some(k), v) => k -> v }.toMap
-            (graft.sketch.GroupedHll.unpack(parts("c"))
-              .map { case (g, cb) =>
-                g -> java.nio.ByteBuffer.wrap(cb).getLong }.toMap,
-              graft.sketch.GroupedHll.unpack(parts("h")).toMap,
-              graft.sketch.GroupedHll.unpack(parts("s")).toMap)
+    type G[V] = Map[Option[String], V]
+    // per bucket: (group -> rows, group -> hdr, group -> sums)
+    type S = (G[Long], G[Array[Byte]], G[Array[Byte]])
+    Fold.windowed(values, catalog, table, valueCol, tsCol, windowMicros,
+      bucketMicros)(Fold.Windowed[S]("hdrg_windowed",
+      s""""m":$m,"group_by":"$groupCol",""", (Map.empty, Map.empty, Map.empty),
+      bucketed = { timed =>
+        // sketches+riders for groups WITH values ...
+        val agg = SketchOps.hdrGroupedBucketedAggregate(timed, groupCols,
+          valueCol, "graft_bucket", m,
+          s"windowed grouped hdr over $table.$valueCol")
+        // ... and row counts for ALL groups (all-NULL ones included)
+        timed.groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
+            timed.schema.fieldNames.toSeq).as("g"))
+          .agg(count(lit(1)).as("n"))
+          .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
+            val a = agg.getOrElse(bkt, Map.empty)
+            bkt -> (rs.map(r =>
+              Option(r.getAs[String]("g")) -> r.getAs[Long]("n")).toMap,
+              a.map { case (g, (h, _)) => g -> h },
+              a.map { case (g, (_, s)) => g -> s })
           }
-          val prev: Map[Long, GState] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(k), payload) => k.toLong -> decode(payload) }
-              .toMap
-          def addMaps[K](a: Map[K, Long], c: Map[K, Long]): Map[K, Long] =
-            (a.keySet ++ c.keySet).iterator.map(k =>
-              k -> (a.getOrElse(k, 0L) + c.getOrElse(k, 0L))).toMap
-          def mergeBytes[K](a: Map[K, Array[Byte]], c: Map[K, Array[Byte]],
-              f: (Array[Byte], Array[Byte]) => Array[Byte])
-              : Map[K, Array[Byte]] =
-            (a.keySet ++ c.keySet).iterator.map { k =>
-              k -> ((a.get(k), c.get(k)) match {
-                case (Some(x), Some(y)) => f(x, y)
-                case (Some(x), None)    => x
-                case (None, Some(y))    => y
-                case _ => sys.error("unreachable")
-              })
-            }.toMap
-          val merged = batchCounts.keySet.union(batchAgg.keySet)
-            .foldLeft(prev) { (acc, bkt) =>
-              val (pc, ph, ps) = acc.getOrElse(bkt,
-                (Map.empty[Option[String], Long],
-                  Map.empty[Option[String], Array[Byte]],
-                  Map.empty[Option[String], Array[Byte]]))
-              val bAgg = batchAgg.getOrElse(bkt, Map.empty)
-              acc.updated(bkt, (
-                addMaps(pc, batchCounts.getOrElse(bkt, Map.empty)),
-                mergeBytes(ph, bAgg.map { case (g, (h, _)) => g -> h },
-                  graft.sketch.HdrSketch.mergeBytes),
-                mergeBytes(ps, bAgg.map { case (g, (_, s)) => g -> s },
-                  graft.sketch.SketchOps.hdrSumMergeBytes)))
-            }
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val liveCounts = live.values.map(_._1)
-            .foldLeft(Map.empty[Option[String], Long])(addMaps)
-          val liveHdr = live.values.map(_._2)
-            .foldLeft(Map.empty[Option[String], Array[Byte]])(
-              mergeBytes(_, _, graft.sketch.HdrSketch.mergeBytes))
-          val liveSums = live.values.map(_._3)
-            .foldLeft(Map.empty[Option[String], Array[Byte]])(
-              mergeBytes(_, _, graft.sketch.SketchOps.hdrSumMergeBytes))
-          if (liveCounts.sizeIs > graft.sketch.SketchOps.MaxHllGroups)
-            throw new IllegalArgumentException(
-              s"windowed grouped hdr over $table.$groupCol: live group " +
-                s"count exceeds ${graft.sketch.SketchOps.MaxHllGroups}")
-          val liveN = liveCounts.valuesIterator.sum
-          catalog.upsertTableStats(table, liveN)
-          // serving blobs mirror the batch builder: hdr_grouped keys
-          // EVERY live group (empty payload for all-NULL groups);
-          // hdrsum_grouped carries only groups with values
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "hdr_grouped",
-            graft.sketch.GroupedHll.pack(liveCounts.keySet.toSeq.map(g =>
-              g -> liveHdr.getOrElse(g, Array.empty[Byte]))),
-            s"""{"m":$m,"group_by":"$groupCol","groups":${liveCounts.size},"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "hdrsum_grouped",
-            graft.sketch.GroupedHll.pack(liveSums.toSeq),
-            s"""{"m":$m,"group_by":"$groupCol","groups":${liveSums.size},"rows":$liveN,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "hdrg_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (cs, hs, ss)) =>
-                def longBytes(v: Long) =
-                  java.nio.ByteBuffer.allocate(8).putLong(v).array()
-                Option(bkt.toString) -> graft.sketch.GroupedHll.pack(Seq(
-                  Option("c") -> graft.sketch.GroupedHll.pack(
-                    cs.toSeq.map { case (g, n) => g -> longBytes(n) }),
-                  Option("h") -> graft.sketch.GroupedHll.pack(hs.toSeq),
-                  Option("s") -> graft.sketch.GroupedHll.pack(ss.toSeq)))
-            }),
-            s"""{"maxus":$maxUs,"m":$m,"group_by":"$groupCol","last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .start()
+      },
+      merge = { case ((c1, h1, s1), (c2, h2, s2)) =>
+        (Fold.union(c1, c2)(_ + _), Fold.union(h1, h2)(HdrSketch.mergeBytes),
+          Fold.union(s1, s2)(SketchOps.hdrSumMergeBytes))
+      },
+      rows = _._1.valuesIterator.sum,
+      encode = { case (cs, hs, ss) =>
+        Fold.partsOf(
+          "c" -> GroupedHll.pack(cs.toSeq.map { case (g, n) =>
+            g -> Fold.beLong(n) }),
+          "h" -> GroupedHll.pack(hs.toSeq), "s" -> GroupedHll.pack(ss.toSeq))
+      },
+      decode = { payload =>
+        val ps = Fold.parts(payload)
+        (GroupedHll.unpack(ps("c")).map { case (g, cb) =>
+            g -> java.nio.ByteBuffer.wrap(cb).getLong }.toMap,
+          GroupedHll.unpack(ps("h")).toMap, GroupedHll.unpack(ps("s")).toMap)
+      },
+      serve = { case ((counts, hdrs, sums), liveN, batchId) =>
+        Fold.capGroups(counts.size,
+          s"windowed grouped hdr over $table.$groupCol: live")
+        // serving blobs mirror the batch builder: hdr_grouped keys
+        // EVERY live group (empty payload for all-NULL groups);
+        // hdrsum_grouped carries only groups with values
+        Seq(("hdr_grouped", GroupedHll.pack(counts.keySet.toSeq.map(g =>
+            g -> hdrs.getOrElse(g, Array.empty[Byte]))),
+          s"""{"m":$m,"group_by":"$groupCol","groups":${counts.size},"rows":$liveN,"last_batch":$batchId}"""),
+          ("hdrsum_grouped", GroupedHll.pack(sums.toSeq),
+          s"""{"m":$m,"group_by":"$groupCol","groups":${sums.size},"rows":$liveN,"last_batch":$batchId}"""))
+      }))
   }
 
   // ---------------------------------------------------------------
@@ -1163,94 +709,46 @@ object WindowedSketches {
   // ---------------------------------------------------------------
 
   /** Streaming WINDOWED AGMS maintenance: one signed-counter sketch
-    * per EVENT-TIME bucket, watermark expiry, live buckets re-merged
-    * (counter addition — exact subtraction on expiry, the q185 rule)
-    * into the serving "agms" blob, so the engine's automatic costed
-    * join-AQP decision reads cardinality evidence for the LIVE WINDOW
-    * — the append-only [[EventStreams.maintainAgmsSketch]] would keep
-    * voting with expired rows' join mass forever. Counters and the
-    * `rows` count are additive ⇒ `last_batch` guard, stamped LAST on
-    * "agms_windowed". Byte parity: the serving blob equals
-    * `SketchOps.createAgms` over exactly the live rows (same 'js:'
-    * tuple hash, same bucket/sign derivation — the spec law).
+    * per EVENT-TIME bucket, live buckets re-merged (counter addition —
+    * exact subtraction on expiry, the q185 rule) into the serving
+    * "agms" blob, so the engine's automatic costed join-AQP decision
+    * reads cardinality evidence for the LIVE WINDOW — the append-only
+    * [[EventStreams.maintainAgmsSketch]] would keep voting with expired
+    * rows' join mass forever. The blob's `rows` is the live count; the
+    * table stats are left alone. State: "agms_windowed". Byte parity:
+    * the serving blob equals `SketchOps.createAgms` over exactly the
+    * live rows (same 'js:' tuple hash, same bucket/sign derivation —
+    * the spec law).
     */
   def maintainAgmsWindowed(values: DataFrame,
       catalog: graft.catalog.MetaCatalog, table: String, keys: Seq[String],
       tsCol: String, windowMicros: Long, bucketMicros: Long,
-      buckets: Int = 1024): org.apache.spark.sql.streaming.StreamingQuery = {
+      buckets: Int = 1024): StreamingQuery = {
     require(keys.nonEmpty, "at least one key column required")
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    val column = keys.mkString(",")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        graft.functions.GraftFunctions.register(s)
-        val rider = catalog.getSketch(table, column, "agms_windowed")
-        val riderParams = rider.map(_.parameters).getOrElse("{}")
-        if (batchId > lastBatchOf(riderParams)) {
-          val keyExpr = graft.plan.SampleRewrite.tupleKeyExpr("js:", keys)
-          val rows = batch.filter(col(tsCol).isNotNull)
-            .select(
-              expr(s"unix_micros($tsCol) div $bucketMicros").as("graft_bucket"),
-              expr(s"graft_h60($keyExpr)").as("h"))
-            .select(col("graft_bucket"),
-              expr(s"cast(h % ${buckets}L as int)").as("bucket"),
-              expr(s"case when (h div ${buckets}L) % 2 = 0 then 1L else -1L end")
-                .as("sgn"))
-            .groupBy(col("graft_bucket"), col("bucket"))
-            .agg(sum(col("sgn")).as("c"), count(lit(1)).as("n"))
-            .collect()
-          val batchState = rows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-            val counters = new Array[Long](buckets)
-            var total = 0L // incl. NULL-key rows: the true batch rowcount
-            rs.foreach { r =>
-              if (!r.isNullAt(1)) counters(r.getInt(1)) = r.getLong(2)
-              total += r.getLong(3)
-            }
-            bkt -> (total, counters)
-          }
-          val maxUs = math.max(prevMaxUsOf(riderParams),
-            batchMaxUs(batch, tsCol))
-          val prev: Map[Long, (Long, Array[Long])] =
-            rider.map(r => graft.sketch.GroupedHll.unpack(r.data)).getOrElse(Nil)
-              .collect { case (Some(k), payload) =>
-                val (c, ab) = splitCounted(payload)
-                k.toLong -> (c, graft.sketch.Agms.deserialize(ab))
-              }.toMap
-          val merged = (prev.keySet ++ batchState.keySet).iterator.map { bkt =>
-            val (pc, pcnt) = prev.getOrElse(bkt, (0L, new Array[Long](buckets)))
-            val (bc, bcnt) = batchState.getOrElse(bkt,
-              (0L, new Array[Long](buckets)))
-            bkt -> (pc + bc, pcnt.zip(bcnt).map { case (x, y) => x + y })
-          }.toMap
-          val live = merged.filter { case (bkt, _) =>
-            liveBucket(bkt, bucketMicros, maxUs, windowMicros)
-          }
-          val liveCounters = live.values.map(_._2)
-            .foldLeft(new Array[Long](buckets))(
-              (a, c) => a.zip(c).map { case (x, y) => x + y })
-          val liveN = live.valuesIterator.map(_._1).sum
-          val enc = if (keys.sizeIs > 1) ""","enc":"j1"""" else ""
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "agms", graft.sketch.Agms.serialize(liveCounters),
-            s"""{"buckets":$buckets,"rows":$liveN,"last_batch":$batchId$enc}""",
-            System.currentTimeMillis()))
-          // replay-guard stamp LAST (crash-safe fold discipline)
-          catalog.upsertSketch(catalog.SketchInfo(table, column,
-            "agms_windowed",
-            graft.sketch.GroupedHll.pack(live.toSeq.map {
-              case (bkt, (c, counters)) =>
-                Option(bkt.toString) ->
-                  joinCounted(c, graft.sketch.Agms.serialize(counters))
-            }),
-            s"""{"maxus":$maxUs,"buckets":$buckets,"last_batch":$batchId}""",
-            System.currentTimeMillis()))
-        }
-        ()
-      }
-      .start()
+    val enc = if (keys.sizeIs > 1) ""","enc":"j1"""" else ""
+    Fold.windowed(values, catalog, table, keys.mkString(","), tsCol,
+      windowMicros, bucketMicros)(Fold.Windowed[(Long, Array[Long])](
+      "agms_windowed", s""""buckets":$buckets,""",
+      (0L, new Array[Long](buckets)),
+      bucketed = timed =>
+        EventStreams.agmsCells(timed, keys, buckets, "graft_bucket")
+          .groupBy(_.getLong(0)).map { case (bkt, rs) =>
+            bkt -> EventStreams.agmsCounters(rs, buckets)
+          },
+      merge = { case ((c1, a1), (c2, a2)) => (c1 + c2, addArrays(a1, a2)) },
+      rows = _._1,
+      encode = { case (c, counters) =>
+        Fold.counted(c, graft.sketch.Agms.serialize(counters)) },
+      decode = { p =>
+        val (c, ab) = Fold.uncounted(p)
+        (c, graft.sketch.Agms.deserialize(ab))
+      },
+      serve = { case ((_, counters), liveN, batchId) =>
+        Seq(("agms", graft.sketch.Agms.serialize(counters),
+          s"""{"buckets":$buckets,"rows":$liveN,"last_batch":$batchId$enc}"""))
+      },
+      tableStats = false))
   }
 
   /** WINDOWED top-k — the batch twin of [[maintainTopKWindowed]]

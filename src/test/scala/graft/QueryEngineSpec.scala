@@ -4135,6 +4135,15 @@ class QueryEngineSpec extends SparkSpec {
     assert(math.abs(row.getDouble(1) - sT) / sT <= 2.0 / 32,
       s"sum ${row.getDouble(1)} vs $sT")
     assert(row.getDouble(2) == row.getDouble(1) / row.getDouble(0))
+    // an EMPTY range sums no rows: NULL, as exact SQL and the
+    // histogram range serve answer — never a served 0.0
+    val rE = eng.query(
+      "SELECT count(*) AS n_est, sum(v) AS s_est " +
+        "FROM hdrr_t WHERE v >= 10 AND v < 5")
+    assert(rE.servedFromCatalog && rE.serveKind.contains("hdr_range"),
+      s"${rE.serveKind}: ${rE.reason}")
+    val e = rE.df.collect().head
+    assert(e.getDouble(0) == 0.0 && e.isNullAt(1), e)
   }
 
   test("a malformed timestamp blob key refuses the serve instead of failing the query") {
