@@ -33,17 +33,24 @@ object Tables {
 
   /** Observed scan parallelism of a table: how many partitions the
     * session's current file-split rules give its parquet scan. Memoized
-    * per (session, dir, table, maxPartitionBytes) — computing it plans a
-    * bare scan once (no job runs); the split rules only change with the
-    * session conf, which the key captures.
+    * per (session, dir, table, split inputs) — computing it plans a bare
+    * scan once (no job runs). The split size is
+    * min(maxPartitionBytes, max(openCostInBytes, bytes / cores)), where
+    * minPartitionNum, else leafNodeDefaultParallelism, else the core
+    * count stands for `cores`, so the key carries each of those.
     */
   private val scanParts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, String), Int]
+    .empty[(SparkSession, String, String, Seq[String]), Int]
   def scanParallelism(spark: SparkSession, sfDir: String, name: String): Int = {
     scanParts.keysIterator.filter(_._1.sparkContext.isStopped)
       .foreach(scanParts.remove)
-    val mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    scanParts.getOrElseUpdate((spark, sfDir, name, mpb),
+    val split = Seq(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"),
+      spark.conf.get("spark.sql.files.openCostInBytes", "4m"),
+      spark.conf.getOption("spark.sql.files.minPartitionNum").getOrElse(""),
+      spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").getOrElse(""),
+      spark.sparkContext.defaultParallelism.toString)
+    scanParts.getOrElseUpdate((spark, sfDir, name, split),
       load(spark, sfDir, name).queryExecution.toRdd.getNumPartitions)
   }
 

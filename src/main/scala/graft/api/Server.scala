@@ -28,18 +28,37 @@ import graft.sketch.SketchOps
   * Errors follow the reference: 400 {"error": msg} for bad arguments,
   * 500 {"error": msg} on execution failure, 404 {"error": "Not found"}.
   *
-  * Serving is driver-side by design — the server hands each request to
-  * the engine, which executes distributed Spark jobs; only the final
-  * (limited) result rows are collected, exactly like the reference
-  * materializes rows for Flask.
+  * Requests run on a fixed pool of daemon threads, one per core of the
+  * session (`local[N]` gives N), so concurrent clients are served side
+  * by side instead of queueing on the JDK's single dispatcher thread.
+  * The engine is safe to call this way: its parse cache is a locked
+  * LRU, its memos are TrieMaps, catalog writes are file-locked
+  * read-merge-writes, and the history and advisor writers are
+  * synchronized. Each request hands its query to the engine; a
+  * catalog-served answer is built on the driver and collects without a
+  * Spark job, anything else runs as Spark jobs, and only the final
+  * (row-capped) result is collected, as the reference materializes
+  * rows for Flask. `stop()` shuts the pool down.
   */
 final class Server(val engine: QueryEngine, port: Int = 0) {
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(null) // dispatcher thread; Spark does the parallel work
 
   def boundPort: Int = server.getAddress.getPort
+
+  // the request pool: daemon threads, so a server that is never
+  // stopped cannot keep its JVM alive
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, engine.spark.sparkContext.defaultParallelism), (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-$boundPort-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(pool)
   def start(): Unit = server.start()
   def stop(): Unit = {
     // stop registered TTL maintainers with the server — a streaming
@@ -51,6 +70,9 @@ final class Server(val engine: QueryEngine, port: Int = 0) {
     // clean exit loses nothing, the 1 s window only bounds crash loss
     engine.sketchAdvisor.flush()
     server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow()
   }
 
   private def spark: SparkSession = engine.spark
@@ -115,7 +137,7 @@ final class Server(val engine: QueryEngine, port: Int = 0) {
             maxRelError = req("max_rel_error").flatMap(_.num).getOrElse(0.05),
             preferExact = req("prefer_exact").flatMap(_.bool).getOrElse(false),
             useMl = req("use_ml_optimization").flatMap(_.bool).getOrElse(false),
-            measureExact = req("use_ml_optimization").flatMap(_.bool).getOrElse(false),
+            measureExact = req("measure_exact").flatMap(_.bool).getOrElse(false),
             approximateJoins = req("approximate_joins").flatMap(_.bool).getOrElse(false),
             autoCostedJoins = req("auto_costed_joins").flatMap(_.bool).getOrElse(true))
           val r = engine.query(sql, opts)

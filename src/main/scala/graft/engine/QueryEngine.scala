@@ -140,6 +140,17 @@ final class QueryEngine(
       : Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, QueryFeatures)] =
     parseCache.synchronized(Option(parseCache.get(sql)))
 
+  /** A one-row answer of literal columns on a driver-local relation.
+    * Catalyst's ConvertToLocalRelation folds the projection (and any
+    * Filter or Limit above it) into a LocalRelation, so the answer
+    * collects with no Spark job; the same select over `spark.range(1)`
+    * starts one per collect.
+    */
+  private[engine] def oneRow(cols: org.apache.spark.sql.Column*): DataFrame =
+    org.apache.spark.sql.GraftPlanExec.ofRows(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(Nil,
+        Seq(org.apache.spark.sql.catalyst.InternalRow.empty))).select(cols: _*)
+
   def query(sql: String, opts: Options = Options()): AqeResult = {
     val trace = Vector.newBuilder[ServeStep]
     val r = dispatch(sql, opts, trace)
@@ -216,16 +227,22 @@ final class QueryEngine(
     // the bijective cast), so the DataFrame sort is the source type's
     // own order. Other key types refuse (the serves refuse them too).
     // Refused peels leave `parsed` untouched.
+    // Each table's schema resolves at most once per dispatch, however
+    // many sort keys the peel checks against it.
+    val schemas = scala.collection.mutable.Map
+      .empty[String, Option[org.apache.spark.sql.types.StructType]]
+    def schemaOf(t: String) =
+      schemas.getOrElseUpdate(t, scala.util.Try(spark.table(t).schema).toOption)
     def peel(tables: Seq[String]) = graft.plan.PostAggregate.peel(parsed,
       keySortable = c => tables.exists(t =>
-        scala.util.Try(spark.table(t).schema.fields.exists { f =>
+        schemaOf(t).exists(_.fields.exists { f =>
           import org.apache.spark.sql.types._
           f.name.equalsIgnoreCase(c) && (f.dataType match {
             case StringType | ByteType | ShortType | IntegerType |
                 LongType | DateType | TimestampType => true
             case _ => false
           })
-        }).getOrElse(false)))
+        })))
 
     if (opts.preferExact)
       return finish(exact("exact execution (user preference)"), sql, features, opts)

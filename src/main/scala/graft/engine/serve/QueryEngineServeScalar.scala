@@ -329,7 +329,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
             v.map(lit(_)).getOrElse(lit(null)
               .cast(org.apache.spark.sql.types.DoubleType)).as(n)
           }
-          Some((spark.range(1).select(cols: _*), vals.map(_._3).max))
+          Some((oneRow(cols: _*), vals.map(_._3).max))
         } else None
       case _ => None
     }
@@ -443,7 +443,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
           case _: AvgOut => cntRel + sumRel
           case _: PctOut => h.valueErr + cntRel
         }.foldLeft(0.0)(math.max)
-        Some((spark.range(1).select(cols: _*), err))
+        Some((oneRow(cols: _*), err))
       case _ => None
     }
   }
@@ -903,7 +903,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
             case _: AvgOut => cntRel + sumRel
             case _: PctOut => bucketTerm + cntRel
           }.foldLeft(0.0)(math.max)
-          Some((spark.range(1).select(cols: _*), err))
+          Some((oneRow(cols: _*), err))
         }
       case _ => None
     }
@@ -1008,7 +1008,7 @@ private[engine] trait QueryEngineServeScalar { self: QueryEngine =>
             lit(rows.get).as(o.asInstanceOf[Alias].name)
           case _ => return None
         }
-        Some(spark.range(1).select(cols: _*))
+        Some(oneRow(cols: _*))
       case _ => None
     }
   }

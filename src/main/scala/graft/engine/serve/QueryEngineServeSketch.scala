@@ -332,7 +332,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
         }
         if (answered.nonEmpty && answered.forall(_.isDefined)) {
           val cols = answered.flatten.map { case (n, v) => lit(v).as(n) }
-          Some(spark.range(1).select(cols: _*))
+          Some(oneRow(cols: _*))
         } else None
       case _ => None
     }
@@ -598,7 +598,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
           case (false, false) => c.asc_nulls_last
         }
       }
-      df = df.orderBy(cols: _*)
+      df = PostAggregate.orderLocal(df, cols)
     }
     sh.limit.foreach(n => df = df.limit(n))
     val inflated =
@@ -969,7 +969,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
                     val cms = graft.sketch.Cms.deserialize(s.data)
                     val est = keys.map(cms.estimateString).sum
                     val cols = outs.map(o => lit(est).as(o.name))
-                    (spark.range(1).select(cols: _*), keys.size * eps)
+                    (oneRow(cols: _*), keys.size * eps)
                   }
               }
           case many =>
@@ -1000,7 +1000,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
                     val est = tuples.map(t => cms.estimateString(
                       graft.sketch.SketchOps.jsonTupleKey(t))).sum
                     val cols = outs.map(o => lit(est).as(o.name))
-                    (spark.range(1).select(cols: _*),
+                    (oneRow(cols: _*),
                       math.max(1, tuples.size) * eps)
                   }
               }
@@ -1130,7 +1130,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
       val note = Seq(liveWindowNoteFor(lt, lc, "kmv_windowed"),
         liveWindowNoteFor(rt, rc, "kmv_windowed"))
         .find(_.nonEmpty).getOrElse("")
-      (spark.range(1).select(lit(est).as(name)), err, op, hint, note)
+      (oneRow(lit(est).as(name)), err, op, hint, note)
     }
   }
 
@@ -1162,7 +1162,7 @@ private[engine] trait QueryEngineServeSketch { self: QueryEngine =>
         }
         if (answered.nonEmpty && answered.forall(_.isDefined)) {
           val cols = answered.flatten.map { case (n, v) => lit(v).as(n) }
-          Some(spark.range(1).select(cols: _*))
+          Some(oneRow(cols: _*))
         } else None
       case _ => None
     }

@@ -46,9 +46,30 @@ object PostAggregate {
     def apply(df: DataFrame): DataFrame = {
       var out = df
       having.foreach(h => out = out.where(h))
-      if (order.nonEmpty) out = out.orderBy(order: _*)
+      if (order.nonEmpty) out = orderLocal(out, order)
       limit.foreach(n => out = out.limit(n))
       out
+    }
+  }
+
+  /** `df.orderBy(order)` for an answer whose rows already sit on the
+    * driver. The sort is resolved by the DataFrame's own analyzer and
+    * its rows are ordered with Catalyst's `InterpretedOrdering` (a
+    * stable sort), so the result is again a `LocalRelation` and
+    * collects without a Spark job; a planned global sort would start
+    * one even over a handful of rows. A `df` that does not optimize to
+    * a `LocalRelation` keeps the planned sort.
+    */
+  def orderLocal(df: DataFrame, order: Seq[Column]): DataFrame = {
+    val sorted = df.orderBy(order: _*)
+    (sorted.queryExecution.analyzed, df.queryExecution.optimizedPlan) match {
+      case (Sort(so, true, child, _), LocalRelation(out, rows, false, _))
+          if out.map(_.dataType) == child.output.map(_.dataType) =>
+        val ordering = new InterpretedOrdering(
+          so.map(BindReferences.bindReference(_, child.output)))
+        org.apache.spark.sql.GraftPlanExec.ofRows(df.sparkSession,
+          LocalRelation(child.output, rows.sorted(ordering)))
+      case _ => sorted
     }
   }
 

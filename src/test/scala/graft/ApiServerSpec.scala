@@ -610,9 +610,10 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("GET /ml/stats reflects measured queries") {
-    // measureExact=true (via use_ml_optimization) appends to history
+    // measure_exact appends a measured record to history
     http("POST", "/query", Some(
-      """{"sql": "SELECT count(*) AS n FROM orders", "use_ml_optimization": true}"""))
+      """{"sql": "SELECT count(*) AS n FROM orders", "use_ml_optimization": true,
+         "measure_exact": true}"""))
     val (code, body) = http("GET", "/ml/stats")
     assert(code == 200)
     val v = parsed(body)
@@ -916,5 +917,70 @@ class ApiServerSpec extends SparkSpec {
     assert(Json.parse("{bad}").isLeft)
     assert(Json.parse("""{"a": 1} trailing""").isLeft)
     assert(Json.parse("""{"a": }""").isLeft)
+  }
+
+  test("POST /query: use_ml_optimization alone measures nothing; measure_exact appends a history record") {
+    val sql = "SELECT count(*) AS n FROM nation"
+    val before = engine.history.all.size
+    val (c1, b1) = http("POST", "/query", Some(
+      s"""{"sql": "$sql", "use_ml_optimization": true}"""))
+    assert(c1 == 200, b1)
+    assert(engine.history.all.size == before, "use_ml_optimization ran an exact measurement")
+    val (c2, b2) = http("POST", "/query", Some(
+      s"""{"sql": "$sql", "use_ml_optimization": true, "measure_exact": true}"""))
+    assert(c2 == 200, b2)
+    assert(engine.history.all.size == before + 1)
+  }
+
+  test("concurrent POST /query over four connections answers as sequential requests do; stop() ends the pool") {
+    import java.util.concurrent.{Callable, Executors}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.expr
+    spark.range(0, 4000).select(
+      expr("concat('g', id % 4)").as("g"), expr("cast(id % 100 as double)").as("v"),
+      expr("CASE WHEN id % 2 = 0 THEN id % 10 ELSE id END").as("p"))
+      .createOrReplaceTempView("cc_t")
+    import graft.sketch.SketchOps
+    SketchOps.createHistogram(spark, engine.catalog, "cc_t", "v", 64)
+    SketchOps.createGroupedHistogram(spark, engine.catalog, "cc_t", Seq("g"), "v", 64)
+    SketchOps.createTopK(spark, engine.catalog, "cc_t", Seq("p"), 100)
+    val s = new Server(engine)
+    s.start()
+    var stopped = false
+    def req(sql: String, exact: Boolean = false) =
+      s"""{"sql": "$sql", "prefer_exact": $exact}"""
+    val requests = Seq(
+      req("SELECT min(v) AS lo, max(v) AS hi, sum(v) AS s, count(v) AS n FROM cc_t"),
+      req("SELECT g, percentile(v, 0.5) AS p50 FROM cc_t GROUP BY g"),
+      req("SELECT g FROM cc_t GROUP BY g ORDER BY g DESC"),
+      req("SELECT p, count(*) AS c FROM cc_t GROUP BY p ORDER BY c DESC, p LIMIT 3"),
+      req("SELECT g, count(*) AS n, sum(v) AS s FROM cc_t GROUP BY g ORDER BY s DESC LIMIT 2"),
+      req("SELECT g, count(*) AS n FROM cc_t GROUP BY g ORDER BY g", exact = true),
+      req("SELECT n_name FROM nation ORDER BY n_name LIMIT 5", exact = true),
+      req("SELECT count(*) AS n FROM nation"))
+    try {
+      val sequential = requests.map(b => httpAt(s.boundPort, "POST", "/query", Some(b)))
+      sequential.foreach { case (c, b) => assert(c == 200, b) }
+      assert(sequential.take(5).forall { case (_, b) =>
+        parsed(b)("plan").flatMap(_("serve")).flatMap(_.str).nonEmpty }, sequential)
+      val clients = Executors.newFixedThreadPool(4)
+      val burst = Seq.fill(3)(requests.indices).flatten
+      val answers = try burst.map(i => clients.submit(new Callable[(Int, (Int, String))] {
+        def call() = (i, httpAt(s.boundPort, "POST", "/query", Some(requests(i))))
+      })).map(_.get()) finally clients.shutdown()
+      assert(answers.size >= 16)
+      answers.foreach { case (i, got) =>
+        assert(got == sequential(i), s"request $i: ${requests(i)}")
+      }
+      val pool = Thread.getAllStackTraces.keySet.asScala.toSeq
+        .filter(_.getName.startsWith(s"graft-http-${s.boundPort}-"))
+      assert(pool.nonEmpty && pool.size <= spark.sparkContext.defaultParallelism,
+        pool.map(_.getName))
+      assert(pool.forall(_.isDaemon))
+      s.stop()
+      stopped = true
+      pool.foreach(_.join(10000))
+      assert(pool.forall(!_.isAlive), pool.filter(_.isAlive).map(_.getName))
+    } finally if (!stopped) s.stop()
   }
 }

@@ -73,4 +73,20 @@ class LayoutSpec extends SparkSpec {
       partitionsListed(full) == days.toInt,
       s"pruned=${partitionsListed(pruned)} full=${partitionsListed(full)} days=$days")
   }
+
+  test("scanParallelism recomputes when openCostInBytes changes mid-session") {
+    val dir = Files.createTempDirectory("graft-split").toString
+    spark.range(0, 4000).repartition(8).write.parquet(s"$dir/t.parquet")
+    def planned = Tables.load(spark, dir, "t").queryExecution.toRdd.getNumPartitions
+    val before = Tables.scanParallelism(spark, dir, "t")
+    assert(before == planned, s"before=$before planned=$planned")
+    // an open cost above maxPartitionBytes gives every file its own split
+    spark.conf.set("spark.sql.files.openCostInBytes", "256m")
+    try {
+      val after = Tables.scanParallelism(spark, dir, "t")
+      assert(after == planned && after == 8 && after != before,
+        s"before=$before after=$after planned=$planned")
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert(Tables.scanParallelism(spark, dir, "t") == before)
+  }
 }

@@ -4471,4 +4471,94 @@ class QueryEngineSpec extends SparkSpec {
     assert(rH.serveKind.contains("hdr"), rH.reason)
     assert(rH.trace.map(s => s.family -> s.outcome).contains("histogram" -> "no match"))
   }
+
+  test("catalog-served answers collect without a Spark job; star serves read only their dimension inside query") {
+    import org.apache.spark.sql.functions.expr
+    val cat = new MetaCatalog(Files.createTempDirectory("graft-zero-job").toString)
+    val eng = new QueryEngine(spark, cat)
+    spark.range(0, 4000).select(
+      expr("concat('g', id % 4)").as("g"), expr("concat('h', id % 3)").as("h"),
+      expr("cast(id % 100 as double)").as("v"),
+      expr("cast(id % 200 + 1 as double)").as("w"),
+      expr("id % 50").as("k"),
+      expr("CASE WHEN id % 2 = 0 THEN id % 10 ELSE id END").as("p"),
+      expr("id % 20").as("d"), expr("cast(id % 33 as double)").as("u"),
+      expr("id"))
+      .createOrReplaceTempView("zj_f")
+    spark.sql("SELECT id AS dk, concat('r', id % 3) AS region FROM range(0, 20)")
+      .createOrReplaceTempView("zj_d")
+    import graft.sketch.SketchOps
+    SketchOps.createHistogram(spark, cat, "zj_f", "v", 64)
+    SketchOps.createHdr(spark, cat, "zj_f", "w")
+    SketchOps.createGroupedHistogram(spark, cat, "zj_f", Seq("g"), "v", 64)
+    SketchOps.createGroupedHdr(spark, cat, "zj_f", Seq("h"), "w")
+    SketchOps.createCms(spark, cat, "zj_f", "k")
+    SketchOps.createTopK(spark, cat, "zj_f", Seq("p"), 100)
+    SketchOps.createHll(spark, cat, "zj_f", "id")
+    SketchOps.createGroupedHll(spark, cat, "zj_f", "g", "id")
+    SketchOps.createGroupedHistogram(spark, cat, "zj_f", Seq("d"), "u", 32,
+      sharedGrid = true)
+    SketchOps.createKmv(spark, cat, "zj_f", "k")
+    SketchOps.createKmv(spark, cat, "zj_d", "dk")
+    // the chooser-gated serves (hll, grouped_hll) read the table's row
+    // count from the catalog; without it the first one counts the table
+    cat.upsertTableStats("zj_f", 4000L)
+    val loose = eng.Options(maxRelError = 0.9)
+    val single = Seq(
+      ("stats", "SELECT min(v) AS lo, max(v) AS hi, sum(v) AS s, avg(v) AS a, " +
+        "count(v) AS n FROM zj_f", eng.Options()),
+      ("filtered_group",
+        "SELECT min(v) AS lo, count(*) AS n FROM zj_f WHERE g = 'g1'", eng.Options()),
+      ("histogram", "SELECT percentile(v, 0.5) AS p50 FROM zj_f", eng.Options()),
+      ("hdr", "SELECT percentile(w, 0.9) AS p90 FROM zj_f", eng.Options()),
+      ("grouped_histogram",
+        "SELECT g, percentile(v, 0.5) AS p50 FROM zj_f GROUP BY g", eng.Options()),
+      ("grouped_hdr",
+        "SELECT h, percentile(w, 0.5) AS p50 FROM zj_f GROUP BY h", eng.Options()),
+      ("grouped_stats",
+        "SELECT g, min(v) AS lo, sum(v) AS s, count(*) AS n FROM zj_f GROUP BY g",
+        eng.Options()),
+      ("distinct_count", "SELECT count(DISTINCT g) AS n FROM zj_f", eng.Options()),
+      ("distinct_keys", "SELECT g FROM zj_f GROUP BY g ORDER BY g", eng.Options()),
+      ("cms", "SELECT count(*) AS n FROM zj_f WHERE k = 7", eng.Options()),
+      ("histogram_range",
+        "SELECT count(*) AS n FROM zj_f WHERE v >= 10 AND v < 50", loose),
+      ("hdr_range", "SELECT count(*) AS n FROM zj_f WHERE w >= 10 AND w < 50", loose),
+      ("grouped_histogram_range",
+        "SELECT g, count(*) AS n FROM zj_f WHERE v >= 10 AND v < 50 GROUP BY g", loose),
+      ("grouped_hdr_range",
+        "SELECT h, count(*) AS n FROM zj_f WHERE w >= 10 AND w < 50 GROUP BY h", loose),
+      ("filtered_range", "SELECT count(*) AS n, sum(v) AS s FROM zj_f " +
+        "WHERE g = 'g1' AND v >= 10 AND v < 50", loose),
+      ("topk", "SELECT p, count(*) AS c FROM zj_f GROUP BY p ORDER BY c DESC, p LIMIT 3",
+        eng.Options()),
+      ("hll", "SELECT count(DISTINCT id) AS n FROM zj_f", eng.Options()),
+      ("grouped_hll",
+        "SELECT g, count(DISTINCT id) AS n FROM zj_f GROUP BY g", eng.Options()),
+      // a peeled HAVING + ORDER BY replayed over the served rows
+      ("grouped_stats", "SELECT g, count(*) AS n, sum(v) AS s FROM zj_f " +
+        "GROUP BY g HAVING s > 0 ORDER BY s DESC", eng.Options()),
+      ("kmv_setop", "SELECT count(*) AS n FROM (SELECT k FROM zj_f " +
+        "INTERSECT SELECT dk FROM zj_d) t", loose))
+    val star = Seq(
+      ("star_group", "SELECT region, count(*) AS n, sum(u) AS s FROM zj_f " +
+        "JOIN zj_d ON zj_f.d = zj_d.dk GROUP BY region ORDER BY region", eng.Options()),
+      ("star_range", "SELECT region, count(*) AS n FROM zj_f " +
+        "JOIN zj_d ON zj_f.d = zj_d.dk WHERE u >= 8 AND u < 16 GROUP BY region", loose))
+    val sc = spark.sparkContext
+    val problems = (single ++ star).flatMap { case (kind, sql, opts) =>
+      val (r, queryJobs) = org.apache.spark.JobCounter(sc)(eng.query(sql, opts))
+      val (json, renderJobs) = org.apache.spark.JobCounter(sc)(graft.api.Response.render(r))
+      val rows = graft.api.Json.parse(json).toOption
+        .flatMap(_("meta")).flatMap(_("rows")).flatMap(_.num).getOrElse(0.0)
+      val isStar = kind.startsWith("star_")
+      Seq(
+        Option.when(!r.serveKind.contains(kind))(s"$sql: served by ${r.serveKind} (${r.reason})"),
+        Option.when(rows < 1)(s"$sql: no rows"),
+        Option.when(renderJobs != 0)(s"$sql: render started $renderJobs jobs"),
+        Option.when(!isStar && queryJobs != 0)(s"$sql: query started $queryJobs jobs")
+      ).flatten
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
 }
