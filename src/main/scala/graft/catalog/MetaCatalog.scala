@@ -414,8 +414,8 @@ final class MetaCatalog(val workDir: String) {
   }
 
   /** Remove a sample from the registry AND reclaim its storage: the
-    * data parquet, the maintainer state parquet (`<path>__state`, the
-    * SampleMaintainers convention), and its strata rows. The round-14
+    * data parquet, every maintainer state directory
+    * ([[MetaCatalog.stateDirs]]), and its strata rows. The round-14
     * verdict's GC gap: retired samples were correctly skipped by the
     * freshness guards but their parquet stayed on disk forever.
     */
@@ -430,7 +430,7 @@ final class MetaCatalog(val workDir: String) {
     loadSamples(); loadStrata()
     samples.remove(sampleTable).foreach { s =>
       deleteRecursively(Paths.get(s.path))
-      deleteRecursively(Paths.get(s.path + "__state"))
+      MetaCatalog.stateDirs(s.path).foreach(d => deleteRecursively(Paths.get(d)))
     }
     strata.remove(sampleTable)
     saveSamples(); saveStrata()
@@ -442,8 +442,9 @@ final class MetaCatalog(val workDir: String) {
     * dead weight holding parquet). Builders call this with their own
     * kind on rebuild; `vacuum()` calls it unfiltered.
     *
-    * Samples with LIVE maintainer state (`<path>__state` exists — a
-    * streaming maintainer's fold state) are skipped: a maintained
+    * Samples with LIVE maintainer state (any of
+    * [[MetaCatalog.stateDirs]] exists — a streaming maintainer's fold
+    * state) are skipped: a maintained
     * sample records the LIVE-WINDOW rowcount as its base, so a batch
     * builder's stats upsert makes it look stale while the maintainer
     * is mid-fold — auto-reclaiming it would destroy the fold state.
@@ -458,7 +459,8 @@ final class MetaCatalog(val workDir: String) {
     loadSamples(); loadStats()
     val stale = samplesFor(table)
       .filter(s => kind(s) && !sampleIsFresh(s))
-      .filterNot(s => Files.exists(Paths.get(s.path + "__state")))
+      .filterNot(s => MetaCatalog.stateDirs(s.path)
+        .exists(d => Files.exists(Paths.get(d))))
       .map(_.sampleTable)
     stale.foreach(dropSampleLocked)
     stale
@@ -705,6 +707,16 @@ final class MetaCatalog(val workDir: String) {
 }
 
 object MetaCatalog {
+  /** Maintainer state directories beside a sample parquet `<path>`: the
+    * streaming sample maintainers' fold state. The windowed outlier
+    * maintainer keeps its own (`__wstate`): it shares its sample name
+    * with the append outlier maintainer but not its row layout.
+    */
+  val StateDir = "__state"
+  val WindowedStateDir = "__wstate"
+  def stateDirs(samplePath: String): Seq[String] =
+    Seq(StateDir, WindowedStateDir).map(samplePath + _)
+
   /** The one reader of sketch parameters. Parameters are always the
     * catalog's own flat {"k":v,...} objects (no nesting, no escaped
     * quotes), so a field regex is a complete parser: values are a

@@ -77,6 +77,14 @@ private[graft] object Checkpoints {
     * next invocation of the same operator frees this one's blocks after
     * its result has been consumed (the repo-wide build-then-consume
     * discipline), so the bench's three passes hold one generation live.
+    *
+    * LIFETIME (build, then consume): the returned DataFrame is valid
+    * until the NEXT call with the same `key` in the same session. That
+    * call frees its checkpoint blocks, so a caller that keeps a handle
+    * and collects it again after a newer run of the same query fails.
+    * The public results routed here (q50, q52, q159, q165, q176) are to
+    * be consumed once; a caller that needs the rows later collects or
+    * persists them itself.
     */
   def sortedOnce(s: SparkSession, key: String, df: DataFrame)(
       cols: Column*): DataFrame = {

@@ -2,6 +2,9 @@ package graft.sketch
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.{col, count, expr, lit, max, min}
+
 /** Per-group exact column statistics — the grouped twin of the build
   * stats a plain histogram records in its params (min/max, non-null
   * count, decimal-portable sum). One record per group, packed into a
@@ -41,6 +44,36 @@ object GroupedStats {
         new java.math.BigDecimal(d)
           .compareTo(new java.math.BigDecimal(sumUnscaled.bigInteger, 4)) == 0
     }
+  }
+
+  /** The per-group stats aggregate over `valueCol`, one pass shared by
+    * the batch builder (`SketchOps.createGroupedHistogram`) and the
+    * streaming maintainers: min/max (as double), counts and the exact
+    * decimal(38,4) sum under try_sum (a huge group can neither throw
+    * under ANSI nor wrap; value-identical to the decimal(18,4) recipe
+    * whenever the sum fits 18 digits).
+    */
+  def statsAgg(valueCol: String): Seq[Column] = Seq(
+    min(col(valueCol)).cast("double").as("lo"),
+    max(col(valueCol)).cast("double").as("hi"),
+    count(lit(1)).as("n"), count(col(valueCol)).as("nnull"),
+    expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
+
+  /** One [[statsAgg]] row with its group key `g` as (group, stat). A
+    * NULL sum over non-NULL values is a decimal(38,4) overflow: refuse
+    * loudly with `overflow` rather than encode a silent zero the serve
+    * would label exact.
+    */
+  def statOf(r: Row, overflow: => String): (Option[String], Stat) = {
+    val sum4 = r.getAs[java.math.BigDecimal]("sum4")
+    val nnull = r.getAs[Long]("nnull")
+    if (sum4 == null && nnull > 0L)
+      throw new IllegalArgumentException(overflow)
+    val lo = Option(r.getAs[java.lang.Double]("lo")).map(_.doubleValue)
+    Option(r.getAs[String]("g")) -> Stat(lo,
+      lo.map(_ => r.getAs[Double]("hi")), nnull, r.getAs[Long]("n"),
+      Option(sum4).map(d => BigInt(d.setScale(4).unscaledValue()))
+        .getOrElse(BigInt(0)))
   }
 
   def encode(s: Stat): Array[Byte] = {

@@ -301,34 +301,24 @@ object SketchOps {
   def createHdr(spark: SparkSession, catalog: MetaCatalog, table: String,
       column: String, m: Int = 32): Int = {
     val total = spark.table(table).count()
-    val (sk, sums, sumOverflow) = hdrAggregate(spark.table(table), column, m,
-      s"hdr over $table.$column")
-    val bytes = sk.serialize
+    val cell = hdrPass(spark.table(table), Nil, column, m,
+      s"hdr over $table.$column").getOrElse(Nil, emptyHdr(m))
+    val bytes = cell.sketch.serialize
     catalog.upsertSketch(catalog.SketchInfo(table, column, "hdr", bytes,
-      s"""{"m":$m,"rows":$total,"nonnull":${sk.n}}""",
+      s"""{"m":$m,"rows":$total,"nonnull":${cell.sketch.n}}""",
       System.currentTimeMillis()))
     // per-bucket exact scale-4 decimal sums ride into a SECOND blob
     // ("hdrsum", the log-grid twin of the equi-width "histsum"): the
     // input to the engine's relative-error range-SUM/AVG serve. A
     // bucket sum overflowing even decimal(38,4) skips the rider rather
     // than serve a silently-wrong sum (counts still serve).
-    if (!sumOverflow)
+    if (!cell.overflow)
       catalog.upsertSketch(catalog.SketchInfo(table, column, "hdrsum",
-        GroupedHll.pack(sums.map { case ((sg, e, s), v) =>
-          Option(s"$sg:$e:$s") -> v.toByteArray
-        }),
-        s"""{"m":$m,"rows":$total}""",
+        cell.sumPack, s"""{"m":$m,"rows":$total}""",
         System.currentTimeMillis()))
     bytes.length
   }
 
-  /** THE hdr bucket pass, shared by the batch builder above and the
-    * streaming maintainer (EventStreams.maintainHdrSketch) so their
-    * bucket assignment can never drift: one distributed aggregate over
-    * (sign, binade, sub-bucket) — the deterministic corrected-log2
-    * derivation [[HdrSketch]] documents — collecting only the occupied
-    * buckets. NULL/NaN rows have no bucket; ±Infinity refuses.
-    */
   /** Build one log-linear (HDR) quantile sketch PER GROUP over
     * `table.valueCol`, packed into one "hdr_grouped" catalog blob —
     * the RELATIVE-error twin of [[createGroupedHistogram]]'s grouped
@@ -364,13 +354,15 @@ object SketchOps {
       throw new IllegalArgumentException(
         s"grouped hdr over $table.$groupCol: more than $MaxHllGroups groups")
     val totalRows = stats.map(_.getAs[Long]("n")).sum
-    val sketches = hdrGroupedAggregate(spark.table(table), groupCols,
-      valueCol, m, s"grouped hdr over $table.$valueCol")
+    val sketches = hdrPass(spark.table(table),
+      Seq(groupKeyExpr(groupCols, tableFields).as("g")), valueCol, m,
+      s"grouped hdr over $table.$valueCol")
+      .map { case (k, c) => Option(k.head.asInstanceOf[String]) -> c }
     // groups with no non-NULL value never reach the bucket pass but
     // ARE groups: empty payload, served as a NULL percentile
     val keys = stats.toSeq.map(r => Option(r.getAs[String]("g")))
     val packed = keys.map(k =>
-      k -> sketches.get(k).map(_._1).getOrElse(Array.empty[Byte]))
+      k -> sketches.get(k).map(_.sketch.serialize).getOrElse(Array.empty[Byte]))
     val bytes = GroupedHll.pack(packed)
     catalog.upsertSketch(catalog.SketchInfo(table, valueCol, "hdr_grouped",
       bytes,
@@ -383,7 +375,7 @@ object SketchOps {
     // its counts keep serving; an EMPTY pack is the all-zero-valued
     // group's legitimate identity). All-NULL groups are OMITTED —
     // their sketches are empty so the serve never consults them.
-    val sumPacked = sketches.toSeq.map { case (k, (_, rider)) => k -> rider }
+    val sumPacked = sketches.toSeq.map { case (k, c) => k -> c.groupedSumPack }
     catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
       "hdrsum_grouped", GroupedHll.pack(sumPacked),
       s"""{"m":$m,"group_by":"$groupCol","groups":${sumPacked.size},"rows":$totalRows}""",
@@ -432,76 +424,10 @@ object SketchOps {
     */
   private val DecimalCastGuard = "1e34d"
 
-  /** THE grouped hdr bucket pass, shared by the batch builder above
-    * and the streaming maintainer (EventStreams.maintainGroupedHdrSketch)
-    * so their bucket assignment can never drift: one distributed
-    * aggregate over (group key, sign, binade, sub-bucket), returning
-    * each group-with-values' serialized sketch AND its "hdrsum" rider
-    * pack (per-nonzero-bucket exact scale-4 decimal sums keyed
-    * "sg:e:s" — the grouped range-SUM/AVG serve's input; the "!"
-    * sentinel marks a group whose sum overflowed decimal(38,4) — the
-    * poison, the engine refuses its sums while counts keep serving).
-    * Groups whose value column is all NULL do not appear (the callers
-    * record them with empty payloads); ±Infinity refuses.
-    */
-  private[graft] def hdrGroupedAggregate(df: org.apache.spark.sql.DataFrame,
-      groupCols: Seq[String], valueCol: String, m: Int, what: String)
-      : Map[Option[String], (Array[Byte], Array[Byte])] = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    import org.apache.spark.sql.functions.{count, expr, lit}
-    val fields = df.schema.fieldNames.toSeq
-    val rows = hdrBucketed(
-      df.select(groupKeyExpr(groupCols, fields).as("g"),
-        col(valueCol).cast("double").as("v")),
-      m, Seq("g"))
-      .groupBy(col("g"), col("sg"), col("e"), col("s"))
-      // the per-value cast is GUARDED: |v| >= 1e34 would throw under
-      // ANSI before try_sum's aggregate-overflow NULL could engage —
-      // park such values and flag them, so a heavy-tailed column
-      // poisons its group's sums instead of crashing the pass
-      .agg(count(lit(1)).as("n"), expr("sum(inf)").as("ninf"),
-        expr(s"try_sum(case when abs(v) < $DecimalCastGuard " +
-          "then cast(v as decimal(38,4)) end)").as("s4"),
-        expr(s"sum(case when abs(v) >= $DecimalCastGuard " +
-          "then 1 else 0 end)").as("novf"))
-      .collect()
-    if (rows.exists(_.getAs[Long]("ninf") > 0L))
-      throw new IllegalArgumentException(
-        s"$what: infinite values have no log bucket")
-    rows.groupBy(r => Option(r.getAs[String]("g"))).map { case (k, rs) =>
-      var zero = 0L
-      val neg = Vector.newBuilder[((Int, Int), Long)]
-      val pos = Vector.newBuilder[((Int, Int), Long)]
-      var poison = false
-      val sums = Vector.newBuilder[(Option[String], Array[Byte])]
-      rs.foreach { r =>
-        val (sg, e, s, n) =
-          (r.getAs[Int]("sg"), r.getAs[Int]("e"), r.getAs[Int]("s"),
-            r.getAs[Long]("n"))
-        if (sg == 0) zero += n
-        else {
-          if (sg < 0) neg += (((e, s), n)) else pos += (((e, s), n))
-          if (r.getAs[Long]("novf") > 0L) poison = true
-          else Option(r.getAs[java.math.BigDecimal]("s4")) match {
-            case Some(d) => sums += (Option(s"$sg:$e:$s") ->
-              BigInt(d.setScale(4).unscaledValue()).toByteArray)
-            case None    => poison = true
-          }
-        }
-      }
-      k -> (HdrSketch(m, zero, neg.result(), pos.result()).serialize,
-        GroupedHll.pack(
-          if (poison) Seq(Option(HdrSumPoisonKey) -> Array.empty[Byte])
-          else sums.result()))
-    }
-  }
-
   /** The corrected-log2 bucket chain as a DataFrame transform: input
     * must carry a double column `v` (plus any `keep` columns to carry
-    * through — the grouped builder's key); output has (keep..., sg, e,
-    * s, inf, v). Shared by [[hdrAggregate]] and [[createGroupedHdr]]
-    * so the bucket assignment can never drift between the global and
-    * grouped blobs.
+    * through — the keys); output has (keep..., sg, e, s, inf, v). The
+    * body of [[hdrPass]].
     */
   private def hdrBucketed(df: org.apache.spark.sql.DataFrame, m: Int,
       keep: Seq[String]): org.apache.spark.sql.DataFrame = {
@@ -531,79 +457,48 @@ object SketchOps {
         "v"): _*)
   }
 
-  /** Per-EVENT-TIME-BUCKET twin of [[hdrAggregate]] (round 14 — the
-    * windowed HDR maintainer's one distributed pass): the same
-    * corrected-log2 bucket chain keyed by an extra long bucket column,
-    * one (bucket, sg, e, s) count/sum aggregate, sketches + sum riders
-    * built per bucket on the driver. Infinite values and decimal
-    * overflow refuse loudly (the windowed maintainers' discipline —
-    * there is no batch-rebuild poison escape on a TTL stream).
+  /** One key's result of [[hdrPass]]: the sketch, the exact scale-4
+    * sums of its nonzero log buckets (unscaled, keyed (sign, binade,
+    * sub-bucket)), and whether a bucket sum overflowed decimal(38,4).
     */
-  private[graft] def hdrBucketedAggregate(df: org.apache.spark.sql.DataFrame,
-      column: String, bucketCol: String, m: Int, what: String)
-      : Map[Long, (HdrSketch, Seq[((Int, Int, Int), BigInt)])] = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    import org.apache.spark.sql.functions.{count, expr}
-    val rows = hdrBucketed(
-      df.select(col(bucketCol), col(column).cast("double").as("v")),
-      m, Seq(bucketCol))
-      .groupBy(col(bucketCol), col("sg"), col("e"), col("s"))
-      .agg(count(lit(1)).as("n"),
-        expr("sum(inf)").as("ninf"),
-        expr(s"try_sum(case when abs(v) < $DecimalCastGuard " +
-          "then cast(v as decimal(38,4)) end)").as("s4"),
-        expr(s"sum(case when abs(v) >= $DecimalCastGuard " +
-          "then 1 else 0 end)").as("novf"))
-      .collect()
-    if (rows.exists(_.getAs[Long]("ninf") > 0L))
-      throw new IllegalArgumentException(
-        s"$what: infinite values have no log bucket")
-    rows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-      var zero = 0L
-      val neg = Vector.newBuilder[((Int, Int), Long)]
-      val pos = Vector.newBuilder[((Int, Int), Long)]
-      val sums = Vector.newBuilder[((Int, Int, Int), BigInt)]
-      rs.foreach { r =>
-        val (sg, e, s, n) =
-          (r.getAs[Int]("sg"), r.getAs[Int]("e"), r.getAs[Int]("s"),
-            r.getAs[Long]("n"))
-        if (sg == 0) zero += n
-        else {
-          if (sg < 0) neg += (((e, s), n)) else pos += (((e, s), n))
-          if (r.getAs[Long]("novf") > 0L)
-            throw new IllegalArgumentException(
-              s"$what: a bucket sum overflows decimal(38,4)")
-          Option(r.getAs[java.math.BigDecimal]("s4")) match {
-            case Some(d) =>
-              sums += (((sg, e, s), BigInt(d.setScale(4).unscaledValue())))
-            case None => throw new IllegalArgumentException(
-              s"$what: a bucket sum overflows decimal(38,4)")
-          }
-        }
-      }
-      bkt -> (HdrSketch(m, zero, neg.result(), pos.result()), sums.result())
-    }
+  private[graft] final case class HdrCell(sketch: HdrSketch,
+      sums: Seq[((Int, Int, Int), BigInt)], overflow: Boolean) {
+    /** The "hdrsum" rider pack: "sg:e:s" -> unscaled sum bytes. */
+    def sumPack: Array[Byte] = GroupedHll.pack(sums.map { case ((sg, e, s), v) =>
+      Option(s"$sg:$e:$s") -> v.toByteArray
+    })
+    /** The grouped riders' pack: the POISON sentinel on overflow. */
+    def groupedSumPack: Array[Byte] =
+      if (overflow) GroupedHll.pack(Seq(Option(HdrSumPoisonKey) -> Array.empty[Byte]))
+      else sumPack
   }
 
-  /** Per-(EVENT-TIME BUCKET, GROUP) twin of [[hdrGroupedAggregate]]
-    * (round 14 — the windowed GROUPED HDR maintainer's one
-    * distributed pass): the same chain keyed by an extra long bucket
-    * column; sketches + sum riders built per (bucket, group) on the
-    * driver. Per-group sum poison keeps the batch builder's sentinel
-    * convention; infinities refuse loudly.
+  private[graft] def emptyHdr(m: Int): HdrCell =
+    HdrCell(HdrSketch(m, 0L, Vector.empty, Vector.empty), Nil, overflow = false)
+
+  /** THE hdr bucket pass, shared by every HDR builder, maintainer and
+    * batch twin so their bucket assignment can never drift: one
+    * distributed aggregate over (keys..., sign, binade, sub-bucket) —
+    * the deterministic corrected-log2 derivation [[HdrSketch]]
+    * documents — collecting only the occupied buckets, with per-bucket
+    * exact decimal sums. Returns one [[HdrCell]] per key tuple (the
+    * `keys` columns' values, in order) that has values; each caller
+    * applies its own overflow policy (skip the sum rider, poison the
+    * group's rider, or refuse). NULL/NaN rows have no bucket; ±Infinity
+    * refuses.
     */
-  private[graft] def hdrGroupedBucketedAggregate(
-      df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
-      valueCol: String, bucketCol: String, m: Int, what: String)
-      : Map[Long, Map[Option[String], (Array[Byte], Array[Byte])]] = {
+  private[graft] def hdrPass(df: org.apache.spark.sql.DataFrame,
+      keys: Seq[org.apache.spark.sql.Column], valueCol: String, m: Int,
+      what: String): Map[Seq[Any], HdrCell] = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    import org.apache.spark.sql.functions.{count, expr, lit}
-    val fields = df.schema.fieldNames.toSeq
-    val rows = hdrBucketed(
-      df.select(col(bucketCol), groupKeyExpr(groupCols, fields).as("g"),
-        col(valueCol).cast("double").as("v")),
-      m, Seq(bucketCol, "g"))
-      .groupBy(col(bucketCol), col("g"), col("sg"), col("e"), col("s"))
+    import org.apache.spark.sql.functions.{count, expr}
+    val keyed = df.select(keys :+ col(valueCol).cast("double").as("v"): _*)
+    val names = keyed.columns.toSeq.dropRight(1)
+    val rows = hdrBucketed(keyed, m, names)
+      .groupBy((names ++ Seq("sg", "e", "s")).map(col): _*)
+      // the per-value cast is GUARDED: |v| >= 1e34 would throw under
+      // ANSI before try_sum's aggregate-overflow NULL could engage —
+      // parked values flag the overflow instead of crashing the pass
       .agg(count(lit(1)).as("n"), expr("sum(inf)").as("ninf"),
         expr(s"try_sum(case when abs(v) < $DecimalCastGuard " +
           "then cast(v as decimal(38,4)) end)").as("s4"),
@@ -613,81 +508,30 @@ object SketchOps {
     if (rows.exists(_.getAs[Long]("ninf") > 0L))
       throw new IllegalArgumentException(
         s"$what: infinite values have no log bucket")
-    rows.groupBy(_.getLong(0)).map { case (bkt, brs) =>
-      bkt -> brs.groupBy(r => Option(r.getAs[String]("g"))).map {
-        case (k, rs) =>
-          var zero = 0L
-          val neg = Vector.newBuilder[((Int, Int), Long)]
-          val pos = Vector.newBuilder[((Int, Int), Long)]
-          var poison = false
-          val sums = Vector.newBuilder[(Option[String], Array[Byte])]
-          rs.foreach { r =>
-            val (sg, e, s, n) =
-              (r.getAs[Int]("sg"), r.getAs[Int]("e"), r.getAs[Int]("s"),
-                r.getAs[Long]("n"))
-            if (sg == 0) zero += n
-            else {
-              if (sg < 0) neg += (((e, s), n)) else pos += (((e, s), n))
-              if (r.getAs[Long]("novf") > 0L) poison = true
-              else Option(r.getAs[java.math.BigDecimal]("s4")) match {
-                case Some(d) => sums += (Option(s"$sg:$e:$s") ->
-                  BigInt(d.setScale(4).unscaledValue()).toByteArray)
-                case None    => poison = true
-              }
-            }
+    rows.groupBy(r => names.indices.map(r.get)).map { case (k, rs) =>
+      var zero = 0L
+      val neg = Vector.newBuilder[((Int, Int), Long)]
+      val pos = Vector.newBuilder[((Int, Int), Long)]
+      val sums = Vector.newBuilder[((Int, Int, Int), BigInt)]
+      var overflow = false
+      rs.foreach { r =>
+        val (sg, e, s, n) =
+          (r.getAs[Int]("sg"), r.getAs[Int]("e"), r.getAs[Int]("s"),
+            r.getAs[Long]("n"))
+        if (sg == 0) zero += n
+        else {
+          if (sg < 0) neg += (((e, s), n)) else pos += (((e, s), n))
+          if (r.getAs[Long]("novf") > 0L) overflow = true
+          else Option(r.getAs[java.math.BigDecimal]("s4")) match {
+            case Some(d) =>
+              sums += (((sg, e, s), BigInt(d.setScale(4).unscaledValue())))
+            case None => overflow = true
           }
-          k -> (HdrSketch(m, zero, neg.result(), pos.result()).serialize,
-            GroupedHll.pack(
-              if (poison) Seq(Option(HdrSumPoisonKey) -> Array.empty[Byte])
-              else sums.result()))
-      }
-    }
-  }
-
-  private[graft] def hdrAggregate(df: org.apache.spark.sql.DataFrame,
-      column: String, m: Int, what: String)
-      : (HdrSketch, Seq[((Int, Int, Int), BigInt)], Boolean) = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    import org.apache.spark.sql.functions.{count, expr}
-    val rows = hdrBucketed(
-      df.select(col(column).cast("double").as("v")), m, Nil)
-      .groupBy(col("sg"), col("e"), col("s"))
-      .agg(count(lit(1)).as("n"),
-        expr("sum(inf)").as("ninf"),
-        // per-bucket decimal sums for the "hdrsum" rider — the
-        // per-value cast is GUARDED (|v| >= 1e34 would throw under
-        // ANSI before try_sum's aggregate-overflow NULL could engage);
-        // parked values flag the blob as overflow instead of crashing
-        expr(s"try_sum(case when abs(v) < $DecimalCastGuard " +
-          "then cast(v as decimal(38,4)) end)").as("s4"),
-        expr(s"sum(case when abs(v) >= $DecimalCastGuard " +
-          "then 1 else 0 end)").as("novf"))
-      .collect()
-    if (rows.exists(_.getAs[Long]("ninf") > 0L))
-      throw new IllegalArgumentException(
-        s"$what: infinite values have no log bucket")
-    var zero = 0L
-    val neg = Vector.newBuilder[((Int, Int), Long)]
-    val pos = Vector.newBuilder[((Int, Int), Long)]
-    val sums = Vector.newBuilder[((Int, Int, Int), BigInt)]
-    var sumOverflow = false
-    rows.foreach { r =>
-      val (sg, e, s, n) =
-        (r.getAs[Int]("sg"), r.getAs[Int]("e"), r.getAs[Int]("s"),
-          r.getAs[Long]("n"))
-      if (sg == 0) zero += n
-      else {
-        if (sg < 0) neg += (((e, s), n)) else pos += (((e, s), n))
-        if (r.getAs[Long]("novf") > 0L) sumOverflow = true
-        else Option(r.getAs[java.math.BigDecimal]("s4")) match {
-          case Some(d) =>
-            sums += (((sg, e, s), BigInt(d.setScale(4).unscaledValue())))
-          case None => sumOverflow = true
         }
       }
+      (k: Seq[Any]) -> HdrCell(HdrSketch(m, zero, neg.result(), pos.result()),
+        sums.result(), overflow)
     }
-    (HdrSketch(m, zero, neg.result(), pos.result()), sums.result(),
-      sumOverflow)
   }
 
   /** Build one equi-width histogram PER GROUP over `table.valueCol`
@@ -727,54 +571,39 @@ object SketchOps {
   def createGroupedHistogram(spark: SparkSession, catalog: MetaCatalog,
       table: String, groupCols: Seq[String], valueCol: String,
       buckets: Int, sharedGrid: Boolean): (Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, count, expr, lit, max, min}
+    import org.apache.spark.sql.functions.{broadcast, expr, lit}
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     require(groupCols.nonEmpty, "at least one group column required")
     requireBijectiveKeys(spark, spark.table(table), groupCols,
       s"grouped histogram over $table")
     val tableFields = spark.table(table).schema.fieldNames.toSeq
     val groupCol = groupCols.mkString(",")
-    val stats = spark.table(table)
+    // the per-group stats pass the streaming maintainers share
+    val statRows = spark.table(table)
       .groupBy(groupKeyExpr(groupCols, tableFields).as("g"))
-      .agg(min(col(valueCol)).cast("double").as("lo"),
-        max(col(valueCol)).cast("double").as("hi"),
-        count(lit(1)).as("n"),
-        count(col(valueCol)).as("nnull"),
-        // decimal(38,4) + try_sum: a huge group can neither throw
-        // (ANSI) nor wrap; value-identical to the repo's decimal(18,4)
-        // recipe whenever the sum fits 18 digits (the oracle case)
-        expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
+      .agg(GroupedStats.statsAgg(valueCol).head,
+        GroupedStats.statsAgg(valueCol).tail: _*)
       .limit(MaxHllGroups + 1)
       .collect()
-    if (stats.length > MaxHllGroups)
+    if (statRows.length > MaxHllGroups)
       throw new IllegalArgumentException(
         s"grouped histogram over $table.$groupCol: more than $MaxHllGroups groups")
-    val totalRows = stats.map(_.getAs[Long]("n")).sum
+    val stats = statRows.toSeq.map(GroupedStats.statOf(_, s"grouped stats " +
+      s"over $table.$valueCol: group sum overflows decimal(38,4)"))
+    val totalRows = stats.map(_._2.nrows).sum
     // per-group EXACT stats ride the same pass into a second blob: the
     // engine's grouped statistics serve (SELECT g, MIN/MAX/COUNT/SUM/
     // AVG ... GROUP BY g with no scan, no error). All-NULL groups keep
     // their counts; min/max/sum serve as SQL NULL for them.
-    val statBlob = GroupedHll.pack(stats.toSeq.map { r =>
-      val absent = r.isNullAt(1)
-      // a NULL sum with non-NULL values means try_sum overflowed even
-      // decimal(38,4) — refuse rather than encode a silent zero
-      if (r.isNullAt(5) && r.getAs[Long]("nnull") > 0L)
-        throw new IllegalArgumentException(
-          s"grouped stats over $table.$valueCol: group sum overflows decimal(38,4)")
-      val sum = Option(r.getDecimal(5))
-        .map(d => BigInt(d.setScale(4).unscaledValue()))
-        .getOrElse(BigInt(0))
-      Option(r.getAs[String]("g")) -> GroupedStats.encode(GroupedStats.Stat(
-        if (absent) None else Some(r.getDouble(1)),
-        if (absent) None else Some(r.getDouble(2)),
-        r.getAs[Long]("nnull"), r.getAs[Long]("n"), sum))
+    val statBlob = GroupedHll.pack(stats.map { case (g, st) =>
+      g -> GroupedStats.encode(st)
     })
     catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
       "stats_grouped", statBlob,
       s"""{"group_by":"$groupCol","groups":${stats.length},"rows":$totalRows}""",
       System.currentTimeMillis()))
-    val ranges = stats.filter(!_.isNullAt(1)).map { r =>
-      (Option(r.getAs[String]("g")), r.getDouble(1), r.getDouble(2))
+    val ranges = stats.collect { case (g, GroupedStats.Stat(Some(lo), Some(hi), _, _, _)) =>
+      (g, lo, hi)
     }
     if (ranges.isEmpty)
       throw new IllegalArgumentException(
@@ -842,8 +671,8 @@ object SketchOps {
     // empty payload so the engine's grouped serve returns them with a
     // NULL percentile — the same row set exact GROUP BY execution
     // returns — instead of silently dropping rows
-    val allNull = stats.filter(_.isNullAt(1)).toSeq
-      .map(r => Option(r.getAs[String]("g")) -> Array.empty[Byte])
+    val allNull = stats.filter(_._2.min.isEmpty)
+      .map { case (g, _) => g -> Array.empty[Byte] }
     val bytes = GroupedHll.pack(groups ++ allNull)
     val gridTag = if (sharedGrid) ""","grid":"shared"""" else ""
     catalog.upsertSketch(catalog.SketchInfo(table, valueCol,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.sketch.GroupedHll
+import graft.sketch.{GroupedHll, GroupedStats, SketchOps}
 
 /** Structured Streaming surface — the streaming capability the reference
   * only aspires to (/root/reference/README.md:303-305 "Streaming
@@ -495,8 +495,14 @@ object EventStreams {
     // FileStreamSink.hasMetadata stats the raw glob string before
     // expansion and logs a full FileNotFoundException stack as WARN on
     // every read — pure noise in the driver's stdout tail.
-    val batchDirs = Option(new java.io.File(path).listFiles)
-      .getOrElse(Array.empty[java.io.File])
+    // an absent dir is an empty fold; one that exists but cannot be
+    // listed is a fault, not an empty fold
+    val dir = new java.io.File(path)
+    val listed = Option(dir.listFiles).orElse(
+      if (dir.exists) throw new IllegalStateException(
+        s"admission stats: cannot list the batch directory $path")
+      else None)
+    val batchDirs = listed.getOrElse(Array.empty[java.io.File])
       .filter(f => f.isDirectory && f.getName.startsWith("b"))
       .map(_.getPath).sorted.toIndexedSeq
     val adm =
@@ -508,14 +514,17 @@ object EventStreams {
           .select(col("band"), col("bh")).distinct()
           .agg(count(lit(1)).as("n_bands"))
       else spark.range(1).select(lit(0L).as("n_bands"))
+    // an empty fold counts 0 admitted and 0 suppressed; its 0/0
+    // admit_rate stays NULL
     adm.agg(
         count(lit(1)).as("n_docs"),
-        expr("cast(sum(admitted) as bigint)").as("n_admitted"),
-        expr("cast(sum(1 - admitted) as bigint)").as("n_suppressed"))
+        expr("cast(coalesce(sum(admitted), 0) as bigint)").as("n_admitted"),
+        expr("cast(coalesce(sum(1 - admitted), 0) as bigint)")
+          .as("n_suppressed"))
       .crossJoin(nBands)
       .select(col("n_docs"), col("n_admitted"), col("n_suppressed"),
         col("n_bands"),
-        expr("cast(n_admitted as double) / cast(n_docs as double)")
+        expr("cast(n_admitted as double) / cast(nullif(n_docs, 0) as double)")
           .as("admit_rate"))
   }
 
@@ -608,33 +617,6 @@ object EventStreams {
 
   private[streaming] def unscaled4(d: java.math.BigDecimal): BigInt =
     BigInt(d.setScale(4).unscaledValue())
-
-  /** The grouped-stats batch aggregate: min/max (as double), counts and
-    * the exact decimal(38,4) sum, mirroring the batch builder (try_sum:
-    * a huge group can neither throw under ANSI nor wrap).
-    */
-  private[streaming] def statsAgg(valueCol: String): Seq[Column] = Seq(
-    min(col(valueCol)).cast("double").as("lo"),
-    max(col(valueCol)).cast("double").as("hi"),
-    count(lit(1)).as("n"), count(col(valueCol)).as("nnull"),
-    expr(s"try_sum(cast($valueCol as decimal(38,4)))").as("sum4"))
-
-  /** One [[statsAgg]] row as (group, stat). A NULL sum over non-NULL
-    * values is a decimal(38,4) overflow: refuse loudly rather than
-    * encode a silent zero the serve would label exact.
-    */
-  private[streaming] def statOf(r: Row, what: String)
-      : (Option[String], graft.sketch.GroupedStats.Stat) = {
-    val sum4 = r.getAs[java.math.BigDecimal]("sum4")
-    val nnull = r.getAs[Long]("nnull")
-    if (sum4 == null && nnull > 0L)
-      throw new IllegalArgumentException(
-        s"$what: batch group sum overflows decimal(38,4)")
-    val lo = Option(r.getAs[java.lang.Double]("lo")).map(_.doubleValue)
-    Option(r.getAs[String]("g")) -> graft.sketch.GroupedStats.Stat(lo,
-      lo.map(_ => r.getAs[Double]("hi")), nnull, r.getAs[Long]("n"),
-      Option(sum4).map(unscaled4).getOrElse(BigInt(0)))
-  }
 
   /** AGMS cells: per (`by`..., bucket) signed counter sums `c` and row
     * counts `n` over bucket = h60('js:'‖key) % B, sign from the next
@@ -1060,17 +1042,18 @@ object EventStreams {
     Fold.run(values) { (batch, batchId) =>
       Fold.append(catalog, table, valueCol, batchId)(Fold.Blob("stats_grouped",
         Fold.capped(label)((p, n) => GroupedHll.mergePacked(p, n) { (x, y) =>
-          graft.sketch.GroupedStats.encode(graft.sketch.GroupedStats.merge(
-            graft.sketch.GroupedStats.decode(x),
-            graft.sketch.GroupedStats.decode(y)))
+          GroupedStats.encode(GroupedStats.merge(GroupedStats.decode(x),
+            GroupedStats.decode(y)))
         }))) {
         val rows = Fold.groups(batch
           .groupBy(graft.sketch.SketchOps.groupKeyExpr(groupCols,
             batch.schema.fieldNames.toSeq).as("g"))
-          .agg(statsAgg(valueCol).head, statsAgg(valueCol).tail: _*), label)
+          .agg(GroupedStats.statsAgg(valueCol).head,
+            GroupedStats.statsAgg(valueCol).tail: _*), label)
         Seq(Option.when(rows.nonEmpty)(GroupedHll.pack(rows.toSeq.map { r =>
-          val (g, st) = statOf(r, s"grouped stats over $table.$valueCol")
-          g -> graft.sketch.GroupedStats.encode(st)
+          val (g, st) = GroupedStats.statOf(r, s"grouped stats over " +
+            s"$table.$valueCol: batch group sum overflows decimal(38,4)")
+          g -> GroupedStats.encode(st)
         }) -> s"""{"group_by":"$groupCol","last_batch":$batchId}"""))
       }
     }
@@ -1167,7 +1150,7 @@ object EventStreams {
 
   /** Streaming HDR maintenance — the relative-error quantile sketch
     * kept live: each micro-batch's values bucket through THE shared
-    * hdr pass (`SketchOps.hdrAggregate` — the identical corrected-log2
+    * hdr pass (`SketchOps.hdrPass` — the identical corrected-log2
     * derivation the batch builder runs, so the stream-built blob is
     * BYTE-equal to a batch build over the same rows; the log grid is
     * global by construction, so per-bucket counts add exactly with no
@@ -1187,19 +1170,15 @@ object EventStreams {
         Fold.Blob("hdr", graft.sketch.HdrSketch.mergeBytes),
         Fold.Blob("hdrsum", graft.sketch.SketchOps.hdrSumMergeBytes)) {
         val total = batch.count()
-        val (sk, sums, sumOverflow) =
-          graft.sketch.SketchOps.hdrAggregate(batch, column, m,
-            s"hdr stream over $table.$column")
-        if (sumOverflow)
+        val cell = SketchOps.hdrPass(batch, Nil, column, m,
+          s"hdr stream over $table.$column").getOrElse(Nil, SketchOps.emptyHdr(m))
+        if (cell.overflow)
           throw new IllegalArgumentException(
             s"hdr stream over $table.$column: a batch bucket sum " +
               "overflows decimal(38,4)")
         val rows = prev.flatMap(_.paramLong("rows")).getOrElse(0L) + total
         val params = s"""{"m":$m,"rows":$rows,"last_batch":$batchId}"""
-        Seq(Some(sk.serialize -> params),
-          Some(GroupedHll.pack(sums.map { case ((sg, e, s), v) =>
-            Option(s"$sg:$e:$s") -> v.toByteArray
-          }) -> params))
+        Seq(Some(cell.sketch.serialize -> params), Some(cell.sumPack -> params))
       }
     }
   }
@@ -1210,7 +1189,7 @@ object EventStreams {
     * pre-declared grid: new groups union in freely and per-bucket
     * counts add exactly, making the stream-maintained blob BYTE-equal
     * to a batch `createGroupedHdr` over the same rows (the shared
-    * `hdrGroupedAggregate` pass + canonical per-sketch serialization).
+    * `SketchOps.hdrPass` + canonical per-sketch serialization).
     * Groups whose batch values are all NULL are still recorded (empty
     * payload — the identity of the merge), matching the batch
     * builder's all-NULL-group contract; a stored blob with a different
@@ -1245,17 +1224,18 @@ object EventStreams {
           .agg(count(lit(1)).as("n")), label)
         if (gs.isEmpty) Seq(None, None)
         else {
-          val agg = graft.sketch.SketchOps.hdrGroupedAggregate(
-            batch, groupCols, valueCol, m,
+          val agg = SketchOps.hdrPass(batch, Seq(SketchOps.groupKeyExpr(
+              groupCols, batch.schema.fieldNames.toSeq).as("g")), valueCol, m,
             s"grouped hdr stream over $table.$valueCol")
+            .map { case (k, c) => Option(k.head.asInstanceOf[String]) -> c }
           val params =
             s"""{"m":$m,"group_by":"$groupCol","last_batch":$batchId}"""
           Seq(Some(GroupedHll.pack(gs.toSeq.map { r =>
               val k = Option(r.getAs[String]("g"))
-              k -> agg.get(k).map(_._1).getOrElse(Array.empty[Byte])
+              k -> agg.get(k).map(_.sketch.serialize).getOrElse(Array.empty[Byte])
             }) -> params),
-            Some(GroupedHll.pack(agg.toSeq.map { case (k, (_, rider)) =>
-              k -> rider }) -> params))
+            Some(GroupedHll.pack(agg.toSeq.map { case (k, c) =>
+              k -> c.groupedSumPack }) -> params))
         }
       }
     }

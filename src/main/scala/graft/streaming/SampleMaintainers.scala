@@ -1,22 +1,95 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-/** Streaming SAMPLE maintenance — the fold-able sample families split
-  * out of [[EventStreams]] in round 14 (pure code motion, behavior
-  * pinned by BottomKSpec/StreamedSamplesSpec/WindowedSketchesSpec and
-  * the q183 oracle): the bottom-k sample (plain, grouped, windowed)
-  * and the outlier-indexed sample. Sketch maintainers stay in
-  * [[EventStreams]]; windowed sketch families live in
-  * [[WindowedSketches]].
-  *
-  * Shared discipline: folds are idempotent on rows (dedup by key under
-  * a total order), additive counts ride `last_batch` replay guards
-  * stamped LAST, and a PROVISIONAL rider lands before the first fold's
-  * other catalog writes (the round-14 crash-window closure).
+import graft.catalog.MetaCatalog
+
+/** Streaming SAMPLE maintenance: the bottom-k sample (plain, grouped,
+  * windowed, windowed grouped) and the outlier-indexed sample (append,
+  * windowed), each a declaration over [[Fold.sample]]. The fold owns the
+  * crash-safe discipline (replay guard, provisional first-fold rider,
+  * integral key, stored-row read, parquet rewrites, catalog write
+  * order) and, for the windowed forms, the window rules. A declaration
+  * states its batch contributions, its cells, orders and k, its serving
+  * layout, strata and riders. Row-set parity with the batch builders in
+  * `Samplers` is pinned by BottomKSpec, StreamedSamplesSpec,
+  * WindowedSketchesSpec and the q183 oracle. Sketch maintainers live in
+  * [[EventStreams]] and [[WindowedSketches]].
   */
 object SampleMaintainers {
+  private type Rows = Array[Row]
+
+  /** The batch rows with the bottom-k hash `graft_h` under `salt`. */
+  private def hashed(salt: String, keyCol: String): DataFrame => DataFrame =
+    _.withColumn("graft_h",
+      expr(s"graft_h60(concat('$salt', cast($keyCol as string)))"))
+
+  /** The outlier forms' row shape: the double-cast value and the 'ol:'
+    * lottery hash.
+    */
+  private def outlierCols(valueCol: String, keyCol: String)
+      : DataFrame => DataFrame = _
+    .withColumn("graft_olv", col(valueCol).cast("double"))
+    .withColumn("graft_olh",
+      expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
+
+  /** A batch contribution: each cell's first `k` rows under `order`
+    * (TakeOrdered with no cells, `row_number` per cell otherwise).
+    */
+  private def topRows(df: DataFrame, cells: Seq[String], order: Seq[Column],
+      k: Int): Rows =
+    if (cells.isEmpty) df.orderBy(order: _*).limit(k).collect()
+    else df.withColumn("graft_rn", row_number().over(
+        Window.partitionBy(cells.map(col): _*).orderBy(order: _*)))
+      .filter(col("graft_rn") <= k).drop("graft_rn").collect()
+
+  private def byHash(keyCol: String) = Seq(col("graft_h").asc, col(keyCol).asc)
+
+  /** A batch's row count per event-time bucket. */
+  private def bucketCounts(rows: DataFrame): Map[Long, Long] =
+    rows.groupBy(col("graft_bucket")).agg(count(lit(1)).as("c")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The windowed bottom-k and outlier state riders' bucket counts
+    * ("bucket\tcount" lines).
+    */
+  private def flatCounts(rider: Option[MetaCatalog#SketchInfo])
+      : Map[Long, Long] = rider.fold(Map.empty[Long, Long])(r =>
+    BlobEscape.decodeCounts(r.data).map { case (b, c) => b.toLong -> c })
+  private def flatBlob(live: Map[Long, Long]): Array[Byte] =
+    BlobEscape.encodeCounts(live.map { case (b, c) => b.toString -> c })
+
+  /** The one-stratum ("all") strata of the plain bottom-k forms. */
+  private def whole(n: Long, achieved: Long) = Seq(("all", n, achieved,
+    Fold.fraction(achieved, n), n.toDouble / math.max(1L, achieved)))
+
+  /** The grouped forms' serving rows (`fields` of each row, then
+    * graft_gn/graft_gw from the running per-group counts, floored at
+    * the group's achieved size) and their per-group strata.
+    */
+  private def stampGroups(b: Fold.SampleBatch, fields: Seq[StructField],
+      rows: Rows, groupOf: Row => String, counts: Map[String, Long]) = {
+    val idx = fields.map(f => b.schema.fieldIndex(f.name))
+    val achieved = rows.groupBy(groupOf)
+      .map { case (g, rs) => g -> rs.length.toLong }
+    val out = rows.map { r =>
+      val gk = achieved(groupOf(r))
+      val gn = math.max(counts.getOrElse(groupOf(r), gk), gk)
+      Row.fromSeq(idx.map(r.get) ++ Seq[Any](gn, gn.toDouble / math.max(1L, gk)))
+    }
+    val schema = StructType(fields ++ Seq(
+      StructField("graft_gn", LongType, nullable = false),
+      StructField("graft_gw", DoubleType, nullable = false)))
+    ((schema, out.toSeq), counts.toSeq.sortBy(_._1).map { case (g, gn) =>
+      val gk = achieved.getOrElse(g, 0L)
+      (g, gn, gk, gk.toDouble / math.max(1L, gn), gn.toDouble / math.max(1L, gk))
+    })
+  }
+
   /** Streaming BOTTOM-K SAMPLE maintenance (round 12) — the one
     * catalog object streams could not keep fresh until now: every
     * fixed-FRACTION sample (uniform/stratified/outlier lotteries) must
@@ -33,121 +106,30 @@ object SampleMaintainers {
     * Row-set parity: the maintained sample holds EXACTLY the rows
     * `Samplers.createBottomK` would pick over the same data (same
     * 'bk:' hash, same (hash, key) total order) — the BottomKSpec law.
-    * The fold is idempotent on rows (dedup by key before truncating),
-    * but the base count N is ADDITIVE, so a `last_batch` replay guard
-    * rides in the catalog sketch params (the histogram maintainers'
-    * discipline): a re-delivered batch neither double-counts N nor
-    * perturbs the row fold. Key must be integral (the driver-side
-    * merge orders by it); uniqueness across the whole stream is the
-    * caller's contract, as in the batch builder.
+    * The base count N is ADDITIVE and continues from the rider (or, on
+    * takeover of a batch-built sample, from its recorded baseRows).
+    * Key must be integral (the driver-side merge orders by it);
+    * uniqueness across the whole stream is the caller's contract, as in
+    * the batch builder.
     */
   def maintainBottomKSample(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, keyCol: String,
-      k: Int = 2048): org.apache.spark.sql.streaming.StreamingQuery = {
+      catalog: MetaCatalog, table: String, keyCol: String,
+      k: Int = 2048): StreamingQuery = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val name = s"${table}__bottomk_$keyCol"
-    val path = s"${catalog.samplesDir}/$name"
-    Fold.run(values) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, keyCol, "bottomk_rider")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        val keyIdx = batch.schema.fieldIndex(keyCol)
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(keyIdx).dataType.typeName),
-          s"bottom-k stream key $keyCol must be integral")
-        val hExpr = expr(
-          s"graft_h60(concat('bk:', cast($keyCol as string)))")
-        val withH = batch.withColumn("graft_h", hExpr)
-        val batchTop = withH
-          .orderBy(col("graft_h").asc, col(keyCol).asc).limit(k)
-          .collect()
-        val batchN = batch.count()
-        val schema = withH.schema
-        // normalize the STORED rows to the batch frame's field order
-        // before the positional merge (keyIdx/hIdx are computed from
-        // the batch schema; a batch-built parquet with a different
-        // column order would otherwise be read positionally wrong —
-        // the grouped maintainer's existing discipline)
-        val stored =
-          if (new java.io.File(path).exists)
-            s.read.parquet(path)
-              .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-              .collect()
-          else Array.empty[org.apache.spark.sql.Row]
-        val hIdx = schema.fieldIndex("graft_h")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        // idempotent on rows: dedup by key, THEN truncate at k under
-        // the (hash, key) total order — a replayed batch's rows merge
-        // to the identical set
-        val merged = (stored ++ batchTop)
-          .groupBy(keyOf).map(_._2.head).toArray
-          .sortBy(r => (r.getLong(hIdx), keyOf(r)))
-          .take(k)
-        // CONTINUE the base count: the rider carries it across folds,
-        // and a maintainer taking over a BATCH-BUILT sample (no fold
-        // yet — the builder writes the rider too, but an old catalog
-        // may predate it) seeds from the sample's recorded baseRows
-        // instead of silently resetting N to one batch's worth
-        val prevN = rider.flatMap(_.paramLong("rows"))
-          .orElse(catalog.samplesFor(table)
-            .find(_.sampleTable == name).flatMap(_.baseRows))
-          .getOrElse(0L)
-        // FIRST-EVER fold on a pure stream (no rider yet): stamp a
-        // PROVISIONAL rider carrying the pre-batch count BEFORE any
-        // other catalog write, closing the round-13 crash window —
-        // a crash between addSample and the final stamp used to make
-        // the replay seed prevN from the crashed fold's baseRows and
-        // re-add the batch (N over by one batch). With the
-        // provisional rider, the replay's fallback chain reads the
-        // un-advanced "rows" and the fold stays exactly idempotent.
-        if (catalog.getSketch(table, keyCol, "bottomk_rider").isEmpty)
-          catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-            "bottomk_rider", Array.emptyByteArray,
-            s"""{"rows":$prevN,"k":$k,"last_batch":$lastBatch}""",
-            System.currentTimeMillis()))
-        val n = prevN + batchN
-        s.createDataFrame(
-          java.util.Arrays.asList(merged: _*), schema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        val sampleDf = s.read.parquet(path)
-        sampleDf.createOrReplaceTempView(name)
-        val achieved = merged.length.toLong
-        val fraction = math.min(0.9999,
-          achieved.toDouble / math.max(1L, n))
-        // re-prove decimal safety over the CURRENT fold's rows (the
-        // builder's check, verbatim — new rows can carry values the
-        // batch-validated set never saw)
-        val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__bottomk__${keyCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, Seq(
-          catalog.StratumInfo(name, "all", n, achieved, fraction,
-            n.toDouble / math.max(1L, achieved), 0.0)))
-        // the replay-guard stamp lands LAST: a crash mid-fold leaves
-        // last_batch at its previous value, so the replayed batch
-        // re-runs the whole fold (rows are idempotent, N continues
-        // from the un-advanced rider) instead of leaving the catalog
-        // entry/stats/strata one fold behind the rewritten parquet.
-        // The first-ever fold is covered too (round 14): the
-        // provisional rider stamped above addSample means EVERY
-        // replay reads the un-advanced "rows" from the rider — no
-        // fold, first or later, can double-count N.
-        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-          "bottomk_rider", Array.emptyByteArray,
-          s"""{"rows":$n,"k":$k,"last_batch":$batchId,"decsafe":"$decsafe"}""",
-          System.currentTimeMillis()))
-      }
+    Fold.sample(values, catalog, table, Fold.Sample(
+      s"${table}__bottomk_$keyCol", s"__bottomk__${keyCol.toLowerCase}",
+      keyCol, "bottomk_rider", keyCol, "bottom-k", hashed("bk:", keyCol))) {
+      b =>
+        val prevN = b.prevRows
+        val n = prevN + b.rows.count()
+        val merged = Fold.firstK(
+          b.sampleRows ++ topRows(b.rows, Nil, byHash(keyCol), k), b.keyOf,
+          _ => (), b.byHash("graft_h"), k)
+        Fold.SampleOut(n, (b.schema, merged.toSeq), whole(n, merged.length),
+          d => Seq(("bottomk_rider", Array.emptyByteArray,
+            s"""{"rows":$n,"k":$k,"last_batch":${b.id},"decsafe":"$d"}""")),
+          provisional = Some(Array.emptyByteArray ->
+            s"""{"rows":$prevN,"k":$k,"last_batch":${Fold.lastBatch(b.rider)}}"""))
     }
   }
 
@@ -157,156 +139,102 @@ object SampleMaintainers {
     * group's exact running count N_g, so the per-row `graft_gw` = N_g/k_g
     * serve weights track ingest exactly. The per-group counts ride in
     * the rider sketch's data bytes ("group\tcount" lines — group values
-    * render via String.valueOf, same as the strata rows); the
-    * `last_batch` guard keeps the additive counts replay-safe while the
-    * row fold stays idempotent (dedup by key, truncate per group).
-    * Row-set parity with `Samplers.createBottomKGrouped` over the same
-    * rows is the BottomKSpec law.
+    * render via String.valueOf, same as the strata rows) and continue
+    * across folds; a maintainer taking over a BATCH-BUILT sample with no
+    * rider seeds them from the catalog's per-group strata (the rider's
+    * PRESENCE gates that: the provisional rider's empty count map must
+    * not fall through to a crashed fold's strata). Groups must be
+    * non-NULL (the batch builder's contract). Row-set parity with
+    * `Samplers.createBottomKGrouped` over the same rows is the
+    * BottomKSpec law.
     */
   def maintainBottomKGrouped(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, groupCol: String,
+      catalog: MetaCatalog, table: String, groupCol: String,
       keyCol: String, kPerGroup: Int = 512)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(kPerGroup >= 1, s"kPerGroup must be >= 1, got $kPerGroup")
     val name = s"${table}__bottomkg_$groupCol"
-    val path = s"${catalog.samplesDir}/$name"
-    Fold.run(values) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, groupCol, "bottomkg_rider")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        val keyIdx = batch.schema.fieldIndex(keyCol)
-        val gIdx = batch.schema.fieldIndex(groupCol)
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(keyIdx).dataType.typeName),
-          s"grouped bottom-k stream key $keyCol must be integral")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(groupCol))
-          .orderBy(
-            expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))").asc,
-            col(keyCol).asc)
-        val withH = batch.withColumn("graft_h",
-          expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
-        val batchTop = withH
-          .withColumn("graft_rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .filter(col("graft_rn") <= kPerGroup)
-          .drop("graft_rn")
-          .collect()
-        val batchCountRows = batch.groupBy(col(groupCol))
-          .agg(count(lit(1)).as("c")).collect()
-        // the batch builder REQUIRES non-null groups (a NULL group
-        // cannot carry a weight); the fold enforces the same contract
-        // instead of silently folding nulls as the string "null"
-        batchCountRows.foreach(r => require(!r.isNullAt(0),
-          s"grouped bottom-k stream group $groupCol must be non-null"))
-        val batchCounts = batchCountRows
-          .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-        // running per-group counts: the rider blob (escaped lines —
-        // group values can contain tabs/newlines) continues across
-        // folds; a maintainer taking over a BATCH-BUILT sample with
-        // no blob yet seeds from the catalog's per-group strata
-        // instead of resetting every count to one batch's worth
-        // gate on rider PRESENCE, not blob non-emptiness: a
-        // provisional first-fold rider (below) carries a genuinely
-        // empty count map, and falling through to strata here would
-        // re-open the crash window it exists to close (replayed
-        // first fold double-counting via the crashed fold's strata)
-        val prevCounts: Map[String, Long] = rider match {
-          case Some(r) => BlobEscape.decodeCounts(r.data)
-          case None => catalog.strataFor(name)
-            .map(st => st.strataValue -> st.popSize).toMap
-        }
-        // FIRST-EVER fold: provisional rider with the pre-batch
-        // counts BEFORE any other catalog write (the plain
-        // maintainer's round-14 discipline) — a crash between
-        // putStrata and the final stamp can no longer make the
-        // replay seed from the crashed fold's strata
-        if (rider.isEmpty)
-          catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-            "bottomkg_rider", BlobEscape.encodeCounts(prevCounts),
-            s"""{"rows":${prevCounts.valuesIterator.sum},"k":$kPerGroup,"last_batch":$lastBatch}""",
-            System.currentTimeMillis()))
-        val counts = (prevCounts.keySet ++ batchCounts.keySet).iterator
-          .map(g => g -> (prevCounts.getOrElse(g, 0L) +
-            batchCounts.getOrElse(g, 0L))).toMap
-        // base-row shape shared by stored and batch rows: the batch
-        // columns + graft_h (stored rows drop their stale gn/gw)
-        val baseSchema = withH.schema
-        val stored: Array[org.apache.spark.sql.Row] =
-          if (new java.io.File(path).exists)
-            s.read.parquet(path)
-              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-              .collect()
-          else Array.empty
-        val hIdx = baseSchema.fieldIndex("graft_h")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        val merged = (stored ++ batchTop)
-          .groupBy(keyOf).map(_._2.head).toArray
-          .groupBy(r => String.valueOf(r.get(gIdx)))
-          .valuesIterator
-          .flatMap(rows =>
-            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-          .toArray
-        // stamp the live gn/gw per row from the running counts
-        val outSchema = org.apache.spark.sql.types.StructType(
-          baseSchema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField("graft_gn",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("graft_gw",
-              org.apache.spark.sql.types.DoubleType, nullable = false)))
-        val achievedPerGroup = merged
-          .groupBy(r => String.valueOf(r.get(gIdx)))
-          .map { case (g, rows) => g -> rows.length.toLong }
-        val out = merged.map { r =>
-          val g = String.valueOf(r.get(gIdx))
-          // defensive floor: a stored group missing from the counts
-          // map (possible only on a corrupted rider) still gets a
-          // consistent weight >= 1 instead of killing the stream
-          val gk = achievedPerGroup(g)
-          val gn = math.max(counts.getOrElse(g, gk), gk)
-          org.apache.spark.sql.Row.fromSeq(
-            r.toSeq ++ Seq[Any](gn, gn.toDouble / math.max(1L, gk)))
-        }
-        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        s.read.parquet(path).createOrReplaceTempView(name)
-        val n = counts.valuesIterator.sum
-        val achieved = merged.length.toLong
-        val fraction = math.min(0.9999,
-          achieved.toDouble / math.max(1L, n))
-        val blob = BlobEscape.encodeCounts(counts)
-        val decsafe = graft.sample.Samplers.decimalSafeCols(
-          s.read.parquet(path))
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, counts.toSeq.sortBy(_._1).map {
-          case (g, gn) =>
-            val gk = achievedPerGroup.getOrElse(g, 0L)
-            catalog.StratumInfo(name, g, gn, gk,
-              gk.toDouble / math.max(1L, gn),
-              gn.toDouble / math.max(1L, gk), 0.0)
-        })
-        // replay-guard stamp LAST (see the plain maintainer): a crash
-        // mid-fold re-runs the whole idempotent fold on replay rather
-        // than skipping it with half the catalog writes missing
-        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-          "bottomkg_rider", blob,
-          s"""{"rows":$n,"k":$kPerGroup,"last_batch":$batchId,"decsafe":"$decsafe"}""",
-          System.currentTimeMillis()))
-      }
+    Fold.sample(values, catalog, table, Fold.Sample(name,
+      s"__bottomkg__${groupCol.toLowerCase}", groupCol, "bottomkg_rider",
+      keyCol, "grouped bottom-k", hashed("bkg:", keyCol))) { b =>
+      val batchCounts = b.rows.groupBy(col(groupCol))
+        .agg(count(lit(1)).as("c")).collect()
+      batchCounts.foreach(r => require(!r.isNullAt(0),
+        s"grouped bottom-k stream group $groupCol must be non-null"))
+      val prev = b.rider.fold(catalog.strataFor(name)
+        .map(st => st.strataValue -> st.popSize).toMap)(r =>
+        BlobEscape.decodeCounts(r.data))
+      val counts = Fold.union(prev, batchCounts
+        .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap)(_ + _)
+      val merged = Fold.firstK(b.sampleRows ++
+        topRows(b.rows, Seq(groupCol), byHash(keyCol), kPerGroup),
+        b.keyOf, b.field(groupCol), b.byHash("graft_h"), kPerGroup)
+      val (serving, strata) = stampGroups(b, b.schema.fields.toSeq, merged,
+        b.field(groupCol), counts)
+      val n = counts.valuesIterator.sum
+      Fold.SampleOut(n, serving, strata, d => Seq(("bottomkg_rider",
+        BlobEscape.encodeCounts(counts),
+        s"""{"rows":$n,"k":$kPerGroup,"last_batch":${b.id},"decsafe":"$d"}""")),
+        provisional = Some(BlobEscape.encodeCounts(prev) ->
+          s"""{"rows":${prev.valuesIterator.sum},"k":$kPerGroup,"last_batch":${Fold.lastBatch(b.rider)}}"""))
     }
   }
+
+  /** The outlier forms' tails over a batch's row shape: the high tail
+    * under (value DESC, key ASC) and the low tail under (value ASC, key
+    * ASC) on the double-cast value, with the key tie-break.
+    */
+  private final class Tails(b: Fold.SampleBatch) {
+    private val vIdx = b.schema.fieldIndex("graft_olv")
+    val hi = Ordering.by[Row, (Double, Long)](r => (-r.getDouble(vIdx), b.keyOf(r)))
+    val lo = Ordering.by[Row, (Double, Long)](r => (r.getDouble(vIdx), b.keyOf(r)))
+    def valued(r: Row): Boolean = !r.isNullAt(vIdx)
+
+    /** The top-`hiK` of `hiC`, the bottom-`loK` of `loC` outside it, and
+      * `restC` outside both, each deduplicated by key.
+      */
+    def apply(hiC: Rows, loC: Rows, restC: Rows, hiK: Int, loK: Int)
+        : (Rows, Rows, Rows) = {
+      val high = Fold.firstK(hiC, b.keyOf, _ => (), hi, hiK)
+      val hiKeys = high.map(b.keyOf).toSet
+      val low = Fold.firstK(loC.filterNot(r => hiKeys(b.keyOf(r))), b.keyOf,
+        _ => (), lo, loK)
+      val tail = hiKeys ++ low.map(b.keyOf)
+      (high, low, Fold.dedup(restC, b.keyOf).filterNot(r => tail(b.keyOf(r))))
+    }
+  }
+
+  /** A parted state's rows by part ("hi", "lo", "rest"). */
+  private def parts(stored: Rows): String => Rows = {
+    val byPart = stored.map(r =>
+      r.getString(r.length - 1) -> Row.fromSeq(r.toSeq.dropRight(1)))
+    p => byPart.collect { case (`p`, r) => r }
+  }
+  private def parted(ps: (String, Rows)*): Seq[Row] =
+    ps.flatMap { case (p, rows) => rows.map(r => Row.fromSeq(r.toSeq :+ p)) }
+
+  /** The outlier sample's serving rows: `fields` of each row, then
+    * `graft_weight` (1 for the exact tails, the lottery weight for the
+    * rest).
+    */
+  private def weighted(fields: Seq[StructField], b: Fold.SampleBatch,
+      ps: (Rows, Double)*): (StructType, Seq[Row]) = {
+    val idx = fields.map(f => b.schema.fieldIndex(f.name))
+    (StructType(fields :+ StructField("graft_weight", DoubleType,
+      nullable = false)),
+      ps.flatMap { case (rows, w) => rows.map(r => Row.fromSeq(idx.map(r.get) :+ w)) })
+  }
+
+  private def outlierStrata(n: Long, hi: Rows, lo: Rows, rest: Rows,
+      lowK: Int, w: Long) =
+    Seq(("outlier", hi.length.toLong, hi.length.toLong, 1.0, 1.0)) ++
+      (if (lowK > 0) Seq(("outlier_low", lo.length.toLong, lo.length.toLong,
+        1.0, 1.0)) else Nil) ++
+      Seq(("rest", math.max(0L, n - hi.length - lo.length), rest.length.toLong,
+        1.0 / w, w.toDouble))
+
+  private def lottery(threshold: Long): Column =
+    col("graft_olh") % lit(8192L) < lit(threshold)
 
   /** Streaming OUTLIER-INDEXED sample maintenance (round 14 — the
     * round-13 verdict's staleness gap): `Samplers.createOutlierSample`
@@ -327,231 +255,95 @@ object SampleMaintainers {
     * The exact-tail invariant survives displacement: a batch row
     * entering the tail demotes the displaced weight-1 row THROUGH the
     * lottery (it keeps exactly the membership a batch build would give
-    * it), and because the power-of-two weight w only grows with N, the
-    * current threshold only tightens — re-filtering the stored rest
+    * it; a row displaced from the high tail first competes for the low
+    * tail), and because the power-of-two weight w only grows with N,
+    * the current threshold only tightens — re-filtering the stored rest
     * drops exactly the rows a fresh build would never have kept. The
     * maintained sample therefore holds EXACTLY `createOutlierSample`'s
     * rows over the same data (the fold == rebuild law), and the
     * catalog entry re-stamps N/w/strata each fold so exact MAX (and
     * MIN on two-sided builds) keep serving as the stream appends.
     * State: the `__state` parquet carries (row, graft_olv, graft_olh,
-    * graft_part); additive N rides the "outlier_rider" `last_batch`
-    * guard stamped LAST (provisional rider before the first fold's
-    * catalog writes — the crash-safe discipline). Key must be integral
-    * and stream-unique (the builder's contract). A maintainer taking
-    * over a batch-built sample (no state yet) re-derives the parts
-    * from the sample parquet: under the total order, every rest row
-    * sorts after the k-th tail row, so the inference is exact.
+    * graft_part); additive N rides the "outlier_rider" guard. Key must
+    * be integral and stream-unique (the builder's contract). A
+    * maintainer taking over a batch-built sample (no state yet)
+    * re-derives the parts from the sample parquet with the BUILD's tail
+    * sizes (its strata): under the total order every rest row sorts
+    * after the k-th tail row, so the inference is exact. Sorting with a
+    * larger k would promote lottery rows into the exact tails and a
+    * smaller one demote true tail rows through the lottery, so a build
+    * whose tails exceed the configured ones is refused.
     */
   def maintainOutlierSample(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, valueCol: String,
+      catalog: MetaCatalog, table: String, valueCol: String,
       keyCol: String, outlierK: Int = 500, targetRest: Long = 2048L,
-      lowK: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
+      lowK: Int = 0): StreamingQuery = {
     require(outlierK >= 1, "outlierK must be >= 1")
     require(targetRest >= 1, "targetRest must be >= 1")
     require(lowK >= 0, "lowK must be >= 0")
     val name =
       if (lowK > 0) s"${table}__outlier2_$valueCol"
       else s"${table}__outlier_$valueCol"
-    val path = s"${catalog.samplesDir}/$name"
-    val statePath = s"${catalog.samplesDir}/${name}__state"
-    Fold.run(values) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, valueCol, "outlier_rider")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-            .dataType.typeName),
-          s"outlier stream key $keyCol must be integral")
-        def annotate(df: DataFrame): DataFrame = df
-          .withColumn("graft_olv",
-            col(valueCol).cast("double"))
-          .withColumn("graft_olh",
-            expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
-        val withH = annotate(batch)
-        val baseSchema = withH.schema // batch columns + olv + olh
-        val keyIdx = baseSchema.fieldIndex(keyCol)
-        val vIdx = baseSchema.fieldIndex("graft_olv")
-        val hIdx = baseSchema.fieldIndex("graft_olh")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        // the two tail total orders (builder parity: DESC/ASC on the
-        // double-cast value, key tie-break)
-        val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-          r => (-r.getDouble(vIdx), keyOf(r)))
-        val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-          r => (r.getDouble(vIdx), keyOf(r)))
-        val batchN = batch.count()
-        val prevN = rider.flatMap(_.paramLong("rows"))
-          .orElse(catalog.samplesFor(table)
-            .find(_.sampleTable == name).flatMap(_.baseRows))
-          .getOrElse(0L)
-        // provisional rider BEFORE any other catalog write (the
-        // bottom-k maintainers' round-14 discipline): a first-fold
-        // crash after addSample can no longer double-count N
-        if (rider.isEmpty)
-          catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-            "outlier_rider", Array.emptyByteArray,
-            s"""{"rows":$prevN,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$lastBatch}""",
-            System.currentTimeMillis()))
-        val n = prevN + batchN
-        // the CURRENT power-of-two weight — monotone in N, so the
-        // lottery threshold only ever tightens
-        val m = math.max(0L, n - outlierK - lowK) / targetRest
-        val w = if (m < 1L) 1L
-          else math.min(8192L, java.lang.Long.highestOneBit(m))
-        val threshold = 8192L / w
-        // batch contributions: one TakeOrdered per tail, the lottery
-        // winners at the (already-final) current threshold
-        val batchHigh = withH.filter(col(valueCol).isNotNull)
-          .orderBy(col("graft_olv").desc, col(keyCol).asc)
-          .limit(outlierK).collect()
-        val batchLow =
-          if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
-          else withH.filter(col(valueCol).isNotNull)
-            .orderBy(col("graft_olv").asc, col(keyCol).asc)
-            .limit(lowK).collect()
-        val batchWinners = withH
-          .filter(col("graft_olh") % lit(8192L) < lit(threshold))
-          .collect()
-        // stored state: (part, row); takeover re-derives parts from
-        // the batch-built sample parquet (exact under the total
-        // order — every rest row sorts after the k-th tail row)
-        val baseCols = baseSchema.fieldNames.toIndexedSeq
-        val stored: Array[(String, org.apache.spark.sql.Row)] =
-          if (new java.io.File(statePath).exists) {
-            s.read.parquet(statePath)
-              .select((baseCols :+ "graft_part").map(col): _*)
-              .collect()
-              .map(r => r.getString(baseCols.length) ->
-                org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-          } else if (new java.io.File(path).exists) {
-            // Takeover from a batch build: the tail sizes are the
-            // BUILD's, not the maintainer's — re-derive parts from the
-            // recorded strata (achieved hi/lo sizes) instead of the
-            // configured outlierK/lowK. Sorting with a LARGER k would
-            // silently promote lottery (weight-w) rows into the exact
-            // tails; a SMALLER one would demote true weight-1 tail rows
-            // through the lottery — both bias every weighted estimate.
-            // Growth direction is safe (tails refill from new batches),
-            // shrink direction is refused loudly.
-            val built = catalog.strataFor(name)
-            require(built.nonEmpty,
-              s"outlier maintainer takeover of $name needs the build's " +
-                "strata to recover its tail sizes; none recorded")
-            val builtHi = built.find(_.strataValue == "outlier")
-              .map(_.sampleSize).getOrElse(0L)
-            val builtLo = built.find(_.strataValue == "outlier_low")
-              .map(_.sampleSize).getOrElse(0L)
-            require(builtHi <= outlierK && builtLo <= lowK,
-              s"outlier maintainer takeover of $name: built tails " +
-                s"(hi=$builtHi, lo=$builtLo) exceed configured " +
-                s"(k=$outlierK, lowK=$lowK) — shrinking a tail would " +
-                "demote exact weight-1 rows through the lottery; " +
-                "rebuild the sample or raise the maintainer's k")
-            val rows = annotate(
-              s.read.parquet(path).drop("graft_weight")
-                .select(batch.schema.fieldNames.map(col).toIndexedSeq: _*))
-              .select(baseCols.map(col): _*)
-              .collect()
-            val (valued, nulls) = rows.partition(!_.isNullAt(vIdx))
-            val hi = valued.sorted(hiOrd).take(builtHi.toInt)
-            val hiKeys = hi.map(keyOf).toSet
-            val lo = valued.filterNot(r => hiKeys.contains(keyOf(r)))
-              .sorted(loOrd).take(builtLo.toInt)
-            val loKeys = lo.map(keyOf).toSet
-            val rest = valued.filterNot(r =>
-              hiKeys.contains(keyOf(r)) || loKeys.contains(keyOf(r))) ++
-              nulls
-            (hi.map("hi" -> _) ++ lo.map("lo" -> _) ++
-              rest.map("rest" -> _))
-          } else Array.empty
-        def part(p: String) = stored.collect { case (`p`, r) => r }
-        // merge the tails (dedup by key — replay-idempotent rows),
-        // then demote displaced weight-1 rows through the lottery
-        val mergedHigh = (part("hi") ++ batchHigh)
-          .groupBy(keyOf).map(_._2.head).toArray
-          .sorted(hiOrd).take(outlierK)
-        val hiKeys = mergedHigh.map(keyOf).toSet
-        // part("hi") joins the low-tail candidates too: a row DISPLACED
-        // from the high tail this fold must compete for the low tail
-        // before falling to the lottery, or on small populations the
-        // maintained bottom-lowK could hold fewer rows than a rebuild's
-        // (hi→lo crossover; the filterNot keeps surviving hi rows out)
-        val mergedLow = (part("lo") ++ batchLow ++ part("hi"))
-          .groupBy(keyOf).map(_._2.head).toArray
-          .filterNot(r => hiKeys.contains(keyOf(r)))
-          .sorted(loOrd).take(lowK)
-        val loKeys = mergedLow.map(keyOf).toSet
-        def inTail(r: org.apache.spark.sql.Row): Boolean = {
-          val k0 = keyOf(r)
-          hiKeys.contains(k0) || loKeys.contains(k0)
-        }
-        val mergedRest = (part("rest") ++ part("hi") ++ part("lo") ++
-          batchWinners)
-          .groupBy(keyOf).map(_._2.head).toArray
-          .filterNot(inTail)
-          // h60 is a non-negative 60-bit hash: plain % matches the
-          // builder's SQL-side `% 8192` exactly
-          .filter(r => r.getLong(hIdx) % 8192L < threshold)
-        // state + serving rewrites (serving = builder's layout:
-        // batch columns + graft_weight)
-        val stateSchema = org.apache.spark.sql.types.StructType(
-          baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-            "graft_part", org.apache.spark.sql.types.StringType,
-            nullable = false))
-        val stateRows =
-          mergedHigh.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "hi")) ++
-          mergedLow.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "lo")) ++
-          mergedRest.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "rest"))
-        s.createDataFrame(
-          java.util.Arrays.asList(stateRows: _*), stateSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(statePath)
-        s.read.parquet(statePath)
-          .withColumn("graft_weight",
-            expr(s"case when graft_part = 'rest' then cast($w as double) " +
-              "else cast(1 as double) end"))
-          .drop("graft_olv", "graft_olh", "graft_part")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        val sampleDf = s.read.parquet(path)
-        sampleDf.createOrReplaceTempView(name)
-        val (nOut, nLow, nRest) =
-          (mergedHigh.length.toLong, mergedLow.length.toLong,
-            mergedRest.length.toLong)
-        val fraction = math.min(0.9999,
-          (nOut + nLow + nRest).toDouble / math.max(1L, n))
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__outlier__${valueCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, Seq(
-          catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
-            0.0)) ++
-          (if (lowK > 0)
-            Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
-              1.0, 1.0, 0.0))
-          else Nil) ++ Seq(
-          catalog.StratumInfo(name, "rest",
-            math.max(0L, n - nOut - nLow), nRest, 1.0 / w, w.toDouble,
-            0.0)))
-        // replay-guard stamp LAST (crash-safe fold discipline)
-        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-          "outlier_rider", Array.emptyByteArray,
-          s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$batchId}""",
-          System.currentTimeMillis()))
-      }
+    def params(rows: Long, batch: Long) =
+      s"""{"rows":$rows,"k":$outlierK,"lowk":$lowK,"target":$targetRest,"last_batch":$batch}"""
+    Fold.sample(values, catalog, table, Fold.Sample(name,
+      s"__outlier__${valueCol.toLowerCase}", valueCol, "outlier_rider", keyCol,
+      "outlier", outlierCols(valueCol, keyCol),
+      state = Some(MetaCatalog.StateDir), parted = true)) { b =>
+      val tails = new Tails(b)
+      val prevN = b.prevRows
+      val n = prevN + b.rows.count()
+      // the CURRENT power-of-two weight — monotone in N, so the
+      // lottery threshold only ever tightens
+      val m = math.max(0L, n - outlierK - lowK) / targetRest
+      val w = if (m < 1L) 1L
+        else math.min(8192L, java.lang.Long.highestOneBit(m))
+      val threshold = 8192L / w
+      val valued = b.rows.filter(col(valueCol).isNotNull)
+      val batchHigh = topRows(valued, Nil,
+        Seq(col("graft_olv").desc, col(keyCol).asc), outlierK)
+      val batchLow = if (lowK == 0) Array.empty[Row]
+        else topRows(valued, Nil, Seq(col("graft_olv").asc, col(keyCol).asc),
+          lowK)
+      val winners = b.rows.filter(lottery(threshold)).collect()
+      val part =
+        if (b.hasState) parts(b.stored)
+        else if (b.hasSample) {
+          val built = catalog.strataFor(name)
+          require(built.nonEmpty,
+            s"outlier maintainer takeover of $name needs the build's " +
+              "strata to recover its tail sizes; none recorded")
+          val builtHi = built.find(_.strataValue == "outlier")
+            .map(_.sampleSize).getOrElse(0L)
+          val builtLo = built.find(_.strataValue == "outlier_low")
+            .map(_.sampleSize).getOrElse(0L)
+          require(builtHi <= outlierK && builtLo <= lowK,
+            s"outlier maintainer takeover of $name: built tails " +
+              s"(hi=$builtHi, lo=$builtLo) exceed configured " +
+              s"(k=$outlierK, lowK=$lowK) — shrinking a tail would " +
+              "demote exact weight-1 rows through the lottery; " +
+              "rebuild the sample or raise the maintainer's k")
+          val (valuedRows, nulls) = b.sampleRows.partition(tails.valued)
+          val (hi, lo, rest) = tails(valuedRows, valuedRows, valuedRows,
+            builtHi.toInt, builtLo.toInt)
+          Map("hi" -> hi, "lo" -> lo, "rest" -> (rest ++ nulls))
+        } else (_: String) => Array.empty[Row]
+      // the demotion rule: a row displaced from the high tail competes
+      // for the low tail, then falls to the lottery
+      val (hi, lo, rest0) = tails(part("hi") ++ batchHigh,
+        part("lo") ++ batchLow ++ part("hi"),
+        part("rest") ++ part("hi") ++ part("lo") ++ winners, outlierK, lowK)
+      // h60 is a non-negative 60-bit hash: plain % matches the
+      // builder's SQL-side `% 8192` exactly
+      val hIdx = b.schema.fieldIndex("graft_olh")
+      val rest = rest0.filter(r => r.getLong(hIdx) % 8192L < threshold)
+      Fold.SampleOut(n, weighted(b.schema.fields.toSeq.filterNot(f =>
+          f.name == "graft_olv" || f.name == "graft_olh"), b,
+          hi -> 1.0, lo -> 1.0, rest -> w.toDouble),
+        outlierStrata(n, hi, lo, rest, lowK, w),
+        _ => Seq(("outlier_rider", Array.emptyByteArray, params(n, b.id))),
+        parted("hi" -> hi, "lo" -> lo, "rest" -> rest),
+        Some(Array.emptyByteArray -> params(prevN, Fold.lastBatch(b.rider))))
     }
   }
 
@@ -618,139 +410,38 @@ object SampleMaintainers {
     * buckets, so the N/k serve weight tracks the LIVE WINDOW — expired
     * rows leave both the sample and N (the EventStreamsSpec law).
     * Expiry is bucket-granular (the standard trade: a window of W
-    * serves between W and W + bucket of history); replay rides the
-    * `last_batch` guard stamped LAST (crash-safe fold, rows idempotent
-    * per bucket, counts re-derived from the un-advanced rider).
+    * serves between W and W + bucket of history). The "bottomk_rider"
+    * re-stamps each fold so the plain bottom-k serve contracts (decimal
+    * proof, N, k) work unchanged on the windowed sample.
     */
   def maintainBottomKWindowed(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, keyCol: String,
+      catalog: MetaCatalog, table: String, keyCol: String,
       tsCol: String, windowMicros: Long, bucketMicros: Long,
       k: Int = 2048, checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(k >= 1 && windowMicros >= bucketMicros && bucketMicros > 0,
       s"need k >= 1 and window >= bucket > 0")
-    val name = s"${table}__bottomkw_$keyCol"
-    val path = s"${catalog.samplesDir}/$name"
-    val statePath = s"${catalog.samplesDir}/${name}__state"
-    Fold.run(values, checkpointLocation) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, keyCol, "bottomkw_state")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-            .dataType.typeName),
-          s"windowed bottom-k stream key $keyCol must be integral")
-        // NULL event times carry no bucket: drop them up front (the
-        // grouped/windowed maintainers' shared discipline) or the
-        // driver-side getLong on the NULL graft_bucket NPEs the query
-        val withH = batch.filter(col(tsCol).isNotNull)
-          .withColumn("graft_bucket",
-            expr(s"unix_micros($tsCol) div $bucketMicros"))
-          .withColumn("graft_h",
-            expr(s"graft_h60(concat('bkw:', cast($keyCol as string)))"))
-          .drop(tsCol)
-        // positional indices come from the POST-drop schema (dropping
-        // ts shifts any column that followed it)
-        val keyIdx = withH.schema.fieldIndex(keyCol)
-        val wb = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("graft_bucket"))
-          .orderBy(col("graft_h").asc, col(keyCol).asc)
-        val batchTop = withH
-          .withColumn("graft_rn", row_number().over(wb))
-          .filter(col("graft_rn") <= k).drop("graft_rn")
-          .collect()
-        val batchCounts = withH.groupBy(col("graft_bucket"))
-          .agg(count(lit(1)).as("c")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val batchMaxUs = batch.agg(
-          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r                  => r.getLong(0)
-        }
-        val baseSchema = withH.schema
-        val stored: Array[org.apache.spark.sql.Row] =
-          if (new java.io.File(statePath).exists)
-            s.read.parquet(statePath)
-              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-              .collect()
-          else Array.empty
-        val hIdx = baseSchema.fieldIndex("graft_h")
-        val bIdx = baseSchema.fieldIndex("graft_bucket")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        // watermark CONTINUES across folds; counts continue per bucket
-        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
-          .getOrElse(Long.MinValue)
-        val maxUs = math.max(prevMaxUs, batchMaxUs)
-        val prevCounts: Map[Long, Long] = rider
-          .map(r => BlobEscape.decodeCounts(r.data))
-          .getOrElse(Map.empty)
-          .map { case (b, c) => b.toLong -> c }
-        val mergedCounts =
-          (prevCounts.keySet ++ batchCounts.keySet).iterator
-            .map(b => b -> (prevCounts.getOrElse(b, 0L) +
-              batchCounts.getOrElse(b, 0L))).toMap
-        def liveB(b: Long): Boolean =
-          (b + 1L) * bucketMicros > maxUs - windowMicros
-        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-        // fold rows per bucket (idempotent: dedup by key, truncate k
-        // under the (hash, key) total order), then EXPIRE buckets
-        val mergedState = (stored ++ batchTop)
-          .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-          .toArray
-          .groupBy(_.getLong(bIdx))
-          .filter { case (b, _) => liveB(b) }
-          .valuesIterator
-          .flatMap(rows =>
-            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k))
-          .toArray
-        s.createDataFrame(
-          java.util.Arrays.asList(mergedState: _*), baseSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(statePath)
-        // serving sample: global re-merge of the live buckets' samples
-        val serving = mergedState
-          .sortBy(r => (r.getLong(hIdx), keyOf(r))).take(k)
-        s.createDataFrame(
-          java.util.Arrays.asList(serving: _*), baseSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        val sampleDf = s.read.parquet(path)
-        sampleDf.createOrReplaceTempView(name)
-        val n = liveCounts.valuesIterator.sum
-        val achieved = serving.length.toLong
-        val fraction = math.min(0.9999,
-          achieved.toDouble / math.max(1L, n))
-        val decsafe = graft.sample.Samplers.decimalSafeCols(sampleDf)
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__bottomk__${keyCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, Seq(
-          catalog.StratumInfo(name, "all", n, achieved, fraction,
-            n.toDouble / math.max(1L, achieved), 0.0)))
-        // the serving rider keeps the plain-bottom-k serve contracts
-        // (decimal proof, N, k) working unchanged on the windowed
-        // sample
-        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-          "bottomk_rider", Array.emptyByteArray,
-          s"""{"rows":$n,"k":$k,"decsafe":"$decsafe"}""",
-          System.currentTimeMillis()))
-        // replay-guard stamp LAST (crash-safe fold discipline)
-        catalog.upsertSketch(catalog.SketchInfo(table, keyCol,
-          "bottomkw_state",
-          BlobEscape.encodeCounts(
-            liveCounts.map { case (b, c) => b.toString -> c }),
-          s"""{"maxus":$maxUs,"k":$k,"last_batch":$batchId}""",
-          System.currentTimeMillis()))
-      }
+    Fold.sample(values, catalog, table, Fold.Sample(
+      s"${table}__bottomkw_$keyCol", s"__bottomk__${keyCol.toLowerCase}",
+      keyCol, "bottomkw_state", keyCol, "windowed bottom-k",
+      hashed("bkw:", keyCol),
+      Some(Fold.Window(tsCol, windowMicros, bucketMicros)),
+      Some(MetaCatalog.StateDir)), checkpointLocation) { b =>
+      val live = b.live(flatCounts(b.rider), bucketCounts(b.rows), 0L)(_ + _)
+      // per bucket: dedup by (bucket, key), the bucket's first k, then
+      // expire dead buckets; serving: the first k over the live buckets
+      val state = Fold.firstK(b.stored ++
+        topRows(b.rows, Seq("graft_bucket"), byHash(keyCol), k),
+        r => (b.bucketOf(r), b.keyOf(r)), b.bucketOf, b.byHash("graft_h"), k,
+        b.isLive)
+      val serving = state.sorted(b.byHash("graft_h")).take(k)
+      val n = live.valuesIterator.sum
+      Fold.SampleOut(n, (b.schema, serving.toSeq), whole(n, serving.length),
+        d => Seq(("bottomk_rider", Array.emptyByteArray,
+          s"""{"rows":$n,"k":$k,"decsafe":"$d"}"""),
+          ("bottomkw_state", flatBlob(live),
+            s"""{"maxus":${b.maxUs},"k":$k,"last_batch":${b.id}}""")),
+        state.toSeq)
     }
   }
 
@@ -769,190 +460,55 @@ object SampleMaintainers {
     * `Samplers.createBottomKGrouped` over exactly the live rows — the
     * spec law), and graft_gn/graft_gw re-stamp from the exact live
     * per-group counts so grouped HT estimates track the window.
-    * Expiry is bucket-granular (the q183 trade); additive counts ride
-    * the `last_batch` guard on "bkgw_state", stamped LAST; the
-    * "bottomkg_rider" re-stamps each fold so the grouped serves'
-    * contracts (kPerGroup CIs, decimal proof, representation stats)
-    * work unchanged on the windowed sample. Key integral and
-    * stream-unique; groups non-NULL (the builder's contracts).
+    * Expiry is bucket-granular (the q183 trade); per-(bucket, group)
+    * counts ride "bkgw_state"; the "bottomkg_rider" re-stamps each fold
+    * so the grouped serves' contracts (kPerGroup CIs, decimal proof,
+    * representation stats) work unchanged on the windowed sample. Key
+    * integral and stream-unique; groups non-NULL (the builder's
+    * contracts).
     */
   def maintainBottomKGroupedWindowed(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, groupCol: String,
+      catalog: MetaCatalog, table: String, groupCol: String,
       keyCol: String, tsCol: String, windowMicros: Long,
       bucketMicros: Long, kPerGroup: Int = 512)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(kPerGroup >= 1, s"kPerGroup must be >= 1, got $kPerGroup")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    val name = s"${table}__bottomkg_$groupCol"
-    val path = s"${catalog.samplesDir}/$name"
-    val statePath = s"${catalog.samplesDir}/${name}__state"
-    Fold.run(values) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, groupCol, "bkgw_state")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-            .dataType.typeName),
-          s"windowed grouped bottom-k stream key $keyCol must be integral")
-        val withH = batch.filter(col(tsCol).isNotNull)
-          .withColumn("graft_bucket",
-            expr(s"unix_micros($tsCol) div $bucketMicros"))
-          .withColumn("graft_h",
-            expr(s"graft_h60(concat('bkg:', cast($keyCol as string)))"))
-          .drop(tsCol)
-        // positional indices from the POST-drop schema
-        val keyIdx = withH.schema.fieldIndex(keyCol)
-        val gIdx = withH.schema.fieldIndex(groupCol)
-        val wb = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("graft_bucket"), col(groupCol))
-          .orderBy(col("graft_h").asc, col(keyCol).asc)
-        val batchTop = withH
-          .withColumn("graft_rn", row_number().over(wb))
-          .filter(col("graft_rn") <= kPerGroup).drop("graft_rn")
-          .collect()
-        val batchCountRows = withH
-          .groupBy(col("graft_bucket"), col(groupCol))
-          .agg(count(lit(1)).as("c")).collect()
-        batchCountRows.foreach(r => require(!r.isNullAt(1),
-          s"windowed grouped bottom-k group $groupCol must be non-null"))
-        val batchCounts: Map[Long, Map[String, Long]] =
-          batchCountRows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
-            bkt -> rs.map(r =>
-              String.valueOf(r.get(1)) -> r.getLong(2)).toMap
-          }
-        val batchMaxUs = batch.agg(
-          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r                  => r.getLong(0)
-        }
-        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
-          .getOrElse(Long.MinValue)
-        val maxUs = math.max(prevMaxUs, batchMaxUs)
-        // per-(bucket, group) counts continue across folds (nested
-        // packs: bucket -> escaped group\tcount lines)
-        val prevCounts: Map[Long, Map[String, Long]] = rider
-          .map(r => graft.sketch.GroupedHll.unpack(r.data))
-          .getOrElse(Nil)
-          .collect { case (Some(bk), blob) =>
-            bk.toLong -> BlobEscape.decodeCounts(blob)
-          }.toMap
-        val mergedCounts: Map[Long, Map[String, Long]] =
-          (prevCounts.keySet ++ batchCounts.keySet).iterator.map { bkt =>
-            val a = prevCounts.getOrElse(bkt, Map.empty[String, Long])
-            val c = batchCounts.getOrElse(bkt, Map.empty[String, Long])
-            bkt -> (a.keySet ++ c.keySet).iterator.map(g =>
-              g -> (a.getOrElse(g, 0L) + c.getOrElse(g, 0L))).toMap
-          }.toMap
-        def liveB(b: Long): Boolean =
-          (b + 1L) * bucketMicros > maxUs - windowMicros
-        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-        val baseSchema = withH.schema
-        val stored: Array[org.apache.spark.sql.Row] =
-          if (new java.io.File(statePath).exists)
-            s.read.parquet(statePath)
-              .select(baseSchema.fieldNames.map(col).toIndexedSeq: _*)
-              .collect()
-          else Array.empty
-        val hIdx = baseSchema.fieldIndex("graft_h")
-        val bIdx = baseSchema.fieldIndex("graft_bucket")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        // fold rows per (bucket, group) cell (idempotent: dedup by
-        // key, truncate k under the (hash, key) order), then EXPIRE
-        val mergedState = (stored ++ batchTop)
-          .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-          .toArray
-          .filter(r => liveB(r.getLong(bIdx)))
-          .groupBy(r => (r.getLong(bIdx), String.valueOf(r.get(gIdx))))
-          .valuesIterator
-          .flatMap(rows =>
-            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-          .toArray
-        s.createDataFrame(
-          java.util.Arrays.asList(mergedState: _*), baseSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(statePath)
-        // serving sample: per-group re-merge of the live buckets,
-        // gn/gw stamped from the exact live counts (graft_bucket is
-        // an internal state column and stays out of the sample)
-        val liveTotals: Map[String, Long] = liveCounts.values
-          .foldLeft(Map.empty[String, Long]) { (acc, m) =>
-            (acc.keySet ++ m.keySet).iterator.map(g =>
-              g -> (acc.getOrElse(g, 0L) + m.getOrElse(g, 0L))).toMap
-          }
-        val servingBase = mergedState
-          .groupBy(r => String.valueOf(r.get(gIdx)))
-          .valuesIterator
-          .flatMap(rows =>
-            rows.sortBy(r => (r.getLong(hIdx), keyOf(r))).take(kPerGroup))
-          .toArray
-        val sampleFields = baseSchema.fields
-          .filterNot(_.name == "graft_bucket")
-        val sampleIdx = sampleFields.map(f =>
-          baseSchema.fieldIndex(f.name))
-        val achievedPerGroup = servingBase
-          .groupBy(r => String.valueOf(r.get(gIdx)))
-          .map { case (g, rows) => g -> rows.length.toLong }
-        val outSchema = org.apache.spark.sql.types.StructType(
-          sampleFields ++ Seq(
-            org.apache.spark.sql.types.StructField("graft_gn",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("graft_gw",
-              org.apache.spark.sql.types.DoubleType, nullable = false)))
-        val out = servingBase.map { r =>
-          val g = String.valueOf(r.get(gIdx))
-          val gk = achievedPerGroup(g)
-          val gn = math.max(liveTotals.getOrElse(g, gk), gk)
-          org.apache.spark.sql.Row.fromSeq(
-            sampleIdx.toSeq.map(r.get) ++ Seq[Any](gn,
-              gn.toDouble / math.max(1L, gk)))
-        }
-        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        s.read.parquet(path).createOrReplaceTempView(name)
-        val n = liveTotals.valuesIterator.sum
-        val achieved = servingBase.length.toLong
-        val fraction = math.min(0.9999,
-          achieved.toDouble / math.max(1L, n))
-        val decsafe = graft.sample.Samplers.decimalSafeCols(
-          s.read.parquet(path))
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__bottomkg__${groupCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, liveTotals.toSeq.sortBy(_._1).map {
-          case (g, gn) =>
-            val gk = achievedPerGroup.getOrElse(g, 0L)
-            catalog.StratumInfo(name, g, gn, gk,
-              gk.toDouble / math.max(1L, gn),
-              gn.toDouble / math.max(1L, gk), 0.0)
-        })
-        // the serving rider keeps the grouped serve contracts
-        // (kPerGroup CIs, decimal proof, per-group counts) on the
-        // windowed sample
-        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-          "bottomkg_rider", BlobEscape.encodeCounts(liveTotals),
-          s"""{"rows":$n,"k":$kPerGroup,"decsafe":"$decsafe"}""",
-          System.currentTimeMillis()))
-        // replay-guard stamp LAST (crash-safe fold discipline)
-        catalog.upsertSketch(catalog.SketchInfo(table, groupCol,
-          "bkgw_state",
-          graft.sketch.GroupedHll.pack(liveCounts.toSeq.map {
-            case (bkt, gs) =>
-              Option(bkt.toString) -> BlobEscape.encodeCounts(gs)
-          }),
-          s"""{"maxus":$maxUs,"k":$kPerGroup,"last_batch":$batchId}""",
-          System.currentTimeMillis()))
-      }
+    Fold.sample(values, catalog, table, Fold.Sample(
+      s"${table}__bottomkg_$groupCol", s"__bottomkg__${groupCol.toLowerCase}",
+      groupCol, "bkgw_state", keyCol, "windowed grouped bottom-k",
+      hashed("bkg:", keyCol),
+      Some(Fold.Window(tsCol, windowMicros, bucketMicros)),
+      Some(MetaCatalog.StateDir))) { b =>
+      val countRows = b.rows.groupBy(col("graft_bucket"), col(groupCol))
+        .agg(count(lit(1)).as("c")).collect()
+      countRows.foreach(r => require(!r.isNullAt(1),
+        s"windowed grouped bottom-k group $groupCol must be non-null"))
+      val live = b.live(
+        Fold.unpackBuckets(b.rider)(BlobEscape.decodeCounts),
+        countRows.groupBy(_.getLong(0)).map { case (bkt, rs) =>
+          bkt -> rs.map(r => String.valueOf(r.get(1)) -> r.getLong(2)).toMap
+        }, Map.empty[String, Long])(Fold.union(_, _)(_ + _))
+      val totals = live.values
+        .foldLeft(Map.empty[String, Long])(Fold.union(_, _)(_ + _))
+      val cell = (r: Row) => (b.bucketOf(r), b.keyOf(r))
+      // per (bucket, group): dedup, expire, the cell's first k; serving:
+      // each group's first k over its live cells
+      val state = Fold.firstK((b.stored ++ topRows(b.rows,
+          Seq("graft_bucket", groupCol), byHash(keyCol), kPerGroup))
+        .filter(r => b.isLive(b.bucketOf(r))), cell,
+        (r: Row) => (b.bucketOf(r), b.field(groupCol)(r)),
+        b.byHash("graft_h"), kPerGroup)
+      val (serving, strata) = stampGroups(b,
+        b.schema.fields.toSeq.filterNot(_.name == "graft_bucket"),
+        Fold.firstK(state, cell, b.field(groupCol), b.byHash("graft_h"),
+          kPerGroup), b.field(groupCol), totals)
+      val n = totals.valuesIterator.sum
+      Fold.SampleOut(n, serving, strata, d => Seq(
+        ("bottomkg_rider", BlobEscape.encodeCounts(totals),
+          s"""{"rows":$n,"k":$kPerGroup,"decsafe":"$d"}"""),
+        ("bkgw_state", Fold.packBuckets(live)(BlobEscape.encodeCounts),
+          s"""{"maxus":${b.maxUs},"k":$kPerGroup,"last_batch":${b.id}}""")),
+        state.toSeq)
     }
   }
 
@@ -977,213 +533,61 @@ object SampleMaintainers {
     *    is materialized per row, so tail rows need no demotion rule:
     *    the serving rest is simply (live winners) minus (serving tail
     *    keys).
-    * Expiry is bucket-granular; additive per-bucket counts ride the
-    * `last_batch` guard on "outlierw_state", stamped LAST; the
-    * "outlier_rider" re-stamps per fold so the batch serve contracts
-    * hold on the windowed sample. Key integral and stream-unique.
+    * Expiry is bucket-granular; per-bucket counts ride "outlierw_state"
+    * and the state parquet is `<path>__wstate` (the append form's
+    * `__state` has another row layout); the "outlier_rider" re-stamps
+    * per fold so the batch serve contracts hold on the windowed sample.
+    * Key integral and stream-unique.
     */
   def maintainOutlierWindowed(values: DataFrame,
-      catalog: graft.catalog.MetaCatalog, table: String, valueCol: String,
+      catalog: MetaCatalog, table: String, valueCol: String,
       keyCol: String, tsCol: String, windowMicros: Long,
       bucketMicros: Long, outlierK: Int = 500, lowK: Int = 0,
       restWeight: Long = 64L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(outlierK >= 1, "outlierK must be >= 1")
     require(lowK >= 0, "lowK must be >= 0")
     require(restWeight >= 1 && restWeight <= 8192 &&
       java.lang.Long.highestOneBit(restWeight) == restWeight,
       s"restWeight must be a power of two in [1, 8192], got $restWeight")
-    require(windowMicros >= bucketMicros && bucketMicros > 0,
-      "need window >= bucket > 0")
-    val threshold = 8192L / restWeight
     val name =
       if (lowK > 0) s"${table}__outlier2_$valueCol"
       else s"${table}__outlier_$valueCol"
-    val path = s"${catalog.samplesDir}/$name"
-    val statePath = s"${catalog.samplesDir}/${name}__wstate"
-    Fold.run(values) { (batch, batchId) =>
-      val s = batch.sparkSession
-      graft.functions.GraftFunctions.register(s)
-      val rider = catalog.getSketch(table, valueCol, "outlierw_state")
-      val lastBatch = Fold.lastBatch(rider)
-      if (batchId > lastBatch) {
-        require(Seq("integer", "long", "short")
-          .contains(batch.schema(batch.schema.fieldIndex(keyCol))
-            .dataType.typeName),
-          s"windowed outlier stream key $keyCol must be integral")
-        val withH = batch.filter(col(tsCol).isNotNull)
-          .withColumn("graft_bucket",
-            expr(s"unix_micros($tsCol) div $bucketMicros"))
-          .withColumn("graft_olv", col(valueCol).cast("double"))
-          .withColumn("graft_olh",
-            expr(s"graft_h60(concat('ol:', cast($keyCol as string)))"))
-          .drop(tsCol)
-        val baseSchema = withH.schema
-        val keyIdx = baseSchema.fieldIndex(keyCol)
-        val vIdx = baseSchema.fieldIndex("graft_olv")
-        val hIdx = baseSchema.fieldIndex("graft_olh")
-        val bIdx = baseSchema.fieldIndex("graft_bucket")
-        def keyOf(r: org.apache.spark.sql.Row): Long =
-          r.get(keyIdx) match {
-            case l: java.lang.Long    => l.longValue
-            case i: java.lang.Integer => i.longValue
-            case x: java.lang.Short   => x.longValue
-            case other => sys.error(s"non-integral key $other")
-          }
-        val hiOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-          r => (-r.getDouble(vIdx), keyOf(r)))
-        val loOrd = Ordering.by[org.apache.spark.sql.Row, (Double, Long)](
-          r => (r.getDouble(vIdx), keyOf(r)))
-        val wbHi = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("graft_bucket"))
-          .orderBy(col("graft_olv").desc, col(keyCol).asc)
-        val batchHi = withH.filter(col(valueCol).isNotNull)
-          .withColumn("graft_rn", row_number().over(wbHi))
-          .filter(col("graft_rn") <= outlierK).drop("graft_rn")
-          .collect()
-        val wbLo = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("graft_bucket"))
-          .orderBy(col("graft_olv").asc, col(keyCol).asc)
-        val batchLo =
-          if (lowK == 0) Array.empty[org.apache.spark.sql.Row]
-          else withH.filter(col(valueCol).isNotNull)
-            .withColumn("graft_rn", row_number().over(wbLo))
-            .filter(col("graft_rn") <= lowK).drop("graft_rn")
-            .collect()
-        val batchRest = withH
-          .filter(col("graft_olh") % lit(8192L) < lit(threshold))
-          .collect()
-        val batchCounts = withH.groupBy(col("graft_bucket"))
-          .agg(count(lit(1)).as("c")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val batchMaxUs = batch.agg(
-          max(expr(s"unix_micros($tsCol)"))).collect()(0) match {
-          case r if r.isNullAt(0) => Long.MinValue
-          case r                  => r.getLong(0)
-        }
-        val prevMaxUs = rider.flatMap(_.paramLong("maxus"))
-          .getOrElse(Long.MinValue)
-        val maxUs = math.max(prevMaxUs, batchMaxUs)
-        val prevCounts: Map[Long, Long] = rider
-          .map(r => BlobEscape.decodeCounts(r.data))
-          .getOrElse(Map.empty)
-          .map { case (b, c) => b.toLong -> c }
-        val mergedCounts =
-          (prevCounts.keySet ++ batchCounts.keySet).iterator
-            .map(b => b -> (prevCounts.getOrElse(b, 0L) +
-              batchCounts.getOrElse(b, 0L))).toMap
-        def liveB(b: Long): Boolean =
-          (b + 1L) * bucketMicros > maxUs - windowMicros
-        val liveCounts = mergedCounts.filter { case (b, _) => liveB(b) }
-        val baseCols = baseSchema.fieldNames.toIndexedSeq
-        val stored: Array[(String, org.apache.spark.sql.Row)] =
-          if (new java.io.File(statePath).exists)
-            s.read.parquet(statePath)
-              .select((baseCols :+ "graft_part").map(col): _*)
-              .collect()
-              .map(r => r.getString(baseCols.length) ->
-                org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
-          else Array.empty
-        def part(p: String) = stored.collect { case (`p`, r) => r }
-        // fold each part per bucket (dedup by key — replay-safe),
-        // then EXPIRE dead buckets
-        def foldPart(prev: Array[org.apache.spark.sql.Row],
-            add: Array[org.apache.spark.sql.Row],
-            perBucketCap: Option[(Int, Ordering[org.apache.spark.sql.Row])])
-            : Array[org.apache.spark.sql.Row] = {
-          val merged = (prev ++ add)
-            .groupBy(r => (r.getLong(bIdx), keyOf(r))).map(_._2.head)
-            .toArray
-            .filter(r => liveB(r.getLong(bIdx)))
-          perBucketCap match {
-            case Some((k, ord)) => merged.groupBy(_.getLong(bIdx))
-              .valuesIterator.flatMap(_.sorted(ord).take(k)).toArray
-            case None => merged
-          }
-        }
-        val hiState = foldPart(part("hi"), batchHi,
-          Some((outlierK, hiOrd)))
-        val loState = foldPart(part("lo"), batchLo, Some((lowK, loOrd)))
-        val restState = foldPart(part("rest"), batchRest, None)
-        val stateSchema = org.apache.spark.sql.types.StructType(
-          baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-            "graft_part", org.apache.spark.sql.types.StringType,
-            nullable = false))
-        val stateRows =
-          hiState.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "hi")) ++
-          loState.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "lo")) ++
-          restState.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq :+ "rest"))
-        s.createDataFrame(
-          java.util.Arrays.asList(stateRows: _*), stateSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(statePath)
-        // serving sample: global tails over the live candidates,
-        // rest = live winners minus the tail keys; the internal
-        // bucket column stays in the state only
-        val servingHi = hiState.groupBy(keyOf).map(_._2.head).toArray
-          .sorted(hiOrd).take(outlierK)
-        val hiKeys = servingHi.map(keyOf).toSet
-        val servingLo = loState.groupBy(keyOf).map(_._2.head).toArray
-          .filterNot(r => hiKeys.contains(keyOf(r)))
-          .sorted(loOrd).take(lowK)
-        val loKeys = servingLo.map(keyOf).toSet
-        val servingRest = restState.groupBy(keyOf).map(_._2.head).toArray
-          .filterNot { r =>
-            val k0 = keyOf(r)
-            hiKeys.contains(k0) || loKeys.contains(k0)
-          }
-        val sampleFields = baseSchema.fields
-          .filterNot(_.name == "graft_bucket")
-        val sampleIdx = sampleFields.map(f =>
-          baseSchema.fieldIndex(f.name))
-        val outSchema = org.apache.spark.sql.types.StructType(
-          sampleFields :+ org.apache.spark.sql.types.StructField(
-            "graft_weight", org.apache.spark.sql.types.DoubleType,
-            nullable = false))
-        def emit(rows: Array[org.apache.spark.sql.Row], w: Double) =
-          rows.map(r => org.apache.spark.sql.Row.fromSeq(
-            sampleIdx.toSeq.map(r.get) :+ (w: Any)))
-        val out = emit(servingHi, 1.0) ++ emit(servingLo, 1.0) ++
-          emit(servingRest, restWeight.toDouble)
-        s.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(path)
-        s.read.parquet(path).createOrReplaceTempView(name)
-        val n = liveCounts.valuesIterator.sum
-        val (nOut, nLow, nRest) =
-          (servingHi.length.toLong, servingLo.length.toLong,
-            servingRest.length.toLong)
-        val fraction = math.min(0.9999,
-          (nOut + nLow + nRest).toDouble / math.max(1L, n))
-        catalog.upsertTableStats(table, n)
-        catalog.addSample(catalog.SampleInfo(table, name, fraction,
-          Some(s"__outlier__${valueCol.toLowerCase}"), path,
-          System.currentTimeMillis(), baseRows = Some(n)))
-        catalog.putStrata(name, Seq(
-          catalog.StratumInfo(name, "outlier", nOut, nOut, 1.0, 1.0,
-            0.0)) ++
-          (if (lowK > 0)
-            Seq(catalog.StratumInfo(name, "outlier_low", nLow, nLow,
-              1.0, 1.0, 0.0))
-          else Nil) ++ Seq(
-          catalog.StratumInfo(name, "rest",
-            math.max(0L, n - nOut - nLow), nRest,
-            1.0 / restWeight, restWeight.toDouble, 0.0)))
-        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-          "outlier_rider", Array.emptyByteArray,
-          s"""{"rows":$n,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
-          System.currentTimeMillis()))
-        // replay-guard stamp LAST (crash-safe fold discipline)
-        catalog.upsertSketch(catalog.SketchInfo(table, valueCol,
-          "outlierw_state",
-          BlobEscape.encodeCounts(
-            liveCounts.map { case (b, c) => b.toString -> c }),
-          s"""{"maxus":$maxUs,"k":$outlierK,"lowk":$lowK,"w":$restWeight,"last_batch":$batchId}""",
-          System.currentTimeMillis()))
-      }
+    val params = s""""k":$outlierK,"lowk":$lowK,"w":$restWeight,"""
+    Fold.sample(values, catalog, table, Fold.Sample(name,
+      s"__outlier__${valueCol.toLowerCase}", valueCol, "outlierw_state",
+      keyCol, "windowed outlier", outlierCols(valueCol, keyCol),
+      Some(Fold.Window(tsCol, windowMicros, bucketMicros)),
+      Some(MetaCatalog.WindowedStateDir), parted = true)) { b =>
+      val tails = new Tails(b)
+      val valued = b.rows.filter(col(valueCol).isNotNull)
+      def top(order: Column, k: Int) =
+        topRows(valued, Seq("graft_bucket"), Seq(order, col(keyCol).asc), k)
+      val live = b.live(flatCounts(b.rider), bucketCounts(b.rows), 0L)(_ + _)
+      val part = parts(b.stored)
+      // each part per bucket: dedup by (bucket, key), expire, and the
+      // tails keep the bucket's first k
+      val cell = (r: Row) => (b.bucketOf(r), b.keyOf(r))
+      def expire(p: String, add: Rows) =
+        Fold.dedup(part(p) ++ add, cell).filter(r => b.isLive(b.bucketOf(r)))
+      val hiState = Fold.firstK(expire("hi", top(col("graft_olv").desc,
+        outlierK)), cell, b.bucketOf, tails.hi, outlierK)
+      val loState = Fold.firstK(expire("lo",
+        if (lowK == 0) Array.empty[Row] else top(col("graft_olv").asc, lowK)),
+        cell, b.bucketOf, tails.lo, lowK)
+      val restState = expire("rest",
+        b.rows.filter(lottery(8192L / restWeight)).collect())
+      val (hi, lo, rest) = tails(hiState, loState, restState, outlierK, lowK)
+      val n = live.valuesIterator.sum
+      Fold.SampleOut(n, weighted(
+          b.schema.fields.toSeq.filterNot(_.name == "graft_bucket"), b,
+          hi -> 1.0, lo -> 1.0, rest -> restWeight.toDouble),
+        outlierStrata(n, hi, lo, rest, lowK, restWeight),
+        _ => Seq(("outlier_rider", Array.emptyByteArray,
+            s"""{"rows":$n,$params"last_batch":${b.id}}"""),
+          ("outlierw_state", flatBlob(live),
+            s"""{"maxus":${b.maxUs},$params"last_batch":${b.id}}""")),
+        parted("hi" -> hiState, "lo" -> loState, "rest" -> restState))
     }
   }
 }

@@ -211,11 +211,12 @@ object WindowedSketches {
       bucketed = timed => timed
         .groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
           timed.schema.fieldNames.toSeq).as("g"))
-        .agg(EventStreams.statsAgg(valueCol).head,
-          EventStreams.statsAgg(valueCol).tail: _*)
+        .agg(GroupedStats.statsAgg(valueCol).head,
+          GroupedStats.statsAgg(valueCol).tail: _*)
         .collect().groupBy(_.getLong(0)).map { case (bkt, rs) =>
-          bkt -> rs.map(EventStreams.statOf(_,
-            s"windowed grouped stats over $table.$valueCol")).toMap
+          bkt -> rs.map(GroupedStats.statOf(_, s"windowed grouped stats " +
+            s"over $table.$valueCol: batch group sum overflows decimal(38,4)"))
+            .toMap
         },
       merge = Fold.union(_, _)(GroupedStats.merge),
       rows = _.valuesIterator.map(_.nrows).sum,
@@ -463,6 +464,19 @@ object WindowedSketches {
   // window)
   // ---------------------------------------------------------------
 
+  /** Per-event-bucket HDR cells ([[SketchOps.hdrPass]] keyed by
+    * `graft_bucket`); a bucket sum overflowing decimal(38,4) refuses
+    * loudly — a TTL stream has no batch-rebuild poison escape.
+    */
+  private def hdrBuckets(timed: DataFrame, column: String, m: Int,
+      what: String): Map[Long, SketchOps.HdrCell] =
+    SketchOps.hdrPass(timed, Seq(col("graft_bucket")), column, m, what).map {
+      case (k, c) =>
+        if (c.overflow) throw new IllegalArgumentException(
+          s"$what: a bucket sum overflows decimal(38,4)")
+        k.head.asInstanceOf[Long] -> c
+    }
+
   /** Streaming WINDOWED HDR maintenance: one log-linear sketch (+
     * per-(sign, binade, sub-bucket) decimal-sum rider) per EVENT-TIME
     * bucket, live buckets re-merged into the serving "hdr" + "hdrsum"
@@ -472,8 +486,8 @@ object WindowedSketches {
     * counts and BigInt sums add exactly and expiry subtracts exactly
     * (the q185 rule) with no grid to declare up front — the advantage
     * over the equi-width windowed form. One distributed (bucket, sg, e,
-    * s) aggregate per micro-batch (`SketchOps.hdrBucketedAggregate` —
-    * the batch builder's chain keyed by event bucket); infinities and
+    * s) aggregate per micro-batch (`SketchOps.hdrPass` — the batch
+    * builder's chain keyed by event bucket); infinities and
     * decimal overflow refuse loudly. State: "hdr_windowed", payloads
     * pack("c" → rows, "h" → hdr, "s" → sums pack).
     * Batch twin: [[windowedHdrPercentile]] (q190).
@@ -491,14 +505,13 @@ object WindowedSketches {
       bucketMicros, checkpointLocation)(Fold.Windowed[S]("hdr_windowed",
       s""""m":$m,""", (0L, HdrSketch(m, 0L, Vector.empty, Vector.empty), Map.empty),
       bucketed = { timed =>
-        val agg = SketchOps.hdrBucketedAggregate(timed, column, "graft_bucket",
-          m, s"windowed hdr over $table.$column")
+        val agg = hdrBuckets(timed, column, m,
+          s"windowed hdr over $table.$column")
         timed.groupBy(col("graft_bucket")).agg(count(lit(1)).as("c"))
           .collect().map { r =>
-            val (sk, sums) = agg.getOrElse(r.getLong(0),
-              (HdrSketch(m, 0L, Vector.empty, Vector.empty), Nil))
-            r.getLong(0) -> (r.getLong(1), sk,
-              sums.map { case ((sg, e, s), v) => s"$sg:$e:$s" -> v }.toMap)
+            val c = agg.getOrElse(r.getLong(0), SketchOps.emptyHdr(m))
+            r.getLong(0) -> (r.getLong(1), c.sketch,
+              c.sums.map { case ((sg, e, s), v) => s"$sg:$e:$s" -> v }.toMap)
           }.toMap
       },
       merge = { case ((c1, h1, s1), (c2, h2, s2)) =>
@@ -551,10 +564,9 @@ object WindowedSketches {
       (col("graft_bucket") + lit(1L)) * lit(bucketMicros) >
         lit(maxUs - windowMicros))
     // per-bucket sketches (the maintainer's stored state) ...
-    val perBucket = graft.sketch.SketchOps.hdrBucketedAggregate(
-      live, "graft_v", "graft_bucket", m, "windowed hdr percentile")
+    val perBucket = hdrBuckets(live, "graft_v", m, "windowed hdr percentile")
     // ... merged into the serving sketch (binade counts add)
-    val serving = perBucket.values.map(_._1)
+    val serving = perBucket.values.map(_.sketch)
       .foldLeft(graft.sketch.HdrSketch(m, 0L, Vector.empty, Vector.empty))(
         _ merge _)
     val est = serving.percentile(0.5).getOrElse(Double.NaN)
@@ -628,8 +640,8 @@ object WindowedSketches {
 
   /** Streaming WINDOWED grouped-HDR maintenance: per-(event-time
     * bucket, group) log-linear sketches + per-(group, log-bucket)
-    * decimal-sum riders (`SketchOps.hdrGroupedBucketedAggregate` —
-    * ONE distributed pass per micro-batch), live buckets re-merged
+    * decimal-sum riders (`SketchOps.hdrPass` keyed by (bucket, group)
+    * — ONE distributed pass per micro-batch), live buckets re-merged
     * into the serving "hdr_grouped" + "hdrsum_grouped" blobs, so the
     * engine's per-group percentile / range / SUM/AVG serves (q150
     * family) answer OVER THE LIVE WINDOW with no scan. The log grid is
@@ -658,9 +670,14 @@ object WindowedSketches {
       s""""m":$m,"group_by":"$groupCol",""", (Map.empty, Map.empty, Map.empty),
       bucketed = { timed =>
         // sketches+riders for groups WITH values ...
-        val agg = SketchOps.hdrGroupedBucketedAggregate(timed, groupCols,
-          valueCol, "graft_bucket", m,
+        val agg = SketchOps.hdrPass(timed, Seq(col("graft_bucket"),
+            SketchOps.groupKeyExpr(groupCols, timed.schema.fieldNames.toSeq)
+              .as("g")), valueCol, m,
           s"windowed grouped hdr over $table.$valueCol")
+          .groupBy(_._1.head.asInstanceOf[Long]).map { case (bkt, cs) =>
+            bkt -> cs.map { case (k, c) =>
+              Option(k(1).asInstanceOf[String]) -> c }
+          }
         // ... and row counts for ALL groups (all-NULL ones included)
         timed.groupBy(col("graft_bucket"), SketchOps.groupKeyExpr(groupCols,
             timed.schema.fieldNames.toSeq).as("g"))
@@ -669,8 +686,8 @@ object WindowedSketches {
             val a = agg.getOrElse(bkt, Map.empty)
             bkt -> (rs.map(r =>
               Option(r.getAs[String]("g")) -> r.getAs[Long]("n")).toMap,
-              a.map { case (g, (h, _)) => g -> h },
-              a.map { case (g, (_, s)) => g -> s })
+              a.map { case (g, c) => g -> c.sketch.serialize },
+              a.map { case (g, c) => g -> c.groupedSumPack })
           }
       },
       merge = { case ((c1, h1, s1), (c2, h2, s2)) =>

@@ -2103,5 +2103,22 @@ class EventStreamsSpec extends SparkSpec {
     assert(stats.getAs[Long]("n_bands") == 0L)
     assert(stats.isNullAt(stats.fieldIndex("admit_rate")),
       "0/0 admit_rate must be NULL, not a fabricated number")
+    assert(!stats.isNullAt(stats.fieldIndex("n_admitted")) &&
+      stats.getAs[Long]("n_admitted") == 0L, "n_admitted must be 0")
+    assert(!stats.isNullAt(stats.fieldIndex("n_suppressed")) &&
+      stats.getAs[Long]("n_suppressed") == 0L, "n_suppressed must be 0")
+  }
+
+  test("admission stats fail loudly when the batch directory cannot be listed") {
+    val catalog = new graft.catalog.MetaCatalog(
+      java.nio.file.Files.createTempDirectory("graft-admunlisted").toString)
+    // a plain file where the batch directory belongs: it exists, but
+    // listing it yields nothing to read
+    val path = java.nio.file.Paths.get(catalog.samplesDir, "docs_x__admitted")
+    java.nio.file.Files.createDirectories(path.getParent)
+    java.nio.file.Files.write(path, Array[Byte](1))
+    val ex = intercept[IllegalStateException](
+      EventStreams.admissionStats(spark, catalog, "docs_x").collect())
+    assert(ex.getMessage.contains("cannot list"), ex.getMessage)
   }
 }

@@ -196,6 +196,17 @@ class MetaCatalogSpec extends AnyFunSuite {
     assert(!Files.exists(p) && !Files.exists(st))
     // and the removal is durable
     assert(new MetaCatalog(dir).sampleByName("t__sample_0_1").isEmpty)
+    // the windowed outlier maintainer keeps its state in `<path>__wstate`
+    val wp = java.nio.file.Paths.get(c.samplesDir, "t__outlier_v")
+    Files.createDirectories(wp)
+    val wst = java.nio.file.Paths.get(wp.toString + "__wstate")
+    Files.createDirectories(wst)
+    Files.write(wst.resolve("part-0.parquet"), Array[Byte](1))
+    c.addSample(c.SampleInfo("t", "t__outlier_v", 0.1,
+      Some("__outlier__v"), wp.toString, 1L, baseRows = Some(10L)))
+    c.dropSample("t__outlier_v")
+    assert(c.sampleByName("t__outlier_v").isEmpty)
+    assert(!Files.exists(wp) && !Files.exists(wst))
 
     c.upsertSketch(c.SketchInfo("t", "x", "hyperloglog", Array[Byte](1),
       "{}", 1L))
@@ -252,5 +263,13 @@ class MetaCatalogSpec extends AnyFunSuite {
     c.upsertTableStats("t", 200L) // the batch builder's stats bump
     assert(c.vacuumStaleSamples("t")() == Nil)
     assert(c.sampleByName("t__bottomkw_id").isDefined && Files.exists(p))
+    // the windowed outlier maintainer's live state is `<path>__wstate`
+    val wp = java.nio.file.Paths.get(c.samplesDir, "t__outlier_v")
+    Files.createDirectories(wp)
+    Files.createDirectories(java.nio.file.Paths.get(wp.toString + "__wstate"))
+    c.addSample(c.SampleInfo("t", "t__outlier_v", 0.5,
+      Some("__outlier__v"), wp.toString, 1L, baseRows = Some(50L)))
+    assert(c.vacuumStaleSamples("t")() == Nil)
+    assert(c.sampleByName("t__outlier_v").isDefined && Files.exists(wp))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.catalog.MetaCatalog
-import graft.streaming.{EventStreams, WindowedSketches}
+import graft.streaming.{EventStreams, SampleMaintainers, WindowedSketches}
 
 /** Laws every sketch maintainer owes through the shared fold
   * (`streaming/Fold.scala`), checked table-driven over all 23:
@@ -17,6 +17,8 @@ import graft.streaming.{EventStreams, WindowedSketches}
   *  - NULL EVENT TIME: a windowed maintainer drops rows whose event
   *    time is NULL (they belong to no bucket) and keeps running, with
   *    the live row count over the timed rows only.
+  * The six sample maintainers owe the same two laws over their sample
+  * entry, strata, riders and sample/state parquet rows.
   * Fixture: ids 0..399, ts = id seconds, g = id % 4 (string), h = id % 3,
   * v = (id * 37) % 997; the 1000 s window keeps every bucket live.
   */
@@ -120,6 +122,42 @@ class StreamFoldSpec extends SparkSpec {
       (df, c, t) => WindowedSketches.maintainAgmsWindowed(df, c, t, Seq("id"),
         "ts", window, bucket, buckets = 256)))
 
+  /** One sample maintainer under test: its sample table, the riders it
+    * owns as (column, type), the suffix of its state parquet (None when
+    * the sample parquet is its state) and its attachment.
+    */
+  private case class SampleCase(name: String, sample: String => String,
+      riders: Seq[(String, String)], state: Option[String],
+      start: (DataFrame, MetaCatalog, String) => StreamingQuery,
+      windowed: Boolean = false)
+
+  private val sampleCases = Seq(
+    SampleCase("bottom-k", t => s"${t}__bottomk_id",
+      Seq(("id", "bottomk_rider")), None,
+      (df, c, t) => SampleMaintainers.maintainBottomKSample(df, c, t, "id",
+        k = 64)),
+    SampleCase("grouped bottom-k", t => s"${t}__bottomkg_g",
+      Seq(("g", "bottomkg_rider")), None,
+      (df, c, t) => SampleMaintainers.maintainBottomKGrouped(df, c, t, "g",
+        "id", kPerGroup = 16)),
+    SampleCase("outlier", t => s"${t}__outlier2_v",
+      Seq(("v", "outlier_rider")), Some("__state"),
+      (df, c, t) => SampleMaintainers.maintainOutlierSample(df, c, t, "v",
+        "id", outlierK = 8, targetRest = 32L, lowK = 4)),
+    SampleCase("windowed bottom-k", t => s"${t}__bottomkw_id",
+      Seq(("id", "bottomkw_state"), ("id", "bottomk_rider")), Some("__state"),
+      (df, c, t) => SampleMaintainers.maintainBottomKWindowed(df, c, t, "id",
+        "ts", window, bucket, k = 64), windowed = true),
+    SampleCase("windowed grouped bottom-k", t => s"${t}__bottomkg_g",
+      Seq(("g", "bkgw_state"), ("g", "bottomkg_rider")), Some("__state"),
+      (df, c, t) => SampleMaintainers.maintainBottomKGroupedWindowed(df, c, t,
+        "g", "id", "ts", window, bucket, kPerGroup = 16), windowed = true),
+    SampleCase("windowed outlier", t => s"${t}__outlier2_v",
+      Seq(("v", "outlierw_state"), ("v", "outlier_rider")), Some("__wstate"),
+      (df, c, t) => SampleMaintainers.maintainOutlierWindowed(df, c, t, "v",
+        "id", "ts", window, bucket, outlierK = 8, lowK = 4, restWeight = 4L),
+      windowed = true))
+
   private def tmpCatalog(tag: String) = new MetaCatalog(
     java.nio.file.Files.createTempDirectory(s"graft-fold-$tag").toString)
 
@@ -185,6 +223,79 @@ class StreamFoldSpec extends SparkSpec {
           catalog.getSketch(table, "id", "agms").flatMap(_.paramLong("rows"))
         else catalog.statsFor(table).map(_.rowCount)
       assert(rows.contains(timed), s"${m.name}: live rows $rows, want $timed")
+    }
+  }
+  test("replay law: re-delivering batch 0 leaves every sample maintainer's entry, strata, riders and rows unchanged (all 6)") {
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    assert(sampleCases.size == 6)
+    sampleCases.zipWithIndex.foreach { case (m, i) =>
+      val table = s"fold_sreplay_$i"
+      val catalog = tmpCatalog(s"sreplay-$i")
+      val name = m.sample(table)
+      def fold(): Unit = {
+        val stream = MemoryStream[Long]
+        val q = m.start(shape(stream.toDF().toDF("id")), catalog, table)
+        stream.addData(ids)
+        q.processAllAvailable()
+        q.stop()
+      }
+      def rowsAt(path: String): Seq[String] =
+        if (new java.io.File(path).exists)
+          spark.read.parquet(path).collect().toSeq.map(_.toString)
+        else Nil
+      def snapshot() = {
+        val entry = catalog.sampleByName(name).getOrElse(
+          fail(s"${m.name}: no sample entry $name after batch 0"))
+        val riders = m.riders.map { case (c, ty) =>
+          val r = catalog.getSketch(table, c, ty).getOrElse(
+            fail(s"${m.name}: no $ty rider on $table.$c after batch 0"))
+          (ty, r.data.toSeq, r.parameters)
+        }
+        val strata = catalog.strataFor(name).map(st => (st.strataValue,
+          st.popSize, st.sampleSize, st.fraction, st.weight))
+        (entry.baseRows, entry.fraction, strata, riders, rowsAt(entry.path),
+          m.state.map(sfx => rowsAt(entry.path + sfx)),
+          catalog.statsFor(table))
+      }
+      fold()
+      val before = snapshot()
+      assert(before._5.nonEmpty, s"${m.name}: empty sample after batch 0")
+      assert(before._6.forall(_.nonEmpty), s"${m.name}: empty state parquet")
+      fold() // a fresh attachment: batch id 0 again
+      val after = snapshot()
+      Seq("base rows / fraction" -> ((before._1, before._2),
+          (after._1, after._2)),
+        "strata" -> (before._3, after._3), "riders" -> (before._4, after._4),
+        "sample rows" -> (before._5, after._5),
+        "state rows" -> (before._6, after._6),
+        "table stats" -> (before._7, after._7)).foreach {
+        case (what, (b, a)) => assert(a == b, s"${m.name}: $what moved")
+      }
+    }
+  }
+
+  test("NULL event times: every windowed sample maintainer skips them, stays active, and counts only timed rows") {
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    def nullTs(df: DataFrame): DataFrame = shape(df).withColumn("ts",
+      expr("case when id % 10 = 0 then cast(null as timestamp) else ts end"))
+    val timed = ids.count(_ % 10 != 0).toLong
+    sampleCases.filter(_.windowed).zipWithIndex.foreach { case (m, i) =>
+      val table = s"fold_snullts_$i"
+      val catalog = tmpCatalog(s"snullts-$i")
+      val stream = MemoryStream[Long]
+      val q = m.start(nullTs(stream.toDF().toDF("id")), catalog, table)
+      stream.addData(ids)
+      val run = scala.util.Try(q.processAllAvailable())
+      val active = q.isActive && q.exception.isEmpty
+      q.stop()
+      assert(run.isSuccess && active,
+        s"${m.name}: stream died on NULL event times: ${q.exception}")
+      val rows = catalog.statsFor(table).map(_.rowCount)
+      assert(rows.contains(timed), s"${m.name}: live rows $rows, want $timed")
+      assert(catalog.sampleByName(m.sample(table)).flatMap(_.baseRows)
+        .contains(timed), s"${m.name}: sample base rows")
     }
   }
 }

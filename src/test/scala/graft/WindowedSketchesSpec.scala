@@ -264,8 +264,9 @@ class WindowedSketchesSpec extends SparkSpec {
     // global log grid; expiry subtracted the dead buckets exactly)
     val liveDf = spark.range(liveFrom, liveTo)
       .select(expr("cast((id * 37) % 997 as double)").as("v"))
-    val (expSk, expSums, expOvf) = graft.sketch.SketchOps.hdrAggregate(
-      liveDf, "v", 32, "spec expected")
+    val exp = graft.sketch.SketchOps.hdrPass(liveDf, Nil, "v", 32,
+      "spec expected")(Nil)
+    val (expSk, expSums, expOvf) = (exp.sketch, exp.sums, exp.overflow)
     assert(!expOvf)
     val sk = catalog.getSketch("whdr_live", "v", "hdr")
     assert(sk.isDefined)
